@@ -578,12 +578,12 @@ def main() -> None:
     # rep, sustained host steal inflates all three. Healthy min on
     # this box at sf0.1 is ~0.3-0.5s regardless of 8 vs 32 cores (the
     # scan-agg is a handful of tasks).
-    canary_min = max(min(canary_start), min(canary_mid), min(canary_end))
-    canary_degraded = canary_min > canary_thresh
+    canary_worst_min = max(min(canary_start), min(canary_mid), min(canary_end))
+    canary_degraded = canary_worst_min > canary_thresh
     if canary_degraded:
         print(
             f"# WARNING: steal canary degraded (worst 3-rep min "
-            f"{canary_min}s > {canary_thresh}s) — host contention "
+            f"{canary_worst_min}s > {canary_thresh}s) — host contention "
             "mid-run; artifact stamped ambient=true",
             file=sys.stderr,
         )
@@ -609,7 +609,7 @@ def main() -> None:
             "reps_start": canary_start,
             "reps_mid": canary_mid,
             "reps_end": canary_end,
-            "gate_worst_min_sec": canary_min,
+            "gate_worst_min_sec": canary_worst_min,
             "threshold_sec": canary_thresh,
             "degraded": canary_degraded,
         },

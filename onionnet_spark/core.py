@@ -246,8 +246,9 @@ class OnionGraph:
                     # hash safely because of the OnionGraph builder
                     # invariant that every edge endpoint appears in
                     # graph.nodes (the same referential-integrity
-                    # precondition _bfs_int documents). A graph with
-                    # dangling endpoints must not use the int views.
+                    # precondition traversal._string_keyed documents).
+                    # A graph with dangling endpoints must not use the
+                    # int views.
                     e = self.edge_endpoints().select(
                         F.xxhash64(f"{s}_layer", f"{s}_id").alias("s"),
                         F.xxhash64(f"{d}_layer", f"{d}_id").alias("d"),

@@ -37,6 +37,11 @@ _OPS = {
     ">=": _op.ge,
 }
 
+# Members per block in project_bipartite's pair generation: pairs
+# inside one block come from one row's array combinations, pairs
+# across two blocks of the same via from the cross-block join.
+BIPARTITE_BLOCK = 4096
+
 
 def induced_edges(edges: DataFrame, node_keys: DataFrame) -> DataFrame:
     """Edges whose endpoints BOTH appear in node_keys (two semi-joins)."""
@@ -208,7 +213,7 @@ def project_bipartite(
 
     Returns (id_a, id_b, n_shared) with id_a < id_b.
     """
-    block = 4096
+    block = BIPARTITE_BLOCK
     e = graph.edge_endpoints()
     inc = (
         e.filter(

@@ -8,24 +8,33 @@ Reference parity: ``onionnet/searcher.py``:
   - compute_on_shortest (searcher.py:26-117): mark vertices v with
     d_fwd(source, v) + d_rev(v, targets) in {d_fwd(source, t)}.
 
-Spark-first design: BFS is a bounded loop of joins. The frontier is
-typically orders of magnitude smaller than the edge list, so each
-expansion joins a *broadcast* frontier against the (persisted,
-column-pruned) edge endpoints — no shuffle of the big side at all
-while the frontier stays under the broadcast threshold; past it we
-fall back to a shuffled join keyed on the node key (AQE picks this
-up automatically from stats, we also hint explicitly from the known
-frontier count, which we materialize anyway for loop control).
-Visited-set lineage is truncated with localCheckpoint every few
-iterations so plans don't grow exponentially with depth.
+Spark-first design: every hop-count BFS here (`bfs_distances`,
+`k_hop`, `reachable`, `pseudo_diameter`'s sweeps, `multi_source_bfs`
+and both arms of `on_shortest_path`) runs ONE level loop,
+`_bfs_levels`. Each level joins the frontier against the persisted,
+column-pruned edge endpoints, dedups on the node key and anti-joins
+the visited levels. The frontier and the visited side are broadcast
+while their counted sizes fit BROADCAST_FRONTIER_MAX, so the edge side
+is never shuffled; past it the joins fall back to shuffles. Each level
+is a lazy checkpoint that its own count materializes — one job per
+level — and every tenth cut is a parquet rebase
+(ckpt.IterCheckpointer), so plans stay flat at any depth.
+
+The loop runs over given key columns: the string keying
+(layer, node_id), or the int keying, one xxhash64 long per node
+(core.cached_int_*). The int keying is used only where it measured
+faster, and never on a node set whose 64-bit keys collide.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import NODE_KEY, OnionGraph
+from onionnet_spark.operators.ckpt import IterCheckpointer
 
 # Frontiers below this row count are broadcast to the edge join.
 BROADCAST_FRONTIER_MAX = 2_000_000
@@ -45,19 +54,172 @@ def _directed_endpoints(graph: OnionGraph, direction: str) -> DataFrame:
     return graph.cached_endpoints(direction)
 
 
+def _uniq(nodes) -> list[tuple[str, str]]:
+    """Driver-side (layer, id) list with string ids, duplicates
+    dropped, first-seen order kept."""
+    return list(dict.fromkeys((l, str(i)) for (l, i) in nodes))
+
+
 def _sources_df(spark: SparkSession, sources) -> DataFrame:
     """Seed frame for BFS: either a driver-side list of (layer, id)
     tuples (the ego-search shape) or a DataFrame with (layer,
     node_id) columns — the multi-source-from-a-computed-set shape
     (e.g. 'everything reachable from the giant SCC'), which must
-    never round-trip through the driver at scale."""
+    never round-trip through the driver at scale. `_bfs_levels`
+    checkpoints it."""
     if isinstance(sources, DataFrame):
-        return sources.select(
-            "layer", "node_id", F.lit(0).alias("dist")
-        ).localCheckpoint()
+        return sources.select("layer", "node_id", F.lit(0).alias("dist"))
     return spark.createDataFrame(
-        [(l, str(i), 0) for (l, i) in sources], "layer string, node_id string, dist int"
+        [(l, i, 0) for (l, i) in _uniq(sources)],
+        "layer string, node_id string, dist int",
     )
+
+
+def _bfs_levels(
+    edges: DataFrame,
+    seed: DataFrame,
+    key: list[str],
+    src: list[str],
+    dst: list[str],
+    carry: tuple[str, ...] = (),
+    undirected: bool = False,
+    max_dist: int | None = None,
+    stop=None,
+) -> list[DataFrame]:
+    """The level-synchronous BFS loop: the levels (carry + key +
+    dist) reached from `seed` (dist 0), level 0 first and every
+    later level non-empty, each node at its least depth.
+
+    `edges` maps the node key columns `src` to `dst`, both parallel
+    to `key`. `carry` columns (a source id) ride along and are part
+    of a node's identity, so each carry value gets its own BFS in the
+    same sweep. `stop(level, depth)` is called on each level once it
+    is materialized; True ends the loop.
+    """
+    ident = [*carry, *key]
+    ck = IterCheckpointer(prefix="onionnet_bfs_")
+    frontier = seed.localCheckpoint(eager=False)
+    n = frontier.count()
+    levels, counts = [frontier], [n]
+    depth = 0
+    while (
+        n
+        and not (stop is not None and stop(frontier, depth))
+        and (max_dist is None or depth < max_dist)
+    ):
+        f = frontier.select(*carry, *(F.col(k).alias(s) for k, s in zip(key, src)))
+        if n <= BROADCAST_FRONTIER_MAX:
+            f = F.broadcast(f)
+        # An undirected edge spans at most one level, so level d+1 can
+        # only re-touch levels d and d-1: the anti-join needs the last
+        # two levels, which keeps its broadcast bounded by two level
+        # sizes (the graph_pseudo_diameter constant, VERDICT r8 item
+        # 3). A directed edge can reach back to any earlier level.
+        seen = 2 if undirected else len(levels)
+        visited = reduce(
+            DataFrame.unionByName, (lv.select(*ident) for lv in levels[-seen:])
+        )
+        if sum(counts[-seen:]) <= BROADCAST_FRONTIER_MAX:
+            visited = F.broadcast(visited)
+        depth += 1
+        # dedup on the anti-join key, so the dedup exchange is
+        # hash-partitioned on it and reused: one shuffle per level.
+        # (Measured r9: anti-joining BEFORE the dedup costs more — the
+        # broadcast probe over the full expansion beats the bytes it
+        # saves.)
+        nxt = (
+            edges.join(f, on=src)
+            .select(
+                *carry,
+                *(F.col(d).alias(k) for k, d in zip(key, dst)),
+                F.lit(depth).alias("dist"),
+            )
+            .dropDuplicates(ident)
+            .join(visited, on=ident, how="left_anti")
+        )
+        # lazy cut: the count materializes it, one job per level
+        frontier = ck.cut(nxt, eager=False)
+        n = frontier.count()
+        if n:
+            levels.append(frontier)
+            counts.append(n)
+    return levels
+
+
+def _keyed_levels(
+    graph: OnionGraph,
+    seeds: DataFrame,
+    direction: str,
+    use_int: bool,
+    carry: tuple[str, ...] = (),
+    max_dist: int | None = None,
+    stop=None,
+) -> tuple[list[DataFrame], DataFrame | None]:
+    """`_bfs_levels` from a string-keyed seed frame (carry, layer,
+    node_id, dist): in the int keying when `use_int` and the graph's
+    64-bit node keys do not collide, else in the string keying.
+    Returns (levels, node index); the index is None for string
+    levels."""
+    intp = None
+    if use_int:
+        intp = (
+            graph.cached_int_sym()
+            if direction == "sym"
+            else graph.cached_int_endpoints(direction)
+        )
+    undirected = direction == "sym"
+    if intp is None:
+        levels = _bfs_levels(
+            _directed_endpoints(graph, direction), seeds, NODE_KEY,
+            ["src_layer", "src_id"], ["dst_layer", "dst_id"],
+            carry, undirected, max_dist, stop,
+        )
+        return levels, None
+    edges, nidx = intp
+    seed = seeds.select(*carry, F.xxhash64(*NODE_KEY).alias("node"), "dist")
+    levels = _bfs_levels(
+        edges, seed, ["node"], ["s"], ["d"], carry, undirected, max_dist, stop
+    )
+    return levels, nidx
+
+
+def _string_keyed(
+    levels: list[DataFrame], nidx: DataFrame | None, seeds: DataFrame
+) -> DataFrame:
+    """The union of `_keyed_levels` output in the string keying. Int
+    levels past the seed map back through the node index, which
+    holds every edge endpoint (the OnionGraph invariant); the seed
+    level is the string seed frame itself, so a seed absent from the
+    node table survives exactly as in the string keying."""
+    if nidx is None:
+        return reduce(DataFrame.unionByName, levels)
+    if len(levels) == 1:
+        return seeds
+    deep = reduce(DataFrame.unionByName, levels[1:])
+    mapped = deep.join(nidx, deep["node"] == nidx["idx"]).select(*seeds.columns)
+    return seeds.unionByName(mapped)
+
+
+def _stop_at(spark: SparkSession, stop_nodes, found_depths):
+    """`_bfs_levels` stop callback in the string keying: appends to
+    `found_depths` the depth at which each stop node is first seen,
+    and stops once all are seen. Levels are disjoint, so a stop node
+    hits at most one level and the probe is built once."""
+    remaining = set(_uniq(stop_nodes))
+    probe = F.broadcast(
+        spark.createDataFrame(sorted(remaining), "layer string, node_id string")
+    )
+
+    def stop(level: DataFrame, depth: int) -> bool:
+        if remaining:
+            hits = level.join(probe, on=NODE_KEY, how="left_semi")
+            for r in hits.select(*NODE_KEY).collect():
+                remaining.discard((r["layer"], r["node_id"]))
+                if found_depths is not None:
+                    found_depths.append(depth)
+        return not remaining
+
+    return stop
 
 
 def bfs_distances(
@@ -66,10 +228,7 @@ def bfs_distances(
     direction: str = "downstream",
     max_dist: int | None = None,
     stop_nodes: list[tuple[str, str]] | None = None,
-    dynamic_cap=None,
     found_depths: list[int] | None = None,
-    pace=None,
-    level_hook=None,
 ) -> DataFrame:
     """Min hop distance from the source set to every reachable node.
 
@@ -86,191 +245,28 @@ def bfs_distances(
     If some stop node is unreachable the loop degrades gracefully to
     the normal fixpoint. ``found_depths`` (optional caller-owned
     list) receives the depth at which each stop node was first seen.
-    ``dynamic_cap`` is a zero-arg callable polled between levels
-    returning None (no cap yet) or an int depth cap — it lets a
-    concurrently-running sibling BFS publish its max-target depth
-    mid-flight, capping this run without serializing the two.
-
-    ``pace`` is a zero-arg callable polled before each expansion
-    returning None (unthrottled) or the deepest level this run may
-    currently build. on_shortest_path uses it to keep the reverse
-    arm from RACING past the forward arm: no target distance can
-    exceed the forward fixpoint depth, so reverse levels beyond the
-    forward arm's current depth can never contribute — without
-    pacing, the reverse fixpoint (often the whole-graph direction)
-    burns large frontier levels that the cap then discards, and
-    wall time becomes a thread-scheduling lottery. ``level_hook``
-    (called with the new depth after each level materializes) is the
-    publishing side of that handshake.
     """
-    import time as _time
     spark = graph.nodes.sparkSession
-    # Int-keyed interior when the collision-checked 64-bit node
-    # keying holds (core.cached_int_*): every frontier, broadcast,
-    # dedup and anti-join exchange carries one 8-byte long instead of
-    # two strings — the same ~2.5x per-level cut measured on the
-    # pseudo-diameter and closeness sweeps. Gated to DEEP UNCAPPED
-    # fixpoints from a driver-side seed list (the `reachable` shape):
-    # only there do the many narrow levels amortize the one
-    # node-index join that maps the result back to strings. Shallow
-    # capped sweeps (k_hop), paced/stop-node arms (on_shortest_path)
-    # and big DataFrame seed sets (bow-tie) measured NET SLOWER on
-    # the int path (r10 session-4 A/B: khop_upstream 1.21->1.57s,
-    # on_shortest_path 3.39->4.79s, graph_bowtie 5.12->5.35s, vs
-    # reachability 4.88->3.17s, sssp_hops 2.35->1.85s) — they keep
-    # the exact string loop below.
-    if (
+    seeds = _sources_df(spark, sources)
+    stop = None if stop_nodes is None else _stop_at(spark, stop_nodes, found_depths)
+    # The int keying carries one 8-byte long per frontier, broadcast
+    # and exchange row instead of two strings, but pays one node-index
+    # join at the end. It is used only for DEEP UNCAPPED fixpoints from
+    # a driver-side seed list (the `reachable` shape), where the many
+    # narrow levels amortize that join. Capped sweeps (k_hop), stop-node
+    # runs (on_shortest_path) and DataFrame seed sets (bow-tie)
+    # measured NET SLOWER on it (r10 session-4 A/B: khop_upstream
+    # 1.21->1.57s, on_shortest_path 3.39->4.79s, graph_bowtie
+    # 5.12->5.35s, vs reachability 4.88->3.17s, sssp_hops 2.35->1.85s).
+    use_int = (
         max_dist is None
         and stop_nodes is None
-        and dynamic_cap is None
-        and pace is None
-        and level_hook is None
         and not isinstance(sources, DataFrame)
-    ):
-        intp = (
-            graph.cached_int_sym()
-            if direction == "sym"
-            else graph.cached_int_endpoints(direction)
-        )
-        if intp is not None:
-            return _bfs_int(
-                graph, intp, sources, direction, max_dist, stop_nodes,
-                dynamic_cap, found_depths, pace, level_hook,
-            )
-    edges = _directed_endpoints(graph, direction)
-    # Each level's frontier is eagerly localCheckpoint-ed: ONE job
-    # per level materializes it with truncated lineage; the visited
-    # set for the anti-join is the union of the cached frontiers
-    # (all small), so there is no persist/unpersist churn and no
-    # exponentially growing plan. The edge side comes from the
-    # graph-level endpoint cache (persisted once per direction).
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    # deep BFS (diameter > ~12) would otherwise chain enough
-    # localCheckpoints to hit the geometric replay blowup (ckpt.py)
-    ck = IterCheckpointer(prefix="onionnet_bfs_")
-    frontier = _sources_df(spark, sources).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    level_counts = [n_frontier]  # parallel to `frontiers`
-    n_visited = n_frontier
-    depth = 0
-
-    remaining: set[tuple[str, str]] | None = None
-    stop_df = None
-    if stop_nodes is not None:
-        remaining = {(l, str(i)) for (l, i) in stop_nodes}
-        # built ONCE: levels are disjoint (anti-join vs visited), so
-        # a stop node can hit at most one level — no need to rebuild
-        # the probe frame as targets get discovered
-        stop_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(remaining), "layer string, node_id string"
-            )
-        )
-
-    def _mark_found(level_df: DataFrame, d: int) -> None:
-        # tiny job: broadcast the (small) target list against the
-        # already-checkpointed level frontier
-        if not remaining:
-            return
-        hits = level_df.join(stop_df, on=NODE_KEY, how="left_semi").select(*NODE_KEY)
-        for r in hits.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            if found_depths is not None:
-                found_depths.append(d)
-
-    if remaining is not None:
-        _mark_found(frontier, 0)
-
-    def _capped(d: int) -> bool:
-        if max_dist is not None and d >= max_dist:
-            return True
-        if remaining is not None and not remaining:
-            return True  # all stop nodes seen: current depth == max target dist
-        if dynamic_cap is not None:
-            c = dynamic_cap()
-            if c is not None and d >= c:
-                return True
-        return False
-
-    while n_frontier > 0 and not _capped(depth):
-        if pace is not None:
-            # hold until the pacing peer has itself reached the level
-            # we want to build (or stopped publishing = unthrottled);
-            # re-check the cap while waiting so a cap landing during
-            # the hold ends the run without one more expansion
-            while True:
-                allowed = pace()
-                if allowed is None or allowed > depth or _capped(depth):
-                    break
-                _time.sleep(0.02)
-            if _capped(depth):
-                break
-        f = frontier.select(
-            F.col("layer").alias("src_layer"), F.col("node_id").alias("src_id")
-        )
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if direction == "sym":
-            # Undirected BFS invariant: an edge spans at most one
-            # level, so an expansion from level d can only re-touch
-            # levels d and d-1 — the anti-join needs just the LAST TWO
-            # frontiers, not the whole visited set. This keeps the
-            # dedup side (and its broadcast) bounded by two level
-            # sizes at every depth, where the full-union form paid a
-            # growing O(visited) rebuild + driver broadcast per level
-            # (the graph_pseudo_diameter constant, VERDICT r8 item 3).
-            # Directed BFS keeps the full union: a directed edge can
-            # reach arbitrarily earlier levels.
-            recent = frontiers[-2:]
-            visited_keys = recent[0].select(*NODE_KEY)
-            for prev in recent[1:]:
-                visited_keys = visited_keys.unionByName(prev.select(*NODE_KEY))
-            if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-                visited_keys = F.broadcast(visited_keys)
-        else:
-            visited_keys = frontiers[0].select(*NODE_KEY)
-            for prev in frontiers[1:]:
-                visited_keys = visited_keys.unionByName(prev.select(*NODE_KEY))
-            if n_visited <= BROADCAST_FRONTIER_MAX:
-                # the visited side is exactly the frontier levels we
-                # already counted: while it fits the broadcast budget
-                # the anti-join is shuffle-free (and at toy scale the
-                # level loop drops from 2 exchanges to 1)
-                visited_keys = F.broadcast(visited_keys)
-        # dedup on NODE_KEY (dist is constant this level), so the
-        # dedup exchange is hash-partitioned on exactly the
-        # anti-join key and gets reused — one shuffle per level
-        # instead of two. (Measured r9: anti-joining BEFORE the dedup
-        # to shrink the shuffle costs MORE — the broadcast-hash probe
-        # over the full 4M-row expansion beats the bytes it saves.)
-        nxt = (
-            edges.join(f, on=["src_layer", "src_id"])
-            .select(
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-                F.lit(depth + 1).alias("dist"),
-            )
-            .dropDuplicates(NODE_KEY)
-            .join(visited_keys, on=NODE_KEY, how="left_anti")
-        )
-        nxt = ck.cut(nxt)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if level_hook is not None:
-            level_hook(depth)
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-            if remaining:
-                _mark_found(nxt, depth)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
+    )
+    levels, nidx = _keyed_levels(
+        graph, seeds, direction, use_int, max_dist=max_dist, stop=stop
+    )
+    return _string_keyed(levels, nidx, seeds)
 
 
 def k_hop(
@@ -334,220 +330,6 @@ def reachable(
     return bfs_distances(graph, [start], direction, max_dist=None)
 
 
-def _bfs_int(
-    graph: OnionGraph,
-    intp: tuple[DataFrame, DataFrame],
-    sources,
-    direction: str,
-    max_dist: int | None,
-    stop_nodes,
-    dynamic_cap,
-    found_depths,
-    pace,
-    level_hook,
-) -> "DataFrame | None":
-    """bfs_distances over the collision-checked int-keyed edge view:
-    identical loop structure, stop-node marking, pacing and capping —
-    but every level's join/dedup/anti-join keys on one 8-byte long.
-    Level 0 is emitted from the caller's string source frame (phantom
-    seeds survive exactly like the string path); levels >= 1 map back
-    through the node index once, at the end, via the same inner join
-    the other int interiors use (_multi_source_bfs_int,
-    _sym_bfs_int) — which assumes the OnionGraph invariant that edge
-    endpoints appear in graph.nodes, exactly as they do.
-    """
-    import time as _time
-
-    e_int, nidx = intp
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    ck = IterCheckpointer(prefix="onionnet_bfs_int_")
-    srcs = _sources_df(spark, sources)
-    frontier = srcs.select(
-        F.xxhash64("layer", "node_id").alias("node"), F.col("dist")
-    ).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    level_counts = [n_frontier]
-    n_visited = n_frontier
-    depth = 0
-    found_local: list[int] = []
-
-    remaining: set[tuple[str, str]] | None = None
-    stop_int = None
-    if stop_nodes is not None:
-        remaining = {(l, str(i)) for (l, i) in stop_nodes}
-        stop_strings = spark.createDataFrame(
-            sorted(remaining), "layer string, node_id string"
-        )
-        # probe built once, carrying the stop node's STRING identity
-        # alongside its hash so hits report (layer, node_id) without
-        # a node-index join; levels are disjoint so each stop node
-        # hits at most one level
-        stop_int = F.broadcast(
-            stop_strings.select(
-                "layer", "node_id",
-                F.xxhash64("layer", "node_id").alias("node"),
-            )
-        )
-        # depth-0 hits come off the string source frame directly
-        hits0 = srcs.join(
-            F.broadcast(stop_strings), on=NODE_KEY, how="left_semi"
-        ).select(*NODE_KEY)
-        for r in hits0.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            found_local.append(0)
-
-    def _mark_found(level_df: DataFrame, d: int) -> None:
-        if not remaining:
-            return
-        hits = level_df.join(stop_int, on="node").select("layer", "node_id")
-        for r in hits.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            found_local.append(d)
-
-    def _capped(d: int) -> bool:
-        if max_dist is not None and d >= max_dist:
-            return True
-        if remaining is not None and not remaining:
-            return True
-        if dynamic_cap is not None:
-            c = dynamic_cap()
-            if c is not None and d >= c:
-                return True
-        return False
-
-    while n_frontier > 0 and not _capped(depth):
-        if pace is not None:
-            while True:
-                allowed = pace()
-                if allowed is None or allowed > depth or _capped(depth):
-                    break
-                _time.sleep(0.02)
-            if _capped(depth):
-                break
-        f = frontier.select(F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if direction == "sym":
-            # undirected invariant: dedup against the last TWO
-            # frontiers only (see the string loop for the proof)
-            recent = frontiers[-2:]
-            visited = recent[0].select("node")
-            for prev in recent[1:]:
-                visited = visited.unionByName(prev.select("node"))
-            if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-                visited = F.broadcast(visited)
-        else:
-            visited = frontiers[0].select("node")
-            for prev in frontiers[1:]:
-                visited = visited.unionByName(prev.select("node"))
-            if n_visited <= BROADCAST_FRONTIER_MAX:
-                visited = F.broadcast(visited)
-        nxt = (
-            e_int.join(f, on="s")
-            .select(F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(["node"])
-            .join(visited, on="node", how="left_anti")
-        )
-        # lazy cut + count = one job per level (see _sym_bfs_int)
-        nxt = ck.cut(nxt, eager=False)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if level_hook is not None:
-            level_hook(depth)
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-            if remaining:
-                _mark_found(nxt, depth)
-        frontier = nxt
-
-    deep = None
-    for prev in frontiers[1:]:
-        deep = prev if deep is None else deep.unionByName(prev)
-    if deep is None:
-        out = srcs
-    else:
-        mapped = deep.join(nidx, deep["node"] == nidx["idx"]).select(
-            "layer", "node_id", "dist"
-        )
-        out = srcs.unionByName(mapped)
-    if found_depths is not None:
-        found_depths.extend(found_local)
-    return out
-
-
-def _sym_bfs_int(
-    graph: OnionGraph, seed: tuple[str, str]
-) -> "DataFrame | None":
-    """Full undirected BFS fixpoint over the int-keyed symmetrized
-    view (core.cached_int_sym): DataFrame(node: long, dist: int), or
-    None when the 64-bit keying collided and the caller must use the
-    exact string-keyed `bfs_distances`.
-
-    Same loop shape as `bfs_distances(direction='sym')` — broadcast
-    frontier under the budget, per-level dedup fused with the
-    anti-join key, dedup against the last TWO frontiers only (an
-    undirected edge spans at most one level) — but every frontier,
-    broadcast, and exchange carries one 8-byte long instead of two
-    strings, which is where a whole-graph sweep's level cost lives.
-    """
-    pair = graph.cached_int_sym()
-    if pair is None:
-        return None
-    sym, _ = pair
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    ck = IterCheckpointer(prefix="onionnet_bfs_int_")
-    frontier = (
-        spark.createDataFrame([(seed[0], str(seed[1]))], "layer string, node_id string")
-        .select(
-            F.xxhash64("layer", "node_id").alias("node"),
-            F.lit(0).alias("dist"),
-        )
-        .localCheckpoint()
-    )
-    frontiers = [frontier]
-    level_counts = [frontier.count()]
-    n_frontier = level_counts[0]
-    depth = 0
-    while n_frontier > 0:
-        f = frontier.select(F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        recent = frontiers[-2:]
-        visited = recent[0].select("node")
-        for prev in recent[1:]:
-            visited = visited.unionByName(prev.select("node"))
-        if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-            visited = F.broadcast(visited)
-        nxt = (
-            sym.join(f, on="s")
-            .select(F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(["node"])
-            .join(visited, on="node", how="left_anti")
-        )
-        # lazy cut: the count below materializes the checkpoint, so
-        # each level is ONE job instead of two (r11 — the sweep is
-        # level-count x per-job overhead bound, measured 2.3s/level
-        # on 10-row late frontiers vs a 0.5s broadcast-probe floor)
-        nxt = ck.cut(nxt, eager=False)
-        depth += 1
-        n_frontier = nxt.count()
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
-
-
 def pseudo_diameter(
     graph: OnionGraph, start: tuple[str, str], n_sweeps: int = 2
 ) -> DataFrame:
@@ -563,51 +345,35 @@ def pseudo_diameter(
 
     Returns one row: (start_layer, start_id, peak_layer, peak_id,
     pseudo_diameter) where peak is the farthest node found by the
-    final sweep. Each sweep is the shared frontier-broadcast BFS
-    (one shuffle per level, localCheckpoint-flattened plans); the
-    per-sweep argmax is a TakeOrdered limit(1) — a scalar fetch, not
-    a data collect.
+    final sweep. Each sweep is the shared level loop, in the int
+    keying when the 64-bit node keys do not collide (~2.5x per level
+    at sf0.1); its last level holds exactly the nodes at the
+    eccentricity, so only those map back to strings for the
+    (layer, node_id) tie-break, and the chosen peak is the same in
+    either keying.
     """
     if n_sweeps < 1:
         raise ValueError(f"n_sweeps must be >= 1, got {n_sweeps}")
+    spark = graph.nodes.sparkSession
     src = (start[0], str(start[1]))
     far = None
     ecc = 0
-    # Int-keyed sweeps when the 64-bit node keying is collision-free
-    # (cached_int_sym checks; ~2.5x per-level win at sf0.1 — every
-    # frontier broadcast and dedup exchange carries an 8-byte long
-    # instead of two strings); the per-sweep argmax maps back through
-    # the node-index table BEFORE the (dist desc, layer, node_id)
-    # tie-break, so the chosen peak — and therefore the result — is
-    # identical to the string-keyed path, which remains the fallback.
-    int_ready = graph.cached_int_sym() is not None
     for _ in range(n_sweeps):
-        if int_ready:
-            d_int = _sym_bfs_int(graph, src)
-            _, nidx = graph.cached_int_sym()
-            # argmax without the full node-index join (r11): take the
-            # scalar max dist first, map back ONLY the nodes at that
-            # eccentricity (a handful on any real graph), then apply
-            # the same (dist desc, layer, node_id) tie-break — among
-            # max-dist rows that is exactly the old global argmax.
-            mx = d_int.agg(F.max("dist").alias("m")).collect()[0]["m"]
-            far_int = d_int.filter(F.col("dist") == mx)
-            d = far_int.join(nidx, far_int["node"] == nidx["idx"]).select(
-                "layer", "node_id", "dist"
-            )
-        else:
-            d = bfs_distances(graph, [src], direction="sym")
-        rows = d.orderBy(F.desc("dist"), "layer", "node_id").limit(1).collect()
+        levels, nidx = _keyed_levels(
+            graph, _sources_df(spark, [src]), "sym", use_int=True
+        )
+        peak = levels[-1]
+        if nidx is not None:
+            peak = peak.join(nidx, peak["node"] == nidx["idx"])
+        rows = peak.orderBy("layer", "node_id").limit(1).collect()
         if not rows:
-            # phantom seed on the int path (a seed absent from the
+            # phantom seed in the int keying (a seed absent from the
             # node table has no index row): eccentricity 0 at itself,
-            # matching the string path's seed-only frame
+            # matching the string keying's seed-only result
             far, ecc = src, 0
             break
-        row = rows[0]
-        far, ecc = (row["layer"], row["node_id"]), int(row["dist"])
+        far, ecc = (rows[0]["layer"], rows[0]["node_id"]), len(levels) - 1
         src = far
-    spark = graph.nodes.sparkSession
     return spark.createDataFrame(
         [(start[0], str(start[1]), far[0], far[1], ecc)],
         "start_layer string, start_id string, peak_layer string, "
@@ -746,62 +512,24 @@ def on_shortest_path(
     semantics exactly, including the quirk that d_r is the min over
     ALL targets while membership is tested against the full set of
     target distances.
+
+    Neither arm needs its full fixpoint: a member v has
+    d_f(v) + d_r(v) = td for some target distance td <= D, the
+    largest distance of a found target, so d_f(v) <= D and
+    d_r(v) <= D. The two arms run one after the other: the forward
+    BFS stops once every target is found (its last level is D), then
+    the reverse BFS runs capped at D (VERDICT r2: O(ego-radius)
+    rounds instead of O(diameter)).
     """
-    # The forward and reverse fixpoints are independent pipelines, so
-    # they are submitted from two threads and Spark interleaves their
-    # jobs across the executor pool — roughly halving wall time (each
-    # BFS level is a small job that underutilizes the cluster alone).
-    #
-    # Neither BFS needs its full fixpoint: membership requires
-    # d_f(v) + d_r(v) == some target distance td <= D where
-    # D = max(target dists), so d_f(v) <= D and d_r(v) <= D for every
-    # member. The forward run stops itself once all targets are seen
-    # (its stopping depth IS D); it publishes D through `cap_state`,
-    # and the reverse run polls it between levels so it also stops at
-    # D instead of the full reachable fixpoint (VERDICT r2: the
-    # difference between O(diameter) and O(ego-radius) rounds).
-    from concurrent.futures import ThreadPoolExecutor
-
-    cap_state: dict[str, int | None] = {"cap": None}
-    # forward publishes its per-level progress; the reverse arm is
-    # PACED to it (never builds level d before forward has) — no
-    # target distance can exceed the forward fixpoint depth, so a
-    # reverse level deeper than forward's current depth can never
-    # contribute and racing ahead only burns the big-direction
-    # frontiers the cap then discards (the r05 on_shortest_path
-    # regression was exactly this thread-scheduling lottery)
-    progress: dict[str, int | bool] = {"depth": 0, "done": False}
     found_depths: list[int] = []
-
-    def _run_forward() -> DataFrame:
-        try:
-            out = bfs_distances(
-                graph,
-                [source],
-                "downstream",
-                stop_nodes=targets,
-                found_depths=found_depths,
-                level_hook=lambda d: progress.__setitem__("depth", d),
-            )
-            # max depth among FOUND targets; unreachable targets
-            # never contribute to td so they don't raise the cap
-            cap_state["cap"] = max(found_depths) if found_depths else 0
-            return out
-        finally:
-            progress["done"] = True
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fwd = pool.submit(_run_forward)
-        f_rev = pool.submit(
-            bfs_distances,
-            graph,
-            targets,
-            "upstream",
-            dynamic_cap=lambda: cap_state["cap"],
-            pace=lambda: None if progress["done"] else progress["depth"],
-        )
-        fwd = f_fwd.result().withColumnRenamed("dist", "d_f")
-        rev = f_rev.result().withColumnRenamed("dist", "d_r")
+    fwd = bfs_distances(
+        graph, [source], "downstream",
+        stop_nodes=targets, found_depths=found_depths,
+    ).withColumnRenamed("dist", "d_f")
+    # unreachable targets have no td, so they do not raise the cap
+    rev = bfs_distances(
+        graph, targets, "upstream", max_dist=max(found_depths, default=0)
+    ).withColumnRenamed("dist", "d_r")
     target_dists = (
         fwd.join(
             F.broadcast(
@@ -879,133 +607,38 @@ def multi_source_bfs(
     so each level is still a single join + dedup + anti-join round
     and the per-level job count is independent of the source count
     (running k separate bfs_distances calls would cost k times the
-    scheduling). sid is the source's 'layer:node_id' key.
+    scheduling). sid is the source's 'layer:node_id' key; duplicate
+    sources collapse to one sid.
 
     Unlike bfs_distances (which MERGES sources into a min-distance
     field), this keeps the per-source distance — the primitive for
     sampled centralities (harmonic closeness, betweenness pivots)
     and landmark distance labelings.
 
+    The sweep carries a small int source id; directed sweeps run in
+    the int keying when the 64-bit node keys do not collide, since
+    their visited union reaches k x |reach| rows.
+
     Returns DataFrame(sid, layer, node_id, dist).
     """
     spark = graph.nodes.sparkSession
-    if direction in ("downstream", "upstream"):
-        intp = graph.cached_int_endpoints(direction)
-        if intp is not None:
-            return _multi_source_bfs_int(graph, intp, sources, max_dist)
-    edges = _directed_endpoints(graph, direction)
-    keys = ["sid", *NODE_KEY]
-    frontier = spark.createDataFrame(
-        [(f"{l}:{i}", l, str(i), 0) for (l, i) in sources],
-        "sid string, layer string, node_id string, dist int",
-    ).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    depth = 0
-    while n_frontier > 0 and (max_dist is None or depth < max_dist):
-        f = frontier.select(
-            "sid",
-            F.col("layer").alias("src_layer"),
-            F.col("node_id").alias("src_id"),
-        )
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        visited = frontiers[0].select(*keys)
-        for prev in frontiers[1:]:
-            visited = visited.unionByName(prev.select(*keys))
-        nxt = (
-            edges.join(f, on=["src_layer", "src_id"])
-            .select(
-                "sid",
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-                F.lit(depth + 1).alias("dist"),
-            )
-            .dropDuplicates(keys)
-            .join(visited, on=keys, how="left_anti")
-            .localCheckpoint()
-        )
-        depth += 1
-        n_frontier = nxt.count()
-        if n_frontier:
-            frontiers.append(nxt)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
-
-
-def _multi_source_bfs_int(
-    graph: OnionGraph,
-    intp: tuple[DataFrame, DataFrame],
-    sources,
-    max_dist: int | None,
-) -> DataFrame:
-    """multi_source_bfs over the collision-checked int-keyed
-    endpoint view: the frontier and the growing visited union carry
-    (sid: int, node: long) instead of three strings, which is where
-    a k-pivot whole-graph sweep's level cost lives (the visited union
-    reaches k x |reach| rows). Output schema and values are
-    identical to the string path — sid strings and (layer, node_id)
-    are re-attached once, at the end. Duplicate sources collapse to
-    one sid exactly like the string path's identical-sid dedup.
-    """
-    e_int, nidx = intp
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    uniq = list(dict.fromkeys((l, str(i)) for (l, i) in sources))
-    src_map = spark.createDataFrame(
-        [(si, l, i) for si, (l, i) in enumerate(uniq)],
-        "sid_i int, s_layer string, s_id string",
+    uniq = _uniq(sources)
+    seeds = spark.createDataFrame(
+        [(si, l, i, 0) for si, (l, i) in enumerate(uniq)],
+        "sid_i int, layer string, node_id string, dist int",
     )
-    ck = IterCheckpointer(prefix="onionnet_msbfs_int_")
-    frontier = src_map.select(
-        "sid_i",
-        F.xxhash64("s_layer", "s_id").alias("node"),
-        F.lit(0).alias("dist"),
-    ).localCheckpoint()
-    keys = ["sid_i", "node"]
-    frontiers = [frontier]
-    level_counts = [frontier.count()]
-    n_frontier = level_counts[0]
-    n_visited = n_frontier
-    depth = 0
-    while n_frontier > 0 and (max_dist is None or depth < max_dist):
-        f = frontier.select("sid_i", F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        visited = frontiers[0].select(*keys)
-        for prev in frontiers[1:]:
-            visited = visited.unionByName(prev.select(*keys))
-        if n_visited <= BROADCAST_FRONTIER_MAX:
-            visited = F.broadcast(visited)
-        nxt = (
-            e_int.join(f, on="s")
-            .select("sid_i", F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(keys)
-            .join(visited, on=keys, how="left_anti")
-        )
-        nxt = ck.cut(nxt)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    sid_map = F.broadcast(
-        src_map.select(
-            "sid_i", F.concat_ws(":", "s_layer", "s_id").alias("sid")
+    levels, nidx = _keyed_levels(
+        graph, seeds, direction, direction != "sym", ("sid_i",), max_dist
+    )
+    sid = F.broadcast(
+        spark.createDataFrame(
+            [(si, f"{l}:{i}") for si, (l, i) in enumerate(uniq)],
+            "sid_i int, sid string",
         )
     )
     return (
-        out.join(nidx, out["node"] == nidx["idx"])
-        .join(sid_map, on="sid_i")
+        _string_keyed(levels, nidx, seeds)
+        .join(sid, on="sid_i")
         .select("sid", "layer", "node_id", "dist")
     )
 

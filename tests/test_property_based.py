@@ -133,6 +133,139 @@ def test_triangle_count_matches_naive(spark, edges):
     assert triangle_count(g).collect()[0][0] == _naive_triangles(edges)
 
 
+def _naive_bfs(edges, seeds, direction, max_dist=None):
+    """{node: least hop distance} from the seed set."""
+    adj = {}
+    for u, v in edges:
+        if direction in ("downstream", "sym"):
+            adj.setdefault(u, set()).add(v)
+        if direction in ("upstream", "sym"):
+            adj.setdefault(v, set()).add(u)
+    dist = {s: 0 for s in seeds}
+    frontier, d = list(dist), 0
+    while frontier and (max_dist is None or d < max_dist):
+        d += 1
+        nxt = [v for u in frontier for v in adj.get(u, ()) if v not in dist]
+        for v in nxt:
+            dist[v] = d
+        frontier = list(dict.fromkeys(nxt))
+    return dist
+
+
+def _dist_map(df, *key):
+    """{(*key, node): dist} over the rows of df; fails on a node
+    reported twice."""
+    rows = df.collect()
+    got = {(*(r[k] for k in key), int(r["node_id"])): r["dist"] for r in rows}
+    assert len(got) == len(rows)
+    return got
+
+
+def _in_both_keyings(run):
+    """run() as is, then again with the int-keyed views reported
+    unavailable, so every traversal also takes the string keying."""
+    import pytest
+
+    from onionnet_spark.core import OnionGraph
+
+    with pytest.MonkeyPatch.context() as mp:
+        first = run()
+        mp.setattr(OnionGraph, "cached_int_endpoints", lambda self, direction: None)
+        mp.setattr(OnionGraph, "cached_int_sym", lambda self: None)
+        return first, run()
+
+
+@given(edge_lists, node_ids, st.integers(min_value=1, max_value=3))
+@SET
+def test_k_hop_and_reachable_match_python_bfs(spark, edges, start, k):
+    from onionnet_spark.operators.traversal import k_hop, reachable
+
+    g, _ = _graph_of(spark, edges)
+    seed = ("l", str(start))
+
+    def run():
+        out = {
+            d: _dist_map(k_hop(g, seed, k, d))
+            for d in ("downstream", "upstream", "bi")
+        }
+        for d in ("downstream", "upstream"):
+            out["reach_" + d] = _dist_map(reachable(g, seed, d))
+        return out
+
+    down, up = (_naive_bfs(edges, [start], d, k) for d in ("downstream", "upstream"))
+    want = {
+        "downstream": down,
+        "upstream": up,
+        "bi": {v: min(m[v] for m in (down, up) if v in m) for v in down | up},
+    }
+    for d in ("downstream", "upstream"):
+        want["reach_" + d] = _naive_bfs(edges, [start], d)
+    want = {c: {(v,): x for v, x in m.items()} for c, m in want.items()}
+    for got in _in_both_keyings(run):
+        assert got == want
+
+
+@given(
+    edge_lists,
+    st.lists(node_ids, min_size=1, max_size=3),
+    st.one_of(st.none(), st.integers(min_value=1, max_value=3)),
+)
+@SET
+def test_multi_source_bfs_matches_python_bfs(spark, edges, sources, max_dist):
+    from onionnet_spark.operators.traversal import multi_source_bfs
+
+    g, _ = _graph_of(spark, edges)
+    seeds = [("l", str(s)) for s in sources]
+
+    def run():
+        return {
+            d: _dist_map(multi_source_bfs(g, seeds, d, max_dist), "sid")
+            for d in ("downstream", "upstream", "sym")
+        }
+
+    want = {
+        d: {
+            (f"l:{s}", v): x
+            for s in sources
+            for v, x in _naive_bfs(edges, [s], d, max_dist).items()
+        }
+        for d in ("downstream", "upstream", "sym")
+    }
+    for got in _in_both_keyings(run):
+        assert got == want
+
+
+@given(edge_lists, node_ids, st.lists(node_ids, max_size=3), st.booleans())
+@SET
+def test_on_shortest_path_matches_python_bfs(
+    spark, edges, source, targets, source_is_target
+):
+    from onionnet_spark.operators.traversal import on_shortest_path
+
+    g, _ = _graph_of(spark, edges)
+    if source_is_target:
+        targets = targets + [source]
+
+    def run():
+        rows = on_shortest_path(
+            g, ("l", str(source)), [("l", str(t)) for t in targets]
+        ).collect()
+        return {(int(r["node_id"]), r["d_f"], r["d_r"]) for r in rows}
+
+    # targets the forward BFS never reaches (or absent from the graph)
+    # have no distance and contribute no shortest-path length
+    fwd = _naive_bfs(edges, [source], "downstream")
+    rev = _naive_bfs(edges, targets, "upstream")
+    lengths = {fwd[t] for t in targets if t in fwd}
+    want = {
+        (v, fwd[v], rev[v])
+        for v in fwd
+        if v in rev and fwd[v] + rev[v] in lengths
+    }
+    for got in _in_both_keyings(run):
+        assert got == want
+
+
 texts = st.lists(
     st.text(alphabet="ab ", min_size=0, max_size=12), min_size=1, max_size=10
 )

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import OnionGraph
+from onionnet_spark.operators import filters
 from onionnet_spark.operators.analytics import ego_stats
 from onionnet_spark.operators.filters import project_bipartite
 
@@ -43,7 +44,13 @@ def multi_membership_graph(spark):
     return OnionGraph(nodes, edges)
 
 
-def test_project_bipartite_multi_membership_counts(multi_membership_graph):
+@pytest.mark.parametrize("block", [4096, 2, 1])
+def test_project_bipartite_multi_membership_counts(
+    multi_membership_graph, monkeypatch, block
+):
+    # block 2 splits g3 = {m2, m3, m4} across two blocks; block 1 puts
+    # every member in its own block, so every pair is a cross-block pair
+    monkeypatch.setattr(filters, "BIPARTITE_BLOCK", block)
     got = rows_to_set(
         project_bipartite(multi_membership_graph, "member", "group")
     )

@@ -1,5 +1,5 @@
 """Round-6 regression tests: gate-surface hashability, entity-id
-numeric-min canonicalization, BFS pacing semantics."""
+numeric-min canonicalization, on-shortest-path semantics."""
 
 import pyspark.sql.functions as F
 
@@ -65,43 +65,11 @@ def test_gate_outputs_are_scalar_typed(spark, sf_dir):
     assert offenders == []
 
 
-def test_bfs_pace_waits_for_publisher(spark, sf_dir):
-    """A paced BFS must not build level d+1 before the pacer allows
-    it, and must still reach the identical fixpoint."""
-    from onionnet_spark.operators import traversal as T
-    from onionnet_spark.queries.graph_queries import get_graph
-
-    g = get_graph(spark, sf_dir)
-    src = [("region", "0")]
-    plain = {
-        (r["layer"], r["node_id"]): r["dist"]
-        for r in T.bfs_distances(g, src, "upstream", max_dist=3).collect()
-    }
-    seen_levels = []
-
-    # pacer releases one level per poll; records the release sequence
-    state = {"allowed": 0}
-
-    def pace():
-        state["allowed"] += 1
-        seen_levels.append(state["allowed"])
-        return state["allowed"]
-
-    paced = {
-        (r["layer"], r["node_id"]): r["dist"]
-        for r in T.bfs_distances(
-            g, src, "upstream", max_dist=3, pace=pace
-        ).collect()
-    }
-    assert paced == plain
-    assert seen_levels  # the pacer was actually consulted
-
-
 def test_on_shortest_path_matches_unpaced_semantics(spark, sf_dir):
-    """Pacing is a scheduling change only — on-shortest membership is
-    byte-identical to the r03 semantics (source customer:1, all
-    region targets; 4 of 5 unreachable exercises the degraded
-    forward fixpoint)."""
+    """On-shortest membership keeps the r03 semantics with the
+    forward arm stopped at the last found target and the reverse arm
+    capped at that depth (source customer:1, all region targets; 4
+    of 5 unreachable exercises the degraded forward fixpoint)."""
     from onionnet_spark.operators import traversal as T
     from onionnet_spark.queries.graph_queries import get_graph
 

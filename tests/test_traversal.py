@@ -101,6 +101,33 @@ def test_bfs_stop_nodes_truncates_at_last_target(spark):
     assert depths == [3]
 
 
+def test_deep_chain_distances_across_checkpoint_rebases(spark, monkeypatch):
+    # path p0 -> p1 -> ... -> p24: 24 levels, so every entry point's
+    # level loop crosses the IterCheckpointer parquet rebases at cuts
+    # 10 and 20 and must still report node i at distance i
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators.traversal import multi_source_bfs
+
+    n = 25
+    nodes = spark.createDataFrame(
+        [("L", f"p{i}") for i in range(n)], "layer string, node_id string"
+    )
+    edges = spark.createDataFrame(
+        [("L", f"p{i}", "L", f"p{i+1}") for i in range(n - 1)],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    g = grow_onion(nodes, edges)
+    want = {(i, "L", f"p{i}") for i in range(n)}
+    # int keying
+    assert rows_to_set(reachable(g, ("L", "p0"), "downstream")) == want
+    # string keying, undirected last-two-levels dedup
+    monkeypatch.setattr(OnionGraph, "cached_int_sym", lambda self: None)
+    assert rows_to_set(bfs_distances(g, [("L", "p0")], direction="sym")) == want
+    got = multi_source_bfs(g, [("L", "p0")], direction="sym")
+    assert rows_to_set(got.select("dist", "layer", "node_id")) == want
+    assert {r["sid"] for r in got.select("sid").collect()} == {"L:p0"}
+
+
 def test_on_shortest_deep_tail_unaffected_by_early_stop(spark):
     # diamond a->{b,c}->d followed by a long tail d->t1->...->t6:
     # early termination must not change membership (a, b, c, d — both
