@@ -461,6 +461,7 @@ def _clear_codebook_store(spark) -> bool:
 
 
 def main() -> None:
+    started = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     sf_m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(sf_m.group(1).rstrip(".")) if sf_m else -1.0
     try:
@@ -639,10 +640,13 @@ def main() -> None:
     # The driver artifact keeps only the last ~2000 chars of stdout,
     # which truncated 31 of 97 per-query figures in BENCH_r06 — so
     # ALSO write the full JSON to a file that gets committed with
-    # the round (BENCH_FULL_latest.json, overwritten per run).
+    # the round, stamped with the core count and the UTC start time
+    # so no run overwrites another.
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL_latest.json"), "w") as f:
+        cpus = payload["cpus"].replace("*", "all")  # local[*]
+        name = f"BENCH_FULL_c{cpus}_{started}.json"
+        with open(os.path.join(here, name), "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
     except OSError:
         pass  # read-only checkout: stdout line still carries totals

@@ -18,11 +18,42 @@ to a dictionary page in parquet and broadcasts for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+from functools import lru_cache
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 NODE_KEY = ["layer", "node_id"]
 EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
+
+
+@lru_cache(maxsize=64)
+def _ddl_schema(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)
+
+
+def literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-side row list as a JVM-only frame with exactly
+    the declared `ddl` types: the rows travel as ONE JSON string
+    literal that `from_json` parses into an array of structs and
+    `inline` explodes, which the optimizer folds to a literal array.
+
+    A Python list passed to `spark.createDataFrame` is a parallelized
+    Python RDD in classic PySpark, so every scan of it forks Python
+    worker tasks;
+    BFS seeds, stop probes and target sets are rescanned at every
+    level. The Arrow route depends on a session conf and falls back
+    to the same RDD without it. Row values must be JSON-encodable
+    (str, int, float, bool, None); an empty list keeps the schema.
+    """
+    schema = _ddl_schema(ddl)
+    names = schema.fieldNames()
+    js = json.dumps([dict(zip(names, r)) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(js), ArrayType(schema)))
+    )
 
 
 class OnionGraph:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import NODE_KEY, OnionGraph
+from onionnet_spark.core import NODE_KEY, OnionGraph, literal_frame
 from onionnet_spark.operators.components import BCAST_STATE_MAX
 
 
@@ -175,8 +175,10 @@ def personalized_pagerank(
     unreachable from the seeds hold exactly 0. Returns
     (layer, node_id, ppr) over the full node set.
     """
-    seed_df = graph.nodes.sparkSession.createDataFrame(
-        [(l, str(i)) for (l, i) in seeds], "layer string, node_id string"
+    seed_df = literal_frame(
+        graph.nodes.sparkSession,
+        [(l, str(i)) for (l, i) in seeds],
+        "layer string, node_id string",
     )
     n_seeds = len(seeds)
     e = graph.edge_endpoints()
@@ -323,9 +325,15 @@ def k_core(
     # triangle orientation / clustering); _full_degrees is only for
     # post-rebaseline recomputes over the shrunken edge set.
     deg0 = graph.canonical_degrees()
-    # cum_dec: node -> total decrements since the last re-baseline
-    cum_dec = spark.createDataFrame([], "n string, c bigint").localCheckpoint()
-    removed = spark.createDataFrame([], "n string").localCheckpoint()
+
+    def _empty_ledgers() -> tuple[DataFrame, DataFrame]:
+        # cum_dec: node -> total decrements since the last re-baseline
+        return (
+            literal_frame(spark, [], "n string, c bigint"),
+            literal_frame(spark, [], "n string"),
+        )
+
+    cum_dec, removed = _empty_ledgers()
     n_removed = 0
     low = deg0.filter(F.col("d") < k).select("n").localCheckpoint(eager=False)
     n_low = low.count()
@@ -356,10 +364,7 @@ def k_core(
                 .localCheckpoint()
             )
             deg0 = _full_degrees(canon)
-            cum_dec = spark.createDataFrame(
-                [], "n string, c bigint"
-            ).localCheckpoint()
-            removed = spark.createDataFrame([], "n string").localCheckpoint()
+            cum_dec, removed = _empty_ledgers()
             n_removed = 0
             low = deg0.filter(F.col("d") < k).select("n").localCheckpoint()
             n_low = low.count()
@@ -417,10 +422,7 @@ def k_core(
                 .localCheckpoint()
             )
             deg0 = _full_degrees(canon)
-            cum_dec = spark.createDataFrame(
-                [], "n string, c bigint"
-            ).localCheckpoint()
-            removed = spark.createDataFrame([], "n string").localCheckpoint()
+            cum_dec, removed = _empty_ledgers()
             n_removed = 0
             if n_low:
                 low = deg0.filter(F.col("d") < k).select("n").localCheckpoint()
@@ -493,10 +495,11 @@ def betweenness_sampled(
     # sid IS the source's node key, so the final "drop the source's
     # own row" filter is just key != sid.
     levels: list[DataFrame] = [
-        spark.createDataFrame(
+        literal_frame(
+            spark,
             [(f"{sl}:{si}", f"{sl}:{si}", 1.0) for (sl, si) in sources],
             "sid string, key string, sigma double",
-        ).localCheckpoint()
+        )
     ]
     for _ in range(max_depth):
         frontier = levels[-1]
@@ -2445,8 +2448,7 @@ def coreness(
             f"coreness: nodes remain after k_max={k_max}; raise k_max"
         )
     if removed is None:
-        schema = "node string, coreness int"
-        return adj.sparkSession.createDataFrame([], schema)
+        return literal_frame(adj.sparkSession, [], "node string, coreness int")
     return removed.select("node", F.col("coreness").cast("int").alias("coreness"))
 
 
@@ -2661,7 +2663,7 @@ def rich_club(graph: OnionGraph, k_values: list[int]) -> DataFrame:
     phi NULL when n_k < 2.
     """
     sess = graph.nodes.sparkSession
-    ks = sess.createDataFrame([(int(k),) for k in k_values], "k int")
+    ks = literal_frame(sess, [(int(k),) for k in k_values], "k int")
     deg = graph.canonical_degrees().select(F.col("n").alias("node"), "d")
     canon = graph.canonical_edges()
     edge_mind = (

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import NODE_KEY, OnionGraph
+from onionnet_spark.operators import traversal
 
 _OPS = {
     "==": _op.eq,
@@ -259,8 +260,11 @@ def project_bipartite(
     )
     xb = blk.select("via", F.col("bi").alias("xi"), F.col("blk").alias("xblk"))
     yb = blk.select("via", F.col("bi").alias("yi"), F.col("blk").alias("yblk"))
+    # yb carries each membership once, so the collected total bounds it
+    if st["m"] <= traversal.BROADCAST_FRONTIER_MAX:
+        yb = F.broadcast(yb)
     cross = (
-        xb.join(F.broadcast(yb), on="via")
+        xb.join(yb, on="via")
         .filter(F.col("xi") < F.col("yi"))
         .select(
             F.explode(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from onionnet_spark.core import literal_frame
+
 
 def asof_join(
     left: DataFrame,
@@ -391,7 +393,7 @@ def sorted_neighborhood_pairs(
     for pid in sorted(counts):
         offsets.append((pid, running))
         running += counts[pid]
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    off_df = literal_frame(spark, offsets, "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy("val", "id")
     ranked = (
         part.join(F.broadcast(off_df), on="_pid")

@@ -16,9 +16,17 @@ column-pruned edge endpoints, dedups on the node key and anti-joins
 the visited levels. The frontier and the visited side are broadcast
 while their counted sizes fit BROADCAST_FRONTIER_MAX, so the edge side
 is never shuffled; past it the joins fall back to shuffles. Each level
-is a lazy checkpoint that its own count materializes — one job per
-level — and every tenth cut is a parquet rebase
+past the seed is a lazy checkpoint that its own count materializes —
+one job per level — and every tenth cut is a parquet rebase
 (ckpt.IterCheckpointer), so plans stay flat at any depth.
+
+Driver-side seeds, stop probes, target sets and small results are
+JVM literal frames (core.literal_frame), never a Python list passed
+to `spark.createDataFrame`: that is a Python RDD, and every scan of
+it forks Python worker tasks — at every level for a seed or a
+probe. Such a seed's level 0 is the literal frame itself with its
+size known on the driver, so it costs no job; a DataFrame seed is
+checkpointed and counted.
 
 The loop runs over given key columns: the string keying
 (layer, node_id), or the int keying, one xxhash64 long per node
@@ -33,7 +41,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import NODE_KEY, OnionGraph
+from onionnet_spark.core import NODE_KEY, OnionGraph, literal_frame
 from onionnet_spark.operators.ckpt import IterCheckpointer
 
 # Frontiers below this row count are broadcast to the edge join.
@@ -60,18 +68,27 @@ def _uniq(nodes) -> list[tuple[str, str]]:
     return list(dict.fromkeys((l, str(i)) for (l, i) in nodes))
 
 
-def _sources_df(spark: SparkSession, sources) -> DataFrame:
-    """Seed frame for BFS: either a driver-side list of (layer, id)
-    tuples (the ego-search shape) or a DataFrame with (layer,
-    node_id) columns — the multi-source-from-a-computed-set shape
-    (e.g. 'everything reachable from the giant SCC'), which must
-    never round-trip through the driver at scale. `_bfs_levels`
-    checkpoints it."""
+def _sources_df(spark: SparkSession, sources) -> tuple[DataFrame, int | None]:
+    """Seed frame for BFS and its row count when known on the driver.
+
+    A driver-side list of (layer, id) tuples (the ego-search shape)
+    becomes a JVM literal frame of its distinct sources, and that
+    count is returned: `_bfs_levels` uses the frame as level 0 as is,
+    with no job. A DataFrame with (layer, node_id) columns — the
+    multi-source-from-a-computed-set shape (e.g. 'everything
+    reachable from the giant SCC'), which must never round-trip
+    through the driver at scale — comes back with count None, and
+    `_bfs_levels` checkpoints and counts it."""
     if isinstance(sources, DataFrame):
-        return sources.select("layer", "node_id", F.lit(0).alias("dist"))
-    return spark.createDataFrame(
-        [(l, i, 0) for (l, i) in _uniq(sources)],
-        "layer string, node_id string, dist int",
+        return sources.select("layer", "node_id", F.lit(0).alias("dist")), None
+    uniq = _uniq(sources)
+    return (
+        literal_frame(
+            spark,
+            [(l, i, 0) for (l, i) in uniq],
+            "layer string, node_id string, dist int",
+        ),
+        len(uniq),
     )
 
 
@@ -85,6 +102,7 @@ def _bfs_levels(
     undirected: bool = False,
     max_dist: int | None = None,
     stop=None,
+    n_seed: int | None = None,
 ) -> list[DataFrame]:
     """The level-synchronous BFS loop: the levels (carry + key +
     dist) reached from `seed` (dist 0), level 0 first and every
@@ -94,12 +112,17 @@ def _bfs_levels(
     to `key`. `carry` columns (a source id) ride along and are part
     of a node's identity, so each carry value gets its own BFS in the
     same sweep. `stop(level, depth)` is called on each level once it
-    is materialized; True ends the loop.
+    is materialized; True ends the loop. `n_seed` is the seed's row
+    count when the driver knows it (a literal seed frame, level 0 as
+    is); None checkpoints and counts the seed.
     """
     ident = [*carry, *key]
     ck = IterCheckpointer(prefix="onionnet_bfs_")
-    frontier = seed.localCheckpoint(eager=False)
-    n = frontier.count()
+    if n_seed is None:
+        frontier = seed.localCheckpoint(eager=False)
+        n = frontier.count()
+    else:
+        frontier, n = seed, n_seed
     levels, counts = [frontier], [n]
     depth = 0
     while (
@@ -154,12 +177,13 @@ def _keyed_levels(
     carry: tuple[str, ...] = (),
     max_dist: int | None = None,
     stop=None,
+    n_seed: int | None = None,
 ) -> tuple[list[DataFrame], DataFrame | None]:
     """`_bfs_levels` from a string-keyed seed frame (carry, layer,
-    node_id, dist): in the int keying when `use_int` and the graph's
-    64-bit node keys do not collide, else in the string keying.
-    Returns (levels, node index); the index is None for string
-    levels."""
+    node_id, dist) of `n_seed` rows (None: unknown): in the int
+    keying when `use_int` and the graph's 64-bit node keys do not
+    collide, else in the string keying. Returns (levels, node
+    index); the index is None for string levels."""
     intp = None
     if use_int:
         intp = (
@@ -172,13 +196,14 @@ def _keyed_levels(
         levels = _bfs_levels(
             _directed_endpoints(graph, direction), seeds, NODE_KEY,
             ["src_layer", "src_id"], ["dst_layer", "dst_id"],
-            carry, undirected, max_dist, stop,
+            carry, undirected, max_dist, stop, n_seed,
         )
         return levels, None
     edges, nidx = intp
     seed = seeds.select(*carry, F.xxhash64(*NODE_KEY).alias("node"), "dist")
     levels = _bfs_levels(
-        edges, seed, ["node"], ["s"], ["d"], carry, undirected, max_dist, stop
+        edges, seed, ["node"], ["s"], ["d"], carry, undirected, max_dist, stop,
+        n_seed,
     )
     return levels, nidx
 
@@ -207,7 +232,7 @@ def _stop_at(spark: SparkSession, stop_nodes, found_depths):
     hits at most one level and the probe is built once."""
     remaining = set(_uniq(stop_nodes))
     probe = F.broadcast(
-        spark.createDataFrame(sorted(remaining), "layer string, node_id string")
+        literal_frame(spark, sorted(remaining), "layer string, node_id string")
     )
 
     def stop(level: DataFrame, depth: int) -> bool:
@@ -247,7 +272,7 @@ def bfs_distances(
     list) receives the depth at which each stop node was first seen.
     """
     spark = graph.nodes.sparkSession
-    seeds = _sources_df(spark, sources)
+    seeds, n_seed = _sources_df(spark, sources)
     stop = None if stop_nodes is None else _stop_at(spark, stop_nodes, found_depths)
     # The int keying carries one 8-byte long per frontier, broadcast
     # and exchange row instead of two strings, but pays one node-index
@@ -264,7 +289,8 @@ def bfs_distances(
         and not isinstance(sources, DataFrame)
     )
     levels, nidx = _keyed_levels(
-        graph, seeds, direction, use_int, max_dist=max_dist, stop=stop
+        graph, seeds, direction, use_int, max_dist=max_dist, stop=stop,
+        n_seed=n_seed,
     )
     return _string_keyed(levels, nidx, seeds)
 
@@ -359,9 +385,8 @@ def pseudo_diameter(
     far = None
     ecc = 0
     for _ in range(n_sweeps):
-        levels, nidx = _keyed_levels(
-            graph, _sources_df(spark, [src]), "sym", use_int=True
-        )
+        seed, n_seed = _sources_df(spark, [src])
+        levels, nidx = _keyed_levels(graph, seed, "sym", True, n_seed=n_seed)
         peak = levels[-1]
         if nidx is not None:
             peak = peak.join(nidx, peak["node"] == nidx["idx"])
@@ -374,7 +399,8 @@ def pseudo_diameter(
             break
         far, ecc = (rows[0]["layer"], rows[0]["node_id"]), len(levels) - 1
         src = far
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(start[0], str(start[1]), far[0], far[1], ecc)],
         "start_layer string, start_id string, peak_layer string, "
         "peak_id string, pseudo_diameter int",
@@ -430,7 +456,8 @@ def weighted_sssp(
             )
         spark = graph.nodes.sparkSession
         dist = (
-            spark.createDataFrame(
+            literal_frame(
+                spark,
                 [(l, str(i), 0.0) for (l, i) in sources],
                 "layer string, node_id string, dist double",
             )
@@ -530,22 +557,11 @@ def on_shortest_path(
     rev = bfs_distances(
         graph, targets, "upstream", max_dist=max(found_depths, default=0)
     ).withColumnRenamed("dist", "d_r")
-    target_dists = (
-        fwd.join(
-            F.broadcast(
-                fwd.sparkSession.createDataFrame(
-                    [(l, str(i)) for (l, i) in targets], "layer string, node_id string"
-                )
-            ),
-            on=NODE_KEY,
-        )
-        .select(F.col("d_f").alias("td"))
-        .distinct()
-    )
+    # the target distances {d_f(t)} are the found depths: the stop
+    # probe records each found target once, at its d_f
     return (
         fwd.join(rev, on=NODE_KEY)
-        .withColumn("d_sum", F.col("d_f") + F.col("d_r"))
-        .join(F.broadcast(target_dists), F.col("d_sum") == F.col("td"), "left_semi")
+        .filter((F.col("d_f") + F.col("d_r")).isin(sorted(set(found_depths))))
         .select("layer", "node_id", "d_f", "d_r")
     )
 
@@ -574,8 +590,8 @@ def on_shortest_path_weighted(
         rev = f_rev.result().withColumnRenamed("dist", "d_r")
     spark = graph.nodes.sparkSession
     target_df = F.broadcast(
-        spark.createDataFrame(
-            [(l, str(i)) for (l, i) in targets], "layer string, node_id string"
+        literal_frame(
+            spark, [(l, str(i)) for (l, i) in targets], "layer string, node_id string"
         )
     )
     target_dists = (
@@ -623,15 +639,18 @@ def multi_source_bfs(
     """
     spark = graph.nodes.sparkSession
     uniq = _uniq(sources)
-    seeds = spark.createDataFrame(
+    seeds = literal_frame(
+        spark,
         [(si, l, i, 0) for si, (l, i) in enumerate(uniq)],
         "sid_i int, layer string, node_id string, dist int",
     )
     levels, nidx = _keyed_levels(
-        graph, seeds, direction, direction != "sym", ("sid_i",), max_dist
+        graph, seeds, direction, direction != "sym", ("sid_i",), max_dist,
+        n_seed=len(uniq),
     )
     sid = F.broadcast(
-        spark.createDataFrame(
+        literal_frame(
+            spark,
             [(si, f"{l}:{i}") for si, (l, i) in enumerate(uniq)],
             "sid_i int, sid string",
         )

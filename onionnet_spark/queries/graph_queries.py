@@ -1595,6 +1595,9 @@ def graph_trussness_q(spark, sf_dir):
 
 
 _COSUPPLY_CACHE: dict[tuple[int, str, int, bool], DataFrame] = {}
+# one build lock per memo key: the localCheckpoint job runs under it,
+# never under _MEMO_LOCK, so other memos stay served during a build
+_COSUPPLY_LOCKS: dict[tuple[int, str, int, bool], threading.Lock] = {}
 
 
 def _cosupply_top_pairs(spark, sf_dir, topn: int, with_weight: bool = False):
@@ -1609,6 +1612,8 @@ def _cosupply_top_pairs(spark, sf_dir, topn: int, with_weight: bool = False):
     its own result from the parquet inputs)."""
     k = (id(spark), sf_dir, topn, with_weight)
     with _MEMO_LOCK:
+        build_lock = _COSUPPLY_LOCKS.setdefault(k, threading.Lock())
+    with build_lock:
         if k not in _COSUPPLY_CACHE:
             _COSUPPLY_CACHE[k] = _cosupply_top_pairs_build(
                 spark, sf_dir, topn, with_weight

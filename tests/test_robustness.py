@@ -2,6 +2,9 @@
 duplicate-row semantics — the failure modes a 100 TB corpus hits on
 day one (empty/short docs, deep graphs, repeated rows)."""
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -276,3 +279,48 @@ def test_weighted_sample_n_larger_than_population(spark):
 
     df = spark.createDataFrame([(1, 2.0), (2, 3.0)], "doc_id long, weight double")
     assert weighted_sample(df, "weight", n=10).count() == 2
+
+
+def test_cosupply_memo_builds_once_outside_the_memo_lock(monkeypatch):
+    """Two threads asking for the same co-supply memo build it once,
+    and its checkpoint job runs while the shared memo lock is free."""
+    from onionnet_spark.queries import graph_queries as gq
+
+    builds, lock_free = [], []
+
+    def probe_lock():
+        got = gq._MEMO_LOCK.acquire(timeout=5)
+        if got:
+            gq._MEMO_LOCK.release()
+        lock_free.append(got)
+
+    class Pairs:
+        def localCheckpoint(self):
+            t = threading.Thread(target=probe_lock)
+            t.start()
+            t.join(timeout=10)
+            return self
+
+    def build(spark, sf_dir, topn, with_weight=False):
+        builds.append(topn)
+        time.sleep(0.3)  # the second caller arrives mid-build
+        return Pairs()
+
+    monkeypatch.setattr(gq, "_cosupply_top_pairs_build", build)
+    monkeypatch.setattr(gq, "_COSUPPLY_CACHE", {})
+    monkeypatch.setattr(gq, "_COSUPPLY_LOCKS", {})
+    session, got = object(), []
+    callers = [
+        threading.Thread(
+            target=lambda: got.append(gq._cosupply_top_pairs(session, "sf", 60))
+        )
+        for _ in range(2)
+    ]
+    for t in callers:
+        t.start()
+    for t in callers:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert builds == [60]
+    assert lock_free == [True]
+    assert len(got) == 2 and got[0] is got[1]

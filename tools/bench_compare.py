@@ -2,7 +2,8 @@
 
 Usage: python tools/bench_compare.py BENCH_r02.json BENCH_r03.json
 Accepts either the driver's wrapper format ({"tail": ..., nested
-JSON line}) or bench.py's raw one-line JSON.
+JSON line}), bench.py's raw one-line JSON, or the full artifact
+bench.py writes per run (BENCH_FULL_c<cpus>_<UTC start>.json).
 """
 
 from __future__ import annotations
