@@ -357,7 +357,11 @@ class OnionGraph:
         return self
 
     def counts(self) -> tuple[int, int]:
-        return self.nodes.count(), self.edges.count()
+        """(node count, edge count); the node count also seeds
+        `cached_n_nodes`, so a view already counted pays no second
+        count job."""
+        self._n_nodes = self.nodes.count()
+        return self._n_nodes, self.edges.count()
 
     def cached_n_nodes(self) -> int:
         """Node count, computed once per graph instance.

@@ -617,7 +617,8 @@ def dedup_clusters(
     fix = _star_fixpoint(
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        name="dedup_clusters",
     )
     out = (
         df.select(id_col)

@@ -72,7 +72,7 @@ def pagerank(
     """
     from onionnet_spark.core import EDGE_KEY
 
-    n_nodes = graph.nodes.count()
+    n_nodes = graph.cached_n_nodes()
     if weight_col is None:
         e = graph.edge_endpoints().withColumn("w", F.lit(1.0))
     else:
@@ -2819,7 +2819,7 @@ def salsa_scores(
             .select(F.col("ph").alias("a"), F.col("ah").alias("b"))
             .distinct()
         )
-        fix = _star_fixpoint(chain_h)
+        fix = _star_fixpoint(chain_h, name="salsa_scores")
         labels = auth.join(
             fix.withColumnRenamed("a", "ah").withColumnRenamed("b", "comp_h"),
             on="ah",

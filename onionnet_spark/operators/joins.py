@@ -488,7 +488,8 @@ def resolve_entities(
     fix = _star_fixpoint(
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        name="resolve_entities",
     )
     # at fixpoint every row is (member, component-min); roots and
     # singletons are absent and label themselves via the left join

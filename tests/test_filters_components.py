@@ -237,17 +237,9 @@ def test_merge_node_properties_bulk(spark):
     assert g2.edges.collect()[0]["w"] == 99.0
 
 
-def test_star_cc_matches_label_propagation(two_comp_graph):
-    from onionnet_spark.operators.components import connected_components_star
-
-    got = rows_to_set(connected_components_star(two_comp_graph))
-    want = rows_to_set(connected_components(two_comp_graph))
-    assert got == want
-
-
 def test_star_cc_long_path(spark):
-    # a 40-node path: label propagation needs ~40 rounds, star
-    # contraction converges in O(log^2 n) — and must still be exact.
+    # a 40-node path: star contraction converges in O(log^2 n)
+    # rounds, not diameter rounds — and must still be exact.
     from onionnet_spark.core import OnionGraph
     from onionnet_spark.operators.components import connected_components_star
 
@@ -266,6 +258,44 @@ def test_star_cc_long_path(spark):
     }
     assert lb["iso"] == "P:iso"
     assert {v for k, v in lb.items() if k != "iso"} == {"P:0"}
+
+
+def test_connected_components_deep_path_across_parquet_rebase(spark, monkeypatch):
+    # a 60-node path in shuffled order with the checkpointer's rebase
+    # interval patched down to 2: the contraction rounds cross parquet
+    # rebases and must still give one component labelled by the min key
+    import random
+
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators import components
+    from onionnet_spark.operators.ckpt import IterCheckpointer
+
+    rebases = []
+
+    class RebaseEveryOther(IterCheckpointer):
+        def __init__(self, **kw):
+            super().__init__(rebase_every=2, **kw)
+
+        def cut(self, df, eager=True):
+            out = super().cut(df, eager)
+            if self._n % self.rebase_every == 0:
+                rebases.append(self._n)
+            return out
+
+    monkeypatch.setattr(components, "IterCheckpointer", RebaseEveryOther)
+    order = [str(i) for i in range(60)]
+    random.Random(7).shuffle(order)
+    nodes = spark.createDataFrame(
+        [("Q", x) for x in order], "layer string, node_id string"
+    )
+    edges = spark.createDataFrame(
+        [("Q", u, "Q", v) for u, v in zip(order, order[1:])],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    got = connected_components(OnionGraph(nodes, edges)).collect()
+    assert rebases
+    assert len(got) == 60
+    assert {r["component"] for r in got} == {"Q:0"}
 
 
 def test_lpa_communities_stay_within_components(spark):

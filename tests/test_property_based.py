@@ -24,10 +24,10 @@ edge_lists = st.lists(
 )
 
 
-def _graph_of(spark, edges):
+def _graph_of(spark, edges, isolated=(), edges_unique_undirected=False):
     from onionnet_spark.core import OnionGraph
 
-    nodes = sorted({u for e in edges for u in e} | {0})
+    nodes = sorted({u for e in edges for u in e} | {0} | set(isolated))
     ndf = spark.createDataFrame(
         [("l", str(n)) for n in nodes], "layer string, node_id string"
     )
@@ -37,7 +37,7 @@ def _graph_of(spark, edges):
     )
     if not edges:
         edf = edf.limit(0)
-    return OnionGraph(ndf, edf), nodes
+    return OnionGraph(ndf, edf, edges_unique_undirected=edges_unique_undirected), nodes
 
 
 def _union_find_components(nodes, edges):
@@ -59,19 +59,45 @@ def _union_find_components(nodes, edges):
     return {frozenset(g) for g in groups.values()}
 
 
-@given(edge_lists)
-@SET
-def test_connected_components_matches_union_find(spark, edges):
+# ids past node_ids' range: nodes no edge touches
+isolated_ids = st.sets(st.integers(min_value=12, max_value=15), max_size=3)
+
+
+def _check_components(spark, edges, isolated, edges_unique_undirected=False):
     from onionnet_spark.operators.components import connected_components
 
-    g, nodes = _graph_of(spark, edges)
-    got_rows = connected_components(g).collect()
+    g, nodes = _graph_of(spark, edges, isolated, edges_unique_undirected)
     groups = {}
-    for r in got_rows:
+    for r in connected_components(g).collect():
         groups.setdefault(r["component"], set()).add(int(r["node_id"]))
     assert {frozenset(v) for v in groups.values()} == _union_find_components(
         nodes, edges
     )
+    # each label is its group's min 'layer:node_id' key
+    for label, members in groups.items():
+        assert label == min(f"l:{n}" for n in members)
+
+
+@given(edge_lists, isolated_ids)
+@SET
+def test_connected_components_matches_union_find(spark, edges, isolated):
+    _check_components(spark, edges, isolated)
+
+
+@given(edge_lists, isolated_ids)
+@SET
+def test_connected_components_unique_undirected_matches_union_find(
+    spark, edges, isolated
+):
+    # the edges_unique_undirected invariant, which skips the input
+    # dedup: no self-loops, one row per undirected pair (orientation
+    # as generated)
+    seen, unique = set(), []
+    for u, v in edges:
+        if u != v and frozenset((u, v)) not in seen:
+            seen.add(frozenset((u, v)))
+            unique.append((u, v))
+    _check_components(spark, unique, isolated, edges_unique_undirected=True)
 
 
 def _naive_k_core(nodes, edges, k):

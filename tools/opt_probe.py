@@ -9,10 +9,19 @@ box pollutes all keys equally rather than whichever ran last; use
 an A/B pair of keys (or two worktrees) for change comparisons.
 
 Usage:
-  python tools/opt_probe.py [--reps 3] [--explain DIR] [--noop|--count] key...
+  python tools/opt_probe.py [--reps 3] [--explain DIR] [--noop|--count]
+                            [--threads] key...
 
 --explain DIR additionally writes DIR/<key>.txt with
 `.explain("formatted")` output (the plans/r10 evidence files).
+
+--threads splits the driver JVM's CPU per key by thread kind, read
+from /proc/<pid>/task/*/stat around each rep: C1 and C2 JIT compiler
+threads, executor task launch workers ("tasks"), py4j connection
+threads (driver-side planning for the Python client), GC threads,
+"other" live threads, and "exited" (threads that ended inside the rep;
+the process total minus the live threads). A CPU claim can then show
+whether it cut engine work or JIT work. Linux only.
 """
 
 from __future__ import annotations
@@ -20,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -30,6 +40,53 @@ import __spark_entry__ as entrymod
 from onionnet_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+THREAD_KINDS = ["c1", "c2", "tasks", "py4j", "gc", "other", "exited"]
+
+
+def _thread_kind(comm: str) -> str:
+    # comm is the thread name cut to 15 characters
+    if comm.startswith("C1 Compiler"):
+        return "c1"
+    if comm.startswith("C2 Compiler"):
+        return "c2"
+    if comm.startswith("Executor task"):
+        return "tasks"
+    if re.fullmatch(r"Thread-\d+", comm):  # py4j leaves its threads unnamed
+        return "py4j"
+    if comm.startswith(("GC Thread", "G1 ")):
+        return "gc"
+    return "other"
+
+
+def _stat_ticks(path: str) -> tuple[str, int]:
+    """(comm, utime + stime clock ticks) from a /proc stat file."""
+    with open(path) as f:
+        stat = f.read()
+    head, tail = stat.rsplit(")", 1)
+    fields = tail.split()  # fields[0] is field 3 (state)
+    return head.split("(", 1)[1], int(fields[11]) + int(fields[12])
+
+
+def _cpu_snapshot(pid: int) -> tuple[int, dict[int, tuple[str, int]]]:
+    """(process ticks, {tid: (kind, ticks)}) for the live threads."""
+    threads = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            comm, ticks = _stat_ticks(f"/proc/{pid}/task/{tid}/stat")
+        except FileNotFoundError:  # the thread exited while listing
+            continue
+        threads[int(tid)] = (_thread_kind(comm), ticks)
+    return _stat_ticks(f"/proc/{pid}/stat")[1], threads
+
+
+def _cpu_by_kind(before, after) -> dict[str, float]:
+    """CPU seconds per thread kind between two snapshots."""
+    hz = os.sysconf("SC_CLK_TCK")
+    out = dict.fromkeys(THREAD_KINDS, 0)
+    for tid, (kind, ticks) in after[1].items():
+        out[kind] += ticks - before[1].get(tid, (kind, 0))[1]
+    out["exited"] = after[0] - before[0] - sum(out.values())
+    return {k: round(v / hz, 2) for k, v in out.items()}
 
 
 def main() -> None:
@@ -38,6 +95,8 @@ def main() -> None:
     ap.add_argument("--explain", default=None, metavar="DIR")
     ap.add_argument("--count", action="store_true",
                     help="time .count() (bench methodology) instead of noop")
+    ap.add_argument("--threads", action="store_true",
+                    help="driver JVM CPU per key by thread kind")
     ap.add_argument("keys", nargs="+")
     ns = ap.parse_args()
 
@@ -64,9 +123,12 @@ def main() -> None:
             print(f"# wrote {ns.explain}/{k}.txt", file=sys.stderr)
 
     times: dict[str, list[float]] = {k: [] for k in ns.keys}
+    threads: dict[str, list[dict[str, float]]] = {k: [] for k in ns.keys}
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid() if ns.threads else None
     for rep in range(ns.reps):
         for k in ns.keys:
             spark.sparkContext.setJobDescription(f"probe:{k}#rep{rep}")
+            snap = _cpu_snapshot(jvm_pid) if jvm_pid else None
             t0 = time.time()
             df = qs[k](spark, SF_DIR)
             if ns.count:
@@ -75,7 +137,14 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             times[k].append(round(dt, 3))
-            print(f"# rep{rep} {k}: {dt:.2f}s", file=sys.stderr)
+            line = f"# rep{rep} {k}: {dt:.2f}s"
+            if snap is not None:
+                cpu = _cpu_by_kind(snap, _cpu_snapshot(jvm_pid))
+                threads[k].append(cpu)
+                line += " jvm cpu_s " + " ".join(
+                    f"{kind}={v}" for kind, v in cpu.items()
+                )
+            print(line, file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
 
     out = {}
@@ -85,6 +154,8 @@ def main() -> None:
             "min": min(ts),
             "median": statistics.median(ts),
         }
+        if ns.threads:
+            out[k]["jvm_cpu_s"] = threads[k]
     print(json.dumps(out, indent=1))
 
 
