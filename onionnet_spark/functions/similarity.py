@@ -15,10 +15,10 @@ engine-order float differences cannot flip the comparison hash.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from onionnet_spark.memo import session_memo
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -362,25 +362,16 @@ def sign_hash_bands(
     return df.select(*cols)
 
 
-# Trained-codebook memo: a per-session dict inside a
-# WeakKeyDictionary keyed on the SparkSession itself — when the
-# session is garbage-collected its entry (and the checkpointed
-# codebook DataFrames it pins) drop with it, and two sessions can
-# never alias the way raw id() keys could. The inner key carries the
-# full training signature (cache_key, vec_col, id_col, k,
-# iterations); ``cache_key`` must still uniquely identify the
-# CORPUS — the DataFrame's data is not hashed.
-_KMEANS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_kmeans_cache(spark=None) -> None:
-    """Eviction hook: drop memoized codebooks for one session (or
-    all sessions) — e.g. after replacing a corpus under the same
-    cache_key."""
-    if spark is None:
-        _KMEANS_CACHE.clear()
-    else:
-        _KMEANS_CACHE.pop(spark, None)
+def _trained(df: DataFrame, cache_key: str | None, sig: tuple, train):
+    """``train()``, or with ``cache_key`` set its result memoized in
+    the session memo under ``(cache_key, *sig)``. ``sig`` carries the
+    full training signature (trainer, columns, sizes, iterations), so
+    two calls differing in any of them never share a codebook;
+    ``cache_key`` must uniquely identify the CORPUS — the DataFrame's
+    data is not hashed."""
+    if cache_key is None:
+        return train()
+    return session_memo(df.sparkSession).get((cache_key, *sig), train)
 
 
 def kmeans_codebook(
@@ -423,16 +414,13 @@ def kmeans_codebook(
     # — repeat callers (IVF search, recall evals, the miners) pay
     # only their own dataflow, the way a trained codebook is
     # actually reused (same pattern as the residual-PQ cache).
-    session = df.sparkSession
-    ck = (
-        (cache_key, vec_col, id_col, k, iterations)
-        if cache_key is not None
-        else None
+    return _trained(
+        df, cache_key, ("kmeans", vec_col, id_col, k, iterations),
+        lambda: _kmeans_train(df, vec_col, id_col, k, iterations),
     )
-    if ck is not None:
-        per_session = _KMEANS_CACHE.setdefault(session, {})
-        if ck in per_session:
-            return per_session[ck]
+
+
+def _kmeans_train(df, vec_col, id_col, k, iterations) -> DataFrame:
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     cents = (
         v.orderBy(F.md5(F.col("id").cast("string")), "id")
@@ -464,8 +452,6 @@ def kmeans_codebook(
             .select("cid", F.transform("pm", lambda s: s["m"]).alias("cv"))
             .localCheckpoint()
         )
-    if ck is not None:
-        _KMEANS_CACHE.setdefault(session, {})[ck] = cents
     return cents
 
 
@@ -810,47 +796,14 @@ def ann_pq_topk(
     from pyspark.sql import Window
 
     # same served-index pattern as ann_ivf_pq_residual_topk: with a
-    # cache_key the trained PQ codebook memoizes in-process AND
-    # persists as a parquet side-table, so cold processes pay the
-    # probe/ADC dataflow only (~26s -> encode+score at sf0.1)
-    cents = None
-    ck = (id(df.sparkSession), cache_key) if cache_key is not None else None
-    if ck is not None:
-        import hashlib
-        import os
-
-        cached = _PQ_TRAIN_CACHE.get(ck)
-        sig = (
-            f"{cache_key}|{vec_col}|{id_col}|{m}|{n_centroids}"
-            f"|{iterations}|pq_v1"
-        )
-        fp = hashlib.md5(sig.encode()).hexdigest()[:16]
-        root = _codebook_store_dir(df.sparkSession)
-        if cached is None and root is not None:
-            p = os.path.join(root, f"{fp}_pqonly")
-            if os.path.isdir(p):
-                try:
-                    cached = df.sparkSession.read.parquet(p).localCheckpoint()
-                except Exception:  # noqa: BLE001 — torn write: retrain
-                    cached = None
-            if cached is not None:
-                _PQ_TRAIN_CACHE[ck] = cached
-        cents = cached
-    if cents is None:
-        cents = pq_codebooks(df, vec_col, id_col, m=m, k=n_centroids,
-                             iterations=iterations)
-        if ck is not None and root is not None:
-            # After a successful write, serve the SAME frame a cold
-            # process would load — the parquet scan re-read — so the
-            # fresh-train and reload paths are one code path and the
-            # memo never pins the training lineage (ADVICE r8 item 1).
-            try:
-                p = os.path.join(root, f"{fp}_pqonly")
-                cents.write.mode("overwrite").parquet(p)
-                cents = df.sparkSession.read.parquet(p).localCheckpoint()
-            except Exception:  # noqa: BLE001 — persistence is optional
-                pass
-            _PQ_TRAIN_CACHE[ck] = cents
+    # cache_key the trained PQ codebook memoizes per session, so
+    # repeat calls pay the encode/ADC dataflow only
+    cents = _trained(
+        df, cache_key, ("pq", vec_col, id_col, m, n_centroids, iterations),
+        lambda: pq_codebooks(
+            df, vec_col, id_col, m=m, k=n_centroids, iterations=iterations
+        ),
+    )
     dim = len(df.select(vec_col).first()[0])
     sub = dim // m
     svs = df.select(
@@ -1135,64 +1088,32 @@ def ann_ivf_pq_topk(
     )
 
 
-_RESIDUAL_TRAIN_CACHE: dict[tuple[int, str], tuple] = {}
-_PQ_TRAIN_CACHE: dict[tuple[int, str], "DataFrame"] = {}
-
-
-def _codebook_store_dir(spark) -> "str | None":
-    """Root of the on-disk trained-codebook side-table (the
-    served-index pattern): a directory under the session's local
-    warehouse. Returns None when the warehouse isn't a local path —
-    persistence then silently degrades to the in-memory memo."""
-    import os
-
-    w = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    if "://" in w:
-        return None
-    return os.path.join(w, "onionnet_codebooks")
-
-
-def _load_persisted_codebooks(spark, fp: str):
-    """Read back a persisted (coarse, residual-PQ) codebook pair, or
-    None when the fingerprint has never been trained on this box."""
-    import os
-
-    root = _codebook_store_dir(spark)
-    if root is None:
-        return None
-    paths = (os.path.join(root, f"{fp}_coarse"), os.path.join(root, f"{fp}_pq"))
-    if not all(os.path.isdir(p) for p in paths):
-        return None
-    try:
-        # localCheckpoint pins the K-row tables in executor memory so
-        # downstream broadcasts don't re-read parquet per action
-        return tuple(spark.read.parquet(p).localCheckpoint() for p in paths)
-    except Exception:  # noqa: BLE001 — torn write: retrain below
-        return None
-
-
-def _persist_codebooks(spark, fp: str, coarse, pq_cents) -> None:
-    """Write the trained pair as tiny parquet side-tables (atomic
-    enough: Spark writes to _temporary then renames; content is
-    deterministic, so a concurrent re-write is benign). Failures are
-    swallowed — persistence is an optimization, never a correctness
-    dependency."""
-    import os
-
-    root = _codebook_store_dir(spark)
-    if root is None:
-        return
-    try:
-        coarse.write.mode("overwrite").parquet(
-            os.path.join(root, f"{fp}_coarse")
+def _residual(frame: DataFrame, coarse: DataFrame) -> DataFrame:
+    """v - c(bucket), rounded 6dp: the deterministic residual-PQ input."""
+    return (
+        frame.join(
+            F.broadcast(coarse.select(F.col("cid").alias("bucket"), "cv")),
+            on="bucket",
         )
-        pq_cents.write.mode("overwrite").parquet(
-            os.path.join(root, f"{fp}_pq")
+        .withColumn(
+            # x1e6-scaled integer quantization via floor(x+0.5): FLOOR
+            # of identical IEEE doubles is identical in any engine —
+            # unlike decimal ROUND, whose JVM (BigDecimal-on-shortest-
+            # repr) and C (binary float) implementations disagree on
+            # boundary-adjacent values, which hash-flunked the first
+            # cut of this operator. All downstream PQ math then runs
+            # on integer-valued doubles (exact below 2^53).
+            "res",
+            F.zip_with(
+                "v",
+                "cv",
+                lambda a, b: F.floor((a.cast("double") - b) * 1e6 + 0.5).cast(
+                    "double"
+                ),
+            ),
         )
-    except Exception:  # noqa: BLE001
-        pass
+        .drop("cv")
+    )
 
 
 def ann_ivf_pq_residual_topk(
@@ -1226,46 +1147,41 @@ def ann_ivf_pq_residual_topk(
 
     Both Lloyd trainings are deterministic, so with ``cache_key``
     set the trained (coarse, residual-PQ) tables are memoized per
-    (session, key) — repeat calls against one corpus pay only the
-    probe/ADC dataflow, the way a served index is used (same
-    pattern as ann_ivf_pq_topk's query-layer cache) — AND persisted
-    as a parquet side-table keyed by the full training fingerprint
-    (VERDICT r7 item 4), so even a cold process pays probe cost
-    only. Training values are 6dp-rounded doubles, which round-trip
-    parquet bit-exactly, so a loaded codebook is identical to a
-    retrained one; callers embed a data signature (e.g. file
-    mtime+size) in ``cache_key`` to invalidate on corpus change.
+    (session, full training signature) — repeat calls against one
+    corpus pay only the probe/ADC dataflow, the way a served index
+    is used (same pattern as ann_ivf_pq_topk's query-layer cache).
     """
-    import hashlib
-
     from pyspark.sql import Window
 
-    ck = (id(df.sparkSession), cache_key) if cache_key is not None else None
-    cached = _RESIDUAL_TRAIN_CACHE.get(ck) if ck else None
-    fp = None
-    if ck is not None:
-        sig = (
-            f"{cache_key}|{vec_col}|{id_col}|{n_centroids}|{m}"
-            f"|{pq_centroids}|{iterations}|ivfpq_res_v1"
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+
+    def assign(coarse: DataFrame) -> DataFrame:
+        # map-side top-nprobe cell assignment — see ann_ivf_topk's note
+        return _top_cells(_cc_assign(base, coarse), nprobe).localCheckpoint()
+
+    def index_residuals(top: DataFrame, coarse: DataFrame) -> DataFrame:
+        index_side = top.filter(F.col("pos") == 0).select("id", "bucket")
+        return _residual(index_side.join(base, on="id"), coarse).select(
+            "id", "res"
         )
-        fp = hashlib.md5(sig.encode()).hexdigest()[:16]
-        if not cached:
-            cached = _load_persisted_codebooks(df.sparkSession, fp)
-            if cached:
-                _RESIDUAL_TRAIN_CACHE[ck] = cached
-    coarse = (
-        cached[0]
-        if cached
-        else kmeans_codebook(df, vec_col, id_col, n_centroids, iterations)
-    )
-    scored = (
-        _cc_assign(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-            coarse,
+
+    fresh = {}
+
+    def train():
+        coarse = kmeans_codebook(df, vec_col, id_col, n_centroids, iterations)
+        fresh["top"] = top = assign(coarse)
+        return coarse, pq_codebooks(
+            index_residuals(top, coarse), "res", "id", m, pq_centroids,
+            iterations,
         )
+
+    coarse, pq_cents = _trained(
+        df, cache_key,
+        ("ivfpq_res", vec_col, id_col, n_centroids, m, pq_centroids, iterations),
+        train,
     )
-    # map-side top-nprobe cell assignment — see ann_ivf_topk's note
-    top = _top_cells(scored, nprobe).localCheckpoint()
+    # a fresh training has already assigned the cells
+    top = fresh["top"] if "top" in fresh else assign(coarse)
     index_side = top.filter(F.col("pos") == 0).select("id", "bucket")
     probe_side = top.select("id", "bucket")
     cand = (
@@ -1278,45 +1194,7 @@ def ann_ivf_pq_residual_topk(
             "bucket",
         )
     )
-
-    def _residual(frame: DataFrame) -> DataFrame:
-        # v - c(bucket), rounded 6dp: the deterministic PQ input
-        return (
-            frame.join(
-                F.broadcast(coarse.select(F.col("cid").alias("bucket"), "cv")),
-                on="bucket",
-            )
-            .withColumn(
-                # x1e6-scaled integer quantization via floor(x+0.5):
-                # FLOOR of identical IEEE doubles is identical in any
-                # engine — unlike decimal ROUND, whose JVM
-                # (BigDecimal-on-shortest-repr) and C (binary float)
-                # implementations disagree on boundary-adjacent
-                # values, which hash-flunked the first cut of this
-                # operator. All downstream PQ math then runs on
-                # integer-valued doubles (exact below 2^53).
-                "res",
-                F.zip_with(
-                    "v",
-                    "cv",
-                    lambda a, b: F.floor(
-                        (a.cast("double") - b) * 1e6 + 0.5
-                    ).cast("double"),
-                ),
-            )
-            .drop("cv")
-        )
-
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    index_res = _residual(index_side.join(base, on="id")).select("id", "res")
-    pq_cents = (
-        cached[1]
-        if cached
-        else pq_codebooks(index_res, "res", "id", m, pq_centroids, iterations)
-    )
-    if ck and not cached:
-        _RESIDUAL_TRAIN_CACHE[ck] = (coarse, pq_cents)
-        _persist_codebooks(df.sparkSession, fp, coarse, pq_cents)
+    index_res = index_residuals(top, coarse)
 
     dim = len(df.select(vec_col).first()[0])
     sub = dim // m
@@ -1351,7 +1229,7 @@ def ann_ivf_pq_residual_topk(
         .select(F.col("id").alias("nid"), "j", "cid")
     )
     # query-side ADC rows: the query's residual PER PROBED CELL
-    query_res = _residual(probe_side.join(base, on="id"))
+    query_res = _residual(probe_side.join(base, on="id"), coarse)
     qtab = _subspaces(query_res, ["id", "bucket"]).join(
         F.broadcast(pq_cents), on="j"
     ).select(

@@ -8,34 +8,22 @@ parquet tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import OnionGraph
+from onionnet_spark.core import OnionGraph, literal_frame
 from onionnet_spark.functions.encoding import decode_dictionary, encode_dictionary
+from onionnet_spark.memo import session_memo
 from onionnet_spark.operators import analytics, components, filters, properties, traversal
 from onionnet_spark.queries import register
 from onionnet_spark.sources.tpch_graph import build_graph, graph_ctes
 
-import threading
-
-_GRAPH_CACHE: dict[tuple[int, str], OnionGraph] = {}
-# one lock for every query-layer memo (r11): queries are built from
-# concurrent driver threads (the schema-gate sweep, guide §2.6 job
-# overlap), and an unguarded check-then-build would persist duplicate
-# graph instances, pinning orphans until session end
-_MEMO_LOCK = threading.RLock()
-
 
 def get_graph(spark: SparkSession, sf_dir: str) -> OnionGraph:
-    key = (id(spark), sf_dir)
-    with _MEMO_LOCK:
-        if key not in _GRAPH_CACHE:
-            _GRAPH_CACHE[key] = build_graph(spark, sf_dir).persist()
-    return _GRAPH_CACHE[key]
-
-
-_DERIVED_CACHE: dict[tuple[int, str, str], OnionGraph] = {}
+    """The persisted TPC-H graph, built once per session."""
+    return session_memo(spark).get(
+        ("graph", sf_dir), lambda: build_graph(spark, sf_dir).persist()
+    )
 
 
 def derived_graph(spark, sf_dir: str, key: str, build) -> OnionGraph:
@@ -47,11 +35,7 @@ def derived_graph(spark, sf_dir: str, key: str, build) -> OnionGraph:
     reference here also keeps OnionGraph.__del__'s cache release
     from firing while the registry can still re-serve the graph.
     """
-    k = (id(spark), sf_dir, key)
-    with _MEMO_LOCK:
-        if k not in _DERIVED_CACHE:
-            _DERIVED_CACHE[k] = build()
-    return _DERIVED_CACHE[k]
+    return session_memo(spark).get(("derived", sf_dir, key), build)
 
 
 
@@ -1594,12 +1578,6 @@ def graph_trussness_q(spark, sf_dir):
 
 
 
-_COSUPPLY_CACHE: dict[tuple[int, str, int, bool], DataFrame] = {}
-# one build lock per memo key: the localCheckpoint job runs under it,
-# never under _MEMO_LOCK, so other memos stay served during a build
-_COSUPPLY_LOCKS: dict[tuple[int, str, int, bool], threading.Lock] = {}
-
-
 def _cosupply_top_pairs(spark, sf_dir, topn: int, with_weight: bool = False):
     """Memoized canonical (a < b) nation co-supply pairs, top-N by
     shared part count — shared derivation for the k-truss / motif /
@@ -1610,15 +1588,12 @@ def _cosupply_top_pairs(spark, sf_dir, topn: int, with_weight: bool = False):
     (session, sf_dir, topn, with_weight) — the same session-scoped
     view-sharing class as `derived_graph` (every query still computes
     its own result from the parquet inputs)."""
-    k = (id(spark), sf_dir, topn, with_weight)
-    with _MEMO_LOCK:
-        build_lock = _COSUPPLY_LOCKS.setdefault(k, threading.Lock())
-    with build_lock:
-        if k not in _COSUPPLY_CACHE:
-            _COSUPPLY_CACHE[k] = _cosupply_top_pairs_build(
-                spark, sf_dir, topn, with_weight
-            ).localCheckpoint()
-    return _COSUPPLY_CACHE[k]
+    return session_memo(spark).get(
+        ("cosupply", sf_dir, topn, with_weight),
+        lambda: _cosupply_top_pairs_build(
+            spark, sf_dir, topn, with_weight
+        ).localCheckpoint(),
+    )
 
 
 def _cosupply_top_pairs_build(
@@ -1867,7 +1842,7 @@ def graph_temporal_reach(spark, sf_dir):
         F.col("l_shipdate").alias("ts"),
     )
     edges = fwd.unionByName(bwd)
-    seed = ol.sparkSession.createDataFrame([("customer:1",)], "node string")
+    seed = literal_frame(spark, [("customer:1",)], "node string")
     # depth budget 18 (9 outer rounds x 2 intra-round hops): sf0.1's
     # longer ship-date chains exceeded the 8-round budget that
     # sufficed at sf0.01 (r8 bench sweep). hops_per_round=2 halves

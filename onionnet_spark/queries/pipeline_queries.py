@@ -10,7 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from onionnet_spark.core import literal_frame
 from onionnet_spark.functions import dedup, multimodal, similarity, text
+from onionnet_spark.memo import session_memo
 from onionnet_spark.queries import register
 
 _DOCS = "SELECT * FROM documents"
@@ -24,20 +26,6 @@ def _docs(spark, sf_dir):
 
 def _embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _embs_sig(sf_dir):
-    """Corpus signature for persisted-index keys: sf_dir plus the
-    embeddings parquet's (mtime, size), so a regenerated corpus under
-    the same path invalidates any on-disk trained codebook instead of
-    silently serving stale centroids."""
-    import os
-
-    try:
-        st = os.stat(f"{sf_dir}/embeddings.parquet")
-        return f"{sf_dir}|{int(st.st_mtime)}|{st.st_size}"
-    except OSError:
-        return sf_dir
 
 
 # --------------------------------------------------------------------------
@@ -1455,7 +1443,7 @@ def _ann_pq_oracle(
 def ann_pq_topk_q(spark, sf_dir):
     return similarity.ann_pq_topk(
         _embs(spark, sf_dir), k=5, m=4, n_centroids=8, iterations=2,
-        cache_key=_embs_sig(sf_dir),
+        cache_key=sf_dir,
     )
 
 
@@ -1727,9 +1715,6 @@ def _ann_ivf_pq_oracle(
     )
 
 
-_CODEBOOK_CACHE: dict[tuple[int, str], tuple] = {}
-
-
 @register("ann_ivf_pq_topk", _ann_ivf_pq_oracle())
 def ann_ivf_pq_topk_q(spark, sf_dir):
     # Codebook training is deterministic (seeded md5, 6dp-rounded
@@ -1739,8 +1724,7 @@ def ann_ivf_pq_topk_q(spark, sf_dir):
     # the probe/ADC dataflow, exactly how a served IVFPQ index is
     # used in production. Same memoization pattern as get_graph /
     # the bipartite frames.
-    key = (id(spark), sf_dir)
-    if key not in _CODEBOOK_CACHE:
+    def train():
         from concurrent.futures import ThreadPoolExecutor
 
         embs = _embs(spark, sf_dir)
@@ -1751,8 +1735,11 @@ def ann_ivf_pq_topk_q(spark, sf_dir):
             pf = pool.submit(
                 similarity.pq_codebooks, embs, "embedding", "vec_id", 4, 8, 2
             )
-            _CODEBOOK_CACHE[key] = (cf.result(), pf.result())
-    coarse, pq_cents = _CODEBOOK_CACHE[key]
+            return cf.result(), pf.result()
+
+    coarse, pq_cents = session_memo(spark).get(
+        ("ivf_pq_codebooks", sf_dir), train
+    )
     return similarity.ann_ivf_pq_topk(
         _embs(spark, sf_dir), k=5, n_centroids=8, nprobe=2, m=4,
         pq_centroids=8, iterations=2, coarse=coarse, pq_cents=pq_cents,
@@ -2267,7 +2254,7 @@ def _ann_ivf_pq_residual_oracle(
 def ann_ivf_pq_residual_topk_q(spark, sf_dir):
     return similarity.ann_ivf_pq_residual_topk(
         _embs(spark, sf_dir), k=5, n_centroids=8, nprobe=2, m=4,
-        pq_centroids=8, iterations=2, cache_key=_embs_sig(sf_dir),
+        pq_centroids=8, iterations=2, cache_key=sf_dir,
     )
 
 
@@ -6196,8 +6183,8 @@ def dedup_threshold_sweep_q(spark, sf_dir):
             ).alias("cosine")
         )
     )
-    th = spark.createDataFrame(
-        [(0.30,), (0.35,), (0.40,), (0.45,), (0.50,)], "threshold double"
+    th = literal_frame(
+        spark, [(0.30,), (0.35,), (0.40,), (0.45,), (0.50,)], "threshold double"
     )
     return (
         F.broadcast(th)
@@ -7141,7 +7128,7 @@ def vocab_coverage_curve_q(spark, sf_dir):
     )
     ranked = global_rank_range(tc, [F.col("cf").desc(), F.col("term").asc()])
     t = tc.agg(F.sum("cf").alias("total"), F.count("*").alias("vocab"))
-    ks = spark.createDataFrame([(10,), (100,), (1000,)], "k int")
+    ks = literal_frame(spark, [(10,), (100,), (1000,)], "k int")
     cov = F.sum(
         F.when(F.col("rank") <= F.col("k"), F.col("cf")).otherwise(F.lit(0))
     )

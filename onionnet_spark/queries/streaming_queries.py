@@ -5,6 +5,7 @@ streams (readStream + watermark) in tests/test_streaming.py.
 
 from __future__ import annotations
 
+from onionnet_spark.core import literal_frame
 from onionnet_spark.queries import register
 from onionnet_spark.sources.tpch_graph import load_tables
 from onionnet_spark.streaming import events as ev
@@ -2329,7 +2330,7 @@ def events_ljung_box(spark, sf_dir):
             .alias("term"),
         )
     )
-    ms = spark.createDataFrame([(3,), (7,), (14,)], "m int")
+    ms = literal_frame(spark, [(3,), (7,), (14,)], "m int")
     return (
         F.broadcast(ms)
         .join(terms, F.col("k") <= F.col("m"))

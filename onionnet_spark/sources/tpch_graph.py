@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from onionnet_spark.builder import grow_onion
 from onionnet_spark.core import OnionGraph
+from onionnet_spark.memo import session_memo
 
 TABLES = [
     "region",
@@ -43,18 +44,20 @@ TABLES = [
 ]
 
 
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # Cached per (session, dir): spark.read.parquet eagerly reads the
     # file footer for the schema, so constructing the readers fresh
     # in every query charges ~10 footer reads per query — measurable
     # across a 79-query harness run. DataFrames are immutable plans;
     # sharing them is safe.
-    key = (id(spark), sf_dir)
-    if key in _TABLE_CACHE:
-        return dict(_TABLE_CACHE[key])
+    return dict(
+        session_memo(spark).get(
+            ("tables", sf_dir), lambda: _read_tables(spark, sf_dir)
+        )
+    )
+
+
+def _read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out = {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
     # events.ts is parquet TIMESTAMP(NANOS), surfaced as long nanos via
     # spark.sql.legacy.parquet.nanosAsLong; convert to a real timestamp.
@@ -73,8 +76,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         out["events"] = out["events"].withColumn(
             "ts", F.col("ts").cast("timestamp")
         )
-    _TABLE_CACHE[key] = dict(out)
-    return dict(out)
+    return out
 
 
 def _s(c) -> F.Column:

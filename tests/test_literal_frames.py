@@ -148,3 +148,20 @@ def test_empty_inputs_return_empty_frames_with_todays_columns(weighted_graph):
     for df, cols in cases:
         assert df.columns == cols
         assert df.count() == 0
+
+
+def test_registry_grids_build_no_frame_from_a_python_list(
+    spark, sf_dir, no_list_frames
+):
+    """The registry keys that join against a small literal grid (a
+    seed, thresholds, cut-offs, lags) build it as a literal frame."""
+    from onionnet_spark.queries import load_all
+
+    reg = load_all()
+    for key in (
+        "graph_temporal_reach",
+        "dedup_threshold_sweep",
+        "vocab_coverage_curve",
+        "events_ljung_box",
+    ):
+        assert reg[key][0](spark, sf_dir).columns, key

@@ -281,38 +281,34 @@ def test_weighted_sample_n_larger_than_population(spark):
     assert weighted_sample(df, "weight", n=10).count() == 2
 
 
-def test_cosupply_memo_builds_once_outside_the_memo_lock(monkeypatch):
-    """Two threads asking for the same co-supply memo build it once,
-    and its checkpoint job runs while the shared memo lock is free."""
-    from onionnet_spark.queries import graph_queries as gq
+def test_cosupply_memo_builds_once_outside_the_memo_lock():
+    """Two threads asking for one memo key (the co-supply pairs are one
+    such key of the session memo) build it once, and while that slow
+    build runs a `get` on another key is served: no build holds a lock
+    shared across keys."""
+    from onionnet_spark.memo import Memo
 
-    builds, lock_free = [], []
+    memo, builds, other = Memo(), [], []
 
-    def probe_lock():
-        got = gq._MEMO_LOCK.acquire(timeout=5)
-        if got:
-            gq._MEMO_LOCK.release()
-        lock_free.append(got)
+    def probe_other_key():
+        other.append(memo.get(("cosupply", "sf", 30, False), lambda: "b"))
+        # published only once its build has returned
+        other.append(("cosupply", "sf", 60, False) in memo)
 
-    class Pairs:
-        def localCheckpoint(self):
-            t = threading.Thread(target=probe_lock)
-            t.start()
-            t.join(timeout=10)
-            return self
-
-    def build(spark, sf_dir, topn, with_weight=False):
-        builds.append(topn)
+    def build():
+        builds.append(60)
+        t = threading.Thread(target=probe_other_key)
+        t.start()
+        t.join(timeout=5)
         time.sleep(0.3)  # the second caller arrives mid-build
-        return Pairs()
+        return object()
 
-    monkeypatch.setattr(gq, "_cosupply_top_pairs_build", build)
-    monkeypatch.setattr(gq, "_COSUPPLY_CACHE", {})
-    monkeypatch.setattr(gq, "_COSUPPLY_LOCKS", {})
-    session, got = object(), []
+    got = []
     callers = [
         threading.Thread(
-            target=lambda: got.append(gq._cosupply_top_pairs(session, "sf", 60))
+            target=lambda: got.append(
+                memo.get(("cosupply", "sf", 60, False), build)
+            )
         )
         for _ in range(2)
     ]
@@ -322,5 +318,5 @@ def test_cosupply_memo_builds_once_outside_the_memo_lock(monkeypatch):
         t.join(timeout=30)
         assert not t.is_alive()
     assert builds == [60]
-    assert lock_free == [True]
+    assert other == ["b", False]
     assert len(got) == 2 and got[0] is got[1]

@@ -65,30 +65,56 @@ def test_np_round_half_away_matches_sql_round():
 
 
 def test_kmeans_cache_keyed_on_columns(spark):
-    """Two calls sharing a cache_key but naming different vec/id
-    columns must NOT alias to one codebook (the r6 ADVICE bug)."""
+    """Two calls sharing a cache_key but differing in a column name or
+    a training size must NOT alias to one codebook (the r6 ADVICE
+    bug), for kmeans_codebook and for the PQ trainers behind
+    ann_pq_topk and ann_ivf_pq_residual_topk; a repeat call with the
+    same signature is served the memoized codebook."""
+    from onionnet_spark.core import literal_frame
     from onionnet_spark.functions.similarity import (
-        _KMEANS_CACHE,
-        clear_kmeans_cache,
+        ann_ivf_pq_residual_topk,
+        ann_pq_topk,
         kmeans_codebook,
     )
 
     rows = [
-        (i, [float(i + 1), float(i % 3)], [float(10 - i), 1.0]) for i in range(9)
+        (
+            i,
+            [float(i + 1), float(i % 3), float(i * 7 % 5), float(i % 2)],
+            [float(10 - i), 1.0, float(i % 4), float(i * 3 % 7)],
+        )
+        for i in range(12)
     ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, alt array<double>"
+    df = literal_frame(
+        spark, rows, "vec_id long, embedding array<double>, alt array<double>"
     )
-    clear_kmeans_cache(spark)
-    a = {r["cid"]: r["cv"] for r in
-         kmeans_codebook(df, "embedding", "vec_id", k=2, cache_key="t").collect()}
+    first = kmeans_codebook(df, "embedding", "vec_id", k=2, cache_key="t-cols")
+    a = {r["cid"]: r["cv"] for r in first.collect()}
     b = {r["cid"]: r["cv"] for r in
-         kmeans_codebook(df, "alt", "vec_id", k=2, cache_key="t").collect()}
+         kmeans_codebook(df, "alt", "vec_id", k=2, cache_key="t-cols").collect()}
     assert a != b  # different columns -> different codebooks
-    per_session = _KMEANS_CACHE.get(spark)
-    assert per_session is not None and len(per_session) == 2
-    clear_kmeans_cache(spark)
-    assert _KMEANS_CACHE.get(spark) in (None, {})
+    assert kmeans_codebook(
+        df, "embedding", "vec_id", k=2, cache_key="t-cols"
+    ) is first
+
+    def rows_of(frame):
+        return {tuple(r) for r in frame.collect()}
+
+    for kw in (
+        dict(m=2, n_centroids=2),
+        dict(m=4, n_centroids=3, iterations=1, vec_col="alt"),
+    ):
+        assert rows_of(ann_pq_topk(df, k=3, cache_key="t-pq", **kw)) == rows_of(
+            ann_pq_topk(df, k=3, **kw)
+        ), kw
+    for kw in (
+        dict(n_centroids=2, m=2, pq_centroids=2),
+        dict(n_centroids=3, m=4, pq_centroids=3, iterations=1, vec_col="alt"),
+    ):
+        got = ann_ivf_pq_residual_topk(df, k=3, nprobe=1, cache_key="t-res", **kw)
+        assert rows_of(got) == rows_of(
+            ann_ivf_pq_residual_topk(df, k=3, nprobe=1, **kw)
+        ), kw
 
 
 def test_resolve_entities_string_ids(spark):
