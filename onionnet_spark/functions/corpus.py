@@ -108,7 +108,7 @@ def pack_sequences(
     for pid in sorted(totals):
         offsets.append((pid, running))
         running += totals[pid]
-    off_df = spark.createDataFrame(offsets, "pid int, part_offset bigint")
+    off_df = literal_frame(spark, offsets, "pid int, part_offset bigint")
     w = Window.partitionBy("pid").orderBy("id")
     return (
         part.join(F.broadcast(off_df), on="pid")
@@ -397,8 +397,8 @@ def column_correlations(
     if len(columns) < 2:
         # no pairs to correlate: empty result with the output schema
         # (df.agg(*[]) would raise on zero expressions)
-        return df.sparkSession.createDataFrame(
-            [], "col_a string, col_b string, r double"
+        return literal_frame(
+            df.sparkSession, [], "col_a string, col_b string, r double"
         )
     proj, names = [], []
     for i, a in enumerate(columns):
@@ -1143,7 +1143,6 @@ def psi_by_group(
     value_col: str,
     group_col: str = "source",
     n_bins: int = 10,
-    bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Population Stability Index per group vs the whole corpus —
     the standard drift monitor for feature distributions (here: is
@@ -1163,14 +1162,7 @@ def psi_by_group(
     vals = df.select(
         F.col(group_col).alias("g"), F.col(value_col).cast("bigint").alias("v")
     )
-    if bounds is not None:
-        # explicit frozen bounds (the streaming monitor's contract:
-        # bins must not move as data arrives)
-        lo, hi = bounds
-        spark = df.sparkSession
-        bframe = spark.createDataFrame([(int(lo), int(hi))], "mn bigint, mx bigint")
-    else:
-        bframe = vals.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
+    bframe = vals.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
     binned = vals.crossJoin(F.broadcast(bframe)).select(
         "g",
         F.when(F.col("mx") == F.col("mn"), F.lit(0))
@@ -1274,7 +1266,7 @@ def tree_depth2(
         "pos_left bigint, n_right bigint, pos_right bigint, gap_score bigint"
     )
     if root is None:
-        return spark.createDataFrame([], schema)
+        return literal_frame(spark, [], schema)
 
     def row_of(node, r):
         return (
@@ -1306,4 +1298,4 @@ def tree_depth2(
         r = best(child)
         if r is not None:
             out.append(row_of(node, r))
-    return spark.createDataFrame(out, schema)
+    return literal_frame(spark, out, schema)

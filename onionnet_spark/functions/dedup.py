@@ -185,8 +185,7 @@ def ingest_delta(
     df, cross-set only — no base x base work, which is what makes
     the daily increment cheap no matter how big the corpus got).
     At 100 TB the base-side hash/shingle frames are materialized
-    tables maintained by the streaming twins (dedup_stream /
-    chunk_stream), not recomputed per ingest.
+    tables kept between ingests, not recomputed per ingest.
     """
     from pyspark.sql import Window
 
@@ -302,8 +301,8 @@ def minhash_band_keys(
     """LSH band keys from a wide signature frame: band key = md5 of
     the band's signature slice joined with ',' (perm order) — a
     plain projection over the wide row, no extra shuffle. Returns
-    (id, band, band_key). Shared by the batch pair finder and the
-    streaming index maintainer so both bucket identically.
+    (id, band, band_key). Shared by every MinHash pair finder so
+    all of them bucket identically.
     """
     rows_per_band = num_perm // bands
     return sigs.select(
@@ -459,9 +458,8 @@ def doc_chunks(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Consecutive non-overlapping `chunk_words`-word chunks per doc:
-    (id, ci, ch: md5 of the chunk text, clen: its token count). The
-    shared chunking step of batch `chunk_dedup` and the streaming
-    maintainer."""
+    (id, ci, ch: md5 of the chunk text, clen: its token count): the
+    chunking step of `chunk_dedup`."""
     toks = F.split(normalize_text(F.col(text_col)), " ")
     n_chunks = F.ceil(F.size("t") / F.lit(chunk_words)).cast("int")
     # NULL text: size(null) = -1 and F.sequence(0, -1) auto-steps DOWN,
@@ -648,8 +646,7 @@ def doc_lines(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Non-empty trimmed lines per doc: (id, li, lh: md5 of the
-    line, ln: its char count). The shared step of batch `line_dedup`
-    and the streaming maintainer (streaming/line_stream.py)."""
+    line, ln: its char count): the first step of `line_dedup`."""
     return (
         df.select(
             F.col(id_col).alias("id"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from onionnet_spark.core import literal_frame
 from onionnet_spark.memo import session_memo
 
 
@@ -214,9 +215,8 @@ def lsh_bucket_col(vec: Column, n_planes: int = 8) -> Column:
     """Hyperplane-sign LSH bucket id: bit p is set iff the projection
     of `vec` onto deterministic (md5-derived) hyperplane p is
     positive. One bucket per vector, so a pair collides in at most
-    one bucket — shared by the batch pair finder, the top-k path,
-    and the streaming index maintainer so all three bucket
-    identically."""
+    one bucket — shared by the pair finder and the top-k path so
+    both bucket identically."""
 
     def coef_fn(plane: int):
         # NOTE: must be a factory returning a ONE-argument lambda.
@@ -1322,7 +1322,7 @@ def random_projection(
     y = (Σ_i sign_ij * q_i) / 1e6, 6dp.
     """
     sess = df.sparkSession
-    js = sess.createDataFrame([(j,) for j in range(out_dim)], "j int")
+    js = sess.range(out_dim).select(F.col("id").cast("int").alias("j"))
     exploded = df.select(
         F.col(id_col), F.posexplode(F.col(vec_col)).alias("pos", "x")
     ).select(
@@ -1465,17 +1465,19 @@ def knn_label_accuracy(
 
 
 def _quantized_explode(
-    df: DataFrame, vec_col: str, id_col: str, label_col: str | None
+    df: DataFrame, vec_col: str, id_col: str, label_col: str
 ) -> DataFrame:
-    """(id[, lbl], pos, q) with coordinates floor-quantized to the
+    """(id, lbl, pos, q) with coordinates floor-quantized to the
     x1e6 integer scale — the shared exact-arithmetic surface of the
     nearest-centroid family."""
-    cols = [F.col(id_col).alias("id")]
-    if label_col is not None:
-        cols.append(F.col(label_col).alias("lbl"))
-    ex = df.select(*cols, F.posexplode(F.col(vec_col)).alias("pos", "x"))
+    ex = df.select(
+        F.col(id_col).alias("id"),
+        F.col(label_col).alias("lbl"),
+        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+    )
     return ex.select(
-        *[c for c in ("id", "lbl") if c in ex.columns],
+        "id",
+        "lbl",
         "pos",
         F.floor(F.col("x").cast("double") * 1_000_000).cast("bigint").alias("q"),
     )
@@ -1489,8 +1491,8 @@ def label_centroids(
 ) -> DataFrame:
     """Per-label mean centroids on quantized coordinates:
     (clbl, pos, cq) with cq = floor(sum/n) — the broadcastable
-    |labels| x dim table both the batch classifiers and the
-    streaming semantic-dedup maintainer assign against."""
+    |labels| x dim table the nearest-centroid classifiers assign
+    against."""
     ex = _quantized_explode(df, vec_col, id_col, label_col)
     return (
         ex.groupBy(F.col("lbl").alias("clbl"), "pos")
@@ -1499,26 +1501,6 @@ def label_centroids(
             "clbl",
             "pos",
             F.floor(F.col("s").cast("double") / F.col("n")).cast("bigint").alias("cq"),
-        )
-    )
-
-
-def assign_to_centroids(
-    df: DataFrame, cents: DataFrame, vec_col: str, id_col: str
-) -> DataFrame:
-    """(id, cluster): nearest centroid by exact integer L2 on the
-    x1e6 quantized coordinates; ties break to the smaller label.
-    cents is broadcast — the assignment is a map-side join plus one
-    (id, cluster) partial aggregation."""
-    ex = _quantized_explode(df, vec_col, id_col, None)
-    dists = (
-        ex.join(F.broadcast(cents), on="pos")
-        .groupBy("id", "clbl")
-        .agg(F.sum((F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))).alias("d2"))
-    )
-    return dists.groupBy("id").agg(
-        F.min_by("clbl", F.struct(F.col("d2"), F.col("clbl").alias("tb"))).alias(
-            "cluster"
         )
     )
 
@@ -2608,7 +2590,8 @@ def mmr_topk(
             (len(selected) + 1, cid, simq[cid], ms, half_away(score))
         )
         remaining.remove(cid)
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         selected,
         "rank int, vec_id long, relevance double, "
         "max_sim_selected double, mmr_score double",

@@ -227,10 +227,14 @@ def project_bipartite(
             ).select(F.col("dst_id").alias("id"), F.col("src_id").alias("via"))
         )
     )
-    mem = (
-        inc.groupBy("via")
+    # persisted in the graph's view memo, which owns and releases it;
+    # the lazy result keeps its lineage, so it never reads a released
+    # block
+    mem = graph._views.get(
+        ("bipartite_members", layer, via_layer),
+        lambda: inc.groupBy("via")
         .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .localCheckpoint()
+        .persist(),
     )
     st = (
         mem.select(F.explode("ids").alias("id"))

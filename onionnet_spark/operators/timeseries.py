@@ -103,14 +103,6 @@ def anomaly_days(
         F.date_trunc("day", F.col(ts_col)).alias("day"),
         F.col(key_col).alias("key"),
     ).agg(F.count("*").alias("n"))
-    return zscore_outlier_days(daily, z_threshold)
-
-
-def zscore_outlier_days(daily: DataFrame, z_threshold: float = 1.5) -> DataFrame:
-    """z-score outliers over an already-bucketed (day, key, n)
-    series — the core `anomaly_days` shares with the STREAMING
-    composition (a continuously-maintained rollup snapshot scored
-    on demand). Same exact-integer-sum variance contract."""
     w = Window.partitionBy("key")
     stats = (
         daily.withColumn("s1", F.sum("n").over(w))

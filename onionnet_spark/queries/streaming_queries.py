@@ -1,6 +1,6 @@
-"""Streaming-operator queries (SURVEY §2 #41-44) run in batch mode
+"""Streaming-operator queries (SURVEY §2 #41-43) run in batch mode
 for the DuckDB correctness gate; the same transforms run as real
-streams (readStream + watermark) in tests/test_streaming.py.
+streams (readStream + watermark) in tests/test_events.py.
 """
 
 from __future__ import annotations
@@ -92,7 +92,7 @@ def events_json_agg(spark, sf_dir):
 
 # rows-only driver check (HLL sketch values are engine-specific);
 # the accuracy bound vs the exact twin is pytest-asserted
-# (tests/test_streaming.py::test_approx_distinct_within_rsd)
+# (tests/test_events.py::test_approx_distinct_within_rsd)
 @register("events_daily_users_approx", None)
 def events_daily_users_approx(spark, sf_dir):
     return ev.daily_distinct_users_approx(_events(spark, sf_dir))

@@ -95,9 +95,9 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     (user_id, session_start, session_end, n_events).
 
     The streaming-native equivalent is
-    ``groupBy(session_window("ts", gap), user_id)`` — see
-    streaming_sessionize; the batch form below is its exact
-    deterministic counterpart used by the correctness oracle.
+    ``groupBy(session_window("ts", gap), user_id)``; the batch form
+    below is its exact deterministic counterpart used by the
+    correctness oracle.
     """
     from pyspark.sql import Window
 
@@ -122,20 +122,6 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     ).select("user_id", "session_start", "session_end", "n_events")
 
 
-def streaming_sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native streaming sessionization (state-store backed)."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
 def json_props_agg(events: DataFrame) -> DataFrame:
     """Extract props JSON field k, aggregate per event_type.
 
@@ -150,159 +136,6 @@ def json_props_agg(events: DataFrame) -> DataFrame:
             F.sum("k").cast("bigint").alias("sum_k"),
             F.round(F.avg("k"), 6).alias("avg_k"),
         )
-    )
-
-
-def stream_from_batch(spark, batch_df: DataFrame, partitions: int = 4) -> DataFrame:
-    """Replay a batch events frame as a bounded stream (file source)
-    for tests: writes to a temp parquet dir and reads with
-    maxFilesPerTrigger to force multiple micro-batches."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="onionnet_stream_")
-    batch_df.repartition(partitions).write.mode("overwrite").parquet(d)
-    return spark.readStream.schema(batch_df.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(d)
-
-
-def stateful_user_stats(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user running event count and running value sum, emitted on
-    every update.
-
-    This is the escape hatch for stateful semantics the built-in
-    windowed aggregations can't express (per-key state machines,
-    custom eviction). State is one (count, sum) pair per user_id,
-    stored in the state store and merged with each micro-batch's
-    Arrow batches; output mode 'update' emits the new running totals
-    for keys touched by the batch. At scale, state is partitioned by
-    the grouping key across executors and checkpointed
-    incrementally.
-    """
-    import pandas as pd  # noqa: F401 (imported for the worker closure)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("s", DoubleType())]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_heavy_hitters(
-    events: DataFrame, capacity: int = 256, emit_k: int = 5
-) -> DataFrame:
-    """Streaming heavy hitters per event_type with BOUNDED state:
-    the space-saving algorithm (Metwally et al. 2005) keeps at most
-    `capacity` (user, count) slots per key; when a new user arrives
-    at full capacity it inherits the minimum slot's count + 1 —
-    counts are overestimates by at most min-slot, and any user with
-    true frequency > n/capacity is guaranteed present. This is the
-    custom-eviction shape the built-in windowed aggregations cannot
-    express, and the state size is O(capacity) per key forever —
-    stream-safe at any volume.
-
-    Emits the current top `emit_k` (event_type, user_id, est_count,
-    rank) per key on every micro-batch (update mode); when the
-    distinct-user count per key stays under capacity the counts are
-    exact, which is what the equivalence test asserts.
-    """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("user_id", LongType()),
-            StructField("est_count", LongType()),
-            StructField("rank", IntegerType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("users", ArrayType(LongType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            users, counts = state.get
-            slots = dict(zip(users, counts))
-        else:
-            slots = {}
-        for pdf in pdfs:
-            for uid, c in pdf.groupby("user_id").size().items():
-                uid = int(uid)
-                if uid in slots:
-                    slots[uid] += int(c)
-                elif len(slots) < capacity:
-                    slots[uid] = int(c)
-                else:
-                    # space-saving eviction: the newcomer takes over
-                    # the minimum slot, inheriting its count
-                    m = min(slots, key=lambda u: (slots[u], -u))
-                    mc = slots.pop(m)
-                    slots[uid] = mc + int(c)
-        state.update((list(slots.keys()), list(slots.values())))
-        top = sorted(slots.items(), key=lambda kv: (-kv[1], kv[0]))[:emit_k]
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(top),
-                "user_id": [u for u, _ in top],
-                "est_count": [c for _, c in top],
-                "rank": list(range(1, len(top) + 1)),
-            }
-        )
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -202,6 +202,58 @@ def test_merge_onion_base_wins_and_edge_dedup(spark):
     assert edges == {("A", "1", "A", "2"), ("A", "1", "B", "9")}
 
 
+def test_merge_onion_folds_shuffled_batches_to_one_shot_build(spark):
+    # out-of-order batches with cross-batch duplicate edges, each
+    # grown on its own and merged into the running graph, must equal
+    # one grow_onion over all of them
+    import random
+
+    from onionnet_spark.builder import merge_onion
+    from onionnet_spark.core import OnionGraph
+
+    rng = random.Random(7)
+    uniq = [
+        ("L%d" % (i % 3), str(i), "L%d" % ((i + 1) % 3), str(i + 1), float(i % 10))
+        for i in range(60)
+    ]
+    # duplicates of half the edges carry identical props, so which
+    # copy survives cannot change the result
+    rows = uniq + [uniq[i] for i in range(0, 60, 2)]
+    rng.shuffle(rows)
+    schema = (
+        "src_layer string, src_id string, dst_layer string, dst_id string, w double"
+    )
+
+    def grow(edge_rows):
+        e = spark.createDataFrame(edge_rows, schema)
+        n = e.selectExpr("src_layer AS layer", "src_id AS node_id").unionByName(
+            e.selectExpr("dst_layer AS layer", "dst_id AS node_id")
+        )
+        return grow_onion(n, e, edge_prop_cols=["w"], validate_endpoints=False)
+
+    want = grow(rows)
+    g = OnionGraph(
+        spark.createDataFrame([], "layer string, node_id string"),
+        spark.createDataFrame([], schema),
+    )
+    for b in range(4):
+        m = merge_onion(g, grow(rows[b::4]))
+        # cut each step's lineage so the fold tests merge semantics,
+        # not plan growth across merges
+        g = OnionGraph(m.nodes.localCheckpoint(), m.edges.localCheckpoint())
+
+    def node_set(graph):
+        return {(r["layer"], r["node_id"]) for r in graph.nodes.collect()}
+
+    def edge_set(graph):
+        return {tuple(r) for r in graph.edges.select(
+            "src_layer", "src_id", "dst_layer", "dst_id", "w").collect()}
+
+    assert node_set(g) == node_set(want)
+    assert edge_set(g) == edge_set(want)
+    assert g.edges.count() == 60  # every duplicate collapsed
+
+
 def test_merge_node_properties_bulk(spark):
     from onionnet_spark.builder import grow_onion
     from onionnet_spark.operators.properties import (

@@ -154,7 +154,9 @@ def test_registry_grids_build_no_frame_from_a_python_list(
     spark, sf_dir, no_list_frames
 ):
     """The registry keys that join against a small literal grid (a
-    seed, thresholds, cut-offs, lags) build it as a literal frame."""
+    seed, thresholds, cut-offs, lags, partition offsets) or return a
+    driver-built result build it as a literal frame."""
+    from onionnet_spark.functions.corpus import column_correlations
     from onionnet_spark.queries import load_all
 
     reg = load_all()
@@ -163,5 +165,12 @@ def test_registry_grids_build_no_frame_from_a_python_list(
         "dedup_threshold_sweep",
         "vocab_coverage_curve",
         "events_ljung_box",
+        "sequence_packing",
+        "docs_tree_depth2",
+        "embedding_random_projection",
+        "embedding_mmr_topk",
     ):
         assert reg[key][0](spark, sf_dir).columns, key
+    # fewer than two columns: no pair, the empty result keeps its schema
+    one = literal_frame(spark, [(1.0,)], "a double")
+    assert column_correlations(one, ["a"]).columns == ["col_a", "col_b", "r"]

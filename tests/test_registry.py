@@ -1,4 +1,5 @@
-"""Registry invariants: duplicate-key guard and driver-window rotation.
+"""Registry invariants: duplicate-key guard, driver-window rotation,
+and that every library module is reachable from what the system runs.
 
 The driver records correctness for only the first 50 registered
 queries per round, so load_all()'s ordering IS the evidence plan;
@@ -6,6 +7,7 @@ and round 2 shipped a silently-overwritten duplicate registration
 (graph_pagerank_weighted), which the guard now makes impossible.
 """
 
+import ast
 import json
 import os
 
@@ -139,3 +141,85 @@ def test_every_oracle_parses_and_binds_in_duckdb():
         except Exception as e:  # noqa: BLE001
             bad.append((name, str(e)[:120]))
     assert not bad, bad
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# modules (relative to the package) that nothing the system runs
+# imports, each kept for a stated reason; a module that becomes
+# reachable must leave this map
+UNREACHED_ALLOWED = {
+    "sources/graph_io.py": "reference surface: read_graph, write_graph "
+    "and graph_from_csv (it also reaches sources/bucketed.py)",
+    "sources/docs_io.py": "IO layout left for its own audit",
+    "sources/timeseries_io.py": "IO layout left for its own audit",
+}
+
+
+def _module_of(path):
+    name = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+    return name[: -len(".__init__")] if name.endswith(".__init__") else name
+
+
+def _imported_names(path):
+    """Every dotted name `path` imports, relative imports resolved."""
+    pkg = _module_of(path)
+    if not path.endswith("__init__.py"):
+        pkg = pkg.rpartition(".")[0]
+    out = set()
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            out |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+                base = ".".join(parts + ([base] if base else []))
+            out.add(base)
+            out |= {f"{base}.{a.name}" for a in node.names}
+    return out
+
+
+def _unreached(extra_roots):
+    """Package modules no static import chain reaches from the queries,
+    the facade, bench.py, __spark_entry__.py, perfbench, tools or
+    `extra_roots` (package-relative paths)."""
+    pkg = os.path.join(ROOT, "onionnet_spark")
+    modules = {
+        _module_of(os.path.join(d, f)): os.path.join(d, f)
+        for d, _, files in os.walk(pkg)
+        for f in files
+        if f.endswith(".py")
+    }
+    roots = [os.path.join(pkg, "facade.py"), os.path.join(ROOT, "bench.py"),
+             os.path.join(ROOT, "__spark_entry__.py")]
+    for d in (os.path.join(pkg, "queries"), os.path.join(ROOT, "perfbench"),
+              os.path.join(ROOT, "tools")):
+        roots += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".py")]
+    roots += [os.path.join(pkg, r) for r in extra_roots]
+    seen = {_module_of(r) for r in roots}
+    todo = list(roots)
+    while todo:
+        for name in _imported_names(todo.pop()):
+            parts = name.split(".")
+            # importing a.b.c runs a/__init__ and a/b/__init__ too
+            for i in range(1, len(parts) + 1):
+                m = ".".join(parts[:i])
+                if m in modules and m not in seen:
+                    seen.add(m)
+                    todo.append(modules[m])
+    return sorted(
+        os.path.relpath(p, pkg) for m, p in modules.items() if m not in seen
+    )
+
+
+def test_every_library_module_is_reachable_from_what_the_system_runs():
+    """A library module only tests import is code nothing runs: it
+    either gets a caller or goes."""
+    unreached = _unreached(UNREACHED_ALLOWED)
+    assert not unreached, (
+        "modules no entry point imports (delete them, or pin them "
+        f"with a reason in UNREACHED_ALLOWED): {unreached}"
+    )
+    stale = sorted(set(UNREACHED_ALLOWED) - set(_unreached([])))
+    assert not stale, f"reachable now, drop from UNREACHED_ALLOWED: {stale}"

@@ -1,229 +1,6 @@
-"""Round-10 additions: the events_burst_periods streaming twin
-(VERDICT r9 item 8) and the shared at-least-once replay guard rolled
-out to every foreachBatch maintainer (VERDICT r9 item 6 / ADVICE).
+"""Round-10 additions: the QOI codec and the round-10 statistics
+and graph keys, checked against closed forms and invariants.
 """
-
-import pytest
-from pyspark.sql import functions as F
-
-from onionnet_spark.sources.tpch_graph import load_tables
-from onionnet_spark.streaming import events as ev
-
-
-@pytest.fixture(scope="module")
-def events_df(spark, sf_dir):
-    return load_tables(spark, sf_dir)["events"].persist()
-
-
-# ---------------------------------------------------------------------------
-# StreamingBurstPeriodsMaintainer (VERDICT r9 item 8)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_burst_periods_matches_batch(
-    spark, events_df, sf_dir, tmp_path
-):
-    """The maintained day-count state, replayed as a multi-batch file
-    stream, must serve a burst-periods snapshot identical to the
-    batch operator — the threshold depends on the full-horizon mean,
-    so only a full recompute over the (tiny, bounded) state is exact
-    under every batch split."""
-    from onionnet_spark.queries.streaming_queries import events_burst_periods
-    from onionnet_spark.streaming.burst_stream import (
-        StreamingBurstPeriodsMaintainer,
-    )
-
-    m = StreamingBurstPeriodsMaintainer(spark)
-    stream = ev.stream_from_batch(spark, events_df, partitions=4)
-    q = m.attach(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    assert m.n_batches >= 2  # genuinely incremental
-    got = sorted(map(tuple, m.burst_snapshot().collect()))
-    want = sorted(map(tuple, events_burst_periods(spark, sf_dir).collect()))
-    assert got == want and len(got) > 0
-
-
-def test_streaming_burst_periods_is_retroactive(spark):
-    """The burst flag is RETROACTIVE state: a late batch that shifts
-    the full-horizon mean must re-flag days delivered in earlier
-    batches. Fixture: days 1-4 at 10/day, day 5 at 30 — after batch 0
-    (days 1-4 only) nothing clears 1.15x the mean (all days AT the
-    mean); after batch 1 adds day 5, the mean moves to 14 and only
-    day 5 bursts; after batch 2 doubles day 2 (late arrivals), days
-    2 and 5 burst as two separate runs."""
-    from onionnet_spark.streaming.burst_stream import (
-        StreamingBurstPeriodsMaintainer,
-    )
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [("click", f"2024-01-0{d} 00:00:{i:02d}") for d, n in rows
-             for i in range(n)],
-            "event_type string, ts string",
-        ).select("event_type", F.col("ts").cast("timestamp"))
-
-    m = StreamingBurstPeriodsMaintainer(spark)
-    m.merge_batch(batch([(1, 10), (2, 10), (3, 10), (4, 10)]), batch_id=0)
-    assert m.burst_snapshot().count() == 0
-    m.merge_batch(batch([(5, 30)]), batch_id=1)
-    runs = [tuple(r) for r in m.burst_snapshot().collect()]
-    assert len(runs) == 1 and str(runs[0][1]) == "2024-01-05"
-    # late data for an OLD day: day 2 doubles, mean shifts again, and
-    # a previously-unflagged old day becomes a new burst run
-    m.merge_batch(batch([(2, 10)]), batch_id=2)
-    runs = sorted(str(r["start_day"]) for r in m.burst_snapshot().collect())
-    assert runs == ["2024-01-02", "2024-01-05"]
-
-
-# ---------------------------------------------------------------------------
-# ReplayGuardMixin rollout (VERDICT r9 item 6): one redelivery pytest
-# per maintainer family — redelivering a batch_id must be a no-op,
-# the next new batch_id must still apply.
-# ---------------------------------------------------------------------------
-
-
-def _events_batch(spark, rows):
-    return spark.createDataFrame(
-        rows, "user_id bigint, event_type string, value double, ts string"
-    ).select("user_id", "event_type", "value", F.col("ts").cast("timestamp"))
-
-
-def _check_replay(m, apply, state_rows, b0, b1):
-    """Apply b0 twice under the same batch_id (the redelivery), then
-    b1 under the next id; the duplicate must not change state."""
-    apply(m, b0, 0)
-    once = sorted(map(tuple, state_rows(m).collect()))
-    apply(m, b0, 0)  # redelivered epoch
-    assert sorted(map(tuple, state_rows(m).collect())) == once
-    assert m.n_batches == 1
-    apply(m, b1, 1)
-    assert m.n_batches == 2
-    assert sorted(map(tuple, state_rows(m).collect())) != once
-
-
-def test_replay_guard_rollup(spark):
-    from onionnet_spark.streaming.rollup_stream import StreamingRollupMaintainer
-
-    _check_replay(
-        StreamingRollupMaintainer(spark, window_len="1 day"),
-        lambda m, b, i: m.merge_batch(b, batch_id=i),
-        lambda m: m.rollup,
-        _events_batch(spark, [(1, "click", 1.0, "2024-01-01 10:00:00")]),
-        _events_batch(spark, [(2, "view", 2.0, "2024-01-02 10:00:00")]),
-    )
-
-
-def test_replay_guard_cms(spark):
-    from onionnet_spark.streaming.cms_stream import StreamingCountMin
-
-    _check_replay(
-        StreamingCountMin(spark, key_col="k"),
-        lambda m, b, i: m.merge_batch(b, batch_id=i),
-        lambda m: m.sketch,
-        spark.createDataFrame([("a",), ("a",)], "k string"),
-        spark.createDataFrame([("b",)], "k string"),
-    )
-
-
-def test_replay_guard_ab_monitor(spark):
-    from onionnet_spark.streaming.ab_stream import StreamingABMonitor
-
-    _check_replay(
-        StreamingABMonitor(spark),
-        lambda m, b, i: m.merge_batch(b, batch_id=i),
-        lambda m: m.users,
-        _events_batch(spark, [(1, "purchase", 200.0, "2024-01-01 10:00:00")]),
-        _events_batch(spark, [(2, "purchase", 200.0, "2024-01-01 11:00:00")]),
-    )
-
-
-def test_replay_guard_user_features(spark):
-    from onionnet_spark.streaming.features_stream import StreamingUserFeatures
-
-    _check_replay(
-        StreamingUserFeatures(spark),
-        lambda m, b, i: m.process_batch(b, batch_id=i),
-        lambda m: m.agg,
-        _events_batch(spark, [(1, "purchase", 10.0, "2024-01-01 10:00:00")]),
-        _events_batch(spark, [(1, "error", 0.0, "2024-01-02 10:00:00")]),
-    )
-
-
-def test_replay_guard_active_users(spark):
-    from onionnet_spark.streaming.active_stream import StreamingActiveUsers
-
-    _check_replay(
-        StreamingActiveUsers(spark),
-        lambda m, b, i: m.process_batch(b, batch_id=i),
-        lambda m: m.state,
-        _events_batch(spark, [(1, "click", 1.0, "2024-01-01 10:00:00")]),
-        _events_batch(spark, [(2, "click", 1.0, "2024-01-02 10:00:00")]),
-    )
-
-
-def test_replay_guard_line_dedup(spark):
-    from onionnet_spark.streaming.line_stream import StreamingLineDedupMaintainer
-
-    docs0 = spark.createDataFrame(
-        [(1, "alpha\nbeta")], "doc_id bigint, text string"
-    )
-    docs1 = spark.createDataFrame(
-        [(2, "alpha\ngamma")], "doc_id bigint, text string"
-    )
-    _check_replay(
-        StreamingLineDedupMaintainer(spark),
-        lambda m, b, i: m.process_batch(b, batch_id=i),
-        lambda m: m.stats,
-        docs0,
-        docs1,
-    )
-
-
-def test_replay_guard_graph_maintainer(spark):
-    """merge_edge_batch family: the merged graph dedups nodes, so the
-    visible redelivery symptom is n_batches and the edge count —
-    both must be unchanged by a replayed epoch."""
-    from onionnet_spark.builder import grow_onion
-    from onionnet_spark.streaming.graph_stream import StreamingGraphMaintainer
-
-    def edge_batch(rows):
-        return spark.createDataFrame(
-            rows, "src_layer string, src_id string, dst_layer string, dst_id string"
-        )
-
-    base_edges = edge_batch([("a", "1", "b", "1")])
-    base_nodes = base_edges.select(
-        F.col("src_layer").alias("layer"), F.col("src_id").alias("node_id")
-    ).unionByName(
-        base_edges.select(
-            F.col("dst_layer").alias("layer"), F.col("dst_id").alias("node_id")
-        )
-    )
-    m = StreamingGraphMaintainer(grow_onion(base_nodes, base_edges))
-    b0 = edge_batch([("a", "2", "b", "2")])
-    m.merge_edge_batch(b0, batch_id=0)
-    n_edges = m.graph.edges.count()
-    m.merge_edge_batch(b0, batch_id=0)  # redelivered epoch
-    assert m.graph.edges.count() == n_edges and m.n_batches == 1
-    m.merge_edge_batch(edge_batch([("a", "3", "b", "3")]), batch_id=1)
-    assert m.graph.edges.count() == n_edges + 1 and m.n_batches == 2
-
-
-def test_replay_guard_reset_rearms(spark):
-    """reset_replay_guard(): re-attaching a maintainer to a NEW query
-    (batch_ids restart at 0) must apply batches again after reset —
-    without it they would all read as replays (documented contract)."""
-    from onionnet_spark.streaming.rollup_stream import StreamingRollupMaintainer
-
-    m = StreamingRollupMaintainer(spark, window_len="1 day")
-    b = _events_batch(spark, [(1, "click", 1.0, "2024-01-01 10:00:00")])
-    m.merge_batch(b, batch_id=5)
-    m.merge_batch(b, batch_id=0)  # stale id: skipped
-    assert m.n_batches == 1
-    m.reset_replay_guard()
-    m.merge_batch(b, batch_id=0)  # new query, state carries over
-    assert m.n_batches == 2
-
 
 # ---------------------------------------------------------------------------
 # QOI codec (functions/qoi.py) — lossless roundtrip, all op paths
@@ -310,56 +87,6 @@ def test_qoi_truncated_raises():
         decode_qoi(b[:20] + b[-8:])
     with _pytest.raises(ValueError, match="not a QOI"):
         decode_qoi(b"nope" + b[4:])
-
-
-# ---------------------------------------------------------------------------
-# StreamingMannKendallMaintainer — replay == batch, retroactive sign flips
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_mann_kendall_matches_batch(spark, events_df, sf_dir, tmp_path):
-    from onionnet_spark.queries.streaming_queries import events_mann_kendall
-    from onionnet_spark.streaming.mann_kendall_stream import (
-        StreamingMannKendallMaintainer,
-    )
-
-    m = StreamingMannKendallMaintainer(spark)
-    stream = ev.stream_from_batch(spark, events_df, partitions=4)
-    q = m.attach(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    assert m.n_batches >= 2
-    got = [tuple(r) for r in m.mann_kendall_snapshot().collect()]
-    want = [tuple(r) for r in events_mann_kendall(spark, sf_dir).collect()]
-    assert got == want and len(got) == 1
-
-
-def test_streaming_mann_kendall_is_retroactive(spark):
-    """S is pairwise state: a late batch that bumps an OLD day's
-    count must flip the sign of every pair that day joins. Fixture:
-    days 1..4 strictly increasing (S = 6, all pairs ascending);
-    a late batch then lifts day 1 above everything, flipping its 3
-    pairs to descending (S = 6 - 2*3 = 0 with no ties... day1=9
-    makes pairs (1,2),(1,3),(1,4) descending: S = 3 - 3 = 0)."""
-    from pyspark.sql import functions as F
-
-    from onionnet_spark.streaming.mann_kendall_stream import (
-        StreamingMannKendallMaintainer,
-    )
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [("click", f"2024-01-0{d} 00:00:{i:02d}") for d, n in rows
-             for i in range(n)],
-            "event_type string, ts string",
-        ).select("event_type", F.col("ts").cast("timestamp"))
-
-    m = StreamingMannKendallMaintainer(spark)
-    m.merge_batch(batch([(1, 2), (2, 4), (3, 6), (4, 8)]), batch_id=0)
-    r = m.mann_kendall_snapshot().collect()[0]
-    assert (r["n_days"], r["s_stat"]) == (4, 6) and r["z"] > 0
-    m.merge_batch(batch([(1, 7)]), batch_id=1)  # day 1: 2 -> 9
-    r = m.mann_kendall_snapshot().collect()[0]
-    assert (r["n_days"], r["s_stat"]) == (4, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -497,22 +224,6 @@ def test_voterank_suppression_spreads_seeds(spark):
     assert out[2]["node_id"] in {"t1", "t2", "t3"}
     # exact scaling: hub score = 6 leaves x va0 (=2m = 18 directed)
     assert out[1]["score_scaled"] == 6 * 18
-
-
-def test_streaming_ljung_box_matches_batch(spark, events_df, sf_dir, tmp_path):
-    from onionnet_spark.queries.streaming_queries import events_ljung_box
-    from onionnet_spark.streaming.mann_kendall_stream import (
-        StreamingLjungBoxMaintainer,
-    )
-
-    m = StreamingLjungBoxMaintainer(spark)
-    stream = ev.stream_from_batch(spark, events_df, partitions=4)
-    q = m.attach(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    assert m.n_batches >= 2
-    got = sorted(map(tuple, m.ljung_box_snapshot().collect()))
-    want = sorted(map(tuple, events_ljung_box(spark, sf_dir).collect()))
-    assert got == want and len(got) == 3
 
 
 def test_energy_distance_nonnegative_chord_vstat(spark, sf_dir):

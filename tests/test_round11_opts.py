@@ -80,6 +80,33 @@ def test_project_bipartite_cross_block_broadcast_is_gated(
     }
 
 
+def test_project_bipartite_members_are_released_with_the_graph(spark):
+    """The persisted membership frame belongs to the graph's view
+    memo: unpersisting the graph frees it, and the lazy result still
+    computes from its lineage afterwards."""
+    g = OnionGraph(
+        spark.createDataFrame(
+            [("member", m) for m in "xyz"] + [("group", "h")],
+            "layer string, node_id string",
+        ),
+        spark.createDataFrame(
+            [("member", m, "group", "h") for m in "xyz"],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+    )
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = pinned()
+    df = project_bipartite(g, "member", "group")
+    want = rows_to_set(df)
+    assert pinned() - before
+    g.unpersist()
+    assert not pinned() - before
+    assert rows_to_set(df) == want
+
+
 def test_project_bipartite_single_membership_gate(spark):
     """Strict one-via-per-member graph: the gate fires (n_shared
     literal 1) and results still match the brute force."""

@@ -435,40 +435,6 @@ def test_daily_topk_rank_bounds(spark, sf_dir):
     assert per_day.filter(F.col("count") > 3).count() == 0
 
 
-def test_streaming_line_dedup_matches_batch_for_ordered_split(spark):
-    # id-ordered 3-batch replay must equal batch line_dedup exactly
-    from onionnet_spark.functions.dedup import line_dedup
-    from onionnet_spark.streaming.line_stream import StreamingLineDedupMaintainer
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        # sf0.001 texts have no naturally repeated lines; append a shared
-        # boilerplate footer to every third doc so cross-doc AND
-        # cross-batch line duplicates actually occur.
-        .withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat_ws(
-                    "\n", F.col("text"), F.lit("standard boilerplate footer")
-                ),
-            ).otherwise(F.col("text")),
-        )
-    )
-    want = sorted(map(tuple, line_dedup(docs).collect()))
-    m = StreamingLineDedupMaintainer(spark)
-    for lo, hi in [(0, 150), (150, 300), (300, 10**9)]:
-        m.process_batch(
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        )
-    assert m.n_batches == 3
-    got = sorted(map(tuple, m.stats.collect()))
-    assert got == want
-    # duplicate lines must actually occur, or the test is vacuous
-    assert sum(t[2] for t in got) > 0
-
-
 # ---------------------------------------------------------------------------
 # round-4 continuation: ngram_topk / nearest-centroid / LSH stats /
 # split leakage / channel stats / rolling features
@@ -756,26 +722,6 @@ def test_pca_top_component_degenerate_zero_variance(spark):
     assert all(r["loading"] == 0.0 for r in out)
 
 
-def test_streaming_simhash_dedup_replay_equals_batch(spark):
-    from onionnet_spark.functions.dedup import simhash_near_pairs
-    from onionnet_spark.streaming.simhash_stream import StreamingSimhashDedup
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-    )
-    want = sorted(map(tuple, simhash_near_pairs(docs).collect()))
-    assert want, "fixture must contain simhash near-dups"
-    m = StreamingSimhashDedup(spark)
-    for lo, hi in [(0, 120), (120, 301), (301, 10**9)]:
-        m.process_batch(
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        )
-    assert m.n_batches == 3
-    got = sorted(map(tuple, m.pairs.collect()))
-    assert got == want
-
-
 def test_tfidf_topk_rare_term_wins(spark):
     from onionnet_spark.functions.ranking import tfidf_doc_topk_terms
 
@@ -1048,25 +994,6 @@ def test_readability_closed_form(spark):
     assert r["n_syllables"] == 6
     expect = floor((0.39 * (6 / 2) + 11.8 * (6 / 6) - 15.59) * 1e6) / 1e6
     assert r["fk_grade"] == expect
-
-
-def test_streaming_active_users_replay_equals_batch(spark):
-    from onionnet_spark.operators.timeseries import active_users_rolling
-    from onionnet_spark.sources.tpch_graph import load_tables
-    from onionnet_spark.streaming.active_stream import StreamingActiveUsers
-
-    events = load_tables(spark, "/root/testdata/sf0.001")["events"]
-    want = sorted(map(tuple, active_users_rolling(events).collect()))
-    m = StreamingActiveUsers(spark)
-    # out-of-order, overlapping batches: the distinct-union monoid
-    # must absorb duplicates and ordering
-    for lo, hi in [(600, 1001), (0, 400), (300, 700)]:
-        m.process_batch(
-            events.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
-        )
-    assert m.n_batches == 3
-    got = sorted(map(tuple, m.report().collect()))
-    assert got == want
 
 
 def test_centralization_star_is_one(spark):

@@ -296,57 +296,6 @@ def test_mdct_spark_dispatch(spark):
     assert stats[0]["n_samples"] == 2000 and stats[0]["n_channels"] == 1
 
 
-# --------------------------------------------------- streaming dup spans
-
-
-def test_streaming_dup_span_replay_equals_batch(spark):
-    from onionnet_spark.streaming.span_stream import StreamingDupSpanMaintainer
-
-    rows = [
-        # batch 1: doc 1 and 2 share a 5-run; doc 3 clean (for now)
-        (1, "a b c d e f x1 y1 z1"),
-        (2, "q2 a b c d e f y2"),
-        (3, "k l m n o p q r"),
-        # batch 2: doc 4 collides with doc 3's window -> RETROACTIVE
-        # upgrade of a doc from an earlier batch; doc 5 repeats itself
-        (4, "zz k l m n o yy"),
-        (5, "p q r s t mid p q r s t"),
-        # batch 3: doc 6 re-hits an already-dup window (no new upgrade)
-        (6, "k l m n o tail6"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    from onionnet_spark.functions.dedup import dup_span_stats
-
-    expected = {
-        r["doc_id"]: r for r in dup_span_stats(docs, w=5).collect()
-    }
-    m = StreamingDupSpanMaintainer(spark, w=5)
-    for lo, hi in [(1, 3), (4, 5), (6, 6)]:
-        m.process_batch(
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
-        )
-    got = {r["doc_id"]: r for r in m.snapshot().collect()}
-    assert set(got) == set(expected)
-    for d in expected:
-        for c in ["n_tokens", "n_dup_windows", "n_spans", "dup_tokens",
-                  "dup_fraction"]:
-            assert got[d][c] == expected[d][c], (d, c, got[d][c], expected[d][c])
-    # the retroactive case really happened: doc 3 (batch 1) is dup
-    assert got[3]["n_dup_windows"] > 0
-
-
-def test_streaming_dup_span_single_batch_equals_batch(spark, sf_dir):
-    from onionnet_spark.functions.dedup import dup_span_stats
-    from onionnet_spark.streaming.span_stream import StreamingDupSpanMaintainer
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    m = StreamingDupSpanMaintainer(spark, w=5)
-    m.process_batch(docs)
-    got = {r["doc_id"]: r for r in m.snapshot().collect()}
-    expected = {r["doc_id"]: r for r in dup_span_stats(docs, w=5).collect()}
-    assert got == expected
-
-
 # ------------------------------------------------------------ HyperANF
 
 
@@ -604,32 +553,6 @@ def test_onion_layers_refine_coreness(spark):
         assert onion[n]["coreness"] == core[n]  # onion refines, never disagrees
 
 
-def test_streaming_psi_replay_equals_batch(spark, sf_dir):
-    from onionnet_spark.functions.corpus import psi_by_group
-    from onionnet_spark.streaming.psi_stream import StreamingPsiMonitor
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lo, hi = docs.agg(F.min("n_chars"), F.max("n_chars")).collect()[0]
-    m = StreamingPsiMonitor(spark, lo, hi)
-    third = docs.count() // 3
-    m.process_batch(docs.filter(F.col("doc_id") < third))
-    m.process_batch(
-        docs.filter((F.col("doc_id") >= third) & (F.col("doc_id") < 2 * third))
-    )
-    m.process_batch(docs.filter(F.col("doc_id") >= 2 * third))
-    got = {r["source"]: r for r in m.snapshot().collect()}
-    expected = {
-        r["source"]: r
-        for r in psi_by_group(
-            docs, "n_chars", bounds=(int(lo), int(hi))
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for s in expected:
-        assert got[s]["psi_nano"] == expected[s]["psi_nano"]
-        assert got[s]["n_docs"] == expected[s]["n_docs"]
-
-
 # ----------------------------------------------- keep policy / fertility
 
 
@@ -764,29 +687,6 @@ def test_link_training_set_is_sound(spark):
     assert oracle is not None
 
 
-def test_streaming_bootstrap_replay_equals_batch(spark, sf_dir):
-    from onionnet_spark.functions.corpus import poisson_bootstrap
-    from onionnet_spark.streaming.bootstrap_stream import (
-        StreamingBootstrapMonitor,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    m = StreamingBootstrapMonitor(spark, n_resamples=8)
-    half = docs.count() // 2
-    m.process_batch(docs.filter(F.col("doc_id") < half))
-    m.process_batch(docs.filter(F.col("doc_id") >= half))
-    got = {r["resample"]: r for r in m.snapshot().collect()}
-    expected = {
-        r["resample"]: r
-        for r in poisson_bootstrap(docs, "n_chars", n_resamples=8).collect()
-    }
-    assert set(got) == set(expected)
-    for b in expected:
-        assert got[b]["n_eff"] == expected[b]["n_eff"]
-        assert got[b]["sum_value"] == expected[b]["sum_value"]
-        assert got[b]["mean_value"] == expected[b]["mean_value"]
-
-
 def test_rag_chunks_overlap_and_remainder(spark):
     from onionnet_spark.functions.text import rag_chunks
 
@@ -820,27 +720,6 @@ def test_triplet_set_labels_and_margin(spark):
         assert labels[r["anchor_id"]] == labels[r["positive_id"]]
         assert labels[r["anchor_id"]] != labels[r["negative_id"]]
         assert abs(r["margin"] - round(r["pos_cosine"] - r["neg_cosine"], 6)) < 1e-9
-
-
-def test_streaming_user_features_replay_equals_batch(spark, sf_dir):
-    from onionnet_spark.queries import load_all
-    from onionnet_spark.sources.tpch_graph import load_tables
-    from onionnet_spark.streaming.features_stream import StreamingUserFeatures
-
-    ev = load_tables(spark, sf_dir)["events"]
-    fn, _ = load_all()["events_user_features"]
-    expected = {r["user_id"]: r for r in fn(spark, sf_dir).collect()}
-    m = StreamingUserFeatures(spark)
-    third = ev.count() // 3
-    m.process_batch(ev.filter(F.col("event_id") < third))
-    m.process_batch(
-        ev.filter((F.col("event_id") >= third) & (F.col("event_id") < 2 * third))
-    )
-    m.process_batch(ev.filter(F.col("event_id") >= 2 * third))
-    got = {r["user_id"]: r for r in m.snapshot().collect()}
-    assert set(got) == set(expected)
-    for u in expected:
-        assert got[u].asDict() == expected[u].asDict(), u
 
 
 def test_tree_depth2_perfect_split_toy(spark):
