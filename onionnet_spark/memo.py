@@ -14,6 +14,12 @@ one, so a Spark job building one entry does not hold up a lookup or
 a build of another. A value is published only once its build has
 returned; a build that raises publishes nothing and the next caller
 retries. `None` is a value like any other.
+
+Spark's CacheManager keeps one entry per distinct plan, so two memos
+(say two OnionGraphs over the same frames) that persist identical
+views share one cached relation. Each published value counts one
+hold on every cached frame inside it; a release unpersists a frame
+only when it lets go of the last hold on that relation.
 """
 
 from __future__ import annotations
@@ -21,6 +27,8 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable, Hashable
 from typing import Any
+
+from pyspark.sql import DataFrame
 
 
 class Memo:
@@ -49,6 +57,7 @@ class Memo:
                 if key in self._values:
                     return self._values[key]
             value = build()
+            _hold(value)
             with self._lock:
                 self._values[key] = value
                 self._building.pop(key, None)
@@ -56,22 +65,57 @@ class Memo:
 
     def release(self) -> None:
         """Forget every entry and unpersist the frames and graphs it
-        held (inside tuples and dicts too)."""
+        held (inside tuples and dicts too). Every part is released
+        even if one fails; the first failure is raised afterwards."""
         with self._lock:
             values = list(self._values.values())
             self._values.clear()
-        for v in values:
-            _unpersist(v)
+        error = None
+        for v in _parts(values):
+            try:
+                _release(v)
+            except Exception as e:  # noqa: BLE001
+                error = error or e
+        if error is not None:
+            raise error
 
 
-def _unpersist(value: Any) -> None:
+_holds_lock = threading.Lock()
+# (application id, semantic plan hash) -> holds on that cached relation
+_holds: dict[tuple[str, int], int] = {}
+
+
+def _parts(value: Any) -> list:
     if isinstance(value, dict):
         value = list(value.values())
     if isinstance(value, (tuple, list)):
-        for v in value:
-            _unpersist(v)
-    elif hasattr(value, "unpersist"):
-        value.unpersist()
+        return [p for v in value for p in _parts(v)]
+    return [value]
+
+
+def _plan_key(df: DataFrame) -> tuple[str, int]:
+    return df.sparkSession.sparkContext.applicationId, df.semanticHash()
+
+
+def _hold(value: Any) -> None:
+    for df in _parts(value):
+        if isinstance(df, DataFrame) and df.is_cached:
+            key = _plan_key(df)
+            with _holds_lock:
+                _holds[key] = _holds.get(key, 0) + 1
+
+
+def _release(v: Any) -> None:
+    if isinstance(v, DataFrame) and v.is_cached:
+        key = _plan_key(v)
+        with _holds_lock:
+            left = _holds.pop(key, 1) - 1
+            if left:
+                _holds[key] = left
+        if left:
+            return  # another holder still uses the relation
+    if hasattr(v, "unpersist"):
+        v.unpersist()
 
 
 _session_lock = threading.Lock()

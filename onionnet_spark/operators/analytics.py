@@ -1277,8 +1277,6 @@ def trussness(
     a_col: str = "a",
     b_col: str = "b",
     guard: bool = True,
-    rebase_every: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full truss decomposition: each edge's truss number (the max k
     for which it survives in the k-truss) — the edge-level analogue
@@ -1294,14 +1292,14 @@ def trussness(
     enumeration on the shrinking survivor set. Returns (a, b,
     trussness).
 
-    Checkpoint discipline: every `rebase_every` sweeps the survivor
-    set is rebased through a REAL parquet write/read. Chains of >~12
+    Checkpoint discipline: every 8th sweep the survivor set is
+    rebased through a REAL parquet write/read. Chains of >~12
     localCheckpoints hit a geometric per-sweep replay blowup on this
     Spark build even though every post-checkpoint plan is a bare
     LogicalRDD scan (measured: 0.7s/sweep flat for 12 sweeps, then
     x4 per sweep) — the parquet rebase is the reliable truncation
     long iterative jobs use, and it is what a cluster deployment
-    would do anyway (pass `checkpoint_dir` on a shared filesystem).
+    would do anyway (with `TMPDIR` on a shared filesystem).
     """
     from onionnet_spark.operators.ckpt import IterCheckpointer
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
@@ -1325,10 +1323,7 @@ def trussness(
             .agg(F.count("*").alias("support"))
         )
 
-    ck = IterCheckpointer(
-        rebase_every=rebase_every, checkpoint_dir=checkpoint_dir,
-        prefix="onionnet_truss_",
-    )
+    ck = IterCheckpointer(rebase_every=8, prefix="onionnet_truss_")
     remaining = e
     tagged = [e.select("a", "b", F.lit(2).alias("k"))]
     for k in range(3, k_max + 1):

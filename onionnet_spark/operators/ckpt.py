@@ -16,27 +16,48 @@ rebase every `rebase_every` cuts so chains of ANY depth stay flat.
 Iterations bounded well under the threshold (fixed small round
 counts) don't need this; BFS to unknown depth, fixpoint CC on
 high-diameter graphs, and long peel schedules do.
+
+Frames read back from a rebase are used lazily after their loop
+returns, so a loop cannot remove its own directory. Each SparkContext
+owns one root directory (an entry of its session memo) holding every
+loop directory: it is removed when that memo is released (a new
+context replaced the stopped one) or at interpreter exit. The temp
+location is the deployment setting (`TMPDIR`).
 """
 
 from __future__ import annotations
 
+import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame
+
+from onionnet_spark.memo import session_memo
+
+
+class _ScratchRoot:
+    """A temp directory removed at interpreter exit, or earlier when
+    the memo that holds it is released."""
+
+    def __init__(self):
+        self.path = tempfile.mkdtemp(prefix="onionnet_ckpt_")
+        self._remove = weakref.finalize(
+            self, shutil.rmtree, self.path, ignore_errors=True
+        )
+
+    def unpersist(self) -> None:
+        """The memo's release hook: remove the directory now."""
+        self._remove()
 
 
 class IterCheckpointer:
     """Counts checkpoint generations; every `rebase_every`-th cut is
     a parquet write/read rebase instead of a localCheckpoint."""
 
-    def __init__(
-        self,
-        rebase_every: int = 10,
-        checkpoint_dir: str | None = None,
-        prefix: str = "onionnet_iter_",
-    ):
+    def __init__(self, rebase_every: int = 10, prefix: str = "onionnet_iter_"):
         self.rebase_every = rebase_every
-        self._dir = checkpoint_dir
+        self._dir: str | None = None
         self._prefix = prefix
         self._n = 0
 
@@ -49,7 +70,10 @@ class IterCheckpointer:
         self._n += 1
         if self.rebase_every and self._n % self.rebase_every == 0:
             if self._dir is None:
-                self._dir = tempfile.mkdtemp(prefix=self._prefix)
+                root = session_memo(df.sparkSession).get(
+                    ("checkpoint_root",), _ScratchRoot
+                )
+                self._dir = tempfile.mkdtemp(prefix=self._prefix, dir=root.path)
             path = f"{self._dir}/gen_{self._n}"
             df.write.mode("overwrite").parquet(path)
             return df.sparkSession.read.parquet(path)

@@ -3,6 +3,11 @@
 a DuckDB oracle SQL string.
 
 Modules register into REGISTRY: name -> (callable, oracle_sql | None).
+`load_all()` imports them all and returns REGISTRY in registration
+order. The order in which a driver verifies the keys is not kept
+here: `__spark_entry__.evidence_order` computes it from the committed
+`CORRECTNESS_r*.json` records (keys with no green row first, then the
+stalest evidence, rows-only keys last).
 """
 
 from __future__ import annotations
@@ -40,657 +45,9 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# HISTORICAL window lists (rounds 3-5), kept as the rotation record;
-# load_all() now orders by _R6_WINDOW/_R7_QUEUE below.
-# Driver-window rotation (round 3). The driver's CORRECTNESS_r{N}.json
-# records only the FIRST 50 registered queries per round. r01 recorded
-# graph/dedup/text heads; r02 recorded relational/streaming. These 41
-# keys have never had a driver correctness row (VERDICT r2 'next round'
-# item 1 lists them); they go first this round, followed by queries new
-# in round 3. Everything already green in a prior CORRECTNESS file
-# rotates behind them — it's on record.
-_R3_WINDOW: list[str] = [
-    # 23 round-2 graph-analytics ops, never driver-checked
-    "graph_ppr",
-    "graph_kcore",
-    "graph_coreness",
-    "graph_communities_lpa",
-    "graph_node_jaccard",
-    "graph_betweenness",
-    "graph_clustering_coeff",
-    "graph_anf",
-    "graph_anf_growth",
-    "graph_closeness",
-    "graph_annotate",
-    "graph_pagerank_weighted",
-    "graph_hits",
-    "graph_ktruss",
-    "graph_motif_open_triads",
-    "graph_random_walks",
-    "graph_temporal_reach",
-    "graph_maximal_matching",
-    "graph_assortativity",
-    "graph_reciprocity",
-    "graph_modularity",
-    "graph_ego_stats",
-    "graph_bipartite_projection",
-    # 18 pipeline ops, never driver-checked
-    "doc_length_quantiles_approx",
-    "decontamination",
-    "pii_scrub",
-    "corpus_curation",
-    "repetition_stats",
-    "unigram_logprob",
-    "bigram_logprob",
-    "source_cap",
-    "corpus_sample",
-    "sequence_packing",
-    "stratified_sample",
-    "source_length_percentiles",
-    "docs_profile",
-    "docs_term_stats",
-    "docs_bm25",
-    "ann_pq_topk",
-    "ann_ivf_pq_topk",
-    "dedup_cluster_sizes",
-    # new in round 3 (first driver check)
-    "khop_bi_children",
-    "components_strong_cyclic",
-    "multimodal_png_decode",
-    "multimodal_wav_decode",
-    "multimodal_png_resize",
-    "multimodal_wav_resample",
-    "mixture_allocation",
-    "numeric_histogram_bounded",
-    "column_correlations_nulls",
-]
-
-
-# Queries added later in round 3, AFTER the 50-slot window was full
-# of equally-unrecorded keys: first in line for the round-4 window
-# (all pass tools/check_correctness.py locally; see SURVEY §5).
-_R4_BACKLOG: list[str] = [
-    "corpus_shuffle_shards",
-    "chunk_dedup",
-    "graph_eigenvector",
-    "graph_katz",
-    "graph_pseudo_diameter",
-    "orders_custkey_skew",
-    "docs_tf_cosine_topk",
-    "lineitem_zorder_key",
-    "multimodal_jpeg_decode",
-    "corpus_weighted_sample",
-    "bpe_merge_candidates",
-    "bloom_pruned_revenue",
-    "corpus_ingest_delta",
-    "ann_ivf_pq_residual_topk",
-    "graph_walk_skipgrams",
-    "graph_adjacency_export",
-    "multimodal_image_dhash",
-    "multimodal_audio_fingerprint",
-    "corpus_report",
-]
-
-
-# Queries new in round 4: first driver check this round, right after
-# the backlog drains (window is 50 slots; 19 backlog + these).
-_R4_NEW: list[str] = [
-    "bipartite_layout",
-    "style_columns_power",
-    "graph_neighbor_agg",
-    "graph_link_prediction",
-    "graph_degree_distribution",
-    "graph_powerlaw_alpha",
-    "graph_rich_club",
-    "line_dedup",
-    "dsir_logratio",
-    "oov_rate",
-    "zipf_slope",
-    "pmi_pairs",
-    "embedding_dim_stats",
-    "embedding_random_projection",
-    "embedding_quantize_int8",
-    "events_interarrival",
-    "tokenize_to_ids",
-    "source_overlap_matrix",
-    "dedup_rate_by_source",
-    "embedding_cosine_histogram",
-    "asof_join_tolerance",
-    "graph_topo_levels",
-    "embedding_knn_accuracy",
-    "char_entropy",
-    "events_daily_topk",
-    # added in the round-4 continuation session (window slots 45-50)
-    "ngram_topk",
-    "embedding_nearest_centroid",
-    "lsh_bucket_stats",
-    "split_leakage_audit",
-    "multimodal_channel_stats",
-    "events_rolling_features",
-]
-
-
-# Queries added AFTER the round-4 window filled (50 slots = 19
-# backlog + 31 new): first in line for the round-5 window, exactly
-# like _R4_BACKLOG was for round 4. All pass
-# tools/check_correctness.py locally at sf0.01 AND sf0.001.
-_R5_BACKLOG: list[str] = [
-    "c4_line_filter",
-    "pii_by_source",
-    "minhash_signatures",
-    "graph_conductance",
-    "orders_revenue_mom",
-    "simhash_near_pairs",
-    "embedding_pca_top",
-    "tfidf_doc_topk",
-    "embedding_project_out",
-    "events_session_paths",
-    "containment_pairs",
-    "vocab_growth",
-    "graph_node2vec_walks",
-    "multimodal_dhash_near_pairs",
-    "events_active_users",
-    "parts_abc_classes",
-    "embedding_norm_outliers",
-    "dedup_method_report",
-    "orders_open_per_day",
-    "text_readability",
-    "minhash_est_accuracy",
-    "simhash_bit_balance",
-    "graph_centralization",
-    "graph_layer_matrix",
-    "boilerplate_lines_topk",
-    "embedding_exact_dup",
-    "docs_ngram_novelty",
-    "multimodal_ulaw_decode",
-    "multimodal_alaw_decode",
-    "multimodal_adpcm_decode",
-    "multimodal_video_frames",
-    "multimodal_mjpeg_frames",
-    "multimodal_jpeg420_decode",
-    "multimodal_jpeg_progressive_decode",
-    "semantic_dedup",
-    "gopher_rules",
-    "graph_salsa",
-    "audio_window_rms",
-    "video_scene_cuts",
-    "graph_edge_embeddedness",
-    "multimodal_flac_decode",
-    "multimodal_msvc_frames",
-    "graph_scc_condensation",
-    "embedding_kmeans_report",
-    "bpe_train_merges",
-    "bpe_encode_ids",
-    "warc_ingest",
-    "multimodal_gif_frames",
-    "graph_mis",
-    "orders_custkey_cms",
-    "parts_skyline",
-    "graph_coloring",
-    "dedup_ppjoin",
-    "graph_msf",
-    "orders_fd_profile",
-    "fk_inclusion_profile",
-    "graph_label_spread",
-    "lineitem_benford",
-    "orders_price_mad",
-    "graph_spectral_bisection",
-    "compressed_text_ingest",
-    "multimodal_tiff_decode",
-    "orders_cdc_apply",
-    "docs_lang_auc",
-    "docs_split_finding",
-    "sorted_neighborhood_pairs",
-    "basket_triples",
-    "graph_percolation",
-    "ann_lsh_multiprobe",
-    "multimodal_bmp_decode",
-    "graph_trussness",
-    "docs_lang_confusion",
-    "events_cohort_ltv",
-    "graph_attr_assortativity",
-]
-
-
-# Queries new in round 5: behind _R5_BACKLOG in the rotation (the
-# round-5 driver window is exactly the 50 never-recorded round-4
-# keys; these queue after the R5 backlog for the following windows).
-# All pass tools/check_correctness.py locally at sf0.01 AND sf0.001.
-_R6_BACKLOG: list[str] = [
-    "ann_recall_report",
-    "embedding_matryoshka_eval",
-    "dup_span_stats",
-    "nb_lang_confusion",
-    "graph_wl_colors",
-    "graph_square_count",
-    "events_attribution",
-    "lineitem_monthly_trend",
-    "multimodal_mdct_decode",
-    "graph_hyperanf",
-    "graph_clique4",
-    "multimodal_mc_video_decode",
-    "bootstrap_doc_length",
-    "length_psi_by_source",
-    "graph_onion_layers",
-    "dedup_keep_policy",
-    "bpe_fertility_by_source",
-    "orders_status_year_pivot",
-    "entity_clusters",
-    "multimodal_augment",
-    "graph_link_training_set",
-    "embedding_hard_negatives",
-    "docs_rag_chunks",
-    "events_user_features",
-    "embedding_triplet_set",
-    "docs_tree_depth2",
-    "graph_simrank",
-    "events_markov_stationary",
-    "lineitem_wilson_returns",
-    "vocab_kl_by_source",
-    "dedup_recall_report",
-    "multimodal_audio_augment",
-]
-
-
-# Round-6 driver window (the driver records the FIRST 50 keys): the
-# three r05 gate reds go first so their fixes get re-recorded green
-# (bloom_pruned_revenue DECIMAL accumulation; adjacency/tokenize gate
-# surfaces now emit hashable strings), then 47 keys that have never
-# held a driver window slot (r05 cumulative: 199 recorded of 305).
-# _R7_QUEUE holds the remaining 59 never-recorded keys, queued for
-# the round-7 window; keys NEW in round 6 append behind them.
-_R6_WINDOW: list[str] = [
-    "bloom_pruned_revenue",
-    "graph_adjacency_export",
-    "tokenize_to_ids",
-    "c4_line_filter",
-    "pii_by_source",
-    "minhash_signatures",
-    "graph_conductance",
-    "orders_revenue_mom",
-    "simhash_near_pairs",
-    "embedding_pca_top",
-    "tfidf_doc_topk",
-    "embedding_project_out",
-    "events_session_paths",
-    "containment_pairs",
-    "vocab_growth",
-    "graph_node2vec_walks",
-    "multimodal_dhash_near_pairs",
-    "events_active_users",
-    "parts_abc_classes",
-    "embedding_norm_outliers",
-    "dedup_method_report",
-    "orders_open_per_day",
-    "text_readability",
-    "minhash_est_accuracy",
-    "simhash_bit_balance",
-    "graph_centralization",
-    "graph_layer_matrix",
-    "boilerplate_lines_topk",
-    "embedding_exact_dup",
-    "docs_ngram_novelty",
-    "multimodal_ulaw_decode",
-    "multimodal_alaw_decode",
-    "multimodal_adpcm_decode",
-    "multimodal_video_frames",
-    "multimodal_mjpeg_frames",
-    "multimodal_jpeg420_decode",
-    "multimodal_jpeg_progressive_decode",
-    "semantic_dedup",
-    "gopher_rules",
-    "graph_salsa",
-    "audio_window_rms",
-    "video_scene_cuts",
-    "graph_edge_embeddedness",
-    "multimodal_flac_decode",
-    "multimodal_msvc_frames",
-    "graph_scc_condensation",
-    "embedding_kmeans_report",
-    "bpe_train_merges",
-    "bpe_encode_ids",
-    "warc_ingest",
-]
-
-
-# Round-7 driver window (the driver records the FIRST 50 keys):
-# the r06 red leads (bloom_pruned_revenue — DOUBLE gate surface fix
-# needs a green re-record), then multimodal_decode (rows-only ERR
-# no_oracle in r01; it has a real oracle now, so the slot upgrades
-# it to hash-gated evidence), then the never-recorded backlog in
-# _R7_QUEUE order. The 11-key _R7_QUEUE tail plus all of _R6_NEW
-# (38 keys) queue for round 8 in _R8_QUEUE below.
-_R7_WINDOW_HEAD: list[str] = [
-    "bloom_pruned_revenue",
-    "multimodal_decode",
-]
-
-
-_R7_QUEUE: list[str] = [
-    "multimodal_gif_frames",
-    "graph_mis",
-    "orders_custkey_cms",
-    "parts_skyline",
-    "graph_coloring",
-    "dedup_ppjoin",
-    "graph_msf",
-    "orders_fd_profile",
-    "fk_inclusion_profile",
-    "graph_label_spread",
-    "lineitem_benford",
-    "orders_price_mad",
-    "graph_spectral_bisection",
-    "compressed_text_ingest",
-    "multimodal_tiff_decode",
-    "orders_cdc_apply",
-    "docs_lang_auc",
-    "docs_split_finding",
-    "sorted_neighborhood_pairs",
-    "basket_triples",
-    "graph_percolation",
-    "ann_lsh_multiprobe",
-    "multimodal_bmp_decode",
-    "graph_trussness",
-    "docs_lang_confusion",
-    "events_cohort_ltv",
-    "graph_attr_assortativity",
-    "ann_recall_report",
-    "embedding_matryoshka_eval",
-    "dup_span_stats",
-    "nb_lang_confusion",
-    "graph_wl_colors",
-    "graph_square_count",
-    "events_attribution",
-    "lineitem_monthly_trend",
-    "multimodal_mdct_decode",
-    "graph_hyperanf",
-    "graph_clique4",
-    "multimodal_mc_video_decode",
-    "bootstrap_doc_length",
-    "length_psi_by_source",
-    "graph_onion_layers",
-    "dedup_keep_policy",
-    "bpe_fertility_by_source",
-    "orders_status_year_pivot",
-    "entity_clusters",
-    "multimodal_augment",
-    "graph_link_training_set",
-    "embedding_hard_negatives",
-    "docs_rag_chunks",
-    "events_user_features",
-    "embedding_triplet_set",
-    "docs_tree_depth2",
-    "graph_simrank",
-    "events_markov_stationary",
-    "lineitem_wilson_returns",
-    "vocab_kl_by_source",
-    "dedup_recall_report",
-    "multimodal_audio_augment",
-]
-
-
-# Queries new in round 6: behind the never-recorded backlog (they
-# pass tools/check_correctness.py locally; driver slots go to the
-# evidence debt first).
-_R6_NEW: list[str] = [
-    "embedding_hard_negatives_ivf",
-    "embedding_triplet_set_ivf",
-    "trigram_logprob",
-    "ccnet_perplexity_bands",
-    "dsir_select",
-    "embedding_int8_recall",
-    "graph_louvain_move",
-    "lineitem_hilbert_key",
-    "customers_all_quarters",
-    "events_funnel_windowed",
-    "graph_knn_profile",
-    "embedding_drift_report",
-    "docs_rake_keywords",
-    "events_stl_decompose",
-    "events_debounce",
-    "customer_spend_percentile",
-    "embedding_cluster_sample",
-    "lineitem_layout_skipping",
-    "events_attribution_ushape",
-    "brand_supplier_hhi",
-    "orders_integrity_audit",
-    "ann_nprobe_curve",
-    "graph_bowtie",
-    "events_user_lorenz",
-    "graph_path_counts",
-    "brand_dual_sourcing",
-    "embedding_knn_outliers",
-]
-
-
-# Round-7 window: 2-key head + the first 48 never-recorded backlog
-# keys. Round-8 queue: the _R7_QUEUE tail + every _R6_NEW key (still
-# never recorded). _R7_NEW collects keys added in round 7, behind
-# the evidence debt as always.
-_R7_WINDOW: list[str] = _R7_WINDOW_HEAD + _R7_QUEUE[:48]
-_R8_QUEUE: list[str] = _R7_QUEUE[48:] + _R6_NEW
-_R7_NEW: list[str] = [
-    "embedding_sign_hash_recall",
-    "docs_quality_calibration",
-    "corpus_selection_curve",
-    "cluster_topic_terms",
-    "events_ab_test",
-    "embedding_pq_distortion",
-    "dedup_threshold_sweep",
-    "audio_speech_segments",
-    "returnflag_year_chi2",
-    "multimodal_patch_stats",
-    "orders_ship_latency",
-    "docs_textrank_keywords",
-    "nation_trade_balance",
-    "interpolated_logprob",
-    "embedding_centroid_separation",
-    "orders_reorder_interval",
-    "graph_degree_gini",
-    "embedding_ivf_cell_balance",
-    "multimodal_intensity_histogram",
-    "docs_hapax_ratio",
-    "corpus_growth_dedup_curve",
-    "events_weekly_growth",
-]
-
-
-# Round-8 window (VERDICT r7 next-round item 1): all 60 never-
-# driver-recorded keys lead — _R8_QUEUE (the 38-key r7 overflow) then
-# _R7_NEW (22 round-7 additions). The driver records the first 50, so
-# the window burns the evidence debt to a 10-key tail (_R9_QUEUE =
-# _R7_NEW[12:]), which leads round 9. _R8_NEW collects keys added in
-# round 8, behind the debt as always.
-_R8_WINDOW: list[str] = (_R8_QUEUE + _R7_NEW)[:50]
-_R9_QUEUE: list[str] = (_R8_QUEUE + _R7_NEW)[50:]
-_R8_NEW: list[str] = [
-    "lineitem_ks_test",
-    "orders_priority_drift",
-    "brand_type_lift",
-    "discount_qty_elasticity",
-    "events_autocorr",
-    "events_cusum_drift",
-    "events_user_type_entropy",
-    "events_seasonal_naive_eval",
-    "docs_term_burstiness",
-    "docs_simpson_index",
-    "token_length_histogram",
-    "embedding_silhouette_by_label",
-    "embedding_fisher_ratio",
-    "docs_window_pmi",
-    "vocab_coverage_curve",
-    "graph_dyad_census",
-    "embedding_mmr_topk",
-    "source_jsd_matrix",
-    "events_stage_latency",
-    "events_poisson_dispersion",
-    "customer_reorder_survival",
-    "events_dow_anova",
-    "multimodal_image_entropy",
-    "rfm_segment_migration",
-    "docs_span_corruption_plan",
-    "orders_gap_burstiness",
-    "lineitem_qty_price_mi",
-    "events_transition_entropy",
-    "embedding_knn_margin",
-]
-
-
-# Round-9 window (VERDICT r8 next-round item 1): the 39 never-
-# driver-recorded keys lead — the 10-key _R9_QUEUE tail of round 8's
-# overflow, then the 29 _R8_NEW round-8 additions (all judge-verified
-# green in r8 on the identical harness; driver evidence still owed).
-# That leaves 11 of the driver's 50 slots for _R9_NEW, keys added in
-# round 9 — so this round can record EVERY key that has never held a
-# slot, closing the evidence debt to zero.
-_R9_WINDOW: list[str] = _R9_QUEUE + _R8_NEW
-_R9_NEW: list[str] = [
-    "multimodal_gif_interlaced",
-    "multimodal_tiff_bigendian",
-    "lineitem_theil_index",
-    "orders_fulfillment_curve",
-    "events_burst_periods",
-    "source_burrows_delta",
-    "dedup_bbit_minhash",
-    "multimodal_png_interlaced",
-]
-
-
-# Round-10 window (VERDICT r9 next-round item 1): the evidence debt is
-# zero — every key has a green driver row — so the second sweep cycle
-# starts: bit-rot re-verification of the keys whose ONLY green record is
-# r01 (8 rounds of refactors ago). All 48 r01-only keys lead, then the 2
-# oldest r02-only keys (asof_join, basket_pairs), filling the driver's
-# 50 slots exactly. Computed from the union of CORRECTNESS_r01-r09.
-# _R10_NEW collects keys added in round 10, behind the sweep as always.
-_R10_WINDOW: list[str] = [
-    # 48 keys whose only driver-green row is CORRECTNESS_r01
-    "ann_ivf_topk",
-    "ann_lsh_bucketed",
-    "ann_topk_cosine",
-    "binary_meta",
-    "bipartite_view",
-    "components_strong",
-    "components_weak",
-    "components_weak_star",
-    "compose_filters",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "degrees",
-    "doc_fingerprint",
-    "doc_length_quantiles",
-    "encode_decode_roundtrip",
-    "encode_layer_dict",
-    "export_edges",
-    "filter_by_property",
-    "filter_edges_prune",
-    "graph_build_edges",
-    "graph_build_nodes",
-    "graph_incremental",
-    "khop_bi",
-    "khop_downstream",
-    "khop_upstream",
-    "lang_id",
-    "layout_by_layer",
-    "merge_props",
-    "node_labels",
-    "node_properties_lookup",
-    "on_shortest_path",
-    "on_shortest_weighted",
-    "pagerank",
-    "quality_filter",
-    "quality_score",
-    "reachability",
-    "sql_surface",
-    "sssp_hops",
-    "sssp_weighted",
-    "style_columns",
-    "text_stats",
-    "token_count_bpe",
-    "triangle_count",
-    "view_layers",
-    # 2 oldest r02-only keys start the r02 re-sweep
-    "asof_join",
-    "basket_pairs",
-]
-# r11 rotation pre-computation (for the next session): after r10's
-# window re-records the 48 r01-only keys + asof_join/basket_pairs,
-# the stalest remaining evidence is the 47 other r02-only keys
-# (cube_revenue, the events_* batch gates, fuzzy_name_pairs,
-# lineitem_correlations, price_histogram, revenue_gini/lorenz,
-# rfm_segments, rollup/topk heads, and tpch_q2..q22) followed by 50
-# r03-only keys — build _R11_WINDOW from those 47 + the 3 oldest
-# r03-only, pending CORRECTNESS_r10 confirming the r10 window went
-# green.
-_R10_NEW: list[str] = [
-    "lineitem_trimmed_mean",
-    "events_runs_test",
-    "events_mann_kendall",
-    "events_ljung_box",
-    "docs_yules_k",
-    "embedding_lid",
-    "graph_centrality_spearman",
-    "lineitem_grubbs",
-    "multimodal_qoi_roundtrip",
-    "graph_voterank",
-    "embedding_energy_distance",
-    "docs_heaps_exponent",
-    "graph_path_length_stats",
-    "embedding_participation_ratio",
-    "lm_heldout_perplexity",
-    "events_kpss_test",
-    "basket_rules",
-]
-
-# Round-11 driver window (VERDICT r10 item 2): the 17 _R10_NEW keys
-# have no driver-recorded correctness row (their r10 window slots were
-# spent re-recording the 48 r01-only keys), so they go FIRST — closing
-# union coverage to 408/408 — followed by 33 of the 47 keys whose ONLY
-# green row is CORRECTNESS_r02 (the stalest remaining evidence; the
-# 14 leftover keys are tpch heads, and q3/q5/q6 among them are
-# exercised by the headline bench every round).
-_R11_WINDOW: list[str] = _R10_NEW + [
-    "cube_revenue",
-    "events_anomaly",
-    "events_changepoints",
-    "events_daily_users",
-    "events_daily_users_approx",
-    "events_dow_profile",
-    "events_ema",
-    "events_funnel",
-    "events_gapfill",
-    "events_json_agg",
-    "events_range_count",
-    "events_retention",
-    "events_rollup",
-    "events_scd2",
-    "events_sessions",
-    "events_sliding",
-    "events_transitions",
-    "events_tumbling",
-    "fuzzy_name_pairs",
-    "lineitem_correlations",
-    "price_histogram",
-    "revenue_gini",
-    "revenue_lorenz",
-    "rfm_segments",
-    "rollup_revenue",
-    "topk_per_group",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-]
-
-
 def load_all() -> dict[str, tuple[QueryFn, str | None]]:
+    """Every registered query, after importing the modules that
+    register them."""
     from onionnet_spark.queries import (  # noqa: F401
         relational,
         streaming_queries,
@@ -698,20 +55,4 @@ def load_all() -> dict[str, tuple[QueryFn, str | None]]:
         graph_queries,
     )
 
-    ordered: dict[str, tuple[QueryFn, str | None]] = {}
-    for name in (
-        _R11_WINDOW
-        + _R10_WINDOW
-        + _R10_NEW
-        + _R9_WINDOW
-        + _R9_NEW
-        + _R8_WINDOW
-        + _R7_WINDOW
-        + _R6_WINDOW
-    ):
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, entry in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = entry
-    return ordered
+    return REGISTRY

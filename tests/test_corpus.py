@@ -136,32 +136,6 @@ def test_multi_source_bfs_matches_single_source(spark, tpch_graph):
         assert part == single
 
 
-def test_documents_jsonl_roundtrip(spark, tmp_path):
-    from onionnet_spark.sources import docs_io
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = str(tmp_path / "docs_jsonl")
-    docs_io.write_documents_jsonl(docs, p)
-    back = docs_io.read_documents_jsonl(spark, p)
-    assert back.schema == docs_io.DOC_SCHEMA
-    a = {tuple(r) for r in docs.select("doc_id", "text", "lang", "source", "n_chars").collect()}
-    b = {tuple(r) for r in back.select("doc_id", "text", "lang", "source", "n_chars").collect()}
-    assert a == b
-
-
-def test_documents_parquet_source_partition_pruning(spark, tmp_path):
-    from onionnet_spark.sources import docs_io
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = str(tmp_path / "docs_parquet")
-    docs_io.write_documents_parquet(docs, p)
-    back = docs_io.read_documents_parquet(spark, p)
-    one = back.filter(F.col("source") == "src0")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(source" in plan, plan[:800]
-    assert one.count() == docs.filter(F.col("source") == "src0").count()
-
-
 def test_annotate_nodes_pipeline(spark):
     from onionnet_spark.core import NODE_KEY
     from onionnet_spark.operators.analytics import degrees

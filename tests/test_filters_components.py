@@ -1,5 +1,11 @@
 """View/filter/component operators on tiny known graphs."""
 
+import glob
+import os
+import subprocess
+import sys
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -348,6 +354,81 @@ def test_connected_components_deep_path_across_parquet_rebase(spark, monkeypatch
     assert rebases
     assert len(got) == 60
     assert {r["component"] for r in got} == {"Q:0"}
+
+
+_CKPT_OWNER_SCRIPT = """
+import glob, tempfile
+from onionnet_spark.core import OnionGraph
+from onionnet_spark.memo import session_memo
+from onionnet_spark.operators import components
+from onionnet_spark.operators.ckpt import IterCheckpointer
+from onionnet_spark.session import get_spark
+
+
+class RebaseEveryOther(IterCheckpointer):
+    def __init__(self, **kw):
+        super().__init__(rebase_every=2, **kw)
+
+
+components.IterCheckpointer = RebaseEveryOther
+
+
+def star_dirs():
+    tmp = tempfile.gettempdir()
+    return set(glob.glob(f"{tmp}/onionnet_star_*")
+               + glob.glob(f"{tmp}/onionnet_ckpt_*/onionnet_star_*"))
+
+
+def deep_path_cc(spark):
+    ids = [str(i) for i in range(40)]
+    nodes = spark.createDataFrame([("Q", x) for x in ids],
+                                  "layer string, node_id string")
+    edges = spark.createDataFrame(
+        [("Q", u, "Q", v) for u, v in zip(ids, ids[1:])],
+        "src_layer string, src_id string, dst_layer string, dst_id string")
+    got = components.connected_components(OnionGraph(nodes, edges)).collect()
+    assert {r["component"] for r in got} == {"Q:0"} and len(got) == 40
+
+
+before = star_dirs()
+spark = get_spark("ckpt-owner")
+deep_path_cc(spark)
+assert star_dirs() - before, "no rebase directory was written"
+spark.stop()
+spark = get_spark("ckpt-owner-next")
+session_memo(spark)  # the new context releases the stopped one's memo
+assert not star_dirs() - before, "the released session left its directory"
+deep_path_cc(spark)  # this one is left for interpreter exit to remove
+print("ckpt-owner-ok")
+"""
+
+
+def test_rebase_directories_are_removed_by_their_owner(tmp_path):
+    """A deep-path CC that crosses parquet rebases writes its rebase
+    directory under the session's checkpoint root; releasing the
+    session memo removes it, and so does interpreter exit. Runs in a
+    subprocess so the suite's session survives."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def star_dirs():
+        tmp = tempfile.gettempdir()
+        return set(glob.glob(f"{tmp}/onionnet_star_*")
+                   + glob.glob(f"{tmp}/onionnet_ckpt_*/onionnet_star_*"))
+
+    before = star_dirs()
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+        ONIONNET_SHUFFLE_PARTITIONS="4",
+        ONIONNET_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _CKPT_OWNER_SCRIPT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ckpt-owner-ok" in out.stdout
+    assert not star_dirs() - before, "interpreter exit left a rebase directory"
 
 
 def test_lpa_communities_stay_within_components(spark):

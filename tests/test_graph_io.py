@@ -99,29 +99,3 @@ def test_bucketed_graph_shuffle_free_expansion(spark, tpch_graph):
     finally:
         scrub("tg_bucketed_nodes")
         scrub("tg_bucketed_edges")
-
-
-def test_timeseries_write_prunes_partitions(spark, sf_dir, tmp_path):
-    from onionnet_spark.sources.timeseries_io import (
-        read_timeseries,
-        write_timeseries,
-    )
-    from onionnet_spark.sources.tpch_graph import load_tables
-
-    ev = load_tables(spark, sf_dir)["events"]
-    p = str(tmp_path / "ts_store")
-    write_timeseries(ev, p)
-    bounded = read_timeseries(spark, p, "2024-01-03", "2024-01-05")
-    # the range must land in PartitionFilters (directory pruning),
-    # not as a post-scan data filter
-    plan = bounded._jdf.queryExecution().executedPlan().toString()
-    flat = plan.replace("\n", " ")
-    assert "PartitionFilters: [" in flat
-    pf = flat.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "event_date" in pf
-    want = ev.filter(
-        (F.to_date("ts") >= "2024-01-03") & (F.to_date("ts") < "2024-01-05")
-    ).count()
-    assert bounded.count() == want
-    # full read round-trips every row
-    assert read_timeseries(spark, p).count() == ev.count()

@@ -112,6 +112,68 @@ def test_graph_views_are_built_once_and_released(spark):
     assert not _is_cached(df) and len(memo) == 0
 
 
+def test_a_shared_view_is_released_by_its_last_holder(spark):
+    """Two graphs over the same frames persist identical view plans,
+    which Spark's CacheManager keeps as one cached relation: releasing
+    the first graph must not uncache the second graph's view."""
+    from onionnet_spark.core import OnionGraph
+
+    nodes = spark.createDataFrame(
+        [("S", x) for x in "abc"], "layer string, node_id string"
+    )
+    edges = spark.createDataFrame(
+        [("S", "a", "S", "b"), ("S", "b", "S", "c")],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    g1, g2 = OnionGraph(nodes, edges), OnionGraph(nodes, edges)
+    assert g1.cached_symmetrized().count() == g2.cached_symmetrized().count() == 4
+    view = g2.cached_symmetrized()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached():
+        return cache.lookupCachedData(view._jdf).isDefined()
+
+    g1.unpersist()
+    assert cached(), "releasing g1 uncached g2's view"
+    g2.unpersist()
+    assert not cached()
+
+
+def test_shared_relation_holds_survive_concurrent_release(spark):
+    """12 memos take and release holds on one cached relation from
+    threads under a tiny switch interval: a lost update in the hold
+    count would uncache it while held, or never."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def view():  # a new frame with the same plan on every call
+        return spark.range(7).selectExpr("id * 3 AS x")
+
+    def cached():
+        return cache.lookupCachedData(view()._jdf).isDefined()
+
+    memos = [Memo() for _ in range(12)]
+
+    def run(work):
+        threads = [threading.Thread(target=work, args=(m,)) for m in memos[:-1]]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        run(lambda m: m.get("v", lambda: view().persist()))
+        memos[-1].get("v", lambda: view().persist())
+        run(lambda m: m.release())
+    finally:
+        sys.setswitchinterval(old)
+    assert cached(), "released while the last memo still holds it"
+    memos[-1].release()
+    assert not cached()
+
+
 _NEW_SESSION_SCRIPT = """
 import sys
 from onionnet_spark import memo

@@ -1,19 +1,29 @@
-"""Registry invariants: duplicate-key guard, driver-window rotation,
-and that every library module is reachable from what the system runs.
+"""Registry invariants: duplicate-key guard, the evidence order, and
+that every library module is reachable from what the system runs.
 
-The driver records correctness for only the first 50 registered
-queries per round, so load_all()'s ordering IS the evidence plan;
-and round 2 shipped a silently-overwritten duplicate registration
+The driver records correctness for only the first 50 keys of
+`__spark_entry__.queries()` per round, so their order IS the evidence
+plan. It is computed, not kept by hand: `evidence_order` reads the
+committed CORRECTNESS_r<round>.json records and puts keys with no
+green row first, then keys by the round of their newest green row,
+oldest first, ties by name, and rows-only keys last. The tests here
+pin those rules as properties of the order and on synthetic records.
+Round 2 shipped a silently-overwritten duplicate registration
 (graph_pagerank_weighted), which the guard now makes impossible.
 """
 
 import ast
+import glob
 import json
 import os
+import re
 
 import pytest
 
+import __spark_entry__ as entry
 from onionnet_spark import queries as q
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_duplicate_registration_raises():
@@ -33,36 +43,17 @@ def test_oracle_attachment_to_same_fn_allowed():
     assert reg["k"][1] == "SELECT 1"
 
 
-def test_load_all_is_registry_superset_and_ordered():
-    reg = q.load_all()
-    assert set(reg) == set(q.REGISTRY)
-    # round-11 priority: the 17 _R10_NEW keys (the only registry keys
-    # with no driver-recorded green row) lead, then 33 of the stalest
-    # r02-only keys, then the recorded rotation history
-    present_priority = []
-    for k in (
-        q._R11_WINDOW + q._R10_WINDOW + q._R10_NEW + q._R9_WINDOW
-        + q._R9_NEW + q._R8_WINDOW + q._R7_WINDOW + q._R6_WINDOW
-    ):
-        if k in reg and k not in present_priority:
-            present_priority.append(k)
-    assert list(reg)[: len(present_priority)] == present_priority
-
-
-def test_r10_window_resweeps_stalest_evidence():
-    """Evidence-plan invariants (VERDICT r9 next-round item 1): the
-    first sweep cycle is complete — the union of driver records
-    r01-r09 must cover the WHOLE registry green — so the round-10
-    window starts the bit-rot re-sweep: its 50 slots are exactly the
-    keys whose only green row is r01 (8 rounds of refactors old),
-    plus the 2 oldest r02-only keys, in registration order first."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def _driver_records():
+    """(key -> rounds with a green driver row, keys with a red row)
+    over every committed CORRECTNESS_r<round>.json, parsed here rather
+    than through the ordering under test."""
     green_rounds: dict[str, set[int]] = {}
     red = set()
-    for rnd in (1, 2, 3, 5, 6, 7, 8, 9, 10):
-        path = os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json")
-        if not os.path.exists(path):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
             continue
+        rnd = int(m.group(1))
         for k, v in json.load(open(path)).items():
             if not isinstance(v, dict):
                 continue
@@ -79,25 +70,73 @@ def test_r10_window_resweeps_stalest_evidence():
                 green_rounds.setdefault(k, set()).add(rnd)
             else:
                 red.add(k)
-    red -= set(green_rounds)
-    red &= set(q.REGISTRY)  # drop keys retired from the registry
-    assert not red, f"keys with a red driver record left unfixed: {red}"
+    return green_rounds, red
+
+
+def test_driver_records_have_no_red_key_and_no_evidence_debt():
     reg = q.load_all()
-    # zero evidence debt: every key ever registered has a green row
-    # (keys added THIS round are allowed to be pending, queued in
-    # _R10_NEW behind the sweep)
-    unrecorded = [
-        k for k in reg if k not in green_rounds and k not in q._R10_NEW
-    ]
+    green_rounds, red = _driver_records()
+    red -= set(green_rounds)
+    red &= set(reg)  # drop keys retired from the registry
+    assert not red, f"keys with a red driver record left unfixed: {red}"
+    unrecorded = [k for k in reg if k not in green_rounds]
     assert not unrecorded, f"keys with no driver record: {unrecorded}"
-    # the r11 window closes the last coverage gap first (the 17
-    # _R10_NEW keys are the only ones with no driver green row), then
-    # re-records the stalest remaining evidence (r02-only keys)
-    r02_only = {k for k, rs in green_rounds.items() if rs == {2}}
-    window = q._R11_WINDOW
-    assert list(reg)[: len(window)] == window
-    assert window[:17] == q._R10_NEW
-    assert set(window[17:]) <= r02_only and len(window) == 50
+
+
+def test_evidence_order_leads_with_the_stalest_evidence():
+    """The driver verifies the first 50 keys of `queries()` each
+    round: they must be the keys whose newest green record is oldest,
+    and never a rows-only key (a rows-only row proves nothing)."""
+    reg = q.load_all()
+    order = list(entry.queries())
+    assert sorted(order) == sorted(reg) and len(order) == len(reg)
+    assert order == list(entry.queries()) == entry.evidence_order(reg)
+    assert list(entry.oracle_sql()) == [k for k in order if reg[k][1] is not None]
+    green_rounds, _ = _driver_records()
+    newest = {k: max(green_rounds.get(k, {0})) for k in reg}
+    rows_only = {k for k in reg if reg[k][1] is None}
+    head, rest = order[:50], [k for k in order[50:] if k not in rows_only]
+    assert not rows_only & set(head)
+    assert max(newest[k] for k in head) <= min(newest[k] for k in rest)
+    assert set(order[-len(rows_only):]) == rows_only
+
+
+def test_evidence_order_rules_on_synthetic_records(tmp_path):
+    def fn(spark, sf):
+        return None
+
+    sql = "SELECT 1"
+    reg = {
+        k: (fn, None if k.startswith("rows_only") else sql)
+        for k in ("rows_only", "new", "old_b", "old_a", "red_only",
+                  "never", "rows_only_unrun", "err_hash", "sql_no_oracle")
+    }
+    green = {"hash_match": True, "spark_rows": 3, "err": None}
+    red = {"hash_match": False, "spark_rows": 3, "err": None}
+    no_oracle = {"hash_match": None, "spark_rows": 3, "err": "no_oracle"}
+    records = {
+        "CORRECTNESS_r03.json": {
+            "old_a": green, "old_b": green, "new": green, "red_only": red,
+            "err_hash": dict(green, err="timeout"), "rows_only": no_oracle,
+            "sql_no_oracle": no_oracle, "retired": green,
+        },
+        "CORRECTNESS_r12.json": {"new": green, "old_b": red},
+        # not a round record: ignored
+        "CORRECTNESS_r12_partial.json": {"old_a": green},
+    }
+    for name, rows in records.items():
+        (tmp_path / name).write_text(json.dumps(rows))
+    assert entry.evidence_order(reg, str(tmp_path)) == [
+        # 1. no green row (a red row, an errored hash match and a
+        # no_oracle row for a key that has an oracle are not green);
+        # 3. ties by name
+        "err_hash", "never", "red_only", "sql_no_oracle",
+        # 2. by the round of the newest green row, oldest first (a
+        # later red row does not make old_b's evidence newer)
+        "old_a", "old_b", "new",
+        # 4. rows-only keys last, under the same rules among themselves
+        "rows_only_unrun", "rows_only",
+    ]
 
 
 def test_survey_inventory_matches_registry():
@@ -105,10 +144,7 @@ def test_survey_inventory_matches_registry():
     key must appear there as a backticked token, and row numbers
     must be unique (VERDICT r7 item 8 — the inventory is the audit
     trail, keep it clean)."""
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    txt = open(os.path.join(root, "SURVEY.md")).read()
+    txt = open(os.path.join(ROOT, "SURVEY.md")).read()
     s2 = txt[txt.index("## §2") : txt.index("## §3")]
     ticks = set(re.findall(r"`([a-z0-9_]+)`", s2))
     q.load_all()
@@ -143,16 +179,12 @@ def test_every_oracle_parses_and_binds_in_duckdb():
     assert not bad, bad
 
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 # modules (relative to the package) that nothing the system runs
 # imports, each kept for a stated reason; a module that becomes
 # reachable must leave this map
 UNREACHED_ALLOWED = {
     "sources/graph_io.py": "reference surface: read_graph, write_graph "
     "and graph_from_csv (it also reaches sources/bucketed.py)",
-    "sources/docs_io.py": "IO layout left for its own audit",
-    "sources/timeseries_io.py": "IO layout left for its own audit",
 }
 
 

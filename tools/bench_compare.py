@@ -1,9 +1,14 @@
 """Diff two bench JSON files: per-query deltas, sorted by change.
 
-Usage: python tools/bench_compare.py BENCH_r02.json BENCH_r03.json
-Accepts either the driver's wrapper format ({"tail": ..., nested
-JSON line}), bench.py's raw one-line JSON, or the full artifact
-bench.py writes per run (BENCH_FULL_c<cpus>_<UTC start>.json).
+Usage: python tools/bench_compare.py [--force] OLD.json NEW.json
+Accepts either the driver's wrapper format ({"cpus": ..., "parsed":
+or "tail": nested JSON line}), bench.py's raw one-line JSON, or the
+full artifact bench.py writes per run
+(BENCH_FULL_c<cpus>_<UTC start>.json).
+
+Refuses, unless --force is given, to compare a run stamped ambient
+(load-polluted) or two runs taken with different `cpus` values: a
+ratio across core counts measures the box, not the change.
 """
 
 from __future__ import annotations
@@ -17,16 +22,18 @@ def load(path: str) -> dict:
         d = json.load(f)
     if "queries" in d:
         return d
-    # driver wrapper: the bench line is embedded in "tail"
+    # driver wrapper: the bench line is in "parsed", or embedded in
+    # "tail" (whose head may be cut); the wrapper stamps the cpus
+    candidates = [d.get("parsed")]
     for line in d.get("tail", "").splitlines():
-        line = line.strip()
-        if line.startswith("{"):
+        if line.strip().startswith("{"):
             try:
-                inner = json.loads(line)
-                if "queries" in inner:
-                    return inner
+                candidates.append(json.loads(line))
             except json.JSONDecodeError:
                 continue
+    for inner in candidates:
+        if isinstance(inner, dict) and "queries" in inner:
+            return {**inner, "cpus": inner.get("cpus", d.get("cpus"))}
     raise SystemExit(f"{path}: no bench queries found")
 
 
@@ -46,6 +53,12 @@ def main() -> None:
                 "ratio-compare a load-polluted run; pass --force to "
                 "override"
             )
+    if str(a.get("cpus")) != str(b.get("cpus")) and not force:
+        raise SystemExit(
+            f"cpus differ ({a.get('cpus')} vs {b.get('cpus')}) — refusing "
+            "to ratio-compare runs on different core counts; pass "
+            "--force to override"
+        )
     qa, qb = a["queries"], b["queries"]
     rows = []
     for k in sorted(set(qa) | set(qb)):
