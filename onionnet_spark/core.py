@@ -33,6 +33,15 @@ from onionnet_spark.memo import Memo
 NODE_KEY = ["layer", "node_id"]
 EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
 
+# The one broadcast budget of the iterative operators: a node-keyed
+# frame (BFS frontier, labels, ranks, keep-sets) at or under this row
+# count is broadcast into the per-round join, so the cached edge side
+# is never exchanged or sorted inside the loop (the sort-merge
+# alternative re-sorts it every round). ~2M (layer, node_id, value)
+# rows stay well under the guide's "few hundred MB is fine" broadcast
+# ceiling. Above it the joins shuffle.
+BROADCAST_MAX = 2_000_000
+
 
 @lru_cache(maxsize=64)
 def _ddl_schema(ddl: str) -> StructType:

@@ -1,29 +1,77 @@
-"""Whole-graph analytics: degrees, PageRank, triangle count.
+"""Whole-graph analytics over the (layer, node_id)-keyed graph.
 
-The reference exposes graph-tool's analytics through its Graph
-handle (users call gt functions on `onion.g`); degree appears
-directly in prune-isolated logic (searcher.py:341) and
-visualisation sizing (visualisation.py:734-789). These are the
-GraphX-class analytics a Spark multilayer-graph engine must cover.
+The reference hands its analytics to graph-tool (users call gt
+functions on `onion.g`); degree appears directly in prune-isolated
+logic (searcher.py:341) and visualisation sizing
+(visualisation.py:734-789). Here each is a DataFrame program:
+degrees, centralities (PageRank, HITS, eigenvector, Katz, SALSA,
+betweenness, closeness, VoteRank), cores and trusses, triangles,
+squares and 4-cliques, matchings, independent sets, colorings, the
+minimum spanning forest, assortativity, modularity, sketches of the
+neighborhood function, similarity (Jaccard, SimRank) and more.
 
-All three are pure DataFrame programs:
-  - degrees: two groupBys + an outer join (one shuffle each).
-  - pagerank: N rounds of (join on src, groupBy dst) — the classic
-    Pregel step expressed relationally; contributions are
-    map-side-combined by Catalyst's partial aggregation.
-  - triangles: canonical-ordered edge list joined twice; Catalyst
-    plans the two equi-joins as shuffled hash joins, and AQE
-    handles the skew (hub vertices) by splitting oversized
-    partitions.
+The propagation family shares one message-passing step, `_push`: a
+Pregel superstep as one join and one group-by over the vertex and
+edge relations (the Pregelix shape). It joins node-keyed state onto
+one edge endpoint and aggregates at the other. Its users:
+  - `_rank_walk`, the one rank walk behind `pagerank` and
+    `personalized_pagerank` (they differ only in the teleport term);
+  - `hits`, `eigenvector_centrality` and `katz_centrality`;
+  - `count_paths_to` and `neighbor_agg`.
+The step cuts no lineage and picks no join strategy on its own: each
+caller keeps its cut and says when the state is broadcast (under
+core.BROADCAST_MAX, so the cached edge side is never exchanged).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import NODE_KEY, OnionGraph, literal_frame
-from onionnet_spark.operators.components import BCAST_STATE_MAX
+from onionnet_spark.core import (
+    BROADCAST_MAX,
+    EDGE_KEY,
+    NODE_KEY,
+    OnionGraph,
+    literal_frame,
+)
+from onionnet_spark.operators.traversal import _uniq
+
+
+def _keyed(state: DataFrame, end: str) -> DataFrame:
+    """`state` with its (layer, node_id) key renamed to the columns of
+    edge endpoint `end` ("src" or "dst")."""
+    return state.select(
+        F.col("layer").alias(f"{end}_layer"),
+        F.col("node_id").alias(f"{end}_id"),
+        *(c for c in state.columns if c not in NODE_KEY),
+    )
+
+
+def _push(
+    edges: DataFrame,
+    state: DataFrame | None,
+    frm: str,
+    to: str,
+    *aggs: Column,
+    bcast: bool = False,
+    how: str = "inner",
+) -> DataFrame:
+    """One message-passing step: join node-keyed `state` onto edge
+    endpoint `frm` (broadcast when `bcast`), group the joined edges by
+    endpoint `to`, renamed back to (layer, node_id), and aggregate them
+    with `aggs`. With `state` None the edges are aggregated as they
+    are."""
+    if state is not None:
+        s = _keyed(state, frm)
+        edges = edges.join(
+            F.broadcast(s) if bcast else s,
+            on=[f"{frm}_layer", f"{frm}_id"],
+            how=how,
+        )
+    return edges.groupBy(
+        F.col(f"{to}_layer").alias("layer"), F.col(f"{to}_id").alias("node_id")
+    ).agg(*aggs)
 
 
 def degrees(graph: OnionGraph) -> DataFrame:
@@ -51,109 +99,96 @@ def degrees(graph: OnionGraph) -> DataFrame:
     )
 
 
+def _rank_walk(
+    graph: OnionGraph,
+    n_iterations: int,
+    damping: float,
+    name: str,
+    weight_col: str | None = None,
+    seeds: list[tuple[str, str]] | None = None,
+) -> DataFrame:
+    """The one rank walk behind pagerank and personalized_pagerank:
+
+        r_0(v) = t(v)/m,
+        r_{i+1}(v) = (1-d) t(v)/m + d * sum_{u->v} r_i(u) w(u,v)/W(u)
+
+    with teleport weight t = 1 and m = N (pagerank), or t = [v in S]
+    and m = |S| for a seed set S (personalized). w = 1 and W(u) =
+    outdeg(u) unless `weight_col` names the edge weight, then W(u) is
+    its outgoing sum. Dangling mass is not redistributed. Returns
+    (layer, node_id, `name`) over the full node set.
+
+    Edges are annotated once with W(u), and with the seed flag for a
+    personalized walk, then cut. Each round carries only the per-node
+    contributions c (absent => 0) through one `_push` along the edges:
+    a source's rank is rebuilt inline as (1-d) t/m + d c, so no join
+    against the full node set runs inside the loop. While the node
+    count fits the broadcast budget the contributions are broadcast
+    and the cut edge table is scanned, never exchanged or sorted; past
+    it the edge table is pre-shuffled once on the join key, so only
+    the contributions move per round. localCheckpoint (not persist):
+    the blocks are query-scoped and go with this frame.
+    """
+    n_nodes = graph.cached_n_nodes()
+    small_state = n_nodes <= BROADCAST_MAX
+    if weight_col is None:
+        e = graph.edge_endpoints().withColumn("w", F.lit(1.0))
+    else:
+        e = graph.edges.select(*EDGE_KEY, F.col(weight_col).cast("double").alias("w"))
+    out_deg = _push(e, None, "src", "src", F.sum("w").alias("out_degree"))
+    e_deg = e.join(_keyed(out_deg, "src"), on=["src_layer", "src_id"])
+    nodes = graph.nodes.select(*NODE_KEY)
+    if seeds is None:
+        init, teleport = F.lit(1.0 / n_nodes), F.lit((1.0 - damping) / n_nodes)
+    else:
+        flags = F.broadcast(literal_frame(
+            graph.nodes.sparkSession,
+            [(l, i, 1) for (l, i) in seeds],
+            "layer string, node_id string, is_seed int",
+        ))
+        e_deg = e_deg.join(_keyed(flags, "src"), on=["src_layer", "src_id"], how="left")
+        nodes = nodes.join(flags, on=NODE_KEY, how="left")
+        flag = F.coalesce("is_seed", F.lit(0))
+        init = flag * F.lit(1.0 / len(seeds))
+        teleport = F.lit((1.0 - damping) / len(seeds)) * flag
+    if not small_state:
+        e_deg = e_deg.repartition("src_layer", "src_id")
+    e_deg = e_deg.localCheckpoint()
+    rank = teleport + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+    contribs = None
+    for _ in range(n_iterations):
+        r = init if contribs is None else rank
+        contribs = _push(
+            e_deg, contribs, "src", "dst",
+            F.sum(r * F.col("w") / F.col("out_degree")).alias("contrib"),
+            bcast=small_state, how="left",
+        ).localCheckpoint(eager=False)
+    return nodes.join(
+        F.broadcast(contribs) if small_state else contribs, on=NODE_KEY, how="left"
+    ).select(*NODE_KEY, rank.alias(name))
+
+
 def pagerank(
     graph: OnionGraph,
     n_iterations: int = 5,
     damping: float = 0.85,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """PageRank, fixed iteration count, uniform init 1/N.
+    """PageRank, fixed iteration count, uniform init 1/N: the rank
+    walk with a uniform teleport,
 
-    pr_{i+1}(v) = (1-d)/N + d * sum_{u->v} pr_i(u) * w(u,v) / W(u),
+        pr_{i+1}(v) = (1-d)/N + d * sum_{u->v} pr_i(u) * w(u,v) / W(u),
+
     where w = 1 and W(u) = outdeg(u) when `weight_col` is None, else
     w = the edge property and W(u) = its outgoing sum (graph-tool
     pagerank(weight=...) parity; weights are assumed non-negative).
     Dangling-node mass is NOT redistributed (simple variant); the
     DuckDB oracle unrolls the identical recurrence, so results match
-    exactly up to float rounding. The unweighted path is
-    bit-identical to the weighted machinery with w = 1.0 (IEEE
-    multiply-by-one and an integer-valued double divisor), so one
-    dataflow serves both.
+    exactly up to float rounding. The unweighted walk is bit-identical
+    to the weighted one with w = 1.0 (IEEE multiply-by-one and an
+    integer-valued double divisor). Returns (layer, node_id, pagerank).
     """
-    from onionnet_spark.core import EDGE_KEY
-
-    n_nodes = graph.cached_n_nodes()
-    if weight_col is None:
-        e = graph.edge_endpoints().withColumn("w", F.lit(1.0))
-    else:
-        e = graph.edges.select(
-            *EDGE_KEY, F.col(weight_col).cast("double").alias("w")
-        )
-    out_deg = e.groupBy(
-        F.col("src_layer").alias("layer"), F.col("src_id").alias("node_id")
-    ).agg(F.sum("w").alias("out_degree"))
-    # Edges annotated once with source out-degree. While the node
-    # count fits the broadcast budget the per-round contribution
-    # table (<= |V| rows) is BROADCAST into the left join, so the
-    # cached edge side is scanned — never exchanged or sorted — each
-    # round (the sort-merge alternative re-sorts the edge side every
-    # round even with its exchange pre-placed); past the budget the
-    # old shape returns: pre-shuffle e_deg once on the join key so
-    # the per-round sort-merge join reuses this cached exchange and
-    # only the (sparse) contribution table moves. localCheckpoint
-    # (not persist): the blocks are query-scoped and get cleaned up
-    # when this frame goes out of scope, instead of pinning
-    # CacheManager storage for the rest of the session.
-    small_state = n_nodes <= BCAST_STATE_MAX
-    e_deg = e.join(
-        out_deg.select(
-            F.col("layer").alias("src_layer"),
-            F.col("node_id").alias("src_id"),
-            "out_degree",
-        ),
-        on=["src_layer", "src_id"],
-    )
-    if not small_state:
-        e_deg = e_deg.repartition("src_layer", "src_id")
-    e_deg = e_deg.localCheckpoint()
-    base = (1.0 - damping) / n_nodes
-    # Sparse iteration: carry only per-node CONTRIBUTIONS (absent =>
-    # zero); the source rank is reconstructed inline as
-    # base + d * contrib, so no join against the full node set runs
-    # inside the loop — the dense rank vector is produced exactly
-    # once, at the end. Float-identical to the dense recurrence.
-    contribs = None
-    for it in range(n_iterations):
-        if contribs is None:
-            annotated = e_deg.withColumn("pr", F.lit(1.0 / n_nodes))
-        else:
-            c = contribs.select(
-                F.col("layer").alias("src_layer"),
-                F.col("node_id").alias("src_id"),
-                "contrib",
-            )
-            annotated = e_deg.join(
-                F.broadcast(c) if small_state else c,
-                on=["src_layer", "src_id"],
-                how="left",
-            ).withColumn(
-                "pr",
-                F.lit(base)
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0)),
-            )
-        contribs = (
-            annotated.groupBy(
-                F.col("dst_layer").alias("layer"), F.col("dst_id").alias("node_id")
-            )
-            .agg(F.sum(F.col("pr") * F.col("w") / F.col("out_degree")).alias("contrib"))
-            .localCheckpoint(eager=False)
-        )
-    ranks = (
-        graph.nodes.select("layer", "node_id")
-        .join(
-            F.broadcast(contribs) if small_state else contribs,
-            on=NODE_KEY,
-            how="left",
-        )
-        .select(
-            "layer",
-            "node_id",
-            (
-                F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("pagerank"),
-        )
-    )
-    return ranks
+    return _rank_walk(graph, n_iterations, damping, "pagerank", weight_col)
 
 
 def personalized_pagerank(
@@ -162,116 +197,24 @@ def personalized_pagerank(
     n_iterations: int = 5,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Personalized PageRank (random walk with restart): the teleport
-    mass returns to the SEED set instead of spreading uniformly —
-    the standard relevance / recommendation primitive graph-tool
-    exposes via pagerank(pers=...).
+    """Personalized PageRank (random walk with restart): the rank walk
+    whose teleport mass returns to the SEED set S instead of spreading
+    uniformly — the standard relevance / recommendation primitive
+    graph-tool exposes via pagerank(pers=...).
 
-    ppr_{i+1}(v) = (1-d) * [v in S]/|S| + d * sum_{u->v} ppr_i(u)/outdeg(u),
-    ppr_0 = uniform over S. Same sparse-contribution dataflow as
-    pagerank: edges are annotated with out-degree once and
-    pre-shuffled on the iteration join key; only the (sparse, mostly
-    seed-reachable) contribution table moves per round. Nodes
-    unreachable from the seeds hold exactly 0. Returns
-    (layer, node_id, ppr) over the full node set.
+        ppr_{i+1}(v) = (1-d) * [v in S]/|S| + d * sum_{u->v} ppr_i(u)/outdeg(u),
+
+    ppr_0 = uniform over S. The seed flag is joined onto the annotated
+    edge table once, before its cut, so no round joins the seeds.
+    Seeds are taken as (layer, str(id)) with duplicates dropped; an
+    empty seed list raises ValueError. With every node a seed this is
+    exactly `pagerank`. Nodes unreachable from the seeds hold exactly
+    0. Returns (layer, node_id, ppr) over the full node set.
     """
-    seed_df = literal_frame(
-        graph.nodes.sparkSession,
-        [(l, str(i)) for (l, i) in seeds],
-        "layer string, node_id string",
-    )
-    n_seeds = len(seeds)
-    e = graph.edge_endpoints()
-    out_deg = e.groupBy(
-        F.col("src_layer").alias("layer"), F.col("src_id").alias("node_id")
-    ).agg(F.count("*").alias("out_degree"))
-    # Query-scoped localCheckpoint, not persist — and the same
-    # broadcast-the-state-while-small regime as pagerank: see there.
-    small_state = graph.cached_n_nodes() <= BCAST_STATE_MAX
-    e_deg = e.join(
-        out_deg.select(
-            F.col("layer").alias("src_layer"),
-            F.col("node_id").alias("src_id"),
-            "out_degree",
-        ),
-        on=["src_layer", "src_id"],
-    )
-    if not small_state:
-        e_deg = e_deg.repartition("src_layer", "src_id")
-    e_deg = e_deg.localCheckpoint()
-    base_seed = (1.0 - damping) / n_seeds
-    seed_b = F.broadcast(seed_df.withColumn("is_seed", F.lit(1)))
-
-    def rank_col():
-        # rank(u) = (1-d)*[u in S]/|S| + d*contrib(u), reconstructed
-        # inline on the edge table (absent contrib => 0)
-        return (
-            F.lit(base_seed) * F.coalesce("is_seed", F.lit(0))
-            + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-        )
-
-    contribs = None
-    for it in range(n_iterations):
-        if contribs is None:
-            annotated = e_deg.join(
-                seed_b.select(
-                    F.col("layer").alias("src_layer"),
-                    F.col("node_id").alias("src_id"),
-                    "is_seed",
-                ),
-                on=["src_layer", "src_id"],
-                how="left",
-            ).withColumn(
-                "pr", F.coalesce("is_seed", F.lit(0)) * F.lit(1.0 / n_seeds)
-            )
-        else:
-            c = contribs.select(
-                F.col("layer").alias("src_layer"),
-                F.col("node_id").alias("src_id"),
-                "contrib",
-            )
-            annotated = (
-                e_deg.join(
-                    F.broadcast(c) if small_state else c,
-                    on=["src_layer", "src_id"],
-                    how="left",
-                )
-                .join(
-                    seed_b.select(
-                        F.col("layer").alias("src_layer"),
-                        F.col("node_id").alias("src_id"),
-                        "is_seed",
-                    ),
-                    on=["src_layer", "src_id"],
-                    how="left",
-                )
-                .withColumn("pr", rank_col())
-            )
-        contribs = (
-            annotated.groupBy(
-                F.col("dst_layer").alias("layer"), F.col("dst_id").alias("node_id")
-            )
-            .agg(F.sum(F.col("pr") / F.col("out_degree")).alias("contrib"))
-            .localCheckpoint(eager=False)
-        )
-    out = (
-        graph.nodes.select("layer", "node_id")
-        .join(
-            F.broadcast(contribs) if small_state else contribs,
-            on=NODE_KEY,
-            how="left",
-        )
-        .join(seed_b, on=NODE_KEY, how="left")
-        .select(
-            "layer",
-            "node_id",
-            (
-                F.lit(base_seed) * F.coalesce("is_seed", F.lit(0))
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("ppr"),
-        )
-    )
-    return out
+    seeds = _uniq(seeds)
+    if not seeds:
+        raise ValueError("personalized_pagerank needs at least one seed")
+    return _rank_walk(graph, n_iterations, damping, "ppr", seeds=seeds)
 
 
 def k_core(
@@ -988,62 +931,31 @@ def hits(graph: OnionGraph, n_iterations: int = 3) -> DataFrame:
     values stay under 2^53 (growth is bounded by (max degree)^2 per
     round); the default 3 is safe through sf well beyond the bench.
 
-    Scale shape: like pagerank, the edge list is pre-shuffled once on
-    each join key (src for the authority gather, dst for the hub
-    gather) and checkpointed, so every round reuses two cached
-    exchanges and only the sparse score tables move.
+    Scale shape: each round is two `_push` steps, src -> dst for the
+    authorities and dst -> src for the hubs. The edge list is
+    pre-shuffled once on each join key and checkpointed, so every
+    round reuses two cached exchanges and only the sparse score
+    tables move (never broadcast).
     """
-    e = graph.edge_endpoints().select(
-        "src_layer", "src_id", "dst_layer", "dst_id"
-    )
+    e = graph.edge_endpoints()
     e_by_src = e.repartition("src_layer", "src_id").localCheckpoint()
     e_by_dst = e.repartition("dst_layer", "dst_id").localCheckpoint()
-    hub = graph.nodes.select("layer", "node_id", F.lit(1.0).alias("h"))
-    auth = None
+    hub = graph.nodes.select(*NODE_KEY, F.lit(1.0).alias("h"))
     for _ in range(n_iterations):
-        auth = (
-            e_by_src.join(
-                hub.select(
-                    F.col("layer").alias("src_layer"),
-                    F.col("node_id").alias("src_id"),
-                    "h",
-                ),
-                on=["src_layer", "src_id"],
-            )
-            .groupBy(
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-            )
-            .agg(F.sum("h").alias("a"))
-            .localCheckpoint(eager=False)
-        )
-        hub = (
-            e_by_dst.join(
-                auth.select(
-                    F.col("layer").alias("dst_layer"),
-                    F.col("node_id").alias("dst_id"),
-                    "a",
-                ),
-                on=["dst_layer", "dst_id"],
-            )
-            .groupBy(
-                F.col("src_layer").alias("layer"),
-                F.col("src_id").alias("node_id"),
-            )
-            .agg(F.sum("a").alias("h"))
-            .localCheckpoint(eager=False)
-        )
+        auth = _push(e_by_src, hub, "src", "dst", F.sum("h").alias("a"))
+        auth = auth.localCheckpoint(eager=False)
+        hub = _push(e_by_dst, auth, "dst", "src", F.sum("a").alias("h"))
+        hub = hub.localCheckpoint(eager=False)
     totals = auth.agg(F.sum("a").alias("ta")).crossJoin(
         hub.agg(F.sum("h").alias("th"))
     )
     return (
-        graph.nodes.select("layer", "node_id")
-        .join(auth, on=["layer", "node_id"], how="left")
-        .join(hub, on=["layer", "node_id"], how="left")
+        graph.nodes.select(*NODE_KEY)
+        .join(auth, on=NODE_KEY, how="left")
+        .join(hub, on=NODE_KEY, how="left")
         .crossJoin(F.broadcast(totals))
         .select(
-            "layer",
-            "node_id",
+            *NODE_KEY,
             F.round(F.coalesce("a", F.lit(0.0)) / F.col("ta"), 6).alias(
                 "authority"
             ),
@@ -1068,44 +980,28 @@ def eigenvector_centrality(graph: OnionGraph, n_iterations: int = 4) -> DataFram
 
     Scale shape: the symmetrized edge view comes from the per-graph
     persisted cache and is pre-shuffled ONCE on the gather key; each
-    round is one join + one aggregation moving only (node, score)
-    rows. The handful of iterations stay one LAZY plan (no
-    per-round checkpoint blocks): the nesting is shallow, and not
-    writing a block-manager entry per round keeps a long bench /
-    notebook session from churning out the per-graph persisted
-    views other analytics depend on. Past ~8 rounds, re-introduce a
-    lineage cut.
+    round is one `_push` moving only (node, score) rows. The handful
+    of iterations stay one LAZY plan (no per-round checkpoint
+    blocks): the nesting is shallow, and not writing a block-manager
+    entry per round keeps a long bench / notebook session from
+    churning out the per-graph persisted views other analytics
+    depend on. Past ~8 rounds, re-introduce a lineage cut.
     """
     e_by_src = (
         graph.cached_symmetrized()
         .repartition("src_layer", "src_id")
         .localCheckpoint()
     )
-    x = graph.nodes.select("layer", "node_id", F.lit(1.0).alias("x"))
+    x = graph.nodes.select(*NODE_KEY, F.lit(1.0).alias("x"))
     for _ in range(n_iterations):
-        x = (
-            e_by_src.join(
-                x.select(
-                    F.col("layer").alias("src_layer"),
-                    F.col("node_id").alias("src_id"),
-                    "x",
-                ),
-                on=["src_layer", "src_id"],
-            )
-            .groupBy(
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-            )
-            .agg(F.sum("x").alias("x"))
-        )
+        x = _push(e_by_src, x, "src", "dst", F.sum("x").alias("x"))
     total = x.agg(F.sum("x").alias("tx"))
     return (
-        graph.nodes.select("layer", "node_id")
-        .join(x, on=["layer", "node_id"], how="left")
+        graph.nodes.select(*NODE_KEY)
+        .join(x, on=NODE_KEY, how="left")
         .crossJoin(F.broadcast(total))
         .select(
-            "layer",
-            "node_id",
+            *NODE_KEY,
             F.round(F.coalesce("x", F.lit(0.0)) / F.col("tx"), 6).alias(
                 "eigenvector"
             ),
@@ -1131,67 +1027,45 @@ def katz_centrality(
     keeps the truncated series close to convergent; 1/8 is safely
     below for the bench graphs).
 
+    Each round is one `_push` of z along the edges, broadcast while
+    the node count fits the budget (the edge side is then a cut scan,
+    never exchanged; past it the edges are pre-shuffled once). The
+    step's LEFT join + coalesce(z, 0) lets a source absent from z (no
+    in-edges last round) contribute exactly the seed term, so no
+    round re-anchors against the full node set; that happens once,
+    at the end.
+
     Invariant (r9 ADVICE): edge endpoints must be a subset of
     graph.nodes — the OnionGraph builders guarantee this (builder.py
-    derives edges from the same rows that become nodes). The per-round
-    LEFT join deliberately does NOT re-anchor against the node set, so
-    an edge whose src is absent from graph.nodes would contribute its
-    seed term to the dst instead of being dropped; if you construct an
-    OnionGraph by hand with dangling-src edges, pre-filter them
-    (edges.join(nodes, src-key, "left_semi")) before calling this.
+    derives edges from the same rows that become nodes). Because no
+    round re-anchors, an edge whose src is absent from graph.nodes
+    would contribute its seed term to the dst instead of being
+    dropped; if you construct an OnionGraph by hand with dangling-src
+    edges, pre-filter them (edges.join(nodes, src-key, "left_semi"))
+    before calling this.
     """
     if inv_alpha < 2:
         raise ValueError(f"inv_alpha must be >= 2, got {inv_alpha}")
-    # Same broadcast-the-state-while-small regime as pagerank: z is
-    # node-keyed (<= |V| rows), so under the budget each round is a
-    # broadcast probe over the checkpointed edge scan with no
-    # exchange or sort of the edge side; past it, the edge table is
-    # pre-shuffled once and the sort-merge path returns.
-    small_state = graph.cached_n_nodes() <= BCAST_STATE_MAX
+    small_state = graph.cached_n_nodes() <= BROADCAST_MAX
     e_by_src = graph.edge_endpoints()
     if not small_state:
         e_by_src = e_by_src.repartition("src_layer", "src_id")
     e_by_src = e_by_src.localCheckpoint()
-    z = graph.nodes.select("layer", "node_id", F.lit(0.0).alias("z"))
+    z = graph.nodes.select(*NODE_KEY, F.lit(0.0).alias("z"))
     for k in range(1, n_iterations + 1):
         seed = float(inv_alpha ** (k - 1))
-        # LEFT join + coalesce(z, 0): a source absent from z (no
-        # in-edges last round) contributes exactly the seed term —
-        # identical arithmetic to the old per-round re-anchor join
-        # over the full node set, minus one 786k-row shuffle join per
-        # round (r9); the full-node anchor happens ONCE at the end.
-        zs = z.select(
-            F.col("layer").alias("src_layer"),
-            F.col("node_id").alias("src_id"),
-            "z",
-        )
-        z = (
-            e_by_src.join(
-                F.broadcast(zs) if small_state else zs,
-                on=["src_layer", "src_id"],
-                how="left",
-            )
-            .groupBy(
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-            )
-            .agg(
-                F.sum(F.coalesce("z", F.lit(0.0)) + F.lit(seed)).alias("z")
-            )
-            .localCheckpoint(eager=False)
-        )
+        z = _push(
+            e_by_src, z, "src", "dst",
+            F.sum(F.coalesce("z", F.lit(0.0)) + F.lit(seed)).alias("z"),
+            bcast=small_state, how="left",
+        ).localCheckpoint(eager=False)
     scale = float(inv_alpha**n_iterations)
     # nodes with no in-edges never enter the aggregate: katz = 0
     return (
-        graph.nodes.select("layer", "node_id")
-        .join(
-            F.broadcast(z) if small_state else z,
-            on=["layer", "node_id"],
-            how="left",
-        )
+        graph.nodes.select(*NODE_KEY)
+        .join(F.broadcast(z) if small_state else z, on=NODE_KEY, how="left")
         .select(
-            "layer",
-            "node_id",
+            *NODE_KEY,
             F.round(F.coalesce("z", F.lit(0.0)) / scale, 6).alias("katz"),
         )
     )
@@ -2207,59 +2081,40 @@ def count_paths_to(
     provenance fan-in, and BOM explosion counts.
 
     paths(v) = Σ_k (#length-k paths v -> target), built as k rounds
-    of one edge join + one integer-sum aggregation each (the k-th
-    frame holds length-k path counts; BIGINT sums are engine-exact).
-    `max_len` must be >= the DAG depth for exact totals (raise it
-    for deeper graphs; each round is the same join+agg plan). On a
-    cyclic graph counts of length <= max_len are still exact — the
-    bounded-length semantics every provenance system uses. Returns
-    (layer, node_id, n_paths) for nodes with >= 1 path, target
-    excluded (no zero-length path).
+    of one `_push` from dst to src each (the k-th frame holds
+    length-k path counts; BIGINT sums are engine-exact). `max_len`
+    must be >= the DAG depth for exact totals (raise it for deeper
+    graphs; each round is the same join+agg plan). On a cyclic graph
+    counts of length <= max_len are still exact — the bounded-length
+    semantics every provenance system uses. Returns (layer, node_id,
+    n_paths) for nodes with >= 1 path, target excluded (no
+    zero-length path).
+
+    Each round's count frame is node-keyed, so under the broadcast
+    budget it is broadcast over the persisted edge cache, which is
+    never exchanged or sorted. Like the BFS loop, a round is a lazy
+    cut that its own row count materializes, and an empty round ends
+    the loop.
     """
-    # Same broadcast-the-state-while-small regime as katz: each
-    # round's count frame is node-keyed (<= |V| rows), so under the
-    # budget the round is a broadcast probe over the persisted edge
-    # cache — the edge side is never exchanged or sorted; past it,
-    # the shuffle-join shapes below are unchanged.
-    small_state = graph.cached_n_nodes() <= BCAST_STATE_MAX
-    e = graph.cached_endpoints("downstream").select(
-        "src_layer", "src_id", "dst_layer", "dst_id"
-    )
+    small_state = graph.cached_n_nodes() <= BROADCAST_MAX
+    e = graph.cached_endpoints("downstream").select(*EDGE_KEY)
     tl, ti = target[0], str(target[1])
-    cur = (
-        e.filter((F.col("dst_layer") == tl) & (F.col("dst_id") == ti))
-        .groupBy(
-            F.col("src_layer").alias("layer"), F.col("src_id").alias("node_id")
-        )
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
-    )
+    cur = _push(
+        e.filter((F.col("dst_layer") == tl) & (F.col("dst_id") == ti)),
+        None, "dst", "src", F.count("*").cast("bigint").alias("c"),
+    ).localCheckpoint()
     total = cur
     for _ in range(max_len - 1):
-        curd = cur.select(
-            F.col("layer").alias("dst_layer"),
-            F.col("node_id").alias("dst_id"),
-            "c",
-        )
-        nxt = (
-            e.join(
-                F.broadcast(curd) if small_state else curd,
-                on=["dst_layer", "dst_id"],
-            )
-            .groupBy(
-                F.col("src_layer").alias("layer"),
-                F.col("src_id").alias("node_id"),
-            )
-            .agg(F.sum("c").cast("bigint").alias("c"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
+        cur = _push(
+            e, cur, "dst", "src", F.sum("c").cast("bigint").alias("c"),
+            bcast=small_state,
+        ).localCheckpoint(eager=False)
+        # a row count of the cut's JVM rows materializes it in one
+        # job; DataFrame.count() would add an aggregation stage
+        if not cur._jdf.queryExecution().toRdd().count():
             break
-        total = total.unionByName(nxt)
-        cur = nxt
-    return total.groupBy("layer", "node_id").agg(
-        F.sum("c").cast("bigint").alias("n_paths")
-    )
+        total = total.unionByName(cur)
+    return total.groupBy(*NODE_KEY).agg(F.sum("c").cast("bigint").alias("n_paths"))
 
 
 def bowtie_structure(graph: OnionGraph) -> DataFrame:
@@ -2456,13 +2311,14 @@ def neighbor_agg(
     """GNN-style neighbor feature aggregation (one message-passing
     layer): per node, aggregate a numeric node property over its
     neighbors — n_nbrs, sum, mean (6dp), min, max. The workhorse of
-    GraphSAGE-mean / feature smoothing, expressed as the two
-    relational steps it really is: join the neighbor's property onto
-    the edge list, then groupBy the receiving node (Catalyst runs the
-    partial aggregation map-side).
+    GraphSAGE-mean / feature smoothing, expressed as the one `_push`
+    it really is: join the neighbor's property onto the edge list,
+    then groupBy the receiving node (Catalyst runs the partial
+    aggregation map-side).
 
-    direction: 'downstream' aggregates over edge targets,
-    'upstream' over edge sources, 'sym' over both. NULL properties
+    direction: 'downstream' aggregates over edge targets (pushes
+    dst -> src), 'upstream' over edge sources (src -> dst), 'sym' over
+    both (dst -> src on the symmetrized view). NULL properties
     are skipped by sum/mean/min/max (Spark and ANSI SQL agree);
     n_nbrs counts all neighbor edges (multi-edges count per edge —
     message passing sends one message per edge). Nodes with no
@@ -2479,24 +2335,11 @@ def neighbor_agg(
     bucketing; hub receivers are plain aggregation skew, which AQE
     splits (no per-key state beyond the five accumulators).
     """
-    if direction == "sym":
-        e = graph.cached_symmetrized()
-    elif direction == "downstream":
-        e = graph.edge_endpoints()
-    elif direction == "upstream":
-        e = graph.edge_endpoints().select(
-            F.col("dst_layer").alias("src_layer"),
-            F.col("dst_id").alias("src_id"),
-            F.col("src_layer").alias("dst_layer"),
-            F.col("src_id").alias("dst_id"),
-        )
-    else:
+    if direction not in ("downstream", "upstream", "sym"):
         raise ValueError("direction must be downstream/upstream/sym")
-    nbr_prop = graph.nodes.select(
-        F.col("layer").alias("dst_layer"),
-        F.col("node_id").alias("dst_id"),
-        F.col(prop).alias("_p"),
-    )
+    e = graph.cached_symmetrized() if direction == "sym" else graph.edge_endpoints()
+    frm, to = ("src", "dst") if direction == "upstream" else ("dst", "src")
+    nbr_prop = graph.nodes.select(*NODE_KEY, F.col(prop).alias("_p"))
     if quantize_scale is not None:
         q = F.floor(F.col("_p") * quantize_scale + F.lit(0.5)).cast("bigint")
         sum_expr = F.round(F.sum(q) / quantize_scale, 6).alias("sum_val")
@@ -2506,19 +2349,13 @@ def neighbor_agg(
     else:
         sum_expr = F.round(F.sum("_p"), 6).alias("sum_val")
         mean_expr = F.round(F.avg("_p"), 6).alias("mean_val")
-    agg = (
-        e.select("src_layer", "src_id", "dst_layer", "dst_id")
-        .join(nbr_prop, on=["dst_layer", "dst_id"])
-        .groupBy(
-            F.col("src_layer").alias("layer"), F.col("src_id").alias("node_id")
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("n_nbrs"),
-            sum_expr,
-            mean_expr,
-            F.min("_p").alias("min_val"),
-            F.max("_p").alias("max_val"),
-        )
+    agg = _push(
+        e.select(*EDGE_KEY), nbr_prop, frm, to,
+        F.count("*").cast("bigint").alias("n_nbrs"),
+        sum_expr,
+        mean_expr,
+        F.min("_p").alias("min_val"),
+        F.max("_p").alias("max_val"),
     )
     return (
         graph.nodes.select(*NODE_KEY)
@@ -3407,7 +3244,7 @@ def voterank(graph: OnionGraph, k: int = 5) -> DataFrame:
     # under the gate both n-row sides broadcast and the cached
     # symmetrized edge view is scanned, never exchanged or re-sorted,
     # in any of the k rounds; past the gate the joins shuffle as before.
-    small_state = graph.cached_n_nodes() <= BCAST_STATE_MAX
+    small_state = graph.cached_n_nodes() <= BROADCAST_MAX
     winners = []
     for r in range(1, k + 1):
         # neighbor-vote sums first (aggregate before the node join —

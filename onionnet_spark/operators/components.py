@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import OnionGraph
+from onionnet_spark.core import BROADCAST_MAX, OnionGraph
 from onionnet_spark.operators.ckpt import IterCheckpointer
-
-# Node-keyed state tables (labels, ranks, keep-sets) at or under this
-# row count are broadcast into the per-round joins: the cached edge
-# side is then never exchanged OR sorted inside the loop (the
-# sort-merge alternative re-sorts it every round), and the only
-# exchange left per round is the candidate aggregation. Same budget
-# as traversal.BROADCAST_FRONTIER_MAX; ~2M (layer, node_id, label)
-# rows frame to well under the guide's "few hundred MB is fine"
-# broadcast ceiling. Above it, the shuffle path is unchanged.
-BCAST_STATE_MAX = 2_000_000
 
 
 def _star_round(edges: DataFrame) -> DataFrame:
@@ -258,7 +248,7 @@ def strongly_connected_components(
         # when its (known) row count fits so the edge set streams
         ks = keep.select(F.col("key").alias("src"))
         kd = keep.select(F.col("key").alias("dst"))
-        if n_keep is not None and n_keep <= BCAST_STATE_MAX:
+        if n_keep is not None and n_keep <= BROADCAST_MAX:
             ks, kd = F.broadcast(ks), F.broadcast(kd)
         return e.join(ks, on="src", how="left_semi").join(
             kd, on="dst", how="left_semi"

@@ -26,8 +26,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import NODE_KEY, OnionGraph
-from onionnet_spark.operators import traversal
+from onionnet_spark.core import BROADCAST_MAX, NODE_KEY, OnionGraph
 
 _OPS = {
     "==": _op.eq,
@@ -265,7 +264,7 @@ def project_bipartite(
     xb = blk.select("via", F.col("bi").alias("xi"), F.col("blk").alias("xblk"))
     yb = blk.select("via", F.col("bi").alias("yi"), F.col("blk").alias("yblk"))
     # yb carries each membership once, so the collected total bounds it
-    if st["m"] <= traversal.BROADCAST_FRONTIER_MAX:
+    if st["m"] <= BROADCAST_MAX:
         yb = F.broadcast(yb)
     cross = (
         xb.join(yb, on="via")

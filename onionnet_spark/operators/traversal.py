@@ -14,8 +14,8 @@ and both arms of `on_shortest_path`) runs ONE level loop,
 `_bfs_levels`. Each level joins the frontier against the persisted,
 column-pruned edge endpoints, dedups on the node key and anti-joins
 the visited levels. The frontier and the visited side are broadcast
-while their counted sizes fit BROADCAST_FRONTIER_MAX, so the edge side
-is never shuffled; past it the joins fall back to shuffles. Each level
+while their counted sizes fit core.BROADCAST_MAX, so the edge
+side is never shuffled; past it the joins fall back to shuffles. Each level
 past the seed is a lazy checkpoint that its own count materializes —
 one job per level — and every tenth cut is a parquet rebase
 (ckpt.IterCheckpointer), so plans stay flat at any depth.
@@ -41,11 +41,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import NODE_KEY, OnionGraph, literal_frame
+from onionnet_spark.core import BROADCAST_MAX, NODE_KEY, OnionGraph, literal_frame
 from onionnet_spark.operators.ckpt import IterCheckpointer
-
-# Frontiers below this row count are broadcast to the edge join.
-BROADCAST_FRONTIER_MAX = 2_000_000
 
 
 def _directed_endpoints(graph: OnionGraph, direction: str) -> DataFrame:
@@ -131,7 +128,7 @@ def _bfs_levels(
         and (max_dist is None or depth < max_dist)
     ):
         f = frontier.select(*carry, *(F.col(k).alias(s) for k, s in zip(key, src)))
-        if n <= BROADCAST_FRONTIER_MAX:
+        if n <= BROADCAST_MAX:
             f = F.broadcast(f)
         # An undirected edge spans at most one level, so level d+1 can
         # only re-touch levels d and d-1: the anti-join needs the last
@@ -142,7 +139,7 @@ def _bfs_levels(
         visited = reduce(
             DataFrame.unionByName, (lv.select(*ident) for lv in levels[-seen:])
         )
-        if sum(counts[-seen:]) <= BROADCAST_FRONTIER_MAX:
+        if sum(counts[-seen:]) <= BROADCAST_MAX:
             visited = F.broadcast(visited)
         depth += 1
         # dedup on the anti-join key, so the dedup exchange is
@@ -479,7 +476,7 @@ def weighted_sssp(
                 F.col("node_id").alias("src_id"),
                 "dist",
             )
-            if n_improved <= BROADCAST_FRONTIER_MAX:
+            if n_improved <= BROADCAST_MAX:
                 f = F.broadcast(f)
             cand = (
                 edges.join(f, on=["src_layer", "src_id"])
@@ -739,9 +736,9 @@ def temporal_earliest_arrival(
             # gated on the last measured frontier with fan-out
             # headroom; past the budget the shuffle join returns.
             if hop_no == 0:
-                small = n_frontier <= BROADCAST_FRONTIER_MAX
+                small = n_frontier <= BROADCAST_MAX
             else:
-                small = n_frontier <= BROADCAST_FRONTIER_MAX // 8
+                small = n_frontier <= BROADCAST_MAX // 8
             h = F.broadcast(hop) if small else hop
             reached = (
                 h.join(e, on=h["node"] == e["u"])
@@ -843,7 +840,7 @@ def topological_levels(
     converged = False
     for _ in range(max_iterations):
         f = changed.withColumnRenamed("n", "s")
-        if n_changed <= BROADCAST_FRONTIER_MAX:
+        if n_changed <= BROADCAST_MAX:
             f = F.broadcast(f)
         upd = (
             e.join(f, on="s")
@@ -854,7 +851,7 @@ def topological_levels(
         # broadcast is gated on the same frontier count (one hop of
         # fan-out stays inside the budget's intent at these sizes —
         # past the threshold the shuffle join takes over anyway).
-        if n_changed <= BROADCAST_FRONTIER_MAX:
+        if n_changed <= BROADCAST_MAX:
             upd = F.broadcast(upd)
         imp = (
             upd.join(lv, on="n")
@@ -867,7 +864,7 @@ def topological_levels(
             converged = True
             break
         new = imp.withColumnRenamed("level", "new")
-        if n_changed <= BROADCAST_FRONTIER_MAX:
+        if n_changed <= BROADCAST_MAX:
             new = F.broadcast(new)
         lv = (
             lv.join(new, on="n", how="left")

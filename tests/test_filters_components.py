@@ -610,6 +610,26 @@ def test_personalized_pagerank_seeds_localize(spark):
     assert got["a"] > got["b"] > 0.0
 
 
+def test_personalized_pagerank_repeated_seed_counts_once(spark):
+    # a->b->c->a plus a->d: a repeated seed once duplicated the edges
+    # it joined, so [a, a] gave two a rows and more total mass
+    from onionnet_spark.operators.analytics import personalized_pagerank
+
+    nodes = spark.createDataFrame(
+        [("L", x) for x in "abcd"], "layer string, node_id string"
+    )
+    edges = spark.createDataFrame(
+        [("L", u, "L", v) for u, v in ("ab", "bc", "ca", "ad")],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    g = grow_onion(nodes, edges)
+    once = sorted(personalized_pagerank(g, [("L", "a")]).collect())
+    assert sorted(personalized_pagerank(g, [("L", "a"), ("L", "a")]).collect()) == once
+    assert len(once) == 4
+    with pytest.raises(ValueError):
+        personalized_pagerank(g, [])
+
+
 def test_triangles_k4(spark):
     from onionnet_spark.operators.analytics import triangle_count
 

@@ -411,3 +411,51 @@ def test_edge_embeddedness_square_with_diagonal(spark):
     assert out[("a", "b")] == out[("b", "c")] == 1
     assert out[("c", "d")] == out[("d", "a")] == 1
     assert out[("d", "e")] == 0  # local bridge survives the left join
+
+
+def test_propagation_family_job_counts(spark):
+    """Spark jobs per call (op + collect) of the seven operators built
+    on analytics._push, on a 7-node toy graph with two isolated nodes.
+    Each budget is the count measured before the operators shared the
+    step, so the step adds no job. count_paths_to runs its 3 rounds
+    with one job fewer each (a lazy cut its own row count
+    materializes, instead of an eager cut plus isEmpty), and
+    personalized_pagerank joins its seeds once instead of every round."""
+    from onionnet_spark.operators import analytics as A
+
+    pairs = ["ab", "bc", "ca", "ad", "de", "ec", "be"]
+    sc = spark.sparkContext
+    ops = {
+        "pagerank": (lambda g: A.pagerank(g, 3), 13),
+        "weighted pagerank": (lambda g: A.pagerank(g, 3, weight_col="wt"), 13),
+        "personalized_pagerank": (
+            lambda g: A.personalized_pagerank(g, [("L", "a")], 3), 17 - 2
+        ),
+        "hits": (lambda g: A.hits(g, 3), 38),
+        "eigenvector_centrality": (lambda g: A.eigenvector_centrality(g, 3), 15),
+        "katz_centrality": (lambda g: A.katz_centrality(g, 3), 11),
+        "count_paths_to": (lambda g: A.count_paths_to(g, ("L", "c"), 4), 19 - 3),
+        "neighbor_agg": (lambda g: A.neighbor_agg(g, "val"), 7),
+    }
+    got = {}
+    for name, (op, _) in ops.items():
+        g = OnionGraph(
+            spark.createDataFrame(
+                [("L", x, float(i)) for i, x in enumerate("abcdefg")],
+                "layer string, node_id string, val double",
+            ),
+            spark.createDataFrame(
+                [("L", u, "L", v, float(len(u + v) + ord(v) % 3)) for u, v in pairs],
+                "src_layer string, src_id string, dst_layer string, dst_id string, "
+                "wt double",
+            ),
+        )
+        group = f"propagation_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            op(g).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
+    assert not over, over

@@ -292,6 +292,191 @@ def test_on_shortest_path_matches_python_bfs(
         assert got == want
 
 
+# --- the propagation family (analytics._push) vs power iteration in
+# plain Python. Edge weights and node values are small integers, so the
+# integer-valued iterates are exact in any summation order.
+
+weight_lists = st.lists(st.integers(min_value=1, max_value=5), min_size=24, max_size=24)
+value_lists = st.lists(
+    st.one_of(st.none(), st.integers(min_value=-5, max_value=5)),
+    min_size=16,
+    max_size=16,
+)
+
+
+def _valued_graph_of(spark, edges, isolated, weights, values):
+    """`_graph_of` with an edge weight `w` and a node value `val`
+    (None where the value list holds None)."""
+    from onionnet_spark.core import OnionGraph
+
+    g, nodes = _graph_of(spark, edges, isolated)
+    ndf = spark.createDataFrame(
+        [("l", str(n), None if values[n] is None else float(values[n])) for n in nodes],
+        "layer string, node_id string, val double",
+    )
+    edf = spark.createDataFrame(
+        [("l", str(u), "l", str(v), float(w)) for (u, v), w in zip(edges, weights)]
+        or [("l", "0", "l", "0", 1.0)],
+        "src_layer string, src_id string, dst_layer string, dst_id string, w double",
+    )
+    return OnionGraph(ndf, edf if edges else edf.limit(0)), nodes
+
+
+def _round6(x):
+    """Spark's round(x, 6) on a double: HALF_UP on its decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if x is None:
+        return None
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def _py_rank_walk(nodes, edges, n_iter, d, w=None, seeds=None):
+    w = w or {e: 1.0 for e in edges}
+    out_w = {}
+    for u, v in edges:
+        out_w[u] = out_w.get(u, 0.0) + w[(u, v)]
+    tele = {n: 1.0 if seeds is None or n in seeds else 0.0 for n in nodes}
+    m = len(nodes) if seeds is None else len(seeds)
+    r = {n: tele[n] / m for n in nodes}
+    for _ in range(n_iter):
+        c = dict.fromkeys(nodes, 0.0)
+        for u, v in edges:
+            c[v] += r[u] * w[(u, v)] / out_w[u]
+        r = {n: (1 - d) * tele[n] / m + d * c[n] for n in nodes}
+    return r
+
+
+@given(
+    edge_lists,
+    isolated_ids,
+    weight_lists,
+    st.lists(node_ids, min_size=1, max_size=4),
+    st.integers(min_value=1, max_value=4),
+)
+@settings(SET, max_examples=4)
+def test_rank_walks_match_python_power_iteration(
+    spark, edges, isolated, weights, seeds, n_iter
+):
+    import pytest
+
+    from onionnet_spark.operators.analytics import pagerank, personalized_pagerank
+
+    g, nodes = _valued_graph_of(spark, edges, isolated, weights, [None] * 16)
+
+    def ranks(df, col):
+        return {int(r["node_id"]): r[col] for r in df.collect()}
+
+    pr = ranks(pagerank(g, n_iter), "pagerank")
+    assert pr == pytest.approx(_py_rank_walk(nodes, edges, n_iter, 0.85), abs=1e-9)
+    wpr = ranks(pagerank(g, n_iter, weight_col="w"), "pagerank")
+    w = dict(zip(edges, weights))
+    assert wpr == pytest.approx(_py_rank_walk(nodes, edges, n_iter, 0.85, w), abs=1e-9)
+    # repeated seeds count once
+    ppr = ranks(personalized_pagerank(g, [("l", s) for s in seeds], n_iter), "ppr")
+    want = _py_rank_walk(nodes, edges, n_iter, 0.85, seeds=set(seeds))
+    assert ppr == pytest.approx(want, abs=1e-9)
+    # every node a seed is the uniform walk, bit for bit
+    every = ranks(personalized_pagerank(g, [("l", n) for n in nodes], n_iter), "ppr")
+    assert every == pr
+
+
+@given(
+    edge_lists,
+    isolated_ids,
+    value_lists,
+    node_ids,
+    st.integers(min_value=1, max_value=3),
+)
+@settings(SET, max_examples=4)
+def test_integer_propagations_match_python(
+    spark, edges, isolated, values, target, n_iter
+):
+    from onionnet_spark.operators.analytics import (
+        count_paths_to,
+        eigenvector_centrality,
+        hits,
+        katz_centrality,
+        neighbor_agg,
+    )
+
+    g, nodes = _valued_graph_of(spark, edges, isolated, [1] * 24, values)
+
+    def rows(df, *cols):
+        return {int(r["node_id"]): tuple(r[c] for c in cols) for r in df.collect()}
+
+    def norm(x):
+        total = sum(x.values())
+        return {n: _round6(x[n] / total) if total else None for n in nodes}
+
+    hub, auth = dict.fromkeys(nodes, 1), None
+    for _ in range(n_iter):
+        auth = dict.fromkeys(nodes, 0)
+        for u, v in edges:
+            auth[v] += hub[u]
+        hub = dict.fromkeys(nodes, 0)
+        for u, v in edges:
+            hub[u] += auth[v]
+    a, h = norm(auth), norm(hub)
+    want = {n: (a[n], h[n]) for n in nodes}
+    assert rows(hits(g, n_iter), "authority", "hub") == want
+
+    sym = set(edges) | {(v, u) for u, v in edges}
+    x = dict.fromkeys(nodes, 1)
+    for _ in range(n_iter):
+        nxt = dict.fromkeys(nodes, 0)
+        for u, v in sym:
+            nxt[v] += x[u]
+        x = nxt
+    want = {n: (v,) for n, v in norm(x).items()}
+    assert rows(eigenvector_centrality(g, n_iter), "eigenvector") == want
+
+    z = dict.fromkeys(nodes, 0)
+    for k in range(1, n_iter + 1):
+        nxt = dict.fromkeys(nodes, 0)
+        for u, v in edges:
+            nxt[v] += z[u] + 3 ** (k - 1)
+        z = nxt
+    want = {n: (_round6(z[n] / 3**n_iter),) for n in nodes}
+    assert rows(katz_centrality(g, n_iter, inv_alpha=3), "katz") == want
+
+    max_len = n_iter + 1
+    cur = {}
+    for u, v in edges:
+        if v == target:
+            cur[u] = cur.get(u, 0) + 1
+    total = dict(cur)
+    for _ in range(max_len - 1):
+        nxt = {}
+        for u, v in edges:
+            if v in cur:
+                nxt[u] = nxt.get(u, 0) + cur[v]
+        cur = nxt
+        for n, c in cur.items():
+            total[n] = total.get(n, 0) + c
+    got = rows(count_paths_to(g, ("l", str(target)), max_len), "n_paths")
+    assert got == {n: (c,) for n, c in total.items()}
+
+    pairs = {
+        "downstream": list(edges),
+        "upstream": [(v, u) for u, v in edges],
+        "sym": sorted(sym),
+    }
+    cols = ("n_nbrs", "sum_val", "mean_val", "min_val", "max_val")
+    for direction, recv in pairs.items():
+        want = {}
+        for n in nodes:
+            vals = [values[v] for u, v in recv if u == n]
+            known = [float(x) for x in vals if x is not None]
+            want[n] = (len(vals),) + (
+                (_round6(sum(known)), _round6(sum(known) / len(known)),
+                 min(known), max(known))
+                if known
+                else (None,) * 4
+            )
+        assert rows(neighbor_agg(g, "val", direction), *cols) == want, direction
+
+
 texts = st.lists(
     st.text(alphabet="ab ", min_size=0, max_size=12), min_size=1, max_size=10
 )

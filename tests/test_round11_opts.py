@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import OnionGraph
-from onionnet_spark.operators import filters, traversal
+from onionnet_spark.operators import filters
 from onionnet_spark.operators.analytics import ego_stats
 from onionnet_spark.operators.filters import project_bipartite
 
@@ -71,7 +71,7 @@ def test_project_bipartite_cross_block_broadcast_is_gated(
     """The cross-block arm broadcasts its block side only while the
     total membership count (7 here) is within the frontier budget."""
     monkeypatch.setattr(filters, "BIPARTITE_BLOCK", 1)
-    monkeypatch.setattr(traversal, "BROADCAST_FRONTIER_MAX", bcast_max)
+    monkeypatch.setattr(filters, "BROADCAST_MAX", bcast_max)
     df = project_bipartite(multi_membership_graph, "member", "group")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert ("strategy=broadcast" in plan) == (bcast_max >= 7)
