@@ -24,7 +24,7 @@ from __future__ import annotations
 import json
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
@@ -41,6 +41,15 @@ EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
 # rows stay well under the guide's "few hundred MB is fine" broadcast
 # ceiling. Above it the joins shuffle.
 BROADCAST_MAX = 2_000_000
+
+
+def split_node_key(key: str) -> list[Column]:
+    """The (layer, node_id) columns of a 'layer:node_id' key column:
+    everything after the FIRST ':' is the node_id (ids may contain
+    ':'), the split the DuckDB oracles make."""
+    layer = F.split_part(F.col(key), F.lit(":"), F.lit(1))
+    node_id = F.substring(F.col(key), F.length(layer) + 2, 2**31 - 1)
+    return [layer.alias("layer"), node_id.alias("node_id")]
 
 
 @lru_cache(maxsize=64)

@@ -34,7 +34,9 @@ from onionnet_spark.core import (
     NODE_KEY,
     OnionGraph,
     literal_frame,
+    split_node_key,
 )
+from onionnet_spark.operators.ckpt import IterCheckpointer
 from onionnet_spark.operators.traversal import _uniq
 
 
@@ -388,15 +390,7 @@ def k_core(
             .alias("core_degree"),
         )
     )
-    return deg.select(
-        F.split_part(F.col("key"), F.lit(":"), F.lit(1)).alias("layer"),
-        F.substring(
-            F.col("key"),
-            F.length(F.split_part(F.col("key"), F.lit(":"), F.lit(1))) + 2,
-            2_000_000,
-        ).alias("node_id"),
-        "core_degree",
-    )
+    return deg.select(*split_node_key("key"), "core_degree")
 
 
 def betweenness_sampled(
@@ -1077,7 +1071,6 @@ def k_truss(
     rounds: int = 4,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
 ) -> DataFrame:
     """k-truss: the maximal subgraph in which every edge closes at
     least k-2 triangles. Computed by support peeling: per round,
@@ -1089,10 +1082,9 @@ def k_truss(
     Input is an undirected edge list; rows are canonicalized to
     (min, max) and deduplicated. Support counting is the standard
     common-neighbor equi-join — adjacency joined twice on the shared
-    third vertex — which shuffles on node keys only. With
-    ``guard=True`` a final support pass verifies the fixpoint was
-    reached and raises RuntimeError otherwise (the silent-truncation
-    trap flagged for iterative ops in round 1).
+    third vertex — which shuffles on node keys only. A final support
+    pass verifies the fixpoint was reached and raises RuntimeError
+    otherwise (silent truncation would return a non-truss).
 
     Returns surviving edges (a, b, support) with support computed in
     the final subgraph. Scale: per-round cost is triangle
@@ -1133,14 +1125,13 @@ def k_truss(
     final = e.join(support(e), on=["a", "b"], how="left").select(
         "a", "b", F.coalesce("support", F.lit(0)).cast("bigint").alias("support")
     )
-    if guard:
-        n_unstable = final.filter(F.col("support") < min_sup).count()
-        if n_unstable:
-            raise RuntimeError(
-                f"k_truss did not converge in {rounds} rounds: "
-                f"{n_unstable} edges still below support {min_sup}; "
-                "raise `rounds`"
-            )
+    n_unstable = final.filter(F.col("support") < min_sup).count()
+    if n_unstable:
+        raise RuntimeError(
+            f"k_truss did not converge in {rounds} rounds: "
+            f"{n_unstable} edges still below support {min_sup}; "
+            "raise `rounds`"
+        )
     return final
 
 
@@ -1150,7 +1141,6 @@ def trussness(
     rounds: int = 4,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
 ) -> DataFrame:
     """Full truss decomposition: each edge's truss number (the max k
     for which it survives in the k-truss) — the edge-level analogue
@@ -1160,11 +1150,10 @@ def trussness(
     survivor set; an edge's trussness is the last k it survived
     (2 if it never makes the 3-truss).
 
-    With ``guard=True`` a final peel at k_max + 1 must come up empty
-    (otherwise trussness k_max would be a silent truncation —
-    RuntimeError instead). Per sweep: one triangle-support
-    enumeration on the shrinking survivor set. Returns (a, b,
-    trussness).
+    A final peel at k_max + 1 must come up empty (otherwise trussness
+    k_max would be a silent truncation — RuntimeError instead). Per
+    sweep: one triangle-support enumeration on the shrinking survivor
+    set. Returns (a, b, trussness).
 
     Checkpoint discipline: every 8th sweep the survivor set is
     rebased through a REAL parquet write/read. Chains of >~12
@@ -1175,7 +1164,6 @@ def trussness(
     long iterative jobs use, and it is what a cluster deployment
     would do anyway (with `TMPDIR` on a shared filesystem).
     """
-    from onionnet_spark.operators.ckpt import IterCheckpointer
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
@@ -1208,21 +1196,18 @@ def trussness(
                 .select("a", "b")
             )
         tagged.append(remaining.select("a", "b", F.lit(k).alias("k")))
-    if guard:
-        over = (
-            support(remaining)
-            .filter(F.col("support") >= k_max - 1)
-            .select("a", "b")
+    # a cheap sufficient check that the schedule was long enough: no
+    # edge meets the (k_max+1)-truss support bar after the k_max peel
+    over = (
+        support(remaining)
+        .filter(F.col("support") >= k_max - 1)
+        .select("a", "b")
+    )
+    if over.take(1):
+        raise RuntimeError(
+            f"trussness: edges exceed the k_max={k_max} schedule of "
+            f"{rounds} rounds per k; raise k_max"
         )
-        # one sweep at k_max+1 must already be a strict reduction to
-        # empty after `rounds` would-be sweeps; a cheap sufficient
-        # check: no edge meets the (k_max+1)-truss support bar after
-        # the k_max peel converged
-        if over.take(1):
-            raise RuntimeError(
-                f"trussness: edges exceed the k_max={k_max} schedule; "
-                "raise k_max"
-            )
     out = tagged[0]
     for t in tagged[1:]:
         out = out.unionByName(t)
@@ -1236,7 +1221,6 @@ def maximal_matching(
     rounds: int = 5,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
 ) -> DataFrame:
     """Greedy maximal matching by distributed symmetry breaking
     (the classic local-min-edge rule): an edge joins the matching
@@ -1247,9 +1231,8 @@ def maximal_matching(
     aggregations (per-node min priority) plus two semi/anti joins —
     no global ordering anywhere.
 
-    With ``guard=True`` a RuntimeError is raised if edges survive
-    the round budget (the matching would be non-maximal). Returns
-    the matched edges (a, b).
+    A RuntimeError is raised if edges survive the round budget (the
+    matching would be non-maximal). Returns the matched edges (a, b).
     """
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
@@ -1291,9 +1274,10 @@ def maximal_matching(
             .join(mnodes.select(F.col("node").alias("b")), on="b", how="left_anti")
             .localCheckpoint()
         )
-    if guard and e.count():
+    n_left = e.count()
+    if n_left:
         raise RuntimeError(
-            f"maximal_matching: {e.count()} edges remain after {rounds} "
+            f"maximal_matching: {n_left} edges remain after {rounds} "
             "rounds; raise `rounds`"
         )
     return matched.select("a", "b")
@@ -1304,7 +1288,6 @@ def maximal_independent_set(
     rounds: int = 6,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
 ) -> DataFrame:
     """Luby's maximal independent set — the other classic distributed
     symmetry-breaking primitive next to maximal_matching: each round,
@@ -1316,9 +1299,9 @@ def maximal_independent_set(
     node-keyed neighbor-min aggregation plus anti-joins — no global
     ordering anywhere, the 100 TB shape.
 
-    With ``guard=True`` a RuntimeError is raised if active nodes
-    survive the round budget (the set would not be maximal). Returns
-    the MIS members as (node).
+    A RuntimeError is raised if active nodes survive the round budget
+    (the set would not be maximal). Returns the MIS members as
+    (node).
     """
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
@@ -1373,9 +1356,10 @@ def maximal_independent_set(
             .join(active.select(F.col("node").alias("b")), on="b", how="left_semi")
             .localCheckpoint()
         )
-    if guard and active.count():
+    n_left = active.count()
+    if n_left:
         raise RuntimeError(
-            f"maximal_independent_set: {active.count()} nodes still active "
+            f"maximal_independent_set: {n_left} nodes still active "
             f"after {rounds} rounds; raise `rounds`"
         )
     return mis.select("node")
@@ -1501,7 +1485,6 @@ def boruvka_msf(
     weight_col: str = "w",
     rounds: int = 8,
     cc_iterations: int = 25,
-    guard: bool = True,
 ) -> DataFrame:
     """Minimum spanning forest by Borůvka's algorithm — THE
     distributed MST (Kruskal/Prim are inherently sequential): every
@@ -1516,9 +1499,9 @@ def boruvka_msf(
     O(log n) rounds total and the propagation loop runs on
     component-count-sized data, never the edge list.
 
-    Returns the forest edges (a, b, w). With ``guard=True`` a
-    RuntimeError is raised if cross-component edges survive the
-    round budget or a contraction fails to converge.
+    Returns the forest edges (a, b, w). A RuntimeError is raised if
+    cross-component edges survive the round budget or a contraction
+    fails to converge.
     """
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
@@ -1630,11 +1613,10 @@ def boruvka_msf(
             if changed == 0:
                 break
         else:
-            if guard:
-                raise RuntimeError(
-                    "boruvka_msf: component contraction did not converge; "
-                    "raise cc_iterations"
-                )
+            raise RuntimeError(
+                f"boruvka_msf: component contraction did not converge in "
+                f"{cc_iterations} rounds; raise cc_iterations"
+            )
         labels = (
             labels.join(
                 cur.select(F.col("lbl"), F.col("m")), on="lbl", how="left"
@@ -1643,27 +1625,22 @@ def boruvka_msf(
             .localCheckpoint()
         )
     else:
-        if guard:
-            left = (
-                e.join(
-                    labels.select(
-                        F.col("node").alias("a"), F.col("lbl").alias("la")
-                    ),
-                    on="a",
-                )
-                .join(
-                    labels.select(
-                        F.col("node").alias("b"), F.col("lbl").alias("lb")
-                    ),
-                    on="b",
-                )
-                .filter(F.col("la") != F.col("lb"))
+        left = (
+            e.join(
+                labels.select(F.col("node").alias("a"), F.col("lbl").alias("la")),
+                on="a",
             )
-            if left.take(1):
-                raise RuntimeError(
-                    f"boruvka_msf: cross-component edges remain after "
-                    f"{rounds} rounds; raise `rounds`"
-                )
+            .join(
+                labels.select(F.col("node").alias("b"), F.col("lbl").alias("lb")),
+                on="b",
+            )
+            .filter(F.col("la") != F.col("lb"))
+        )
+        if left.take(1):
+            raise RuntimeError(
+                f"boruvka_msf: cross-component edges remain after "
+                f"{rounds} rounds; raise `rounds`"
+            )
     return (forest if forest is not None else e.limit(0)).select("a", "b", "w")
 
 
@@ -1672,7 +1649,6 @@ def greedy_coloring(
     rounds: int = 10,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
 ) -> DataFrame:
     """Jones-Plassmann distributed greedy graph coloring: each round,
     every uncolored node whose deterministic md5 priority is STRICTLY
@@ -1755,9 +1731,10 @@ def greedy_coloring(
         # schedule's tail is a provable no-op — skip it
         if not uncolored.take(1):
             break
-    if guard and uncolored.count():
+    n_left = uncolored.count()
+    if n_left:
         raise RuntimeError(
-            f"greedy_coloring: {uncolored.count()} nodes uncolored after "
+            f"greedy_coloring: {n_left} nodes uncolored after "
             f"{rounds} rounds; raise `rounds`"
         )
     return colored.select("node", F.col("color").cast("int").alias("color"))
@@ -2093,8 +2070,8 @@ def count_paths_to(
     Each round's count frame is node-keyed, so under the broadcast
     budget it is broadcast over the persisted edge cache, which is
     never exchanged or sorted. Like the BFS loop, a round is a lazy
-    cut that its own row count materializes, and an empty round ends
-    the loop.
+    cut counted in one job (`IterCheckpointer.cut_count`), and an
+    empty round ends the loop.
     """
     small_state = graph.cached_n_nodes() <= BROADCAST_MAX
     e = graph.cached_endpoints("downstream").select(*EDGE_KEY)
@@ -2104,14 +2081,15 @@ def count_paths_to(
         None, "dst", "src", F.count("*").cast("bigint").alias("c"),
     ).localCheckpoint()
     total = cur
+    ck = IterCheckpointer(prefix="onionnet_paths_")
     for _ in range(max_len - 1):
-        cur = _push(
-            e, cur, "dst", "src", F.sum("c").cast("bigint").alias("c"),
-            bcast=small_state,
-        ).localCheckpoint(eager=False)
-        # a row count of the cut's JVM rows materializes it in one
-        # job; DataFrame.count() would add an aggregation stage
-        if not cur._jdf.queryExecution().toRdd().count():
+        cur, n = ck.cut_count(
+            _push(
+                e, cur, "dst", "src", F.sum("c").cast("bigint").alias("c"),
+                bcast=small_state,
+            )
+        )
+        if not n:
             break
         total = total.unionByName(cur)
     return total.groupBy(*NODE_KEY).agg(F.sum("c").cast("bigint").alias("n_paths"))
@@ -2211,7 +2189,6 @@ def coreness(
     k_max: int = 12,
     a_col: str = "a",
     b_col: str = "b",
-    guard: bool = True,
     max_sweeps: int | None = None,
 ) -> DataFrame:
     """Full k-core decomposition: every node's core number (the
@@ -2226,8 +2203,8 @@ def coreness(
     which would miss nodes whose last edges vanished via neighbor
     loss.
 
-    With ``guard=True`` a RuntimeError is raised if nodes survive
-    the whole schedule (their coreness would exceed k_max-1).
+    A RuntimeError is raised if nodes survive the whole schedule
+    (their coreness would exceed k_max-1).
     ``max_sweeps`` bounds total work across all phases; the default
     (None) derives the bound from the data as |V| + k_max — the true
     worst case, reached by path graphs that peel one end-pair per
@@ -2257,8 +2234,6 @@ def coreness(
         # one end-pair per sweep), derived from the data instead of
         # a constant that under-shoots long cascades
         max_sweeps = adj.select("u").distinct().count() + k_max
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
     ck = IterCheckpointer(prefix="onionnet_coreness_")
     removed = None
     sweeps = 0
@@ -2293,9 +2268,10 @@ def coreness(
                 else removed.unionByName(gone).localCheckpoint(eager=False)
             )
             adj, n_rows = nxt, n_new
-    if guard and n_rows:
+    if n_rows:
         raise RuntimeError(
-            f"coreness: nodes remain after k_max={k_max}; raise k_max"
+            f"coreness: nodes remain after k_max={k_max} ({sweeps} sweeps); "
+            "raise k_max"
         )
     if removed is None:
         return literal_frame(adj.sparkSession, [], "node string, coreness int")
@@ -3054,8 +3030,6 @@ def onion_decomposition(
     n_remaining = nodes.count()
     if max_rounds is None:
         max_rounds = n_remaining + 1
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
     ck = IterCheckpointer(prefix="onionnet_onion_")
     out = None
     k_cur = 0

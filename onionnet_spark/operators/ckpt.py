@@ -63,10 +63,10 @@ class IterCheckpointer:
 
     def cut(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``eager=False`` defers materialization to the caller's next
-        action (r11): loops shaped `nxt = cut(nxt); n = nxt.count()`
-        pay one job per level instead of two — the count IS the
-        materialization. Only the localCheckpoint arm defers; the
-        parquet rebase is a write and stays eager by nature."""
+        action, so the cut costs no job of its own (`cut_count` is
+        that action for a loop that counts each cut). Only the
+        localCheckpoint arm defers; the parquet rebase is a write and
+        stays eager by nature."""
         self._n += 1
         if self.rebase_every and self._n % self.rebase_every == 0:
             if self._dir is None:
@@ -78,3 +78,11 @@ class IterCheckpointer:
             df.write.mode("overwrite").parquet(path)
             return df.sparkSession.read.parquet(path)
         return df.localCheckpoint(eager=eager)
+
+    def cut_count(self, df: DataFrame) -> tuple[DataFrame, int]:
+        """A lazy cut of `df` and its row count in ONE Spark job: the
+        count of the cut's JVM rows is the action that materializes
+        it. (`DataFrame.count()` on a lazy cut runs two jobs under
+        AQE: its aggregation stage is a job of its own.)"""
+        cut = self.cut(df, eager=False)
+        return cut, cut._jdf.queryExecution().toRdd().count()

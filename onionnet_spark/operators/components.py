@@ -28,8 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import BROADCAST_MAX, OnionGraph
+from onionnet_spark.core import BROADCAST_MAX, OnionGraph, split_node_key
 from onionnet_spark.operators.ckpt import IterCheckpointer
+from onionnet_spark.operators.traversal import _relax
 
 
 def _star_round(edges: DataFrame) -> DataFrame:
@@ -217,7 +218,9 @@ def strongly_connected_components(
          node in diameter rounds; coloring never runs.
       2. COLOR: propagate min node key FORWARD to fixpoint, so
          color(v) = min key among remaining nodes that reach v.
-         Nodes with color == own key are pivots.
+         Nodes with color == own key are pivots. This is the frontier
+         relaxation loop, `traversal._relax`: only the nodes whose
+         color improved move in the next round.
       3. COLLECT: backward BFS from each pivot restricted to its
          color class; everything reached both reaches the pivot
          (backward walk) and is reached by it (same color) → one SCC
@@ -292,41 +295,14 @@ def strongly_connected_components(
         if n_active == 0:
             break
         # --- 2. forward min-color propagation to fixpoint ---------------
-        colors = active.select("key", F.col("key").alias("color")).localCheckpoint()
-        while True:
-            cand = (
-                edges.join(
-                    colors.select(
-                        F.col("key").alias("src"), F.col("color").alias("src_color")
-                    ),
-                    on="src",
-                )
-                .groupBy(F.col("dst").alias("key"))
-                .agg(F.min("src_color").alias("nbr_color"))
-            )
-            # the update join carries an 'improved' flag so the
-            # convergence check is a metadata-cheap filter over the
-            # just-materialized checkpoint, not a second full
-            # colors-vs-new_colors shuffle join (the CC/Boruvka
-            # pattern)
-            new_colors = (
-                colors.join(cand, on="key", how="left")
-                .select(
-                    "key",
-                    F.least(
-                        F.col("color"), F.coalesce("nbr_color", "color")
-                    ).alias("color"),
-                    (
-                        F.col("nbr_color").isNotNull()
-                        & (F.col("nbr_color") < F.col("color"))
-                    ).alias("improved"),
-                )
-                .localCheckpoint()
-            )
-            changed = new_colors.filter("improved").limit(1).count()
-            colors = new_colors.drop("improved")
-            if changed == 0:
-                break
+        # a color moves one edge per round along a simple path, so
+        # n_active rounds always reach the fixpoint
+        colors = _relax(
+            edges, active.select("key", F.col("key").alias("color")), ["key"],
+            ["src"], ["dst"], "color", F.col("color"), "min",
+            "strongly_connected_components", n_active,
+            "a coloring needs at most one round per node", n_seed=n_active,
+        )
         # --- 3. backward collect from pivots within color classes -------
         same_color_edges = (
             edges.join(
@@ -383,13 +359,7 @@ def strongly_connected_components(
     out = done[0]
     for d in done[1:]:
         out = out.unionByName(d)
-    return out.select(
-        F.split_part(F.col("key"), F.lit(":"), F.lit(1)).alias("layer"),
-        F.substring(
-            F.col("key"), F.length(F.split_part(F.col("key"), F.lit(":"), F.lit(1))) + 2, 2_000_000
-        ).alias("node_id"),
-        "component",
-    )
+    return out.select(*split_node_key("key"), "component")
 
 
 def label_propagation_communities(
@@ -534,16 +504,7 @@ def spread_labels(
             .select("key", "label", F.lit(r).alias("spread_round"))
         )
         labeled = labeled.unionByName(adopted).localCheckpoint()
-    return labeled.select(
-        F.split_part(F.col("key"), F.lit(":"), F.lit(1)).alias("layer"),
-        F.substring(
-            F.col("key"),
-            F.length(F.split_part(F.col("key"), F.lit(":"), F.lit(1))) + 2,
-            2_000_000,
-        ).alias("node_id"),
-        "label",
-        "spread_round",
-    )
+    return labeled.select(*split_node_key("key"), "label", "spread_round")
 
 
 def condensation_graph(

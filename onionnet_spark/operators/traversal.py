@@ -1,4 +1,6 @@
-"""BFS traversals: k-hop ego search, reachability, on-shortest-path.
+"""Traversals: k-hop ego search, reachability, on-shortest-path, and
+the relaxation fixpoints (weighted distances, topological levels,
+time-respecting arrival).
 
 Reference parity: ``onionnet/searcher.py``:
   - search (searcher.py:157-242): k-hop ego subgraph in
@@ -16,9 +18,20 @@ column-pruned edge endpoints, dedups on the node key and anti-joins
 the visited levels. The frontier and the visited side are broadcast
 while their counted sizes fit core.BROADCAST_MAX, so the edge
 side is never shuffled; past it the joins fall back to shuffles. Each level
-past the seed is a lazy checkpoint that its own count materializes —
-one job per level — and every tenth cut is a parquet rebase
-(ckpt.IterCheckpointer), so plans stay flat at any depth.
+past the seed is a lazy checkpoint counted in the job that
+materializes it (`IterCheckpointer.cut_count`), and every tenth cut
+is a parquet rebase (ckpt.IterCheckpointer), so plans stay flat at
+any depth.
+
+Every fixpoint of the form best(v) = agg(cand(u, e)) runs ONE
+frontier relaxation loop, `_relax`, the Pregelix shape of an
+iterated join/group-by over the vertex relation and the live
+messages: the nodes that improved last round join the edges, the
+candidates aggregate at the far end, and only the improved nodes go
+on. Its callers: `weighted_sssp` (min of dist + w),
+`topological_levels` (max of level + 1), `temporal_earliest_arrival`
+(min of t over edges with t >= arrival) and the forward coloring of
+`components.strongly_connected_components` (min of color).
 
 Driver-side seeds, stop probes, target sets and small results are
 JVM literal frames (core.literal_frame), never a Python list passed
@@ -38,10 +51,16 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from onionnet_spark.core import BROADCAST_MAX, NODE_KEY, OnionGraph, literal_frame
+from onionnet_spark.core import (
+    BROADCAST_MAX,
+    EDGE_KEY,
+    NODE_KEY,
+    OnionGraph,
+    literal_frame,
+)
 from onionnet_spark.operators.ckpt import IterCheckpointer
 
 
@@ -116,8 +135,7 @@ def _bfs_levels(
     ident = [*carry, *key]
     ck = IterCheckpointer(prefix="onionnet_bfs_")
     if n_seed is None:
-        frontier = seed.localCheckpoint(eager=False)
-        n = frontier.count()
+        frontier, n = ck.cut_count(seed)
     else:
         frontier, n = seed, n_seed
     levels, counts = [frontier], [n]
@@ -157,13 +175,99 @@ def _bfs_levels(
             .dropDuplicates(ident)
             .join(visited, on=ident, how="left_anti")
         )
-        # lazy cut: the count materializes it, one job per level
-        frontier = ck.cut(nxt, eager=False)
-        n = frontier.count()
+        frontier, n = ck.cut_count(nxt)
         if n:
             levels.append(frontier)
             counts.append(n)
     return levels
+
+
+def _relax(
+    edges: DataFrame,
+    seed: DataFrame,
+    key: list[str],
+    src: list[str],
+    dst: list[str],
+    val: str,
+    cand: Column,
+    agg: str,
+    name: str,
+    rounds: int,
+    hint: str,
+    keep: Column | None = None,
+    hops: int = 1,
+    n_seed: int | None = None,
+) -> DataFrame:
+    """The frontier relaxation loop: best(v) = agg(cand(u, e)) over
+    edges e = (u, v) to fixpoint, as (key + val) rows.
+
+    `edges` maps the node key columns `src` to `dst`, both parallel to
+    `key`; `cand` is an expression over the edge columns and the
+    frontier's `val`, `keep` an optional edge predicate over the same,
+    and `agg` is "min" or "max". `seed` is the initial best (key +
+    val); `n_seed` is its row count when the caller knows it is
+    distinct, else the loop drops duplicate keys and counts it.
+
+    Each round joins the frontier (the nodes that improved last round;
+    the seed at first) onto the edges at `src`, broadcast while its
+    counted size fits core.BROADCAST_MAX, and aggregates `cand` at
+    `dst`, chaining `hops` such hops lazily before the merge. A
+    candidate is kept when its node is new to best or it strictly
+    beats a non-NULL current value (a NULL value never improves). That
+    delta is a lazy cut counted in one job; an empty delta ends the
+    loop. It folds into best by a broadcast anti-join plus a union, so
+    best is never rewritten whole and the round's aggregation is
+    referenced once (a merge that read it twice evaluated it twice).
+    Best is cut every 2nd round. A round budget of `rounds` that runs
+    out raises a RuntimeError naming `name`, the count and `hint`.
+    """
+    ck = IterCheckpointer(prefix="onionnet_relax_")
+    if n_seed is None:
+        seed, n_seed = ck.cut_count(seed.dropDuplicates(key))
+    best = frontier = seed
+    n = n_seed
+    fold = F.min if agg == "min" else F.max
+    beats = F.col(val) < F.col("_cur") if agg == "min" else F.col(val) > F.col("_cur")
+    for rnd in range(1, rounds + 1):
+        hop, reached = frontier, []
+        for h in range(hops):
+            # an intra-round hop's size is unknown until the round is
+            # cut: its broadcast keeps fan-out headroom
+            f = hop.select(*(F.col(k).alias(s) for k, s in zip(key, src)), val)
+            if n <= (BROADCAST_MAX if h == 0 else BROADCAST_MAX // 8):
+                f = F.broadcast(f)
+            j = edges.join(f, on=src)
+            if keep is not None:
+                j = j.filter(keep)
+            hop = j.groupBy(*(F.col(d).alias(k) for k, d in zip(key, dst))).agg(
+                fold(cand).alias(val)
+            )
+            reached.append(hop)
+        cands = reduce(DataFrame.unionByName, reached).groupBy(*key).agg(
+            fold(val).alias(val)
+        )
+        cur = best.select(*key, F.col(val).alias("_cur"), F.lit(1).alias("_seen"))
+        delta, n = ck.cut_count(
+            cands.join(cur, on=key, how="left")
+            .filter(F.col("_seen").isNull() | (F.col("_cur").isNotNull() & beats))
+            .select(*key, val)
+        )
+        if not n:
+            return best
+        gone = delta.select(*key)
+        best = best.join(
+            F.broadcast(gone) if n <= BROADCAST_MAX else gone, on=key, how="left_anti"
+        ).unionByName(delta)
+        # every query over best re-broadcasts the deltas folded since
+        # its last cut: a cut every 4th round made topological_levels
+        # and weighted_sssp 15-40% slower at sf0.1 (4 vCPU)
+        if rnd % 2 == 0:
+            best = ck.cut(best, eager=False)
+        frontier = delta
+    raise RuntimeError(
+        f"{name} did not converge within {rounds} rounds ({n} values still "
+        f"improving); {hint}"
+    )
 
 
 def _keyed_levels(
@@ -412,112 +516,48 @@ def weighted_sssp(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Single/multi-source shortest WEIGHTED distances (non-negative
-    weights) by frontier Bellman-Ford relaxation.
+    weights) by frontier Bellman-Ford relaxation: `_relax` with
+    dist(v) = min(dist(u) + w(u, v)).
 
     Extends the reference's hop-count traversals (searcher.py uses
     graph-tool shortest_distance, which also accepts edge weights)
     to weighted edges. Each round relaxes only edges out of nodes
-    whose distance improved last round (delta relaxation), so late
-    rounds touch a shrinking frontier; the distance map is
-    localCheckpoint-ed per round to keep lineage flat. Rounds needed
-    = longest shortest-path edge count, NOT graph size.
+    whose distance improved last round, so rounds needed = longest
+    shortest-path edge count + 1, NOT graph size; a budget of
+    `max_iterations` rounds that runs out raises RuntimeError.
+    Negative weights raise ValueError. Repeated sources count once.
 
     Returns DataFrame(layer, node_id, dist: double).
     """
     if direction not in ("downstream", "upstream"):
         raise ValueError("direction must be 'upstream' or 'downstream'")
-    e = graph.edges
-    if direction == "downstream":
-        edges = e.select(
-            "src_layer", "src_id", "dst_layer", "dst_id", F.col(weight_col).alias("w")
-        )
-    else:
-        edges = e.select(
-            F.col("dst_layer").alias("src_layer"),
-            F.col("dst_id").alias("src_id"),
-            F.col("src_layer").alias("dst_layer"),
-            F.col("src_id").alias("dst_id"),
-            F.col(weight_col).alias("w"),
-        )
-    edges = edges.persist()
+    edges = graph.edges.select(*EDGE_KEY, F.col(weight_col).alias("w")).persist()
     try:
-        # Bellman-Ford requires non-negative weights for the delta
-        # relaxation to terminate at true shortest distances; verify
-        # up-front (one cheap agg over the persisted edges) rather
-        # than looping forever or converging to garbage.
-        min_w = edges.agg(F.min("w").alias("mw")).collect()[0]["mw"]
+        # the delta relaxation reaches true shortest distances only
+        # with non-negative weights: check up front (one cheap agg
+        # over the persisted edges)
+        min_w = edges.agg(F.min("w")).first()[0]
         if min_w is not None and min_w < 0:
             raise ValueError(
                 f"weighted_sssp requires non-negative edge weights; "
                 f"found min weight {min_w}"
             )
-        spark = graph.nodes.sparkSession
-        dist = (
-            literal_frame(
-                spark,
-                [(l, str(i), 0.0) for (l, i) in sources],
-                "layer string, node_id string, dist double",
-            )
-            .localCheckpoint()
+        uniq = _uniq(sources)
+        seed = literal_frame(
+            graph.nodes.sparkSession,
+            [(l, i, 0.0) for (l, i) in uniq],
+            "layer string, node_id string, dist double",
         )
-        improved = dist
-        # one checkpoint + one (metadata-cheap) count per round: the
-        # relaxation merges into the distance map with a single FULL
-        # OUTER join carrying an 'improved' flag, instead of separate
-        # improved-set + anti-join/union rebuild jobs. (An inner+anti
-        # delta split that never exchanges `dist` was tried in r10
-        # and regressed ~2x: the unmaterialized relaxation
-        # aggregation appeared in two branches and was evaluated
-        # twice per round.)
-        n_improved = dist.count()
-        for _ in range(max_iterations):
-            f = improved.select(
-                F.col("layer").alias("src_layer"),
-                F.col("node_id").alias("src_id"),
-                "dist",
-            )
-            if n_improved <= BROADCAST_MAX:
-                f = F.broadcast(f)
-            cand = (
-                edges.join(f, on=["src_layer", "src_id"])
-                .groupBy(
-                    F.col("dst_layer").alias("layer"),
-                    F.col("dst_id").alias("node_id"),
-                )
-                .agg(F.min(F.col("dist") + F.col("w")).alias("cand_dist"))
-            )
-            new_dist = (
-                dist.join(cand, on=NODE_KEY, how="full")
-                .select(
-                    "layer",
-                    "node_id",
-                    F.least(
-                        F.coalesce("dist", "cand_dist"),
-                        F.coalesce("cand_dist", "dist"),
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull()
-                        | (F.col("cand_dist") < F.col("dist"))
-                    ).alias("improved"),
-                )
-                .localCheckpoint()
-            )
-            improved = new_dist.filter("improved").drop("improved")
-            dist = new_dist.drop("improved")
-            n_improved = improved.count()
-            if n_improved == 0:
-                break
-        if n_improved != 0:
-            # A non-empty frontier at cap means some shortest path
-            # has more than max_iterations edges: the distances in
-            # `dist` would be silently too large. Fail loudly.
-            raise RuntimeError(
-                f"weighted_sssp did not converge within {max_iterations} "
-                f"iterations ({n_improved} distances still improving); "
-                f"a shortest path exceeds the iteration cap — raise "
-                f"max_iterations"
-            )
-        return dist
+        ends = (EDGE_KEY[:2], EDGE_KEY[2:])
+        src, dst = ends if direction == "downstream" else ends[::-1]
+        # the result reads only the seed and the cut deltas, so the
+        # edges can go once the loop returns
+        return _relax(
+            edges, seed, NODE_KEY, src, dst, "dist", F.col("dist") + F.col("w"),
+            "min", "weighted_sssp", max_iterations,
+            "a shortest path exceeds the round cap, raise max_iterations",
+            n_seed=len(uniq),
+        )
     finally:
         edges.unpersist()
 
@@ -673,216 +713,64 @@ def temporal_earliest_arrival(
     (u, v, t) is traversable only if you arrived at u by time t.
 
     Relaxes  arrival(v) = min{ t of (u,v,t) : t >= arrival(u) }
-    to fixpoint, frontier-sparse like `weighted_sssp`: only nodes
-    whose arrival improved last round join the edge list in the
-    next. Sources have arrival NULL (reads as -infinity: all their
-    edges qualify) and are never improvable. Rounds are capped at
-    `max_rounds` with the same convergence contract as the other
-    iterative operators: the loop stops early on an empty frontier,
-    and a RuntimeError is raised if the cap is hit while the
-    frontier is still non-empty (silent truncation would report
-    too-late arrivals).
-
-    Scale shape: per round one equi-join on the source key with the
-    temporal filter applied inside the join, then a min-aggregate on
-    the destination key — hop-BFS shuffle economics; the frontier
-    broadcasts while small under AQE. The per-round merge is
-    DELTA-DRIVEN (r9 VERDICT item 3, the k-core delta-ledger shape):
-    only the frontier-sized candidate set is materialized each round;
-    `best` is never shuffled — improvements are detected by joining
-    the small candidate set against it and folded back in with a
-    broadcast anti-join + union, checkpointed every few rounds to
-    bound lineage. The old full-outer merge re-exchanged (and
-    re-materialized) the WHOLE best table every round.
+    to fixpoint through `_relax`: only nodes whose arrival improved
+    last round join the edge list in the next. Sources (the first
+    column of `sources`, duplicates dropped) have arrival NULL: it
+    reads as -infinity, so all their edges qualify, and it is never
+    improved. The loop stops on an empty delta; a RuntimeError is
+    raised if round `max_rounds` + 1 still finds improvements (silent
+    truncation would report too-late arrivals).
 
     `hops_per_round` > 1 expands the frontier that many hops INSIDE
     one round (lazy join chain, no barrier between hops) before the
-    single delta merge — so an improvement propagates k hops per
-    materialization and the round count (the per-round scheduling
-    constant dominates at small data; at 100 TB it is the number of
-    cluster-wide barriers) drops by ~k. Sound because relaxation is
-    monotone label-correcting: an intra-round hop relaxes from a
-    CANDIDATE arrival that may be worse than (or tie) the node's
-    final best, which can only under-qualify edges — never admit an
-    invalid path — and any node whose best actually improves lands
-    in the round's delta, so its out-edges are re-relaxed with the
-    improved value next round. The fixpoint (empty delta) is
-    therefore the same under any hops_per_round; the convergence
-    guard caps OUTER rounds, i.e. total depth <= max_rounds *
-    hops_per_round.
+    single delta merge, so the number of materialization barriers
+    drops by ~k. Sound because relaxation is monotone
+    label-correcting: an intra-round hop relaxes from a CANDIDATE
+    arrival that may be worse than (or tie) the node's final best,
+    which can only under-qualify edges — never admit an invalid path
+    — and any node whose best improves lands in the round's delta, so
+    its out-edges are re-relaxed with the improved value next round.
+    The fixpoint is therefore the same under any hops_per_round;
+    total depth <= max_rounds * hops_per_round.
     """
     e = edges.select(
         F.col(src_col).alias("u"),
         F.col(dst_col).alias("v"),
         F.col(ts_col).alias("t"),
     ).localCheckpoint()
-    ts_type = e.schema["t"].dataType
-    best = sources.select(
+    seed = sources.select(
         F.col(sources.columns[0]).alias("node"),
-        F.lit(None).cast(ts_type).alias("arrival"),
-    ).localCheckpoint()
-    frontier = best
-    n_frontier = best.count()
-    for round_no in range(max_rounds + 1):
-        hop, per_hop = frontier, []
-        for hop_no in range(max(1, hops_per_round)):
-            # Broadcast the frontier into the edge join while it fits:
-            # the checkpointed edge list is then scanned, never
-            # exchanged or sorted, on every hop (without the hint the
-            # planner has no stats for either checkpointed side and
-            # falls back to a full sort-merge of the edges each hop).
-            # Intra-round hops past the first are LAZY (size unknown
-            # until the round materializes), so their broadcast is
-            # gated on the last measured frontier with fan-out
-            # headroom; past the budget the shuffle join returns.
-            if hop_no == 0:
-                small = n_frontier <= BROADCAST_MAX
-            else:
-                small = n_frontier <= BROADCAST_MAX // 8
-            h = F.broadcast(hop) if small else hop
-            reached = (
-                h.join(e, on=h["node"] == e["u"])
-                .filter(
-                    F.col("arrival").isNull() | (F.col("t") >= F.col("arrival"))
-                )
-                .groupBy(F.col("v").alias("node"))
-                .agg(F.min("t").alias("arrival"))
-            )
-            per_hop.append(reached)
-            hop = reached
-        cands = per_hop[0]
-        for nxt in per_hop[1:]:
-            cands = cands.unionByName(nxt)
-        reached = cands.groupBy("node").agg(F.min("arrival").alias("cand"))
-        # improvements only: a candidate survives if its node is new
-        # to best (`seen` NULL) or strictly earlier than the current
-        # non-NULL arrival (a source's NULL arrival reads as
-        # -infinity, never improvable). One left join referencing the
-        # round's hop chain exactly ONCE — an inner+anti split that
-        # streams `best` was tried in r10 and regressed 2-4x: the
-        # unmaterialized hop aggregation appeared in both branches
-        # and was evaluated twice per round, which costs far more
-        # than this (delta-bounded) exchange of the best table saves.
-        # lazy checkpoint + count = ONE Spark job per round (the cut
-        # materializes inside the count); an eager cut + isEmpty would
-        # schedule two.
-        delta = (
-            reached.join(
-                best.select(
-                    "node", F.col("arrival").alias("cur"), F.lit(1).alias("seen")
-                ),
-                on="node",
-                how="left",
-            )
-            .filter(
-                F.col("seen").isNull()
-                | (F.col("cur").isNotNull() & (F.col("cand") < F.col("cur")))
-            )
-            .select("node", F.col("cand").alias("arrival"))
-            .localCheckpoint(eager=False)
-        )
-        n_frontier = delta.count()
-        if n_frontier == 0:
-            return best
-        if round_no == max_rounds:
-            raise RuntimeError(
-                f"temporal_earliest_arrival did not converge in "
-                f"{max_rounds} rounds; raise `max_rounds`"
-            )
-        # fold the delta in lazily: broadcast anti-join (delta is the
-        # small build side) + union — no checkpoint job, no exchange
-        # of best; every 4th round the grown lineage gets a lazy cut
-        # that materializes inside the next round's delta job.
-        best = best.join(
-            F.broadcast(delta.select("node")), on="node", how="left_anti"
-        ).unionByName(delta)
-        if (round_no + 1) % 4 == 0:
-            best = best.localCheckpoint(eager=False)
-        frontier = delta
-    return best
+        F.lit(None).cast(e.schema["t"].dataType).alias("arrival"),
+    )
+    return _relax(
+        e, seed, ["node"], ["u"], ["v"], "arrival", F.col("t"), "min",
+        "temporal_earliest_arrival", max_rounds + 1, "raise `max_rounds`",
+        keep=F.col("arrival").isNull() | (F.col("t") >= F.col("arrival")),
+        hops=max(1, hops_per_round),
+    )
 
 
-def topological_levels(
-    graph: OnionGraph, max_iterations: int = 20, guard: bool = True
-) -> DataFrame:
+def topological_levels(graph: OnionGraph, max_iterations: int = 20) -> DataFrame:
     """Topological generation of every node in a DAG: level(v) =
     length of the LONGEST directed path reaching v (sources sit at
     0) — the layer scheduler's view of an onion graph (everything at
     level k depends only on levels < k), and a cycle detector for
-    free: a cycle keeps relaxing forever, so hitting the iteration
-    cap with changes still flowing raises (like weighted_sssp's
-    convergence guard).
+    free: a cycle keeps relaxing forever, so a budget of
+    `max_iterations` rounds that runs out raises RuntimeError.
 
-    Frontier-sparse max-relaxation (delta scheduling, the
-    weighted_sssp shape): only nodes whose level CHANGED last round
-    join the edge list in the next, so each round touches a
-    shrinking frontier instead of the whole graph (the dense
-    variant re-joined all |E| x |V| every round — 47s -> frontier
-    cost at sf0.1, r8 sweep). Monotone relaxation reaches the same
-    fixpoint under any schedule. Converges in longest-path-depth
-    rounds. Returns (layer, node_id, level).
+    `_relax` with level(v) = max(level(u) + 1) from every node at
+    level 0 (the node table holds each node once, so the seed needs
+    no dedup), over the graph's cached downstream endpoints: only
+    nodes whose level changed last round join the edge list in the
+    next. Monotone relaxation reaches the same fixpoint under any
+    schedule, in longest-path-depth + 1 rounds. Returns (layer,
+    node_id, level).
     """
-    e = graph.edge_endpoints().select(
-        F.concat_ws(":", "src_layer", "src_id").alias("s"),
-        F.concat_ws(":", "dst_layer", "dst_id").alias("d"),
-    ).localCheckpoint()
-    lv = graph.nodes.select(
-        F.concat_ws(":", "layer", "node_id").alias("n"), F.lit(0).alias("level")
-    ).localCheckpoint()
-    changed = lv  # round 0: every node is newly levelled
-    # Frontier/delta tables are broadcast into the round's joins while
-    # they fit the budget (they are counted anyway for convergence),
-    # so the cached edge list and the level table are scanned — never
-    # exchanged or re-sorted — inside the loop. Round 0's frontier is
-    # the full node set, so it broadcasts only on small graphs; every
-    # later frontier is the (shrinking) improved set.
-    n_changed = graph.cached_n_nodes()
-    converged = False
-    for _ in range(max_iterations):
-        f = changed.withColumnRenamed("n", "s")
-        if n_changed <= BROADCAST_MAX:
-            f = F.broadcast(f)
-        upd = (
-            e.join(f, on="s")
-            .groupBy(F.col("d").alias("n"))
-            .agg((F.max("level") + 1).alias("cand"))
-        )
-        # upd is bounded by the frontier's out-neighborhood; its own
-        # broadcast is gated on the same frontier count (one hop of
-        # fan-out stays inside the budget's intent at these sizes —
-        # past the threshold the shuffle join takes over anyway).
-        if n_changed <= BROADCAST_MAX:
-            upd = F.broadcast(upd)
-        imp = (
-            upd.join(lv, on="n")
-            .filter(F.col("cand") > F.col("level"))
-            .select("n", F.col("cand").alias("level"))
-            .localCheckpoint()
-        )
-        n_changed = imp.count()
-        if n_changed == 0:
-            converged = True
-            break
-        new = imp.withColumnRenamed("level", "new")
-        if n_changed <= BROADCAST_MAX:
-            new = F.broadcast(new)
-        lv = (
-            lv.join(new, on="n", how="left")
-            .select("n", F.coalesce("new", "level").alias("level"))
-            .localCheckpoint()
-        )
-        changed = imp
-    if guard and not converged:
-        raise RuntimeError(
-            f"topological_levels: still relaxing after {max_iterations} "
-            "rounds — graph has a cycle or raise max_iterations"
-        )
-    # key split mirrors the oracle: everything after the FIRST ':'
-    # is the node_id (ids may themselves contain ':')
-    return lv.select(
-        F.split_part(F.col("n"), F.lit(":"), F.lit(1)).alias("layer"),
-        F.expr(
-            "substring(n, length(split_part(n, ':', 1)) + 2)"
-        ).alias("node_id"),
-        F.col("level").cast("int").alias("level"),
+    return _relax(
+        graph.cached_endpoints("downstream"),
+        graph.nodes.select(*NODE_KEY, F.lit(0).alias("level")),
+        NODE_KEY, EDGE_KEY[:2], EDGE_KEY[2:], "level", F.col("level") + 1, "max",
+        "topological_levels", max_iterations,
+        "the graph has a cycle, or raise max_iterations",
+        n_seed=graph.cached_n_nodes(),
     )

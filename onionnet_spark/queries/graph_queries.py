@@ -1524,7 +1524,6 @@ def graph_ktruss_q(spark, sf_dir):
         _cosupply_top_pairs(spark, sf_dir, _KTRUSS_TOPN),
         k=_KTRUSS_K,
         rounds=_KTRUSS_ROUNDS,
-        guard=True,
     )
 
 
@@ -1572,8 +1571,7 @@ def graph_trussness_q(spark, sf_dir):
     the edge-level analogue of graph_coreness. Parquet-rebased
     checkpointing every 8 sweeps (see trussness docstring)."""
     return analytics.trussness(
-        _cosupply_top_pairs(spark, sf_dir, 60), k_max=10, rounds=3,
-        guard=True,
+        _cosupply_top_pairs(spark, sf_dir, 60), k_max=10, rounds=3
     )
 
 
@@ -1891,7 +1889,7 @@ def _matching_oracle(topn: int = 60, rounds: int = 5) -> str:
 
 def graph_matching_q(spark, sf_dir):
     return analytics.maximal_matching(
-        _cosupply_top_pairs(spark, sf_dir, 60), rounds=5, guard=True
+        _cosupply_top_pairs(spark, sf_dir, 60), rounds=5
     )
 
 
@@ -1961,7 +1959,7 @@ def graph_mis_q(spark, sf_dir):
         F.concat_ws(":", "src_layer", "src_id").alias("a"),
         F.concat_ws(":", "dst_layer", "dst_id").alias("b"),
     )
-    return analytics.maximal_independent_set(e, rounds=6, guard=True)
+    return analytics.maximal_independent_set(e, rounds=6)
 
 
 _REG["graph_mis"] = (graph_mis_q, _mis_oracle())
@@ -2087,7 +2085,7 @@ def graph_coloring_q(spark, sf_dir):
         F.concat_ws(":", "src_layer", "src_id").alias("a"),
         F.concat_ws(":", "dst_layer", "dst_id").alias("b"),
     )
-    return analytics.greedy_coloring(e, rounds=4, guard=True)
+    return analytics.greedy_coloring(e, rounds=4)
 
 
 _REG["graph_coloring"] = (graph_coloring_q, _coloring_oracle())

@@ -477,6 +477,138 @@ def test_integer_propagations_match_python(
         assert rows(neighbor_agg(g, "val", direction), *cols) == want, direction
 
 
+def _dijkstra(edges, weights, seeds):
+    import heapq
+
+    adj = {}
+    for (u, v), w in zip(edges, weights):
+        adj.setdefault(u, []).append((v, float(w)))
+    dist, heap = {}, [(0.0, s) for s in seeds]
+    while heap:
+        d, u = heapq.heappop(heap)
+        if u not in dist:
+            dist[u] = d
+            for v, w in adj.get(u, ()):
+                heapq.heappush(heap, (d + w, v))
+    return dist
+
+
+@given(edge_lists, weight_lists, st.lists(node_ids, min_size=1, max_size=3))
+@settings(SET, max_examples=4)
+def test_weighted_sssp_matches_dijkstra(spark, edges, weights, seeds):
+    from onionnet_spark.operators.traversal import weighted_sssp
+
+    g, _ = _valued_graph_of(spark, edges, (), weights, [None] * 16)
+    src = [("l", s) for s in seeds]
+    down = _dist_map(weighted_sssp(g, src, "downstream", weight_col="w"), "layer")
+    assert down == {("l", n): d for n, d in _dijkstra(edges, weights, seeds).items()}
+    rev = [(v, u) for u, v in edges]
+    up = _dist_map(weighted_sssp(g, src, "upstream", weight_col="w"), "layer")
+    assert up == {("l", n): d for n, d in _dijkstra(rev, weights, seeds).items()}
+
+
+# edges u -> v with u < v: every such graph is a DAG
+dag_edge_lists = edge_lists.map(lambda es: [(u, v) for u, v in es if u < v])
+
+
+@given(dag_edge_lists, isolated_ids)
+@settings(SET, max_examples=4)
+def test_topological_levels_match_longest_paths(spark, edges, isolated):
+    import pytest
+
+    from onionnet_spark.operators.traversal import topological_levels
+
+    g, nodes = _graph_of(spark, edges, isolated)
+    level = dict.fromkeys(nodes, 0)
+    for u, v in sorted(edges):  # u ascending: level[u] is final
+        level[v] = max(level[v], level[u] + 1)
+    got = {int(r["node_id"]): r["level"] for r in topological_levels(g).collect()}
+    assert got == level
+    # a cycle keeps relaxing: the budget runs out and names the operator
+    cyc, _ = _graph_of(spark, edges + [(0, 12), (12, 0)])
+    with pytest.raises(RuntimeError, match="topological_levels did not converge.*cycle"):
+        topological_levels(cyc, max_iterations=4)
+
+
+temporal_edges = st.lists(
+    st.tuples(node_ids, node_ids, st.integers(min_value=0, max_value=9)),
+    max_size=24,
+    unique=True,
+)
+
+
+@given(temporal_edges, st.lists(node_ids, min_size=1, max_size=3))
+@settings(SET, max_examples=4)
+def test_temporal_earliest_arrival_matches_label_correcting(spark, edges, seeds):
+    from onionnet_spark.operators.traversal import temporal_earliest_arrival
+
+    # label-correcting to fixpoint; a source's None reads as -infinity
+    arrival = dict.fromkeys(seeds)
+    changed = True
+    while changed:
+        changed = False
+        for u, v, t in edges:
+            if u in arrival and (arrival[u] is None or t >= arrival[u]):
+                if v not in arrival or (arrival[v] is not None and t < arrival[v]):
+                    arrival[v] = t
+                    changed = True
+    e = spark.createDataFrame(edges or [(0, 0, 0)], "src int, dst int, ts long")
+    e = e if edges else e.limit(0)
+    s = spark.createDataFrame([(x,) for x in seeds], "node int")
+    for hops in (1, 2):
+        out = temporal_earliest_arrival(e, s, max_rounds=20, hops_per_round=hops)
+        rows = out.collect()
+        assert {r["node"]: r["arrival"] for r in rows} == arrival
+        assert len(rows) == len(arrival)
+
+
+def _tarjan(nodes, edges):
+    adj = {n: [] for n in nodes}
+    for u, v in edges:
+        adj[u].append(v)
+    index, low, stack, on, out = {}, {}, [], set(), []
+
+    def visit(v):
+        index[v] = low[v] = len(index)
+        stack.append(v)
+        on.add(v)
+        for w in adj[v]:
+            if w not in index:
+                visit(w)
+                low[v] = min(low[v], low[w])
+            elif w in on:
+                low[v] = min(low[v], index[w])
+        if low[v] == index[v]:
+            comp = set()
+            while v not in comp:
+                w = stack.pop()
+                on.discard(w)
+                comp.add(w)
+            out.append(frozenset(comp))
+
+    for n in nodes:
+        if n not in index:
+            visit(n)
+    return set(out)
+
+
+@given(edge_lists, st.lists(node_ids, min_size=2, max_size=5, unique=True))
+@settings(SET, max_examples=3)
+def test_strongly_connected_components_match_tarjan(spark, edges, cycle):
+    from onionnet_spark.operators.components import strongly_connected_components
+
+    # a planted cycle survives the trim, so the coloring always runs
+    planted = list(zip(cycle, cycle[1:] + cycle[:1]))
+    edges = sorted(set(edges) | set(planted))
+    g, nodes = _graph_of(spark, edges)
+    groups = {}
+    for r in strongly_connected_components(g).collect():
+        groups.setdefault(r["component"], set()).add(int(r["node_id"]))
+    assert {frozenset(v) for v in groups.values()} == _tarjan(nodes, edges)
+    for label, members in groups.items():
+        assert label == min(f"l:{n}" for n in members)
+
+
 texts = st.lists(
     st.text(alphabet="ab ", min_size=0, max_size=12), min_size=1, max_size=10
 )

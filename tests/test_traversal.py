@@ -303,3 +303,110 @@ def test_temporal_earliest_arrival_multihop_rounds_same_fixpoint(spark):
            ).collect()}
     assert got == want
     assert got["x3"] == d(3) and got["e"] == d(4) and got["b"] == d(2)
+
+
+def test_repeated_seeds_return_the_rows_of_one_seed(spark):
+    """A seed given twice counts once: weighted_sssp and
+    on_shortest_path_weighted from driver lists, temporal arrival
+    from a seed frame (each returned duplicate rows before the
+    relaxation loop deduplicated its seed)."""
+    import datetime
+
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators.traversal import (
+        on_shortest_path_weighted,
+        temporal_earliest_arrival,
+        weighted_sssp,
+    )
+
+    pairs = ["ab", "bc", "cd", "ac"]
+    g = OnionGraph(
+        spark.createDataFrame([("L", x) for x in "abcd"], "layer string, node_id string"),
+        spark.createDataFrame(
+            [("L", u, "L", v, 1.0) for u, v in pairs],
+            "src_layer string, src_id string, dst_layer string, dst_id string, "
+            "weight double",
+        ),
+    )
+    a, d = ("L", "a"), ("L", "d")
+
+    def rows(df):
+        out = sorted(map(tuple, df.collect()), key=str)
+        assert len(out) == len(set(out))
+        return out
+
+    # the single-seed answers
+    assert rows(weighted_sssp(g, [a, a])) == [
+        ("L", "a", 0.0), ("L", "b", 1.0), ("L", "c", 1.0), ("L", "d", 2.0)
+    ]
+    assert rows(on_shortest_path_weighted(g, a, [d, d])) == [
+        ("L", "a", 0.0, 2.0), ("L", "c", 1.0, 1.0), ("L", "d", 2.0, 0.0)
+    ]
+    t = datetime.datetime(2024, 1, 1)
+    edges = spark.createDataFrame(
+        [(u, v, t) for u, v in pairs], "src string, dst string, ts timestamp"
+    )
+    two = spark.createDataFrame([("a",), ("a",)], "node string")
+    assert rows(temporal_earliest_arrival(edges, two)) == [
+        ("a", None), ("b", t), ("c", t), ("d", t)
+    ]
+
+
+def test_relaxation_family_job_counts(spark):
+    """Spark jobs per call (op + collect) of the four operators built
+    on traversal._relax, on a 7-node toy graph with two isolated
+    nodes (a DAG for topological_levels). Each budget is the count
+    measured before the operators shared the loop, so the loop adds
+    no job."""
+    import datetime
+
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators import traversal as T
+    from onionnet_spark.operators.components import strongly_connected_components
+
+    cyc = ["ab", "bc", "ca", "ad", "de", "ec", "be"]
+    dag = ["ab", "bc", "ad", "de", "ec", "be"]
+
+    def graph(pairs):
+        return OnionGraph(
+            spark.createDataFrame(
+                [("L", x) for x in "abcdefg"], "layer string, node_id string"
+            ),
+            spark.createDataFrame(
+                [("L", u, "L", v, float(len(u + v) + ord(v) % 3)) for u, v in pairs],
+                "src_layer string, src_id string, dst_layer string, dst_id string, "
+                "weight double",
+            ),
+        )
+
+    def temporal():
+        edges = spark.createDataFrame(
+            [
+                (u, v, datetime.datetime(2024, 1, 1 + (ord(u) + ord(v)) % 5))
+                for u, v in cyc
+            ],
+            "src string, dst string, ts timestamp",
+        )
+        seed = spark.createDataFrame([("a",)], "node string")
+        return T.temporal_earliest_arrival(edges, seed, max_rounds=6)
+
+    ops = {
+        "weighted_sssp": (lambda: T.weighted_sssp(graph(cyc), [("L", "a")]), 24),
+        "topological_levels": (lambda: T.topological_levels(graph(dag)), 32),
+        "temporal_earliest_arrival": (temporal, 26),
+        "strongly_connected_components": (
+            lambda: strongly_connected_components(graph(cyc)), 105
+        ),
+    }
+    sc = spark.sparkContext
+    got = {}
+    for name, (op, _) in ops.items():
+        group = f"relaxation_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            op().collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
+    assert not over, over
