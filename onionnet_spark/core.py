@@ -239,7 +239,11 @@ class OnionGraph:
     def _int_nodes(self) -> DataFrame | None:
         """The collision-checked xxhash64 node index shared by every
         int-keyed view (cached_int_sym / cached_int_endpoints), or
-        None when the 64-bit keying clashes on this node set."""
+        None when the 64-bit keying clashes on this node set or an
+        edge endpoint is missing from it. Int levels map back to
+        string keys through this index, so a dangling endpoint would
+        vanish from the result: such a graph takes the string keying,
+        like a clash."""
 
         def build():
             nodes_idx = self.nodes.select(
@@ -248,7 +252,16 @@ class OnionGraph:
             chk = nodes_idx.agg(
                 F.count("*").alias("n"), F.count_distinct("idx").alias("d")
             ).collect()[0]
-            if chk["n"] != chk["d"]:
+            ends = self.edge_endpoints()
+            ends = ends.select(F.xxhash64("src_layer", "src_id").alias("idx")).union(
+                ends.select(F.xxhash64("dst_layer", "dst_id").alias("idx"))
+            )
+            idx = nodes_idx.select("idx")
+            if chk["n"] != chk["d"] or ends.join(
+                F.broadcast(idx) if chk["n"] <= BROADCAST_MAX else idx,
+                on="idx",
+                how="left_anti",
+            ).take(1):
                 nodes_idx.unpersist()
                 return None
             return nodes_idx
@@ -271,12 +284,9 @@ class OnionGraph:
         if nidx is None:
             return None
         s, d = ("src", "dst") if direction == "downstream" else ("dst", "src")
-        # NOTE (ADVICE r10): the injectivity check in _int_nodes covers
-        # the NODE table; edge endpoints hash safely because of the
-        # OnionGraph builder invariant that every edge endpoint appears
-        # in graph.nodes (the same referential-integrity precondition
-        # traversal._string_keyed documents). A graph with dangling
-        # endpoints must not use the int views.
+        # _int_nodes returns None when an edge endpoint is missing
+        # from the node table, so every endpoint hashed here maps back
+        # through the index.
         e = self._views.get(
             f"int_{direction}",
             lambda: self.edge_endpoints()

@@ -21,9 +21,20 @@ one edge endpoint and aggregates at the other. Its users:
 The step cuts no lineage and picks no join strategy on its own: each
 caller keeps its cut and says when the state is broadcast (under
 core.BROADCAST_MAX, so the cached edge side is never exchanged).
+
+The undirected decompositions share two peels, each run to a
+fixpoint under a budget derived from the data:
+  - `_onion_peel`, the one node peel: `onion_decomposition` is its
+    ledger and `coreness` its core column;
+  - `_truss_peel`, the one edge peel (`_truss_sweep` repeated until
+    the edge count holds, for each k): `k_truss` is one k of it and
+    `trussness` all of them.
+`k_core` keeps its own delta peel over the graph's cached views.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +58,17 @@ def _keyed(state: DataFrame, end: str) -> DataFrame:
         F.col("layer").alias(f"{end}_layer"),
         F.col("node_id").alias(f"{end}_id"),
         *(c for c in state.columns if c not in NODE_KEY),
+    )
+
+
+def _pairs(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The undirected pairs (a, b) of an edge list: endpoints cast to
+    string and ordered a < b, self-loops dropped, one row per pair."""
+    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
     )
 
 
@@ -223,7 +245,6 @@ def k_core(
     graph: OnionGraph,
     k: int = 2,
     max_iterations: int = 50,
-    rebaseline_cap: int = 2_000_000,
 ) -> DataFrame:
     """The k-core: the maximal subgraph where every node has
     UNDIRECTED degree >= k — DELTA peeling. The naive loop
@@ -243,19 +264,16 @@ def k_core(
          filtering the edge list against the total removed set.
 
     If the cumulative removed set outgrows the broadcast budget
-    (deep-cascade regime: k-core of a social graph can shed most of
-    the graph), the loop RE-BASELINES: materializes the shrunken
-    edge set, recomputes deg0, and resets the ledgers — bounding the
-    broadcast size while keeping the common case at 3 total big
-    shuffles regardless of peel depth. Raises if `max_iterations`
+    core.BROADCAST_MAX (deep-cascade regime: k-core of a social graph
+    can shed most of the graph), the loop RE-BASELINES: materializes
+    the shrunken edge set, recomputes deg0, and resets the ledgers —
+    bounding the broadcast size while keeping the common case at 3
+    total big shuffles regardless of peel depth. Raises if `max_iterations`
     rounds don't reach the fixpoint. Returns (layer, node_id,
     core_degree) for members.
     """
     canon = graph.canonical_edges()
     spark = canon.sparkSession
-    # rebaseline_cap: max removed/low keys kept broadcast-side before
-    # falling back to a shuffle round + ledger reset (parameterized
-    # so tests can drive the deep-cascade paths on toy graphs)
 
     def _full_degrees(edges: DataFrame) -> DataFrame:
         return (
@@ -290,7 +308,7 @@ def k_core(
                 f"k_core did not reach a fixpoint within {max_iterations} "
                 f"peeling rounds; raise max_iterations"
             )
-        if n_low > rebaseline_cap:
+        if n_low > BROADCAST_MAX:
             # a single huge removal wave (large k): too big to
             # broadcast — shuffle-filter the edge set once and
             # re-baseline; this IS the classic full round, paid only
@@ -358,7 +376,7 @@ def k_core(
         # broadcast each round, so IT must respect the broadcast
         # budget too, not just the removed-node count
         n_cum = cum_dec.count()
-        if n_removed > rebaseline_cap or n_cum > rebaseline_cap:
+        if n_removed > BROADCAST_MAX or n_cum > BROADCAST_MAX:
             gone_a = F.broadcast(removed.select(F.col("n").alias("a")))
             gone_b = F.broadcast(removed.select(F.col("n").alias("b")))
             canon = (
@@ -1065,153 +1083,108 @@ def katz_centrality(
     )
 
 
+def _truss_sweep(cur: DataFrame, min_sup: int) -> DataFrame:
+    """One edge-peel sweep: the edges (a, b) of `cur` that close at
+    least `min_sup` triangles within `cur`, with that count as
+    `support`. Support is the common-neighbor equi-join (adjacency
+    joined twice on the shared third vertex), which shuffles on node
+    keys only; below one triangle the triangle-free edges are kept
+    with support 0."""
+    cur = cur.select("a", "b")
+    adj = cur.union(cur.select("b", "a"))
+    x = adj.select("a", F.col("b").alias("w"))
+    y = adj.select(F.col("a").alias("b"), F.col("b").alias("w"))
+    sup = (
+        cur.join(x, on="a")
+        .join(y, on=["b", "w"])
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("support"))
+    )
+    if min_sup <= 0:
+        sup = cur.join(sup, on=["a", "b"], how="left").fillna(0, ["support"])
+    return sup.filter(F.col("support") >= min_sup)
+
+
+def _truss_peel(
+    edges: DataFrame, a_col: str, b_col: str, ks, name: str
+) -> list[tuple[DataFrame, int]]:
+    """The undirected pairs of `edges`, then the k-truss for each k of
+    the rising `ks`, each as (frame (a, b, support), row count). Each
+    k-truss is peeled from the previous one by `_truss_sweep` to
+    fixpoint: the sweep is cut and counted in one job, and the phase
+    ends when the count does not change, so the last sweep's support
+    is counted within the truss itself. Every sweep but the last of a
+    phase drops an edge, so |E| + len(ks) sweeps always suffice; the
+    budget error is a backstop. Deep schedules rebase through
+    IterCheckpointer (see ckpt.py)."""
+    ck = IterCheckpointer(rebase_every=8, prefix="onionnet_truss_")
+    cur, n = ck.cut_count(
+        _pairs(edges, a_col, b_col).withColumn("support", F.lit(0).cast("bigint"))
+    )
+    out, budget, sweeps = [(cur, n)], n + len(ks), 0
+    for k in ks:
+        prev = -1
+        while n and n != prev:
+            sweeps += 1
+            if sweeps > budget:
+                raise RuntimeError(
+                    f"{name} did not converge within {budget} sweeps "
+                    f"({n} edges still peeling at k={k})"
+                )
+            prev = n
+            cur, n = ck.cut_count(_truss_sweep(cur, k - 2))
+        out.append((cur, n))
+    return out
+
+
 def k_truss(
     edges: DataFrame,
     k: int = 4,
-    rounds: int = 4,
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
     """k-truss: the maximal subgraph in which every edge closes at
-    least k-2 triangles. Computed by support peeling: per round,
-    count each edge's triangles within the surviving edge set and
-    drop edges below k-2; repeat `rounds` times (a converged set is
-    a fixpoint, so extra rounds are no-ops and the unrolled oracle
-    stays in lockstep at any round count).
+    least k-2 triangles, peeled to fixpoint by `_truss_peel` (for
+    k <= 2 that is every edge).
 
     Input is an undirected edge list; rows are canonicalized to
-    (min, max) and deduplicated. Support counting is the standard
-    common-neighbor equi-join — adjacency joined twice on the shared
-    third vertex — which shuffles on node keys only. A final support
-    pass verifies the fixpoint was reached and raises RuntimeError
-    otherwise (silent truncation would return a non-truss).
-
-    Returns surviving edges (a, b, support) with support computed in
-    the final subgraph. Scale: per-round cost is triangle
-    enumeration on the current (shrinking) edge set; peeling
-    converges in a handful of rounds on real skews because support
-    is monotone non-increasing under deletion.
+    (min, max) and deduplicated. Returns surviving edges
+    (a, b, support) with support counted in the k-truss itself.
+    Scale: per-sweep cost is triangle enumeration on the current
+    (shrinking) edge set; support is monotone non-increasing under
+    deletion, so peeling converges in a handful of sweeps on real
+    skews.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    e = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def support(cur: DataFrame) -> DataFrame:
-        adj = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        x = adj.select(F.col("u").alias("a"), F.col("v").alias("w"))
-        y = adj.select(F.col("u").alias("b"), F.col("v").alias("w"))
-        return (
-            cur.join(x, on="a").join(y, on=["b", "w"])
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("support"))
-        )
-
-    min_sup = k - 2
-    for _ in range(rounds):
-        e = (
-            support(e)
-            .filter(F.col("support") >= min_sup)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-    final = e.join(support(e), on=["a", "b"], how="left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).cast("bigint").alias("support")
-    )
-    n_unstable = final.filter(F.col("support") < min_sup).count()
-    if n_unstable:
-        raise RuntimeError(
-            f"k_truss did not converge in {rounds} rounds: "
-            f"{n_unstable} edges still below support {min_sup}; "
-            "raise `rounds`"
-        )
-    return final
+    return _truss_peel(edges, a_col, b_col, [k], "k_truss")[-1][0]
 
 
 def trussness(
     edges: DataFrame,
     k_max: int = 8,
-    rounds: int = 4,
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
     """Full truss decomposition: each edge's truss number (the max k
     for which it survives in the k-truss) — the edge-level analogue
     of coreness, and the standard community-strength ordering for
-    edges. Fixed (k, sweep) peel schedule exactly like `coreness`:
-    for k = 3..k_max, peel `rounds` support sweeps from the previous
-    survivor set; an edge's trussness is the last k it survived
-    (2 if it never makes the 3-truss).
-
-    A final peel at k_max + 1 must come up empty (otherwise trussness
-    k_max would be a silent truncation — RuntimeError instead). Per
-    sweep: one triangle-support enumeration on the shrinking survivor
-    set. Returns (a, b, trussness).
-
-    Checkpoint discipline: every 8th sweep the survivor set is
-    rebased through a REAL parquet write/read. Chains of >~12
-    localCheckpoints hit a geometric per-sweep replay blowup on this
-    Spark build even though every post-checkpoint plan is a bare
-    LogicalRDD scan (measured: 0.7s/sweep flat for 12 sweeps, then
-    x4 per sweep) — the parquet rebase is the reliable truncation
-    long iterative jobs use, and it is what a cluster deployment
-    would do anyway (with `TMPDIR` on a shared filesystem).
+    edges. `_truss_peel` runs the k-trusses for k = 3..k_max + 1, each
+    to fixpoint from the previous one; an edge's trussness is the last
+    k whose truss holds it (2 if it never makes the 3-truss). The
+    (k_max + 1)-truss must come up empty: otherwise trussness k_max
+    would be a silent truncation, so a RuntimeError is raised instead.
+    Returns (a, b, trussness).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def support(cur: DataFrame) -> DataFrame:
-        adj = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        x = adj.select(F.col("u").alias("a"), F.col("v").alias("w"))
-        y = adj.select(F.col("u").alias("b"), F.col("v").alias("w"))
-        return (
-            cur.join(x, on="a")
-            .join(y, on=["b", "w"])
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("support"))
-        )
-
-    ck = IterCheckpointer(rebase_every=8, prefix="onionnet_truss_")
-    remaining = e
-    tagged = [e.select("a", "b", F.lit(2).alias("k"))]
-    for k in range(3, k_max + 1):
-        for _ in range(rounds):
-            remaining = ck.cut(
-                support(remaining)
-                .filter(F.col("support") >= k - 2)
-                .select("a", "b")
-            )
-        tagged.append(remaining.select("a", "b", F.lit(k).alias("k")))
-    # a cheap sufficient check that the schedule was long enough: no
-    # edge meets the (k_max+1)-truss support bar after the k_max peel
-    over = (
-        support(remaining)
-        .filter(F.col("support") >= k_max - 1)
-        .select("a", "b")
-    )
-    if over.take(1):
+    peel = _truss_peel(edges, a_col, b_col, range(3, k_max + 2), "trussness")
+    if peel[-1][1]:
         raise RuntimeError(
-            f"trussness: edges exceed the k_max={k_max} schedule of "
-            f"{rounds} rounds per k; raise k_max"
+            f"trussness: {peel[-1][1]} edges are in the {k_max + 1}-truss; "
+            "raise k_max"
         )
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("a", "b").agg(
+    tagged = [
+        t.select("a", "b", F.lit(k).alias("k"))
+        for k, (t, _) in enumerate(peel[:-1], 2)
+    ]
+    return reduce(DataFrame.unionByName, tagged).groupBy("a", "b").agg(
         F.max("k").cast("int").alias("trussness")
     )
 
@@ -1234,11 +1207,8 @@ def maximal_matching(
     A RuntimeError is raised if edges survive the round budget (the
     matching would be non-maximal). Returns the matched edges (a, b).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        _pairs(edges, a_col, b_col)
         .withColumn("pri", F.md5(F.concat_ws("|", "a", "b")))
         .localCheckpoint()
     )
@@ -1303,11 +1273,8 @@ def maximal_independent_set(
     (the set would not be maximal). Returns the MIS members as
     (node).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        _pairs(edges, a_col, b_col)
         .localCheckpoint()
     )
     active = (
@@ -1391,12 +1358,7 @@ def spectral_bisection(
     step: one neighbor-sum aggregation + three broadcast scalars.
     Returns (node, fiedler_q, side) with side in {-1, 0, 1}.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _pairs(edges, a_col, b_col)
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
@@ -1664,12 +1626,7 @@ def greedy_coloring(
     degree), anti-join updates. No global ordering anywhere. Returns
     (node, color).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _pairs(edges, a_col, b_col)
     sym = (
         e.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -2189,93 +2146,23 @@ def coreness(
     k_max: int = 12,
     a_col: str = "a",
     b_col: str = "b",
-    max_sweeps: int | None = None,
 ) -> DataFrame:
     """Full k-core decomposition: every node's core number (the
-    largest k for which it survives k-core peeling). For each k
-    rising 1..k_max, peel sweeps run TO FIXPOINT — each sweep drops
-    every node whose remaining degree is below k, and the phase only
-    advances once a sweep removes nothing, so arbitrarily long
-    cascades (a path graph peels one end-pair per sweep at k=2) are
-    labeled in the phase where they actually fall. A node removed in
-    phase k has coreness k-1. Removal is the NODE-SET DIFFERENCE
-    between consecutive sweeps, not the explicit low-degree list,
-    which would miss nodes whose last edges vanished via neighbor
-    loss.
-
-    A RuntimeError is raised if nodes survive the whole schedule
-    (their coreness would exceed k_max-1).
-    ``max_sweeps`` bounds total work across all phases; the default
-    (None) derives the bound from the data as |V| + k_max — the true
-    worst case, reached by path graphs that peel one end-pair per
-    sweep — because any fixed constant is wrong for some valid
-    input. It is a defensive backstop against implementation bugs
-    only: each non-final sweep strictly shrinks the node set, so
-    termination is guaranteed. Each sweep is one degree aggregation
-    + two anti-joins on node keys; sweep count adapts to the data
-    instead of being fixed per k.
+    largest k for which it survives k-core peeling), read off the
+    onion decomposition's peel (`_onion_peel`), which labels every
+    node with the core value it fell at. A RuntimeError is raised
+    if a node's coreness reaches k_max (nodes remain after the k_max
+    phase of the classic k-rising peel).
 
     Returns (node, coreness).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
-    )
-    n_rows = adj.count()
-    if max_sweeps is None:
-        # |V| + k_max: the worst-case sweep count (path graphs peel
-        # one end-pair per sweep), derived from the data instead of
-        # a constant that under-shoots long cascades
-        max_sweeps = adj.select("u").distinct().count() + k_max
-    ck = IterCheckpointer(prefix="onionnet_coreness_")
-    removed = None
-    sweeps = 0
-    for k in range(1, k_max + 1):
-        while n_rows:
-            sweeps += 1
-            if sweeps > max_sweeps:
-                raise RuntimeError(
-                    f"coreness: exceeded max_sweeps={max_sweeps}; "
-                    "raise the cap"
-                )
-            deg = adj.groupBy("u").agg(F.count("*").alias("c"))
-            low = deg.filter(F.col("c") < k).select("u")
-            # periodic parquet rebase: deep peel cascades run many
-            # sweeps and long localCheckpoint chains blow up (ckpt.py)
-            nxt = ck.cut(
-                adj.join(low, on="u", how="left_anti")
-                .join(low.select(F.col("u").alias("v")), on="v", how="left_anti")
-            )
-            n_new = nxt.count()
-            if n_new == n_rows:
-                break  # phase-k fixpoint: nothing below k remains
-            gone = (
-                adj.select("u")
-                .distinct()
-                .join(nxt.select("u").distinct(), on="u", how="left_anti")
-                .select(F.col("u").alias("node"), F.lit(k - 1).alias("coreness"))
-            )
-            removed = (
-                gone
-                if removed is None
-                else removed.unionByName(gone).localCheckpoint(eager=False)
-            )
-            adj, n_rows = nxt, n_new
-    if n_rows:
+    out, k_top, rounds = _onion_peel(edges, a_col, b_col)
+    if k_top >= k_max:
         raise RuntimeError(
-            f"coreness: nodes remain after k_max={k_max} ({sweeps} sweeps); "
-            "raise k_max"
+            f"coreness: nodes remain after k_max={k_max} (top core "
+            f"number {k_top} after {rounds} rounds); raise k_max"
         )
-    if removed is None:
-        return literal_frame(adj.sparkSession, [], "node string, coreness int")
-    return removed.select("node", F.col("coreness").cast("int").alias("coreness"))
+    return out.select("node", "coreness")
 
 
 def neighbor_agg(
@@ -2546,7 +2433,7 @@ def salsa_scores(
     extends SURVEY §2's centrality family (HITS row) with the
     iteration-free member.
     """
-    from onionnet_spark.operators.components import connected_components_star
+    from onionnet_spark.operators.components import connected_components
 
     e = graph.edge_endpoints()
     if hub_layers is not None:
@@ -2566,7 +2453,7 @@ def salsa_scores(
     # overlapping stars route thousands of hubs to the SAME few min
     # authorities, so the very first large-star window lands one
     # giant neighborhood in one task (the window-skew trap documented
-    # on connected_components_star), while chain keeps every
+    # on connected_components), while chain keeps every
     # contracted degree <= 2 and the extra O(log chain) rounds are
     # cheaper than the skewed task. Star contraction (not min-label
     # BFS) because chains through shared parts/suppliers give the
@@ -2663,7 +2550,7 @@ def salsa_scores(
             F.col("a_layer").alias("dst_layer"),
             F.col("a_id").alias("dst_id"),
         )
-        cc = connected_components_star(OnionGraph(auth_nodes, auth_edges))
+        cc = connected_components(OnionGraph(auth_nodes, auth_edges))
         auth_cc = cc.select(
             F.expr("substring(layer, 3)").alias("layer"),
             "node_id",
@@ -2766,12 +2653,7 @@ def wl_refinement(
     Input: undirected edge list, canonicalized/deduped here.
     Returns (node_id, color) for every endpoint node.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    canon = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _pairs(edges, a_col, b_col)
     adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()
@@ -2810,12 +2692,7 @@ def square_count(
     triangle path uses) — counts per (u, w) pair stay tiny either
     way. Returns one row: (n_wedges, n_squares), both BIGINT-exact.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    canon = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _pairs(edges, a_col, b_col)
     adj = canon.select(F.col("a").alias("v"), F.col("b").alias("x")).unionByName(
         canon.select(F.col("b").alias("v"), F.col("a").alias("x"))
     )
@@ -2926,12 +2803,7 @@ def clique4_count(
     outdegree bounded by the orientation (a celebrity never fans
     out). Returns one row (n_triangles, n_4cliques), BIGINT-exact.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    canon = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _pairs(edges, a_col, b_col)
     adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -2988,11 +2860,66 @@ def clique4_count(
     )
 
 
+def _onion_peel(
+    edges: DataFrame, a_col: str, b_col: str
+) -> tuple[DataFrame, int, int]:
+    """The one node peel: (ledger (node, layer, coreness), top core
+    number, rounds run) of the onion decomposition of `edges`' pairs.
+
+    Per round: one degree aggregation over the remaining node universe
+    (left join, so nodes stripped to degree 0 are still seen), cut
+    lazily and read by ONE action for its min, max and count. The core
+    value k ratchets up to the min degree; the round drops every node
+    of degree <= k as one layer, and the peel ends once the max degree
+    is <= k. Each round drops at least one node, so |V| + 1 rounds
+    always suffice; the budget error is a backstop. Deep peels rebase
+    through IterCheckpointer (see ckpt.py)."""
+    pairs = _pairs(edges, a_col, b_col)
+    ck = IterCheckpointer(prefix="onionnet_onion_")
+    adj = ck.cut(pairs.union(pairs.select("b", "a")), eager=False)
+    nodes = adj.select(F.col("a").alias("n")).distinct()
+    drops, k, budget = [], 0, None
+    while True:
+        deg = ck.cut(
+            nodes.join(
+                adj.groupBy(F.col("a").alias("n")).agg(F.count("*").alias("d")),
+                on="n",
+                how="left",
+            ).select("n", F.coalesce("d", F.lit(0)).alias("d")),
+            eager=False,
+        )
+        lo, hi, n = deg.agg(F.min("d"), F.max("d"), F.count("*")).first()
+        if not n:  # first round only: no pair of distinct nodes
+            schema = "node string, layer int, coreness int"
+            return literal_frame(edges.sparkSession, [], schema), 0, 0
+        budget = budget or n + 1
+        if len(drops) == budget:
+            raise RuntimeError(
+                f"onion_decomposition did not converge within {budget} rounds "
+                f"({n} nodes remain)"
+            )
+        k = max(k, lo)
+        drops.append(
+            deg.filter(F.col("d") <= k).select(
+                F.col("n").alias("node"),
+                F.lit(len(drops) + 1).alias("layer"),
+                F.lit(k).alias("coreness"),
+            )
+        )
+        if hi <= k:
+            return reduce(DataFrame.unionByName, drops), k, len(drops)
+        nodes = deg.filter(F.col("d") > k).select("n")
+        adj = ck.cut(
+            adj.join(nodes.select(F.col("n").alias("a")), on="a", how="left_semi")
+            .join(nodes.select(F.col("n").alias("b")), on="b", how="left_semi"),
+            eager=False,
+        )
+
+
 def onion_decomposition(
     edges: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Onion decomposition (Hébert-Dufresne, Grochow & Allard 2016):
     the layer-by-layer refinement of k-core peeling — and this
@@ -3002,75 +2929,14 @@ def onion_decomposition(
     all nodes removed in the same round share an onion LAYER; the
     layer index localizes a node WITHIN its core shell (center vs
     periphery of the core), which plain coreness cannot express.
-
-    Per round: one degree aggregation (left join so fully-stripped
-    degree-0 nodes are still seen), one bounded scalar min, two
-    anti/semi joins — the coreness peel loop with an explicit node
-    universe. Round count is data-dependent (a path graph peels one
-    end-pair per round), so the guard derives from |V| instead of a
-    constant; deep peels rebase through IterCheckpointer like every
-    other long iteration in this repo.
+    The rounds are `_onion_peel`'s; `coreness` reads the same peel.
 
     Returns (node, layer, coreness); layers are 1-based in removal
     order, coreness is the k at which the node fell (its core
-    number).
+    number). An edge set with no pair of distinct nodes gives an
+    empty frame.
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
-    )
-    nodes = adj.select(F.col("u").alias("n")).distinct().localCheckpoint()
-    n_remaining = nodes.count()
-    if max_rounds is None:
-        max_rounds = n_remaining + 1
-    ck = IterCheckpointer(prefix="onionnet_onion_")
-    out = None
-    k_cur = 0
-    layer = 0
-    while n_remaining:
-        layer += 1
-        if layer > max_rounds:
-            raise RuntimeError(
-                "onion_decomposition exceeded its data-derived round "
-                "bound — implementation bug, not an input property"
-            )
-        deg = (
-            nodes.join(
-                adj.groupBy("u").agg(F.count("*").alias("d")),
-                on=nodes["n"] == F.col("u"),
-                how="left",
-            )
-            .select("n", F.coalesce("d", F.lit(0)).alias("d"))
-        )
-        kmin = deg.agg(F.min("d").alias("m")).collect()[0]["m"]
-        k_cur = max(k_cur, int(kmin))
-        # checkpoint the per-round DROP (new rows only), not the
-        # accumulated ledger: the old out-cut re-materialized a frame
-        # that grows with |V| every round AND re-evaluated the degree
-        # aggregation a second time per round (r9)
-        drop = ck.cut(
-            deg.filter(F.col("d") <= k_cur).select(
-                "n",
-                F.lit(layer).cast("int").alias("layer"),
-                F.lit(k_cur).cast("int").alias("coreness"),
-            )
-        )
-        out = drop if out is None else out.unionByName(drop)
-        nodes = ck.cut(nodes.join(drop.select("n"), on="n", how="left_anti"))
-        adj = ck.cut(
-            adj.join(
-                nodes.select(F.col("n").alias("u")), on="u", how="leftsemi"
-            ).join(nodes.select(F.col("n").alias("v")), on="v", how="leftsemi")
-        )
-        n_remaining = nodes.count()
-    return out.select(F.col("n").alias("node"), "layer", "coreness")
+    return _onion_peel(edges, a_col, b_col)[0]
 
 
 def simrank(
@@ -3106,12 +2972,7 @@ def simrank(
     Returns (node_a, node_b, simrank_micro) for a < b with nonzero
     score (diagonal omitted: it is 1.0 by definition).
     """
-    a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
-    canon = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _pairs(edges, a_col, b_col)
     adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()

@@ -1,6 +1,6 @@
 """Checkpoint discipline for long iterative dataflows.
 
-Measured on this Spark build (see trussness): a chain of more than
+Measured on this Spark build (a long truss peel): a chain of more than
 ~12 `localCheckpoint()` generations hits a geometric per-sweep
 replay blowup — 0.7s/sweep flat for 12 sweeps, then x4 per sweep —
 even though every post-checkpoint plan is a bare LogicalRDD scan

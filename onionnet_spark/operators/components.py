@@ -14,8 +14,6 @@ One weak-CC engine plus strong CC:
     `view_components` op went from 41 Spark jobs over 5 label rounds
     to 26 jobs over 3 contraction rounds, and its first-call CPU
     from a median of 18.6 to 11.8 CPU-s (16 runs each).
-    `connected_components_star` is the same engine under its older
-    name.
   - `strongly_connected_components`: FW-BW-Trim (trim + forward
     coloring + backward collect).
 
@@ -192,15 +190,6 @@ def connected_components(graph: OnionGraph, max_iterations: int = 50) -> DataFra
             F.coalesce("component", "key").alias("component"),
         )
     )
-
-
-def connected_components_star(
-    graph: OnionGraph, max_iterations: int = 30
-) -> DataFrame:
-    """`connected_components` under its older name: the same engine
-    and output, kept for its callers and the components_weak_star
-    registry key."""
-    return connected_components(graph, max_iterations)
 
 
 def strongly_connected_components(

@@ -314,9 +314,10 @@ def _string_keyed(
 ) -> DataFrame:
     """The union of `_keyed_levels` output in the string keying. Int
     levels past the seed map back through the node index, which
-    holds every edge endpoint (the OnionGraph invariant); the seed
-    level is the string seed frame itself, so a seed absent from the
-    node table survives exactly as in the string keying."""
+    holds every edge endpoint (a graph with a dangling endpoint gets
+    no index, see OnionGraph._int_nodes); the seed level is the
+    string seed frame itself, so a seed absent from the node table
+    survives exactly as in the string keying."""
     if nidx is None:
         return reduce(DataFrame.unionByName, levels)
     if len(levels) == 1:

@@ -888,7 +888,7 @@ def components_weak_star_q(spark, sf_dir):
     # of diameter-bound label propagation — both must match the same
     # recursive-CTE oracle.
     g = filters.view_layers(get_graph(spark, sf_dir), ["region", "nation", "customer"])
-    return components.connected_components_star(g)
+    return components.connected_components(g)
 
 
 _REG["pagerank"] = (pagerank_q, _pagerank_oracle())
@@ -1521,9 +1521,7 @@ def graph_ktruss_q(spark, sf_dir):
     derivation is the shared _cosupply_top_pairs helper (VERDICT r3:
     the inlined copy here had started to drift)."""
     return analytics.k_truss(
-        _cosupply_top_pairs(spark, sf_dir, _KTRUSS_TOPN),
-        k=_KTRUSS_K,
-        rounds=_KTRUSS_ROUNDS,
+        _cosupply_top_pairs(spark, sf_dir, _KTRUSS_TOPN), k=_KTRUSS_K
     )
 
 
@@ -1567,12 +1565,10 @@ def _trussness_oracle(
 
 def graph_trussness_q(spark, sf_dir):
     """Full truss decomposition of the co-supply graph: per-edge
-    truss numbers over the fixed (k = 3..10, 3 sweeps) schedule —
-    the edge-level analogue of graph_coreness. Parquet-rebased
-    checkpointing every 8 sweeps (see trussness docstring)."""
-    return analytics.trussness(
-        _cosupply_top_pairs(spark, sf_dir, 60), k_max=10, rounds=3
-    )
+    truss numbers for k = 3..10, each truss peeled to fixpoint — the
+    edge-level analogue of graph_coreness. The oracle unrolls a fixed
+    3-sweep schedule per k, which equals the fixpoint on this data."""
+    return analytics.trussness(_cosupply_top_pairs(spark, sf_dir, 60), k_max=10)
 
 
 
@@ -2249,7 +2245,7 @@ def graph_percolation_q(spark, sf_dir):
         # signature aggregate doubles as the materialization) where
         # min-label propagation paid diameter rounds at two jobs —
         # at this bounded-60 size the query is pure job overhead
-        cc = components.connected_components_star(OnionGraph(nodes, ek))
+        cc = components.connected_components(OnionGraph(nodes, ek))
         row = (
             cc.groupBy("component")
             .agg(F.count("*").alias("n"))

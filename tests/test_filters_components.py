@@ -299,7 +299,7 @@ def test_star_cc_long_path(spark):
     # a 40-node path: star contraction converges in O(log^2 n)
     # rounds, not diameter rounds — and must still be exact.
     from onionnet_spark.core import OnionGraph
-    from onionnet_spark.operators.components import connected_components_star
+    from onionnet_spark.operators.components import connected_components
 
     n = 40
     nodes = spark.createDataFrame(
@@ -312,7 +312,7 @@ def test_star_cc_long_path(spark):
     )
     lb = {
         r["node_id"]: r["component"]
-        for r in connected_components_star(OnionGraph(nodes, edges)).collect()
+        for r in connected_components(OnionGraph(nodes, edges)).collect()
     }
     assert lb["iso"] == "P:iso"
     assert {v for k, v in lb.items() if k != "iso"} == {"P:0"}
@@ -536,10 +536,11 @@ def test_node_jaccard_known_values(spark):
     assert got[("v", "w")] == round(1 / 3, 6)
 
 
-def test_k_core_peels_tail(spark):
+def test_k_core_peels_tail(spark, monkeypatch):
     # triangle a-b-c (2-core) with a pendant chain c-d-e: the chain
     # must peel away in cascading rounds, the triangle survives
     from onionnet_spark.builder import grow_onion
+    from onionnet_spark.operators import analytics
     from onionnet_spark.operators.analytics import k_core
 
     nodes = spark.createDataFrame(
@@ -555,20 +556,21 @@ def test_k_core_peels_tail(spark):
     assert got == {"a": 2, "b": 2, "c": 2}
     # k=3: nothing survives
     assert k_core(g, k=3).count() == 0
-    # rebaseline_cap=1 forces the bulk-round and ledger-reset paths
-    # (every round's removal set exceeds the broadcast budget): the
-    # delta and fallback strategies must agree exactly
-    got_bulk = {r["node_id"]: r["core_degree"]
-                for r in k_core(g, k=2, rebaseline_cap=1).collect()}
+    # a broadcast budget of 1 forces the bulk-round and ledger-reset
+    # paths (every round's removal set exceeds it): the delta and
+    # fallback strategies must agree exactly
+    monkeypatch.setattr(analytics, "BROADCAST_MAX", 1)
+    got_bulk = {r["node_id"]: r["core_degree"] for r in k_core(g, k=2).collect()}
     assert got_bulk == got
-    assert k_core(g, k=3, rebaseline_cap=1).count() == 0
+    assert k_core(g, k=3).count() == 0
 
 
-def test_k_core_deep_cascade_long_chain(spark):
+def test_k_core_deep_cascade_long_chain(spark, monkeypatch):
     # 30-node path + one triangle at the end: k=2 peeling cascades 29
     # rounds through the chain (one pendant at a time) — exercises
     # many delta rounds and the removed-ledger growth
     from onionnet_spark.builder import grow_onion
+    from onionnet_spark.operators import analytics
     from onionnet_spark.operators.analytics import k_core
 
     chain = [f"n{i}" for i in range(30)]
@@ -584,8 +586,8 @@ def test_k_core_deep_cascade_long_chain(spark):
         "src_layer string, src_id string, dst_layer string, dst_id string",
     )
     g = grow_onion(nodes, edges)
-    got = {r["node_id"]: r["core_degree"]
-           for r in k_core(g, k=2, rebaseline_cap=8).collect()}
+    monkeypatch.setattr(analytics, "BROADCAST_MAX", 8)
+    got = {r["node_id"]: r["core_degree"] for r in k_core(g, k=2).collect()}
     assert got == {"t0": 2, "t1": 2, "t2": 2}
 
 
@@ -646,17 +648,18 @@ def test_triangles_k4(spark):
     assert triangle_count(g).collect()[0][0] == 4
 
 
-def test_k_core_big_wave_after_small_waves_keeps_ledger(spark):
+def test_k_core_big_wave_after_small_waves_keeps_ledger(spark, monkeypatch):
     # regression: the over-cap "big wave" rebaseline used to filter
     # the edge set against the wave only, resurrecting nodes peeled
     # in EARLIER small rounds (their edges were still in canon).
     # Shape (k=3): a depth-5 binary tree peels ROOT-DOWN — the root
     # (deg 2) goes first, each removal drops its two children to
-    # deg 2, so waves double: 1, 2, 4, 8, then 16 > rebaseline_cap
+    # deg 2, so waves double: 1, 2, 4, 8, then 16 > BROADCAST_MAX = 10
     # with 15 earlier-removed nodes on the ledger. Leaves are pinned
     # at deg 3 by two heavy hubs until their parent dies, and the
     # hubs + two companions form the surviving K4.
     from onionnet_spark.builder import grow_onion
+    from onionnet_spark.operators import analytics
     from onionnet_spark.operators.analytics import k_core
 
     depth = 5
@@ -682,8 +685,9 @@ def test_k_core_big_wave_after_small_waves_keeps_ledger(spark):
             "src_layer string, src_id string, dst_layer string, dst_id string",
         ),
     )
+    monkeypatch.setattr(analytics, "BROADCAST_MAX", 10)
     got = {
         r["node_id"]: r["core_degree"]
-        for r in k_core(g, k=3, rebaseline_cap=10, max_iterations=20).collect()
+        for r in k_core(g, k=3, max_iterations=20).collect()
     }
     assert got == {"H1": 3, "H2": 3, "q0": 3, "q1": 3}

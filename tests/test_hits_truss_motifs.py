@@ -39,21 +39,49 @@ def test_k_truss_peels_pendant_keeps_clique(spark):
         ("b", "c"), ("b", "d"), ("c", "d"),
     ]
     edges = spark.createDataFrame(k4 + [("d", "e")], "a string, b string")
-    out = k_truss(edges, k=4, rounds=3)
+    out = k_truss(edges, k=4)
     got = {(r["a"], r["b"]) for r in out.collect()}
     # K4 edges (support 2 >= k-2) survive; the pendant does not
     assert got == set(k4)
     assert all(r["support"] == 2 for r in out.collect())
     # k=5 needs support 3: nothing in K4 qualifies
-    assert k_truss(edges, k=5, rounds=3).count() == 0
+    assert k_truss(edges, k=5).count() == 0
 
 
-def test_k_truss_guard_raises_without_enough_rounds(spark):
+def test_k_truss_two_keeps_triangle_free_edges(spark):
+    # every edge closes >= 0 triangles: the 2-truss of triangle abc
+    # plus edge cd is all four edges, the pendant with support 0
     edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")], "a string, b string"
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "a string, b string"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        k_truss(edges, k=3, rounds=0)
+    got = {(r["a"], r["b"]): r["support"] for r in k_truss(edges, k=2).collect()}
+    assert got == {("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 1, ("c", "d"): 0}
+
+
+def test_trussness_peels_each_k_to_fixpoint(spark):
+    # a fixed schedule of 3 or 4 support sweeps per k labels (00, 07)
+    # of this 8-node graph 5, but its 5-truss is empty (networkx
+    # agrees): the peel at k = 5 needs more sweeps to settle
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import trussness
+
+    pairs = [
+        ("00", "01"), ("00", "02"), ("00", "03"), ("00", "05"), ("00", "06"),
+        ("00", "07"), ("01", "02"), ("01", "04"), ("01", "05"), ("01", "06"),
+        ("01", "07"), ("02", "03"), ("02", "06"), ("02", "07"), ("03", "04"),
+        ("03", "05"), ("03", "06"), ("03", "07"), ("04", "05"), ("04", "06"),
+        ("04", "07"), ("05", "07"),
+    ]
+    g = nx.Graph(pairs)
+    want = {e: 2 for e in pairs}
+    for k in range(3, 8):
+        for u, v in nx.k_truss(g, k).edges():
+            want[(min(u, v), max(u, v))] = k
+    df = spark.createDataFrame(pairs, "a string, b string")
+    got = {(r["a"], r["b"]): r["trussness"] for r in trussness(df, k_max=10).collect()}
+    assert got[("00", "07")] == 4
+    assert got == want
 
 
 def test_motif_triangle_and_negation(spark):
@@ -225,11 +253,8 @@ def test_coreness_guard(spark):
 
 
 def test_coreness_sweep_cap_is_data_derived(spark):
-    # the old fixed default (200) raised on valid long-cascade inputs;
-    # the None default derives |V| + k_max from the data, and an
-    # explicit too-small cap still raises loudly
-    import pytest as _pytest
-
+    # a fixed round cap (once 200) raised on valid long-cascade
+    # inputs; the peel's budget is derived from the data (|V| + 1)
     from onionnet_spark.operators.analytics import coreness
 
     path = spark.createDataFrame(
@@ -237,8 +262,6 @@ def test_coreness_sweep_cap_is_data_derived(spark):
     )
     got = {r["node"]: r["coreness"] for r in coreness(path, k_max=3).collect()}
     assert set(got.values()) == {1}  # every path node has coreness 1
-    with _pytest.raises(RuntimeError, match="max_sweeps"):
-        coreness(path, k_max=3, max_sweeps=3).collect()
 
 
 def test_eigenvector_star_and_isolated(spark):
@@ -454,6 +477,38 @@ def test_propagation_family_job_counts(spark):
         sc.setJobGroup(group, name)
         try:
             op(g).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
+    assert not over, over
+
+
+def test_peel_family_job_counts(spark):
+    """Spark jobs per call (op + collect) of the node peel (coreness,
+    onion_decomposition) and the edge peel (k_truss, trussness) on an
+    8-node toy graph: K4, a triangle hanging off it and a pendant.
+    Each budget is the count of the same call measured before the four
+    shared the two peels (coreness sweeping each k to fixpoint, k_truss
+    and trussness with their default 4 rounds per k, k_truss plus a
+    verify pass), so sharing adds no job."""
+    from onionnet_spark.operators import analytics as A
+
+    pairs = ["ab", "ac", "ad", "bc", "bd", "cd", "de", "ef", "eg", "fg", "gh"]
+    ops = {
+        "coreness": (lambda e: A.coreness(e, k_max=5), 67),
+        "onion_decomposition": (A.onion_decomposition, 80),
+        "k_truss": (lambda e: A.k_truss(e, k=4), 45),
+        "trussness": (lambda e: A.trussness(e, k_max=5), 60),
+    }
+    sc = spark.sparkContext
+    got = {}
+    for name, (op, _) in ops.items():
+        edges = spark.createDataFrame([(u, v) for u, v in pairs], "a string, b string")
+        group = f"peel_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            op(edges).collect()
         finally:
             sc._jsc.clearJobGroup()
         got[name] = len(sc.statusTracker().getJobIdsForGroup(group))

@@ -125,7 +125,7 @@ def test_star_round_fuses_min_into_window_exchange(spark):
     Window operators, exactly 2 single-key window exchanges, and 1
     more for the final distinct (3 exchanges total). The skew trade
     (a hub's whole neighborhood in one task, AQE cannot split window
-    partitions) is documented at the connected_components_star
+    partitions) is documented at the connected_components
     docstring."""
     from onionnet_spark.operators.components import _star_round
 

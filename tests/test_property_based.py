@@ -131,6 +131,87 @@ def test_k_core_matches_naive_peel(spark, edges, k):
     assert got == want
 
 
+dense_ids = st.integers(min_value=0, max_value=7)
+dense_edge_lists = st.lists(
+    st.tuples(dense_ids, dense_ids),
+    min_size=0,
+    max_size=20,
+    unique=True,
+)
+
+
+def _pair_frame_and_nx(spark, edges):
+    """The edge list as an (a, b) string frame, and the networkx graph
+    of its non-loop edges."""
+    import networkx as nx
+
+    df = spark.createDataFrame(
+        [(str(u), str(v)) for u, v in edges], "a string, b string"
+    )
+    return df, nx.Graph([(str(u), str(v)) for u, v in edges if u != v])
+
+
+@given(dense_edge_lists)
+@settings(SET, max_examples=4)
+def test_coreness_matches_networkx(spark, edges):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import coreness
+
+    df, g = _pair_frame_and_nx(spark, edges)
+    got = {r["node"]: r["coreness"] for r in coreness(df, k_max=8).collect()}
+    assert got == nx.core_number(g)
+
+
+@given(dense_edge_lists)
+@settings(SET, max_examples=4)
+def test_onion_decomposition_matches_networkx(spark, edges):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import onion_decomposition
+
+    df, g = _pair_frame_and_nx(spark, edges)
+    layer, core = nx.onion_layers(g), nx.core_number(g)
+    got = {
+        r["node"]: (r["layer"], r["coreness"])
+        for r in onion_decomposition(df).collect()
+    }
+    assert got == {n: (layer[n], core[n]) for n in g}
+
+
+def _truss_support(t):
+    return {
+        (min(u, v), max(u, v)): len(set(t[u]) & set(t[v])) for u, v in t.edges()
+    }
+
+
+@given(dense_edge_lists, st.integers(min_value=2, max_value=5))
+@settings(SET, max_examples=4)
+def test_k_truss_matches_networkx(spark, edges, k):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import k_truss
+
+    df, g = _pair_frame_and_nx(spark, edges)
+    got = {(r["a"], r["b"]): r["support"] for r in k_truss(df, k=k).collect()}
+    assert got == _truss_support(nx.k_truss(g, k))
+
+
+@given(dense_edge_lists)
+@settings(SET, max_examples=4)
+def test_trussness_matches_networkx(spark, edges):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import trussness
+
+    df, g = _pair_frame_and_nx(spark, edges)
+    want = {}
+    for k in range(2, 9):  # 8 nodes: no edge is in the 9-truss
+        want.update(dict.fromkeys(_truss_support(nx.k_truss(g, k)), k))
+    got = {(r["a"], r["b"]): r["trussness"] for r in trussness(df, k_max=8).collect()}
+    assert got == want
+
+
 def _naive_triangles(edges):
     und = {frozenset((u, v)) for (u, v) in edges if u != v}
     adj = {}

@@ -584,7 +584,7 @@ def test_trussness_on_clique_plus_tail(spark):
     df = spark.createDataFrame(clique + [("c0", "tail")], ["a", "b"])
     out = {
         (r["a"], r["b"]): r["trussness"]
-        for r in trussness(df, k_max=6, rounds=2).collect()
+        for r in trussness(df, k_max=6).collect()
     }
     for e in clique:
         assert out[e] == 5, e
@@ -593,7 +593,7 @@ def test_trussness_on_clique_plus_tail(spark):
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="k_max"):
-        trussness(df, k_max=4, rounds=2).collect()
+        trussness(df, k_max=4)
 
 
 def test_deep_iteration_chain_stays_flat(spark):

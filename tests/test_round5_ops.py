@@ -541,6 +541,19 @@ def test_onion_decomposition_path_and_clique(spark):
         assert out[n]["layer"] == 2 and out[n]["coreness"] == 3
 
 
+def test_onion_decomposition_without_pairs_is_empty(spark):
+    # self-loops only: no pair of distinct nodes, so nothing to peel
+    from onionnet_spark.operators.analytics import coreness, onion_decomposition
+
+    loops = spark.createDataFrame([("a", "a"), ("b", "b")], "a string, b string")
+    out = onion_decomposition(loops)
+    assert out.dtypes == [("node", "string"), ("layer", "int"), ("coreness", "int")]
+    assert out.count() == 0
+    core = coreness(loops)
+    assert core.dtypes == [("node", "string"), ("coreness", "int")]
+    assert core.count() == 0
+
+
 def test_onion_layers_refine_coreness(spark):
     from onionnet_spark.operators.analytics import coreness, onion_decomposition
     from onionnet_spark.queries.graph_queries import _cosupply_top_pairs

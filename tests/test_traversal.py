@@ -128,6 +128,32 @@ def test_deep_chain_distances_across_checkpoint_rebases(spark, monkeypatch):
     assert {r["sid"] for r in got.select("sid").collect()} == {"L:p0"}
 
 
+def test_dangling_endpoint_takes_the_string_keying(spark, monkeypatch):
+    # edge b -> c with c missing from the node table: int levels map
+    # back through the node index, which has no row for c, so the int
+    # keying once dropped c from `reachable` (k_hop kept it)
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators.traversal import pseudo_diameter
+
+    g = grow_onion(
+        spark.createDataFrame([("L", "a"), ("L", "b")], "layer string, node_id string"),
+        spark.createDataFrame(
+            [("L", "a", "L", "b"), ("L", "b", "L", "c")],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+        validate_endpoints=False,
+    )
+    a = ("L", "a")
+    assert g.cached_int_sym() is None and g.cached_int_endpoints() is None
+    got = (rows_to_set(reachable(g, a)), rows_to_set(pseudo_diameter(g, a)))
+    assert got[0] == {(0, "L", "a"), (1, "L", "b"), (2, "L", "c")}
+    monkeypatch.setattr(OnionGraph, "cached_int_sym", lambda self: None)
+    monkeypatch.setattr(
+        OnionGraph, "cached_int_endpoints", lambda self, d="downstream": None
+    )
+    assert (rows_to_set(reachable(g, a)), rows_to_set(pseudo_diameter(g, a))) == got
+
+
 def test_on_shortest_deep_tail_unaffected_by_early_stop(spark):
     # diamond a->{b,c}->d followed by a long tail d->t1->...->t6:
     # early termination must not change membership (a, b, c, d — both
