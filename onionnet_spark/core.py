@@ -42,6 +42,24 @@ EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
 # ceiling. Above it the joins shuffle.
 BROADCAST_MAX = 2_000_000
 
+# The driver-frontier budget of the BFS level loop (traversal._bfs_levels):
+# a level whose frontier is a driver-side key list of at most this many
+# keys runs as one bounded Spark job that collects at most this many
+# + 1 edge rows, and the driver dedups them. Past it the level runs as
+# Spark rounds. Measured at sf0.1 (4 vCPU, one level, warm): a driver
+# level costs about as much as a Spark round at ~10k frontier keys of
+# one edge row each, and at ~5k keys of five rows each (~26k rows);
+# at 8192 keys and rows the driver level took 0.75 s against 0.95 s.
+DRIVER_FRONTIER_MAX = 8192
+
+
+def row_count(df: DataFrame) -> int:
+    """The row count of `df` in ONE Spark job: the count of the JVM
+    rows of its zero-column projection. (`DataFrame.count()` runs two
+    jobs under AQE: its aggregation stage is a job of its own.) A
+    persisted or lazily checkpointed `df` is materialized whole by it."""
+    return df.select()._jdf.queryExecution().toRdd().count()
+
 
 def split_node_key(key: str) -> list[Column]:
     """The (layer, node_id) columns of a 'layer:node_id' key column:
@@ -65,9 +83,8 @@ def literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
 
     A Python list passed to `spark.createDataFrame` is a parallelized
     Python RDD in classic PySpark, so every scan of it forks Python
-    worker tasks;
-    BFS seeds, stop probes and target sets are rescanned at every
-    level. The Arrow route depends on a session conf and falls back
+    worker tasks, and BFS seeds and target sets are rescanned at
+    every level. The Arrow route depends on a session conf and falls back
     to the same RDD without it. Row values must be JSON-encodable
     (str, int, float, bool, None); an empty list keeps the schema.
     """
@@ -257,11 +274,16 @@ class OnionGraph:
                 ends.select(F.xxhash64("dst_layer", "dst_id").alias("idx"))
             )
             idx = nodes_idx.select("idx")
-            if chk["n"] != chk["d"] or ends.join(
-                F.broadcast(idx) if chk["n"] <= BROADCAST_MAX else idx,
-                on="idx",
-                how="left_anti",
-            ).take(1):
+            # the dangling endpoints are counted, not taken: `take(1)` on
+            # an empty result scans partition batch after batch, one job
+            # per batch
+            if chk["n"] != chk["d"] or row_count(
+                ends.join(
+                    F.broadcast(idx) if chk["n"] <= BROADCAST_MAX else idx,
+                    on="idx",
+                    how="left_anti",
+                )
+            ):
                 nodes_idx.unpersist()
                 return None
             return nodes_idx
@@ -364,8 +386,8 @@ class OnionGraph:
         """(node count, edge count); the node count also seeds
         `cached_n_nodes`, so a view already counted pays no second
         count job."""
-        self._n_nodes = self.nodes.count()
-        return self._n_nodes, self.edges.count()
+        self._n_nodes = row_count(self.nodes)
+        return self._n_nodes, row_count(self.edges)
 
     def cached_n_nodes(self) -> int:
         """Node count, computed once per graph instance.
@@ -379,7 +401,7 @@ class OnionGraph:
         cheap job against the (persisted) node table.
         """
         if not hasattr(self, "_n_nodes"):
-            self._n_nodes = self.nodes.count()
+            self._n_nodes = row_count(self.nodes)
         return self._n_nodes
 
     def cached_endpoints(self, direction: str = "downstream") -> DataFrame:

@@ -33,6 +33,7 @@ import weakref
 
 from pyspark.sql import DataFrame
 
+from onionnet_spark.core import row_count
 from onionnet_spark.memo import session_memo
 
 
@@ -81,8 +82,6 @@ class IterCheckpointer:
 
     def cut_count(self, df: DataFrame) -> tuple[DataFrame, int]:
         """A lazy cut of `df` and its row count in ONE Spark job: the
-        count of the cut's JVM rows is the action that materializes
-        it. (`DataFrame.count()` on a lazy cut runs two jobs under
-        AQE: its aggregation stage is a job of its own.)"""
+        count (core.row_count) is the action that materializes it."""
         cut = self.cut(df, eager=False)
-        return cut, cut._jdf.queryExecution().toRdd().count()
+        return cut, row_count(cut)

@@ -268,18 +268,28 @@ def _dist_map(df, *key):
     return got
 
 
-def _in_both_keyings(run):
-    """run() as is, then again with the int-keyed views reported
-    unavailable, so every traversal also takes the string keying."""
+def _in_every_mode(run):
+    """run() in both keyings (as is, then with the int-keyed views
+    reported unavailable, so every traversal also takes the string
+    keying), each at the default driver-frontier budget and at a
+    budget of 1, where every level of more than one edge row hands
+    off from driver levels to Spark rounds."""
     import pytest
 
     from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators import traversal
+
+    def at_both_budgets():
+        first = run()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(traversal, "DRIVER_FRONTIER_MAX", 1)
+            return first, run()
 
     with pytest.MonkeyPatch.context() as mp:
-        first = run()
+        first = at_both_budgets()
         mp.setattr(OnionGraph, "cached_int_endpoints", lambda self, direction: None)
         mp.setattr(OnionGraph, "cached_int_sym", lambda self: None)
-        return first, run()
+        return (*first, *at_both_budgets())
 
 
 @given(edge_lists, node_ids, st.integers(min_value=1, max_value=3))
@@ -308,7 +318,7 @@ def test_k_hop_and_reachable_match_python_bfs(spark, edges, start, k):
     for d in ("downstream", "upstream"):
         want["reach_" + d] = _naive_bfs(edges, [start], d)
     want = {c: {(v,): x for v, x in m.items()} for c, m in want.items()}
-    for got in _in_both_keyings(run):
+    for got in _in_every_mode(run):
         assert got == want
 
 
@@ -338,7 +348,7 @@ def test_multi_source_bfs_matches_python_bfs(spark, edges, sources, max_dist):
         }
         for d in ("downstream", "upstream", "sym")
     }
-    for got in _in_both_keyings(run):
+    for got in _in_every_mode(run):
         assert got == want
 
 
@@ -369,7 +379,7 @@ def test_on_shortest_path_matches_python_bfs(
         for v in fwd
         if v in rev and fwd[v] + rev[v] in lengths
     }
-    for got in _in_both_keyings(run):
+    for got in _in_every_mode(run):
         assert got == want
 
 

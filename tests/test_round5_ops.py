@@ -554,16 +554,26 @@ def test_onion_decomposition_without_pairs_is_empty(spark):
     assert core.count() == 0
 
 
-def test_onion_layers_refine_coreness(spark):
+def test_onion_layers_refine_coreness(spark, sf_dir):
+    """coreness and onion_decomposition on the registry's co-supply
+    pairs against networkx's core numbers and onion layers of the
+    same edges."""
+    import networkx as nx
+
     from onionnet_spark.operators.analytics import coreness, onion_decomposition
     from onionnet_spark.queries.graph_queries import _cosupply_top_pairs
 
-    pairs = _cosupply_top_pairs(spark, "/root/testdata/sf0.001", 60)
-    onion = {r["node"]: r for r in onion_decomposition(pairs).collect()}
-    core = {r["node"]: r["coreness"] for r in coreness(pairs, k_max=12).collect()}
-    assert set(onion) == set(core)
-    for n in onion:
-        assert onion[n]["coreness"] == core[n]  # onion refines, never disagrees
+    pairs = _cosupply_top_pairs(spark, sf_dir, 60)
+    ref = nx.Graph([(r["a"], r["b"]) for r in pairs.collect() if r["a"] != r["b"]])
+    layer, core = nx.onion_layers(ref), nx.core_number(ref)
+    assert max(core.values()) > 1  # a peel with more than one shell
+    onion = {
+        r["node"]: (r["layer"], r["coreness"])
+        for r in onion_decomposition(pairs).collect()
+    }
+    assert onion == {n: (layer[n], core[n]) for n in ref}
+    got = {r["node"]: r["coreness"] for r in coreness(pairs, k_max=12).collect()}
+    assert got == core
 
 
 # ----------------------------------------------- keep policy / fertility

@@ -436,3 +436,133 @@ def test_relaxation_family_job_counts(spark):
         got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
     over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
     assert not over, over
+
+
+def test_keys_with_quotes_backslashes_colons_and_non_ascii(spark):
+    """Driver levels filter the edges by literal keys: layers and ids
+    holding quotes, backslashes, colons and non-ASCII text match
+    exactly, whatever the parser's string-literal setting, in both
+    keyings, and with a driver budget of 1 (hand-off to Spark rounds
+    wherever a level has more than one edge row)."""
+    from onionnet_spark.core import OnionGraph, literal_frame
+    from onionnet_spark.operators import traversal
+    from onionnet_spark.operators.traversal import _in_keys, multi_source_bfs
+
+    n = [("l'1", "a\\'b"), ("l'1", "c:d"), ("ü:2", "日本\\n"), ("ü:2", "'"), ("l'1", "")]
+    g = OnionGraph(
+        spark.createDataFrame(n, "layer string, node_id string"),
+        spark.createDataFrame(
+            [(*n[u], *n[v]) for u, v in [(0, 1), (1, 2), (2, 3), (3, 4), (0, 2)]],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+    )
+    want = {(0, *n[0]), (1, *n[1]), (1, *n[2]), (2, *n[3])}
+    cases = {
+        "k_hop": (lambda: k_hop(g, n[0], 2), want),
+        "reachable": (lambda: reachable(g, n[0]), want | {(3, *n[4])}),
+        "on_shortest_path": (
+            lambda: on_shortest_path(g, n[0], [n[3]]).drop("d_r"),
+            {(0, *n[0]), (1, *n[2]), (2, *n[3])},
+        ),
+        "multi_source_bfs": (
+            lambda: multi_source_bfs(g, [n[3]], max_dist=1).drop("sid"),
+            {(0, *n[3]), (1, *n[4])},
+        ),
+    }
+    conf = "spark.sql.parser.escapedStringLiterals"
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(conf, escaped)
+            for budget in (traversal.DRIVER_FRONTIER_MAX, 1):
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(traversal, "DRIVER_FRONTIER_MAX", budget)
+                    got = {c: rows_to_set(op()) for c, (op, _) in cases.items()}
+                assert got == {c: w for c, (_, w) in cases.items()}, (escaped, budget)
+    finally:
+        spark.conf.unset(conf)
+    # the int keying's keys are arbitrary longs, the extremes included
+    ends = [(-(2**63),), (2**63 - 1,)]
+    longs = literal_frame(spark, ends + [(0,)], "x bigint")
+    assert sorted(map(tuple, longs.filter(_in_keys(["x"], ends)).collect())) == ends
+
+
+def test_ego_search_job_counts(spark):
+    """Spark jobs per call (op + collect) of the ego searches, in this
+    order, on a fresh 7-node toy graph: every level is a driver level,
+    one bounded job. The budgets are this loop's counts; the level
+    loop that ran every level as Spark rounds used 13, 10, 18 and 34."""
+    from onionnet_spark.core import OnionGraph
+
+    pairs = ["ab", "bc", "cd", "ac", "de", "ea"]
+    g = OnionGraph(
+        spark.createDataFrame([("L", x) for x in "abcdefg"], "layer string, node_id string"),
+        spark.createDataFrame(
+            [("L", u, "L", v) for u, v in pairs],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+    ).persist()
+    g.counts()
+    a, d = ("L", "a"), ("L", "d")
+    ops = {
+        "k_hop_downstream": (lambda: k_hop(g, a, 3, "downstream"), 4),
+        "k_hop_upstream": (lambda: k_hop(g, d, 2, "upstream"), 4),
+        "k_hop_bi": (lambda: k_hop(g, ("L", "c"), 2, "bi"), 5),
+        "on_shortest_path": (lambda: on_shortest_path(g, a, [d, ("L", "e")]), 8),
+    }
+    sc = spark.sparkContext
+    got = {}
+    try:
+        for name, (op, _) in ops.items():
+            group = f"ego_search_jobs_{name}"
+            sc.setJobGroup(group, name)
+            try:
+                op().collect()
+            finally:
+                sc._jsc.clearJobGroup()
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        g.unpersist()
+    over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
+    assert not over, over
+
+
+def test_counts_and_int_node_index_job_counts(spark):
+    """OnionGraph.counts() runs one job per table and leaves both
+    persisted tables built; the int node index's collision and
+    dangling-endpoint checks run in 7 jobs on a toy graph (9 when the
+    dangling check was a `take(1)`, 6 for `counts()` with
+    `DataFrame.count()`)."""
+    from onionnet_spark.core import OnionGraph
+
+    g = OnionGraph(
+        spark.createDataFrame([("L", x) for x in "abcdefg"], "layer string, node_id string"),
+        spark.createDataFrame(
+            [("L", u, "L", v) for u, v in ["ab", "bc", "cd", "ac", "de", "ea"]],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+    ).persist()
+    sc = spark.sparkContext
+
+    def jobs(name, op):
+        sc.setJobGroup(name, name)
+        try:
+            out = op()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(name))
+
+    def built(df):
+        cached = (
+            spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+        )
+        return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+    try:
+        assert not built(g.nodes) and not built(g.edges)
+        assert jobs("graph_counts", g.counts) == ((7, 6), 2)
+        assert built(g.nodes) and built(g.edges)
+        assert jobs("graph_n_nodes", g.cached_n_nodes) == (7, 0)
+        index, n_jobs = jobs("int_node_index", g._int_nodes)
+        assert index is not None and n_jobs <= 7
+    finally:
+        g.unpersist()
