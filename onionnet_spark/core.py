@@ -42,14 +42,20 @@ EDGE_KEY = ["src_layer", "src_id", "dst_layer", "dst_id"]
 # ceiling. Above it the joins shuffle.
 BROADCAST_MAX = 2_000_000
 
-# The driver-frontier budget of the BFS level loop (traversal._bfs_levels):
-# a level whose frontier is a driver-side key list of at most this many
-# keys runs as one bounded Spark job that collects at most this many
-# + 1 edge rows, and the driver dedups them. Past it the level runs as
-# Spark rounds. Measured at sf0.1 (4 vCPU, one level, warm): a driver
-# level costs about as much as a Spark round at ~10k frontier keys of
-# one edge row each, and at ~5k keys of five rows each (~26k rows);
-# at 8192 keys and rows the driver level took 0.75 s against 0.95 s.
+# The driver budget, which bounds two uses. (1) The BFS level loop
+# (traversal._bfs_levels): a level whose frontier is a driver-side key
+# list of at most this many keys runs as one bounded Spark job that
+# collects at most this many + 1 edge rows, and the driver dedups
+# them. Past it the level runs as Spark rounds. Measured at sf0.1
+# (4 vCPU, one level, warm): a driver level costs about as much as a
+# Spark round at ~10k frontier keys of one edge row each, and at ~5k
+# keys of five rows each (~26k rows); at 8192 keys and rows the
+# driver level took 0.75 s against 0.95 s. (2) The driver snapshot of
+# a graph (OnionGraph.local_graph): a graph of at most this many
+# nodes and this many edges is collected once, and weak components
+# and the unweighted rank walks run on it in Python instead of as
+# Spark fixpoints (perfbench `layer_analytics`, 430-node views:
+# components 26 -> 5 jobs, PageRank 18 -> 1).
 DRIVER_FRONTIER_MAX = 8192
 
 
@@ -68,6 +74,25 @@ def split_node_key(key: str) -> list[Column]:
     layer = F.split_part(F.col(key), F.lit(":"), F.lit(1))
     node_id = F.substring(F.col(key), F.length(layer) + 2, 2**31 - 1)
     return [layer.alias("layer"), node_id.alias("node_id")]
+
+
+def build_cache(df: DataFrame) -> None:
+    """Builds, with full parallelism, every persisted relation that
+    `df` reads and that is not built yet: one job each, none when all
+    are built. A bounded collect reads through ONE coalesced task,
+    which would otherwise build them serially (cold sf0.1 upstream
+    view, 4 vCPU: 14.3 s against 9.4 s with the view built first)."""
+    jspark = df.sparkSession._jsparkSession
+    plan = jspark.sharedState().cacheManager().useCachedData(
+        df._jdf.queryExecution().analyzed()
+    )
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        rel = leaves.apply(i)
+        if rel.getClass().getSimpleName() == "InMemoryRelation":
+            cache = rel.cacheBuilder()
+            if not cache.isCachedColumnBuffersLoaded():
+                cache.cachedColumnBuffers().count()
 
 
 @lru_cache(maxsize=64)
@@ -94,6 +119,19 @@ def literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.range(0, 1, 1, 1).select(
         F.inline(F.from_json(F.lit(js), ArrayType(schema)))
     )
+
+
+class LocalGraph:
+    """A graph's driver snapshot (`OnionGraph.local_graph`): its node
+    rows as (layer, node_id) and its edge rows as (src_layer, src_id,
+    dst_layer, dst_id) tuples, in collect order. Not a tuple, so the
+    view memo holds it as one opaque value and walks no row of it."""
+
+    __slots__ = ("nodes", "edges")
+
+    def __init__(self, nodes: list[tuple], edges: list[tuple]):
+        self.nodes = nodes
+        self.edges = edges
 
 
 class OnionGraph:
@@ -403,6 +441,33 @@ class OnionGraph:
         if not hasattr(self, "_n_nodes"):
             self._n_nodes = row_count(self.nodes)
         return self._n_nodes
+
+    def local_graph(self) -> LocalGraph | None:
+        """The graph's node keys and edge endpoint rows on the driver,
+        when both fit DRIVER_FRONTIER_MAX; None otherwise. Built once
+        per instance: the node count first (`cached_n_nodes`), then ONE
+        bounded collect of at most DRIVER_FRONTIER_MAX + 1 edge rows
+        through one partition (`limit` over many partitions scans them
+        batch after batch, a job each) and one node-key collect. An
+        unbuilt persisted relation under the edges is built in
+        parallel first (`build_cache`)."""
+
+        def build():
+            if self.cached_n_nodes() > DRIVER_FRONTIER_MAX:
+                return None
+            build_cache(self.edges)
+            edges = (
+                self.edge_endpoints()
+                .coalesce(1)
+                .limit(DRIVER_FRONTIER_MAX + 1)
+                .collect()
+            )
+            if len(edges) > DRIVER_FRONTIER_MAX:
+                return None
+            nodes = self.nodes.select(*NODE_KEY).collect()
+            return LocalGraph(list(map(tuple, nodes)), list(map(tuple, edges)))
+
+        return self._views.get("local", build)
 
     def cached_endpoints(self, direction: str = "downstream") -> DataFrame:
         """Column-pruned edge endpoints oriented for `direction`,

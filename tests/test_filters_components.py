@@ -295,11 +295,15 @@ def test_merge_node_properties_bulk(spark):
     assert g2.edges.collect()[0]["w"] == 99.0
 
 
-def test_star_cc_long_path(spark):
+def test_star_cc_long_path(spark, monkeypatch):
     # a 40-node path: star contraction converges in O(log^2 n)
-    # rounds, not diameter rounds — and must still be exact.
+    # rounds, not diameter rounds — and must still be exact. A driver
+    # budget of 0 keeps the graph off the driver snapshot.
+    from onionnet_spark import core
     from onionnet_spark.core import OnionGraph
     from onionnet_spark.operators.components import connected_components
+
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
 
     n = 40
     nodes = spark.createDataFrame(
@@ -322,12 +326,15 @@ def test_connected_components_deep_path_across_parquet_rebase(spark, monkeypatch
     # a 60-node path in shuffled order with the checkpointer's rebase
     # interval patched down to 2: the contraction rounds cross parquet
     # rebases and must still give one component labelled by the min key
+    # (a driver budget of 0 keeps the graph off the driver snapshot)
     import random
 
+    from onionnet_spark import core
     from onionnet_spark.core import OnionGraph
     from onionnet_spark.operators import components
     from onionnet_spark.operators.ckpt import IterCheckpointer
 
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
     rebases = []
 
     class RebaseEveryOther(IterCheckpointer):
@@ -356,8 +363,101 @@ def test_connected_components_deep_path_across_parquet_rebase(spark, monkeypatch
     assert {r["component"] for r in got} == {"Q:0"}
 
 
+def _dangling_graph(spark):
+    # l:0 and l:4 are edge endpoints missing from the node table; l:0 is
+    # the min key of its component, a self-loop and a 2-cycle ride along
+    from onionnet_spark.core import OnionGraph
+
+    nodes = spark.createDataFrame(
+        [("l", x) for x in "1235679"], "layer string, node_id string"
+    )
+    edges = spark.createDataFrame(
+        [("l", u, "l", v) for u, v in ("10", "02", "34", "56", "65", "22", "91")],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    return OnionGraph(nodes, edges)
+
+
+def test_driver_snapshot_matches_spark_engines_on_dangling_endpoints(spark, monkeypatch):
+    """Weak components, view_components, pagerank and personalized
+    pagerank on the driver snapshot give the Spark engines' labels and
+    ranks (a driver budget of 0 runs the Spark engines), also when an
+    edge endpoint is missing from the node table."""
+    from onionnet_spark import core
+    from onionnet_spark.operators.analytics import personalized_pagerank
+
+    def run():
+        g = _dangling_graph(spark)
+        return (
+            sorted(map(tuple, connected_components(g).collect())),
+            sorted(map(tuple, view_components(g, 2, "weak").collect())),
+            sorted(map(tuple, pagerank(g, 4).collect())),
+            sorted(map(tuple, personalized_pagerank(g, [("l", "0"), ("l", "9")], 4).collect())),
+        )
+
+    g = _dangling_graph(spark)
+    assert g.local_graph() is not None
+    local = run()
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
+    assert _dangling_graph(spark).local_graph() is None
+    star = run()
+    assert local[0] == star[0] == [
+        ("l", "1", "l:0"), ("l", "2", "l:0"), ("l", "3", "l:3"), ("l", "5", "l:5"),
+        ("l", "6", "l:5"), ("l", "7", "l:7"), ("l", "9", "l:0"),
+    ]
+    assert local[1] == star[1] == [
+        ("l:0", "l", "1", 3), ("l:0", "l", "2", 3), ("l:0", "l", "9", 3),
+        ("l:5", "l", "5", 2), ("l:5", "l", "6", 2),
+    ]
+    for got, want in zip(local[2:], star[2:]):
+        assert [r[:2] for r in got] == [r[:2] for r in want]
+        assert [r[2] for r in got] == pytest.approx([r[2] for r in want], rel=1e-12)
+    # the dangling seed l:0 teleports its mass onward to l:2
+    assert dict((r[1], r[2]) for r in local[3])["2"] > 0.5
+
+
+def test_driver_snapshot_job_counts(spark):
+    """Spark jobs per call (op + collect) on a counted small view of a
+    persisted graph: weak view_components collects the snapshot (the
+    view's edges, whose two induced-edge joins are a job each, and its
+    node keys) and its literal result; pagerank on the same instance
+    reuses the snapshot and runs only its result's collect."""
+    from onionnet_spark.core import OnionGraph
+
+    base = OnionGraph(
+        spark.createDataFrame(
+            [("A", x) for x in "acdz"] + [("B", x) for x in "be"] + [("C", "q")],
+            "layer string, node_id string",
+        ),
+        spark.createDataFrame(
+            [("A", "a", "B", "b"), ("B", "b", "A", "c"), ("A", "d", "B", "e"),
+             ("A", "z", "C", "q")],
+            "src_layer string, src_id string, dst_layer string, dst_id string",
+        ),
+    ).persist()
+    base.counts()
+    g = view_layers(base, ["A", "B"])
+    g.counts()
+    sc = spark.sparkContext
+    got = {}
+    for name, op in (
+        ("view_components", lambda: view_components(g, 1, "weak")),
+        ("pagerank", lambda: pagerank(g)),
+    ):
+        group = f"snapshot_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            op().collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    base.unpersist()
+    assert got["view_components"] <= 5 and got["pagerank"] == 1, got
+
+
 _CKPT_OWNER_SCRIPT = """
 import glob, tempfile
+from onionnet_spark import core
 from onionnet_spark.core import OnionGraph
 from onionnet_spark.memo import session_memo
 from onionnet_spark.operators import components
@@ -371,6 +471,7 @@ class RebaseEveryOther(IterCheckpointer):
 
 
 components.IterCheckpointer = RebaseEveryOther
+core.DRIVER_FRONTIER_MAX = 0  # the star engine, not the driver snapshot
 
 
 def star_dirs():

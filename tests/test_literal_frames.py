@@ -17,9 +17,11 @@ from onionnet_spark.operators.analytics import (
     betweenness_sampled,
     coreness,
     k_core,
+    pagerank,
     personalized_pagerank,
     rich_club,
 )
+from onionnet_spark.operators.components import connected_components, view_components
 from onionnet_spark.operators.joins import sorted_neighborhood_pairs
 from onionnet_spark.operators.traversal import (
     bfs_distances,
@@ -131,11 +133,34 @@ def test_operators_build_no_frame_from_a_python_list(
         (1, 3, 3, 1.0), (2, 1, 0, None),
     ]
     assert personalized_pagerank(g, [a]).count() == 5
+    # the driver snapshot's results are literal frames too
+    assert g.local_graph() is not None
+    assert {r["component"] for r in connected_components(g).collect()} == {"L:a", "L:e"}
+    assert rows_to_set(view_components(g, 2, "weak")) == {
+        ("L:a", 4, "L", x) for x in "abcd"
+    }
+    assert pagerank(g).count() == 5
     assert betweenness_sampled(g, [a]).count() == 5
     no_edges = g.canonical_edges().limit(0)
     assert coreness(no_edges).count() == 0
     recs = g.nodes.select("node_id")
     assert sorted_neighborhood_pairs(recs, "node_id", "node_id").count() == 10
+
+
+def test_unpersist_releases_the_driver_snapshot(spark):
+    nodes = spark.createDataFrame([("L", "a"), ("L", "b")], "layer string, node_id string")
+    edges = spark.createDataFrame(
+        [("L", "a", "L", "b")],
+        "src_layer string, src_id string, dst_layer string, dst_id string",
+    )
+    g = grow_onion(nodes, edges)
+    snap = g.local_graph()
+    assert sorted(snap.nodes) == [("L", "a"), ("L", "b")]
+    assert snap.edges == [("L", "a", "L", "b")]
+    assert g.local_graph() is snap  # built once per instance
+    g.unpersist()
+    assert "local" not in g._views
+    assert g.local_graph() is not snap
 
 
 def test_empty_inputs_return_empty_frames_with_todays_columns(weighted_graph):

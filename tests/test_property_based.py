@@ -24,10 +24,12 @@ edge_lists = st.lists(
 )
 
 
-def _graph_of(spark, edges, isolated=(), edges_unique_undirected=False):
+def _graph_of(spark, edges, isolated=(), edges_unique_undirected=False, missing=()):
+    """The graph of `edges` over nodes 0, the endpoints and `isolated`,
+    less the `missing` ids: edge endpoints absent from the node table."""
     from onionnet_spark.core import OnionGraph
 
-    nodes = sorted({u for e in edges for u in e} | {0} | set(isolated))
+    nodes = sorted(({u for e in edges for u in e} | {0} | set(isolated)) - set(missing))
     ndf = spark.createDataFrame(
         [("l", str(n)) for n in nodes], "layer string, node_id string"
     )
@@ -61,33 +63,57 @@ def _union_find_components(nodes, edges):
 
 # ids past node_ids' range: nodes no edge touches
 isolated_ids = st.sets(st.integers(min_value=12, max_value=15), max_size=3)
+# endpoint ids left out of the node table (node 0 always stays)
+missing_ids = st.sets(st.integers(min_value=1, max_value=11), max_size=2)
 
 
-def _check_components(spark, edges, isolated, edges_unique_undirected=False):
+def _at_both_budgets(run):
+    """run() at the default driver budget, where a small graph runs on
+    its driver snapshot, then with the budget at 0, where the same call
+    runs the Spark engines. run() builds its own graph: the snapshot is
+    built once per graph instance."""
+    import pytest
+
+    from onionnet_spark import core
+
+    first = run()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(core, "DRIVER_FRONTIER_MAX", 0)
+        return first, run()
+
+
+def _check_components(spark, edges, isolated, missing, edges_unique_undirected=False):
     from onionnet_spark.operators.components import connected_components
 
-    g, nodes = _graph_of(spark, edges, isolated, edges_unique_undirected)
-    groups = {}
-    for r in connected_components(g).collect():
-        groups.setdefault(r["component"], set()).add(int(r["node_id"]))
-    assert {frozenset(v) for v in groups.values()} == _union_find_components(
-        nodes, edges
-    )
-    # each label is its group's min 'layer:node_id' key
-    for label, members in groups.items():
-        assert label == min(f"l:{n}" for n in members)
+    _, nodes = _graph_of(spark, edges, isolated, missing=missing)
+    # the union runs over every endpoint, in the node table or not, and
+    # each node is labelled by its group's min 'layer:node_id' key
+    label = {}
+    for group in _union_find_components(set(nodes) | {u for e in edges for u in e}, edges):
+        for n in group:
+            label[n] = min(f"l:{m}" for m in group)
+    want = {(n, label[n]) for n in nodes}
+
+    def run():
+        g, _ = _graph_of(spark, edges, isolated, edges_unique_undirected, missing)
+        rows = connected_components(g).collect()
+        assert len(rows) == len(nodes)
+        return {(int(r["node_id"]), r["component"]) for r in rows}
+
+    for got in _at_both_budgets(run):
+        assert got == want
 
 
-@given(edge_lists, isolated_ids)
+@given(edge_lists, isolated_ids, missing_ids)
 @SET
-def test_connected_components_matches_union_find(spark, edges, isolated):
-    _check_components(spark, edges, isolated)
+def test_connected_components_matches_union_find(spark, edges, isolated, missing):
+    _check_components(spark, edges, isolated, missing)
 
 
-@given(edge_lists, isolated_ids)
+@given(edge_lists, isolated_ids, missing_ids)
 @SET
 def test_connected_components_unique_undirected_matches_union_find(
-    spark, edges, isolated
+    spark, edges, isolated, missing
 ):
     # the edges_unique_undirected invariant, which skips the input
     # dedup: no self-loops, one row per undirected pair (orientation
@@ -97,7 +123,7 @@ def test_connected_components_unique_undirected_matches_union_find(
         if u != v and frozenset((u, v)) not in seen:
             seen.add(frozenset((u, v)))
             unique.append((u, v))
-    _check_components(spark, unique, isolated, edges_unique_undirected=True)
+    _check_components(spark, unique, isolated, missing, edges_unique_undirected=True)
 
 
 def _naive_k_core(nodes, edges, k):
@@ -395,12 +421,12 @@ value_lists = st.lists(
 )
 
 
-def _valued_graph_of(spark, edges, isolated, weights, values):
+def _valued_graph_of(spark, edges, isolated, weights, values, missing=()):
     """`_graph_of` with an edge weight `w` and a node value `val`
     (None where the value list holds None)."""
     from onionnet_spark.core import OnionGraph
 
-    g, nodes = _graph_of(spark, edges, isolated)
+    g, nodes = _graph_of(spark, edges, isolated, missing=missing)
     ndf = spark.createDataFrame(
         [("l", str(n), None if values[n] is None else float(values[n])) for n in nodes],
         "layer string, node_id string, val double",
@@ -423,19 +449,22 @@ def _round6(x):
 
 
 def _py_rank_walk(nodes, edges, n_iter, d, w=None, seeds=None):
+    """The rank walk over every endpoint, in the node table or not; the
+    ranks of the node table's nodes."""
     w = w or {e: 1.0 for e in edges}
     out_w = {}
     for u, v in edges:
         out_w[u] = out_w.get(u, 0.0) + w[(u, v)]
-    tele = {n: 1.0 if seeds is None or n in seeds else 0.0 for n in nodes}
+    keys = set(nodes) | {u for e in edges for u in e}
+    tele = {n: 1.0 if seeds is None or n in seeds else 0.0 for n in keys}
     m = len(nodes) if seeds is None else len(seeds)
-    r = {n: tele[n] / m for n in nodes}
+    r = {n: tele[n] / m for n in keys}
     for _ in range(n_iter):
-        c = dict.fromkeys(nodes, 0.0)
+        c = dict.fromkeys(keys, 0.0)
         for u, v in edges:
             c[v] += r[u] * w[(u, v)] / out_w[u]
-        r = {n: (1 - d) * tele[n] / m + d * c[n] for n in nodes}
-    return r
+        r = {n: (1 - d) * tele[n] / m + d * c[n] for n in keys}
+    return {n: r[n] for n in nodes}
 
 
 @given(
@@ -444,32 +473,44 @@ def _py_rank_walk(nodes, edges, n_iter, d, w=None, seeds=None):
     weight_lists,
     st.lists(node_ids, min_size=1, max_size=4),
     st.integers(min_value=1, max_value=4),
+    missing_ids,
 )
 @settings(SET, max_examples=4)
 def test_rank_walks_match_python_power_iteration(
-    spark, edges, isolated, weights, seeds, n_iter
+    spark, edges, isolated, weights, seeds, n_iter, missing
 ):
     import pytest
 
     from onionnet_spark.operators.analytics import pagerank, personalized_pagerank
 
-    g, nodes = _valued_graph_of(spark, edges, isolated, weights, [None] * 16)
+    _, nodes = _graph_of(spark, edges, isolated, missing=missing)
+    w = dict(zip(edges, weights))
+    want_pr = _py_rank_walk(nodes, edges, n_iter, 0.85)
+    want_wpr = _py_rank_walk(nodes, edges, n_iter, 0.85, w)
+    want_ppr = _py_rank_walk(nodes, edges, n_iter, 0.85, seeds=set(seeds))
 
     def ranks(df, col):
         return {int(r["node_id"]): r[col] for r in df.collect()}
 
-    pr = ranks(pagerank(g, n_iter), "pagerank")
-    assert pr == pytest.approx(_py_rank_walk(nodes, edges, n_iter, 0.85), abs=1e-9)
-    wpr = ranks(pagerank(g, n_iter, weight_col="w"), "pagerank")
-    w = dict(zip(edges, weights))
-    assert wpr == pytest.approx(_py_rank_walk(nodes, edges, n_iter, 0.85, w), abs=1e-9)
-    # repeated seeds count once
-    ppr = ranks(personalized_pagerank(g, [("l", s) for s in seeds], n_iter), "ppr")
-    want = _py_rank_walk(nodes, edges, n_iter, 0.85, seeds=set(seeds))
-    assert ppr == pytest.approx(want, abs=1e-9)
-    # every node a seed is the uniform walk, bit for bit
-    every = ranks(personalized_pagerank(g, [("l", n) for n in nodes], n_iter), "ppr")
-    assert every == pr
+    def run():
+        g, _ = _valued_graph_of(spark, edges, isolated, weights, [None] * 16, missing)
+        pr = ranks(pagerank(g, n_iter), "pagerank")
+        assert pr == pytest.approx(want_pr, abs=1e-9)
+        wpr = ranks(pagerank(g, n_iter, weight_col="w"), "pagerank")
+        assert wpr == pytest.approx(want_wpr, abs=1e-9)
+        # repeated seeds count once
+        ppr = ranks(personalized_pagerank(g, [("l", s) for s in seeds], n_iter), "ppr")
+        assert ppr == pytest.approx(want_ppr, abs=1e-9)
+        # every node a seed is the uniform walk, bit for bit, when every
+        # endpoint is a node (an endpoint outside the table is no seed)
+        every = ranks(personalized_pagerank(g, [("l", n) for n in nodes], n_iter), "ppr")
+        if not set(missing) & {u for e in edges for u in e}:
+            assert every == pr
+        return pr, ppr
+
+    (pr, ppr), (spark_pr, spark_ppr) = _at_both_budgets(run)
+    assert pr == pytest.approx(spark_pr, rel=1e-12, abs=1e-15)
+    assert ppr == pytest.approx(spark_ppr, rel=1e-12, abs=1e-15)
 
 
 @given(

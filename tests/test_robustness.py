@@ -115,7 +115,12 @@ def test_weighted_sssp_cap_exhaustion_raises(spark):
     assert dist["8"] == 8.0
 
 
-def test_connected_components_cap_exhaustion_raises(spark):
+def test_connected_components_cap_exhaustion_raises(spark, monkeypatch):
+    from onionnet_spark import core
+
+    # the star engine: a driver budget of 0 keeps the chain off the
+    # driver snapshot, where no round budget applies
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
     g = _chain_graph(spark, 10)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(g, max_iterations=3)

@@ -596,7 +596,12 @@ def test_trussness_on_clique_plus_tail(spark):
         trussness(df, k_max=4)
 
 
-def test_deep_iteration_chain_stays_flat(spark):
+def test_deep_iteration_chain_stays_flat(spark, monkeypatch):
+    from onionnet_spark import core
+
+    # the star engine: a driver budget of 0 keeps the path off the
+    # driver snapshot
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
     # 30-node path graph: min-label CC needs ~30 propagation rounds,
     # far past the ~12-checkpoint chain where localCheckpoint replay
     # turns geometric (x4/sweep — this test would effectively hang
