@@ -37,6 +37,16 @@ fixpoint under a budget derived from the data:
     the support its previous k counted): `k_truss` is one k of it and
     `trussness` all of them.
 `k_core` keeps its own delta peel over the graph's cached views.
+
+The symmetry-breaking operators share one retire loop, `_retire`:
+each round a step elects winners by md5 priority among the live items
+and retires them; the loop cuts the live set, counts it in one job and
+ends when nothing is live. `maximal_matching` (over edges),
+`maximal_independent_set` and `greedy_coloring` (over nodes) are its
+step functions. Every round retires at least the live item with the
+extreme priority, so no operator takes a round option. `boruvka_msf`
+merges the components its picked edges join by star contraction
+(`components._star_fixpoint`), the weak-components engine.
 """
 
 from __future__ import annotations
@@ -56,6 +66,7 @@ from onionnet_spark.core import (
     split_node_key,
 )
 from onionnet_spark.operators.ckpt import IterCheckpointer
+from onionnet_spark.operators.components import _star_fixpoint
 from onionnet_spark.operators.traversal import _uniq
 
 
@@ -1259,73 +1270,91 @@ def trussness(
     )
 
 
+def _retire(live: DataFrame, step, name: str) -> DataFrame:
+    """The one symmetry-breaking loop, behind `maximal_matching`,
+    `maximal_independent_set` and `greedy_coloring`. `live` holds the
+    items still in play (edges or nodes). Each round `step(live)`
+    returns (winners, stay): the round's winners, elected by md5
+    priority, and `stay`, which maps the winners to the items that
+    stay live. The loop cuts the winners lazily and hands that cut to
+    `stay`, so the one job that cuts and counts the live set
+    (`IterCheckpointer.cut_count`) also materializes the winners,
+    which are computed once. It ends when nothing is live and returns
+    the union of the per-round winners.
+
+    Each round retires at least the live item with the extreme md5
+    priority, so |live| + 1 rounds always suffice; an exhausted budget
+    is a backstop that raises a RuntimeError naming `name` and the
+    round count."""
+    ck = IterCheckpointer(prefix="onionnet_retire_")
+    live, n = ck.cut_count(live)
+    rounds, won = n + 1, []
+    for _ in range(rounds):
+        wins, stay = step(live)
+        won.append(ck.cut(wins, eager=False))
+        live, n = ck.cut_count(stay(won[-1]))
+        if not n:
+            return reduce(DataFrame.unionByName, won)
+    raise RuntimeError(
+        f"{name} did not converge within {rounds} rounds ({n} items still "
+        "live); every round retires at least one"
+    )
+
+
+def _sym(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both directions (u, v) of the undirected pairs of an edge list
+    (`_pairs`), cut."""
+    e = _pairs(edges, a_col, b_col)
+    return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    ).localCheckpoint()
+
+
 def maximal_matching(
     edges: DataFrame,
-    rounds: int = 5,
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
     """Greedy maximal matching by distributed symmetry breaking
     (the classic local-min-edge rule): an edge joins the matching
     when its deterministic priority (md5 of the canonical pair) is
-    the minimum among ALL edges at both of its endpoints; matched
-    endpoints and their incident edges drop, and the rule repeats.
-    Expected O(log n) rounds; every round is two node-keyed
-    aggregations (per-node min priority) plus two semi/anti joins —
-    no global ordering anywhere.
+    the minimum among ALL live edges at both of its endpoints; matched
+    endpoints and their incident edges drop, and the rule repeats
+    until no edge is live (`_retire` over the edges). Expected
+    O(log n) rounds; every round is one node-keyed aggregation (per-node
+    min priority) plus joins — no global ordering anywhere.
 
-    A RuntimeError is raised if edges survive the round budget (the
-    matching would be non-maximal). Returns the matched edges (a, b).
+    Returns the matched edges (a, b).
     """
-    e = (
-        _pairs(edges, a_col, b_col)
-        .withColumn("pri", F.md5(F.concat_ws("|", "a", "b")))
-        .localCheckpoint()
-    )
-    matched = None
-    for _ in range(rounds):
-        nodemin = (
+
+    def step(e: DataFrame):
+        low = (
             e.select(F.col("a").alias("node"), "pri")
             .unionByName(e.select(F.col("b").alias("node"), "pri"))
             .groupBy("node")
             .agg(F.min("pri").alias("mp"))
         )
         m = (
-            e.join(
-                nodemin.select(F.col("node").alias("a"), F.col("mp").alias("mpa")),
-                on="a",
-            )
-            .join(
-                nodemin.select(F.col("node").alias("b"), F.col("mp").alias("mpb")),
-                on="b",
-            )
+            e.join(low.select(F.col("node").alias("a"), F.col("mp").alias("mpa")), on="a")
+            .join(low.select(F.col("node").alias("b"), F.col("mp").alias("mpb")), on="b")
             .filter((F.col("pri") == F.col("mpa")) & (F.col("pri") == F.col("mpb")))
             .select("a", "b")
-            .localCheckpoint()
         )
-        matched = m if matched is None else matched.unionByName(m).localCheckpoint()
-        mnodes = (
-            m.select(F.col("a").alias("node"))
-            .unionByName(m.select(F.col("b").alias("node")))
-            .distinct()
-        )
-        e = (
-            e.join(mnodes.select(F.col("node").alias("a")), on="a", how="left_anti")
-            .join(mnodes.select(F.col("node").alias("b")), on="b", how="left_anti")
-            .localCheckpoint()
-        )
-    n_left = e.count()
-    if n_left:
-        raise RuntimeError(
-            f"maximal_matching: {n_left} edges remain after {rounds} "
-            "rounds; raise `rounds`"
-        )
-    return matched.select("a", "b")
+
+        def stay(m: DataFrame) -> DataFrame:
+            used = m.select(F.col("a").alias("n")).unionByName(m.select(F.col("b").alias("n")))
+            return e.join(used.withColumnRenamed("n", "a"), on="a", how="left_anti").join(
+                used.withColumnRenamed("n", "b"), on="b", how="left_anti"
+            )
+
+        return m, stay
+
+    e = _pairs(edges, a_col, b_col).withColumn("pri", F.md5(F.concat_ws("|", "a", "b")))
+    return _retire(e, step, "maximal_matching")
 
 
 def maximal_independent_set(
     edges: DataFrame,
-    rounds: int = 6,
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
@@ -1334,72 +1363,40 @@ def maximal_independent_set(
     an active node joins the MIS when its deterministic priority
     (md5 of the node key) is strictly smaller than every ACTIVE
     neighbor's; selected nodes and their neighbors deactivate, and
-    the rule repeats. Actives with no remaining active neighbor join
+    the rule repeats until no node is active (`_retire` over the
+    nodes). Actives with no remaining active neighbor join
     unconditionally. Expected O(log n) rounds; every round is one
-    node-keyed neighbor-min aggregation plus anti-joins — no global
+    node-keyed neighbor-min aggregation plus joins — no global
     ordering anywhere, the 100 TB shape.
 
-    A RuntimeError is raised if active nodes survive the round budget
-    (the set would not be maximal). Returns the MIS members as
-    (node).
+    Returns the MIS members as (node).
     """
-    e = (
-        _pairs(edges, a_col, b_col)
-        .localCheckpoint()
-    )
-    active = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    mis = None
-    for _ in range(rounds):
-        nbrmin = (
-            e.select(F.col("a").alias("node"), F.md5("b").alias("npri"))
-            .unionByName(e.select(F.col("b").alias("node"), F.md5("a").alias("npri")))
-            .groupBy("node")
-            .agg(F.min("npri").alias("mn"))
+    sym = _sym(edges, a_col, b_col)
+
+    def step(live: DataFrame):
+        e = sym.join(live.select(F.col("node").alias("u")), on="u", how="left_semi").join(
+            live.select(F.col("node").alias("v")), on="v", how="left_semi"
         )
-        sel = (
-            active.join(nbrmin, on="node", how="left")
+        low = e.groupBy(F.col("u").alias("node")).agg(F.min(F.md5("v")).alias("mn"))
+        wins = (
+            live.join(low, on="node", how="left")
             .filter(F.col("mn").isNull() | (F.md5("node") < F.col("mn")))
             .select("node")
-            .localCheckpoint()
         )
-        mis = sel if mis is None else mis.unionByName(sel).localCheckpoint()
-        dead = (
-            sel.unionByName(
-                e.join(sel.select(F.col("node").alias("a")), on="a").select(
-                    F.col("b").alias("node")
+
+        def stay(wins: DataFrame) -> DataFrame:
+            # a winner's neighbors outside `live` are gone already
+            dead = wins.unionByName(
+                sym.join(wins.select(F.col("node").alias("u")), on="u").select(
+                    F.col("v").alias("node")
                 )
             )
-            .unionByName(
-                e.join(sel.select(F.col("node").alias("b")), on="b").select(
-                    F.col("a").alias("node")
-                )
-            )
-            .distinct()
-        )
-        active = active.join(dead, on="node", how="left_anti").localCheckpoint()
-        # early exit: Luby typically clears a star/shallow graph in
-        # 2-3 rounds — without this the loop always pays the full
-        # round budget in per-round job overhead (58s -> ~rounds-used
-        # at sf0.1, r8 sweep)
-        if active.count() == 0:
-            break
-        e = (
-            e.join(active.select(F.col("node").alias("a")), on="a", how="left_semi")
-            .join(active.select(F.col("node").alias("b")), on="b", how="left_semi")
-            .localCheckpoint()
-        )
-    n_left = active.count()
-    if n_left:
-        raise RuntimeError(
-            f"maximal_independent_set: {n_left} nodes still active "
-            f"after {rounds} rounds; raise `rounds`"
-        )
-    return mis.select("node")
+            return live.join(dead, on="node", how="left_anti")
+
+        return wins, stay
+
+    nodes = sym.select(F.col("u").alias("node")).distinct()
+    return _retire(nodes, step, "maximal_independent_set")
 
 
 def spectral_bisection(
@@ -1515,8 +1512,6 @@ def boruvka_msf(
     a_col: str = "a",
     b_col: str = "b",
     weight_col: str = "w",
-    rounds: int = 8,
-    cc_iterations: int = 25,
 ) -> DataFrame:
     """Minimum spanning forest by Borůvka's algorithm — THE
     distributed MST (Kruskal/Prim are inherently sequential): every
@@ -1526,14 +1521,17 @@ def boruvka_msf(
     correct algorithm must produce this exact edge set (which is
     what lets the oracle verify via the Kruskal cut property instead
     of replaying rounds). Selected edges join the forest; components
-    merge by min-label propagation over the (component, component)
-    contraction graph — a table that at least HALVES every round, so
-    O(log n) rounds total and the propagation loop runs on
-    component-count-sized data, never the edge list.
+    merge by star contraction (`components._star_fixpoint`) over the
+    (component, component) graph of the selected edges, so each node
+    takes the minimum label of its merged component. Each round at
+    least halves the number of components that still have crossing
+    edges, so ⌈log2 |V|⌉ + 1 rounds always end with none, and the
+    contraction runs on component-count-sized data, never the edge
+    list.
 
     Returns the forest edges (a, b, w). A RuntimeError is raised if
-    cross-component edges survive the round budget or a contraction
-    fails to converge.
+    cross-component edges survive that budget (a backstop) or a
+    contraction does not converge.
     """
     a, b = F.col(a_col).cast("string"), F.col(b_col).cast("string")
     e = (
@@ -1548,137 +1546,58 @@ def boruvka_msf(
         .withColumn("ekey", F.md5(F.concat_ws("|", "a", "b")))
         .localCheckpoint()
     )
-    labels = (
+    ck = IterCheckpointer(prefix="onionnet_boruvka_")
+    labels, n = ck.cut_count(
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint()
     )
-    forest = None
+    rounds, forest = max(n - 1, 0).bit_length() + 1, []
+    pick = F.min_by(
+        F.struct("a", "b", "w", "la", "lb"),
+        F.struct(F.col("w").alias("pw"), F.col("ekey").alias("pk")),
+    ).alias("m")
     for _ in range(rounds):
-        el = (
-            e.join(
-                labels.select(F.col("node").alias("a"), F.col("lbl").alias("la")),
-                on="a",
-            )
-            .join(
-                labels.select(F.col("node").alias("b"), F.col("lbl").alias("lb")),
-                on="b",
-            )
+        el, n_cross = ck.cut_count(
+            e.join(labels.select(F.col("node").alias("a"), F.col("lbl").alias("la")), on="a")
+            .join(labels.select(F.col("node").alias("b"), F.col("lbl").alias("lb")), on="b")
             .filter(F.col("la") != F.col("lb"))
-            .localCheckpoint()
         )
-        if not el.take(1):
-            break
-        pick = F.min_by(
-            F.struct("a", "b", "w", "ekey", "la", "lb"),
-            F.struct(F.col("w").alias("pw"), F.col("ekey").alias("pk")),
-        ).alias("m")
-        # per-label min edge over BOTH endpoint views
-        cand = el.select(
-            F.col("la").alias("lbl"), "a", "b", "w", "ekey", "la", "lb"
-        ).unionByName(
-            el.select(
-                F.col("lb").alias("lbl"), "a", "b", "w", "ekey", "la", "lb"
-            )
-        )
-        sel = (
-            cand.groupBy("lbl")
+        if not n_cross:
+            return reduce(DataFrame.unionByName, forest, e.select("a", "b", "w").limit(0))
+        # each component's min edge over BOTH endpoint views; the two
+        # components an edge joins can both pick it, hence the distinct
+        # (a later round never re-picks a forest edge: its endpoints
+        # share a label by then)
+        sel = ck.cut(
+            el.select(F.col("la").alias("lbl"), "a", "b", "w", "ekey", "la", "lb")
+            .unionByName(el.select(F.col("lb").alias("lbl"), "a", "b", "w", "ekey", "la", "lb"))
+            .groupBy("lbl")
             .agg(pick)
-            .select(
-                F.col("m.a").alias("a"),
-                F.col("m.b").alias("b"),
-                F.col("m.w").alias("w"),
-                F.col("m.ekey").alias("ekey"),
-                F.col("m.la").alias("la"),
-                F.col("m.lb").alias("lb"),
-            )
-            .distinct()
-            .localCheckpoint()
+            .select("m.*")
+            .distinct(),
+            eager=False,
         )
-        # forest is a union of the per-round MATERIALIZED picks (r10):
-        # sel's distinct already collapsed the both-endpoints-pick
-        # duplicate within the round, and a later round can never
-        # re-select a forest edge (its endpoints share a label by
-        # then), so the old whole-forest distinct + re-checkpoint
-        # rewrote the accumulated set every round for nothing.
-        add = sel.select("a", "b", "w")
-        forest = add if forest is None else forest.unionByName(add)
-        # contract: min-label propagation over the component graph
-        comp = sel.select(F.col("la").alias("u"), F.col("lb").alias("v"))
-        sym = comp.unionByName(
-            comp.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).localCheckpoint()
-        cur = (
-            sym.select(F.col("u").alias("lbl"))
-            .distinct()
-            .select("lbl", F.col("lbl").alias("m"))
-            .localCheckpoint()
+        forest.append(sel.select("a", "b", "w"))
+        merged = _star_fixpoint(
+            sel.select(F.col("la").alias("a"), F.col("lb").alias("b")), name="boruvka_msf"
+        ).select(F.col("a").alias("lbl"), F.col("b").alias("m"))
+        labels = ck.cut(
+            labels.join(merged, on="lbl", how="left").select(
+                "node", F.coalesce("m", "lbl").alias("lbl")
+            ),
+            eager=False,
         )
-        for _i in range(cc_iterations):
-            nbrmin = (
-                sym.join(
-                    cur.select(F.col("lbl").alias("v"), F.col("m").alias("mv")),
-                    on="v",
-                )
-                .groupBy(F.col("u").alias("lbl"))
-                .agg(F.min("mv").alias("mn"))
-            )
-            # the update join carries an 'improved' flag so
-            # convergence detection is a filter over the
-            # just-materialized checkpoint, not a second nxt-vs-cur
-            # shuffle join (the weak-CC pattern)
-            nxt = (
-                cur.join(nbrmin, on="lbl", how="left")
-                .select(
-                    "lbl",
-                    F.least("m", F.coalesce("mn", "m")).alias("m"),
-                    (
-                        F.col("mn").isNotNull() & (F.col("mn") < F.col("m"))
-                    ).alias("improved"),
-                )
-                .localCheckpoint()
-            )
-            changed = nxt.filter("improved").limit(1).count()
-            cur = nxt.drop("improved")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"boruvka_msf: component contraction did not converge in "
-                f"{cc_iterations} rounds; raise cc_iterations"
-            )
-        labels = (
-            labels.join(
-                cur.select(F.col("lbl"), F.col("m")), on="lbl", how="left"
-            )
-            .select("node", F.coalesce("m", "lbl").alias("lbl"))
-            .localCheckpoint()
-        )
-    else:
-        left = (
-            e.join(
-                labels.select(F.col("node").alias("a"), F.col("lbl").alias("la")),
-                on="a",
-            )
-            .join(
-                labels.select(F.col("node").alias("b"), F.col("lbl").alias("lb")),
-                on="b",
-            )
-            .filter(F.col("la") != F.col("lb"))
-        )
-        if left.take(1):
-            raise RuntimeError(
-                f"boruvka_msf: cross-component edges remain after "
-                f"{rounds} rounds; raise `rounds`"
-            )
-    return (forest if forest is not None else e.limit(0)).select("a", "b", "w")
+    raise RuntimeError(
+        f"boruvka_msf did not converge within {rounds} rounds ({n_cross} "
+        "cross-component edges still live); each round at least halves the "
+        "components with crossing edges"
+    )
 
 
 def greedy_coloring(
     edges: DataFrame,
-    rounds: int = 10,
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
@@ -1690,81 +1609,50 @@ def greedy_coloring(
     proper by construction; colors are bounded by max degree + 1
     (greedy bound).
 
-    Per round: one neighbor-max aggregation over the uncolored
-    frontier, one mex aggregation over colored neighbors (the mex
-    folds a sorted distinct color array — per-node work bounded by
-    degree), anti-join updates. No global ordering anywhere. Returns
-    (node, color).
+    `_retire` over the uncolored nodes, each carrying the colors its
+    colored neighbors took so far: per round, one neighbor-max
+    aggregation over the uncolored nodes, the mex of each winner's
+    taken colors (a fold over the sorted distinct array — per-node
+    work bounded by degree), and one aggregation that hands the
+    winners' colors to their uncolored neighbors. No global ordering
+    anywhere. Returns (node, color).
     """
-    e = _pairs(edges, a_col, b_col)
-    sym = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
+    sym = _sym(edges, a_col, b_col)
+    none = F.array().cast("array<int>")
+    mex = F.aggregate(
+        F.array_sort("taken"),
+        F.lit(0),
+        lambda acc, x: F.when(x == acc, acc + 1).otherwise(acc),
     )
-    uncolored = sym.select(F.col("u").alias("node")).distinct().localCheckpoint()
-    colored = None
-    for _ in range(rounds):
-        unbrmax = (
-            sym.join(
-                uncolored.select(F.col("node").alias("v")), on="v", how="left_semi"
-            )
-            .select(F.col("u").alias("node"), F.md5("v").alias("npri"))
-            .groupBy("node")
-            .agg(F.max("npri").alias("mx"))
-        )
-        sel = (
-            uncolored.join(unbrmax, on="node", how="left")
-            .filter(F.col("mx").isNull() | (F.md5("node") > F.col("mx")))
-            .select("node")
-            .localCheckpoint()
-        )
-        nbr_colors = (
-            sym.join(sel.select(F.col("node").alias("u")), on="u", how="left_semi")
-            .join(
-                (colored if colored is not None else sel.limit(0).select(
-                    F.col("node"), F.lit(0).alias("color")
-                )).select(F.col("node").alias("v"), "color"),
-                on="v",
-            )
+
+    def step(live: DataFrame):
+        rival = (
+            sym.join(live.select(F.col("node").alias("v")), on="v", how="left_semi")
             .groupBy(F.col("u").alias("node"))
-            .agg(F.array_sort(F.collect_set("color")).alias("cs"))
+            .agg(F.max(F.md5("v")).alias("mx"))
         )
-        assigned = (
-            sel.join(nbr_colors, on="node", how="left")
-            .select(
-                "node",
-                F.aggregate(
-                    F.coalesce("cs", F.array().cast("array<int>")),
-                    F.lit(0),
-                    lambda acc, x: F.when(x == acc, acc + 1).otherwise(acc),
-                ).alias("color"),
+        wins = (
+            live.join(rival, on="node", how="left")
+            .filter(F.col("mx").isNull() | (F.md5("node") > F.col("mx")))
+            .select("node", mex.alias("color"))
+        )
+
+        def stay(wins: DataFrame) -> DataFrame:
+            told = (
+                sym.join(wins.select(F.col("node").alias("v"), "color"), on="v")
+                .groupBy(F.col("u").alias("node"))
+                .agg(F.collect_set("color").alias("new"))
             )
-            .localCheckpoint()
-        )
-        # colored is a union of per-round MATERIALIZED assigned
-        # frames (r10): re-checkpointing the whole growing union
-        # every round rewrote all previously-colored rows O(rounds)
-        # times; a union over <= `rounds` checkpointed leaves scans
-        # the same bytes with no rewrite.
-        colored = (
-            assigned
-            if colored is None
-            else colored.unionByName(assigned)
-        )
-        uncolored = uncolored.join(sel, on="node", how="left_anti").localCheckpoint()
-        # converged: every remaining round would select nothing and
-        # assign nothing (sel derives from uncolored), so the fixed
-        # schedule's tail is a provable no-op — skip it
-        if not uncolored.take(1):
-            break
-    n_left = uncolored.count()
-    if n_left:
-        raise RuntimeError(
-            f"greedy_coloring: {n_left} nodes uncolored after "
-            f"{rounds} rounds; raise `rounds`"
-        )
-    return colored.select("node", F.col("color").cast("int").alias("color"))
+            return (
+                live.join(wins, on="node", how="left_anti")
+                .join(told, on="node", how="left")
+                .select("node", F.array_union("taken", F.coalesce("new", none)).alias("taken"))
+            )
+
+        return wins, stay
+
+    nodes = sym.select(F.col("u").alias("node")).distinct()
+    return _retire(nodes.withColumn("taken", none), step, "greedy_coloring")
 
 
 def attribute_assortativity(

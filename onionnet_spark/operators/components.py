@@ -15,7 +15,12 @@ One Spark weak-CC engine plus strong CC:
     to 26 jobs over 3 contraction rounds, and its first-call CPU
     from a median of 18.6 to 11.8 CPU-s (16 runs each).
   - `strongly_connected_components`: FW-BW-Trim (trim + forward
-    coloring + backward collect).
+    coloring + backward collect). The coloring is the frontier
+    relaxation loop (`traversal._relax`) and the collect the BFS level
+    loop (`traversal._bfs_levels`); its budget is derived from the
+    active node count.
+
+`_star_fixpoint` also merges `analytics.boruvka_msf`'s components.
 
 A graph that fits the driver snapshot (`OnionGraph.local_graph`: at
 most core.DRIVER_FRONTIER_MAX nodes and as many edges) skips the star
@@ -33,6 +38,7 @@ self-join plans grow exponentially.
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,7 +51,7 @@ from onionnet_spark.core import (
     split_node_key,
 )
 from onionnet_spark.operators.ckpt import IterCheckpointer
-from onionnet_spark.operators.traversal import _relax
+from onionnet_spark.operators.traversal import _bfs_levels, _relax
 
 
 def _star_round(edges: DataFrame) -> DataFrame:
@@ -246,9 +252,7 @@ def connected_components(graph: OnionGraph, max_iterations: int = 50) -> DataFra
     )
 
 
-def strongly_connected_components(
-    graph: OnionGraph, max_rounds: int = 50
-) -> DataFrame:
+def strongly_connected_components(graph: OnionGraph) -> DataFrame:
     """Strong connected components: Trim + forward-coloring +
     backward-collect (the FW-BW-Trim / Orzan coloring family used by
     distributed SCC systems; reference view_components with
@@ -267,19 +271,23 @@ def strongly_connected_components(
       3. COLLECT: backward BFS from each pivot restricted to its
          color class; everything reached both reaches the pivot
          (backward walk) and is reached by it (same color) → one SCC
-         per pivot, labeled by the pivot key. Remove, repeat.
+         per pivot, labeled by the pivot key. This is the BFS level
+         loop, `traversal._bfs_levels`, from the pivot frame over the
+         same-color edges walked dst → src, the pivot key carried as
+         the component. Remove, repeat.
 
-    Every frontier/label set is localCheckpoint-ed per iteration so
-    lineage stays flat. Returns (layer, node_id, component) with
-    component = min 'layer:node_id' key in the SCC — the same label
-    convention as the weak variant, so downstream size/threshold
-    logic is shared.
+    Every outer round resolves at least one SCC (its pivots'), so the
+    budget is the active node count + 1 rounds; exhausting it raises a
+    RuntimeError naming the operator and the round count. Every
+    frontier/label set is checkpointed per iteration so lineage stays
+    flat. Returns (layer, node_id, component) with component = min
+    'layer:node_id' key in the SCC — the same label convention as the
+    weak variant, so downstream size/threshold logic is shared.
     """
     key = F.concat_ws(":", F.col("src_layer"), F.col("src_id"))
     dkey = F.concat_ws(":", F.col("dst_layer"), F.col("dst_id"))
-    active = (
-        graph.nodes.select(graph.node_key_col().alias("key")).localCheckpoint()
-    )
+    ck = IterCheckpointer(prefix="onionnet_scc_")
+    active, n_active = ck.cut_count(graph.nodes.select(graph.node_key_col().alias("key")))
     edges = (
         graph.edge_endpoints()
         .select(key.alias("src"), dkey.alias("dst"))
@@ -289,21 +297,19 @@ def strongly_connected_components(
     )
     done: list[DataFrame] = []
 
-    def _restrict(e: DataFrame, keep: DataFrame, n_keep: int | None = None) -> DataFrame:
+    def _restrict(e: DataFrame, keep: DataFrame, n_keep: int) -> DataFrame:
         # keep is the build side of both semi joins: broadcast it
-        # when its (known) row count fits so the edge set streams
+        # when its row count fits so the edge set streams
         ks = keep.select(F.col("key").alias("src"))
         kd = keep.select(F.col("key").alias("dst"))
-        if n_keep is not None and n_keep <= BROADCAST_MAX:
+        if n_keep <= BROADCAST_MAX:
             ks, kd = F.broadcast(ks), F.broadcast(kd)
         return e.join(ks, on="src", how="left_semi").join(
             kd, on="dst", how="left_semi"
         )
 
-    n_active = active.count()
-    for _ in range(max_rounds):
-        if n_active == 0:
-            break
+    rounds = n_active + 1
+    for _ in range(rounds):
         # --- 1. trim to fixpoint ---------------------------------------
         # (A delta degree-ledger trim — aggregate in/out degrees once,
         # then peel with broadcast decrements against a STATIC edge
@@ -360,49 +366,24 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint()
         )
-        pivots = (
-            colors.filter(F.col("key") == F.col("color"))
-            .select("key", F.col("color").alias("component"))
-            .localCheckpoint()
+        pivots = colors.filter(F.col("key") == F.col("color")).select(
+            F.col("color").alias("component"), "key", F.lit(0).alias("dist")
         )
-        # visited grows as a LAZY union over per-round checkpointed
-        # frames (the greedy_coloring pattern): each round's anti-join
-        # rescans only materialized blocks instead of re-checkpointing
-        # the whole growing set every round
-        scc = pivots
-        frontier = pivots
-        while True:
-            preds = (
-                same_color_edges.join(
-                    frontier.select(
-                        F.col("key").alias("dst"), F.col("component")
-                    ),
-                    on="dst",
-                )
-                .select(F.col("src").alias("key"), "component")
-                .distinct()
-                .join(scc.select("key"), on="key", how="left_anti")
-                .localCheckpoint()
-            )
-            if preds.count() == 0:
-                break
-            scc = scc.unionByName(preds)
-            frontier = preds
+        scc = _bfs_levels(
+            same_color_edges, pivots, ["key"], ["dst"], ["src"], carry=("component",)
+        )[0].select("key", "component")
         done.append(scc)
-        active = active.join(scc.select("key"), on="key", how="left_anti").localCheckpoint()
-        n_active = active.count()
+        active, n_active = ck.cut_count(active.join(scc, on="key", how="left_anti").select("key"))
         edges = _restrict(edges, active, n_active).localCheckpoint()
-
-    if n_active > 0:
+    else:
         raise RuntimeError(
             f"strongly_connected_components did not resolve all nodes "
-            f"within {max_rounds} rounds ({n_active} still active); "
-            f"raise max_rounds"
+            f"within {rounds} rounds ({n_active} still active)"
         )
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out.select(*split_node_key("key"), "component")
+    empty = active.select("key", F.col("key").alias("component")).limit(0)
+    return reduce(DataFrame.unionByName, done, empty).select(
+        *split_node_key("key"), "component"
+    )
 
 
 def label_propagation_communities(

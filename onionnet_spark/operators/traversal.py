@@ -11,10 +11,11 @@ Reference parity: ``onionnet/searcher.py``:
     d_fwd(source, v) + d_rev(v, targets) in {d_fwd(source, t)}.
 
 Every hop-count BFS here (`bfs_distances`, `k_hop`, `reachable`,
-`pseudo_diameter`'s sweeps, `multi_source_bfs` and both arms of
-`on_shortest_path`) runs ONE level loop, `_bfs_levels`, in two
-phases. An ego search touches a few dozen nodes per level, where a
-Spark round's cost is its jobs, not its data:
+`pseudo_diameter`'s sweeps, `multi_source_bfs`, both arms of
+`on_shortest_path` and the backward collect of
+`components.strongly_connected_components`) runs ONE level loop,
+`_bfs_levels`, in two phases. An ego search touches a few dozen nodes
+per level, where a Spark round's cost is its jobs, not its data:
 
   - Driver levels. While the frontier is a driver-side key list of at
     most core.DRIVER_FRONTIER_MAX keys, a level is ONE bounded Spark
@@ -729,17 +730,19 @@ def on_shortest_path_weighted(
     distance (reference compute_on_shortest runs over graph-tool
     shortest_distance, which honors edge weights when given).
 
-    Distances come from two concurrent Bellman-Ford fixpoints;
-    membership compares ROUNDED (6 dp) sums so float associativity
-    cannot flake the equality. Returns (layer, node_id, d_f, d_r).
+    Distances come from two Bellman-Ford fixpoints run one after the
+    other: both persist the same edge projection, and Spark caches one
+    entry per plan, so an arm that finished first would unpersist the
+    cache the other is still reading. Membership compares ROUNDED
+    (6 dp) sums so float associativity cannot flake the equality.
+    Returns (layer, node_id, d_f, d_r).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fwd = pool.submit(weighted_sssp, graph, [source], "downstream", weight_col)
-        f_rev = pool.submit(weighted_sssp, graph, targets, "upstream", weight_col)
-        fwd = f_fwd.result().withColumnRenamed("dist", "d_f")
-        rev = f_rev.result().withColumnRenamed("dist", "d_r")
+    fwd = weighted_sssp(graph, [source], "downstream", weight_col).withColumnRenamed(
+        "dist", "d_f"
+    )
+    rev = weighted_sssp(graph, targets, "upstream", weight_col).withColumnRenamed(
+        "dist", "d_r"
+    )
     spark = graph.nodes.sparkSession
     target_df = F.broadcast(
         literal_frame(

@@ -1884,9 +1884,7 @@ def _matching_oracle(topn: int = 60, rounds: int = 5) -> str:
 
 
 def graph_matching_q(spark, sf_dir):
-    return analytics.maximal_matching(
-        _cosupply_top_pairs(spark, sf_dir, 60), rounds=5
-    )
+    return analytics.maximal_matching(_cosupply_top_pairs(spark, sf_dir, 60))
 
 
 _REG["graph_maximal_matching"] = (graph_matching_q, _matching_oracle())
@@ -1955,7 +1953,7 @@ def graph_mis_q(spark, sf_dir):
         F.concat_ws(":", "src_layer", "src_id").alias("a"),
         F.concat_ws(":", "dst_layer", "dst_id").alias("b"),
     )
-    return analytics.maximal_independent_set(e, rounds=6)
+    return analytics.maximal_independent_set(e)
 
 
 _REG["graph_mis"] = (graph_mis_q, _mis_oracle())
@@ -2081,7 +2079,7 @@ def graph_coloring_q(spark, sf_dir):
         F.concat_ws(":", "src_layer", "src_id").alias("a"),
         F.concat_ws(":", "dst_layer", "dst_id").alias("b"),
     )
-    return analytics.greedy_coloring(e, rounds=4)
+    return analytics.greedy_coloring(e)
 
 
 _REG["graph_coloring"] = (graph_coloring_q, _coloring_oracle())
@@ -2160,9 +2158,7 @@ def graph_msf_q(spark, sf_dir):
     counts) — the graph-sparsification step before visualizing or
     clustering a dense similarity graph."""
     pairs = _cosupply_top_pairs(spark, sf_dir, 60, with_weight=True)
-    msf = analytics.boruvka_msf(
-        pairs.select("a", "b", (-F.col("shared")).alias("w")), rounds=8
-    )
+    msf = analytics.boruvka_msf(pairs.select("a", "b", (-F.col("shared")).alias("w")))
     return msf.select(
         "a", "b", (-F.col("w")).cast("bigint").alias("shared")
     )

@@ -93,6 +93,39 @@ def test_strong_components_cycles(spark):
     }
 
 
+def test_scc_multi_cycle_with_trim_and_collect(spark):
+    from onionnet_spark.core import OnionGraph
+    from onionnet_spark.operators.components import (
+        strongly_connected_components,
+    )
+
+    # two cycles bridged by a DAG edge + a pendant tail: exercises the
+    # trim sweeps (tail), the coloring fixpoint (both cycles share a
+    # forward color until the pivot splits them) and a multi-level
+    # backward collect
+    nodes = spark.createDataFrame(
+        [("L", x) for x in ["a", "b", "c", "d", "e", "f", "t"]],
+        "layer string, node_id string",
+    )
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"),          # cycle 1
+         ("c", "d"),                                   # bridge (DAG)
+         ("d", "e"), ("e", "f"), ("f", "d"),          # cycle 2
+         ("f", "t")],                                  # pendant tail
+        "s string, d string",
+    ).select(
+        F.lit("L").alias("src_layer"), F.col("s").alias("src_id"),
+        F.lit("L").alias("dst_layer"), F.col("d").alias("dst_id"),
+    )
+    comp = {
+        r["node_id"]: r["component"]
+        for r in strongly_connected_components(OnionGraph(nodes, edges)).collect()
+    }
+    assert comp["a"] == comp["b"] == comp["c"] == "L:a"
+    assert comp["d"] == comp["e"] == comp["f"] == "L:d"
+    assert comp["t"] == "L:t"
+
+
 def test_view_components_strong_threshold(two_comp_graph):
     # the two_comp_graph is a DAG -> no SCC of size >= 2
     assert view_components(two_comp_graph, 2, connectivity="strong").count() == 0
@@ -502,6 +535,54 @@ assert not star_dirs() - before, "the released session left its directory"
 deep_path_cc(spark)  # this one is left for interpreter exit to remove
 print("ckpt-owner-ok")
 """
+
+
+def test_spark_cc_and_rank_walk_match_oracles(spark, sf_dir, monkeypatch):
+    """The registry's components_weak, pagerank and graph_ppr on the
+    Spark engines (star contraction, the Spark rank walk), against
+    their oracles: a driver budget of 0 keeps every view off the
+    driver snapshot. The query graphs are built in a memo of the
+    test's own, because a session-memoized view can hold a snapshot
+    built at the default budget; call spies check which engine ran."""
+    import __spark_entry__ as entry
+    from onionnet_spark import core
+    from onionnet_spark.memo import Memo
+    from onionnet_spark.operators import analytics, components
+    from onionnet_spark.queries import graph_queries
+    from tests.conftest import duck_to_set
+
+    calls = []
+
+    def spy(module, name):
+        fn = getattr(module, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapped)
+
+    spy(components, "_star_fixpoint")
+    spy(components, "_local_components")
+    spy(analytics, "_push")
+    spy(analytics, "_local_rank_walk")
+    monkeypatch.setattr(core, "DRIVER_FRONTIER_MAX", 0)
+    memo = Memo()
+    monkeypatch.setattr(graph_queries, "session_memo", lambda _spark: memo)
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    try:
+        for key, engine in [
+            ("components_weak", "_star_fixpoint"),
+            ("pagerank", "_push"),
+            ("graph_ppr", "_push"),
+        ]:
+            calls.clear()
+            got = rows_to_set(queries[key](spark, sf_dir))
+            assert engine in calls, (key, calls)
+            assert not {"_local_components", "_local_rank_walk"} & set(calls), key
+            assert got == duck_to_set(sf_dir, oracles[key]), key
+    finally:
+        memo.release()
 
 
 def test_rebase_directories_are_removed_by_their_owner(tmp_path):

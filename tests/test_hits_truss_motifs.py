@@ -122,7 +122,7 @@ def test_maximal_matching_properties(spark):
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("b", "d")],
         "a string, b string",
     )
-    m = maximal_matching(edges, rounds=5).collect()
+    m = maximal_matching(edges).collect()
     used = [n for r in m for n in (r["a"], r["b"])]
     # matching: no node twice
     assert len(used) == len(set(used))
@@ -133,14 +133,146 @@ def test_maximal_matching_properties(spark):
 
 
 def test_maximal_matching_guard(spark):
-    from onionnet_spark.operators.analytics import maximal_matching
-    import pytest as _p
+    # a step that retires nothing exhausts the |live| + 1 round budget,
+    # and the error names the operator and the round count
+    from onionnet_spark.operators.analytics import _retire
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], "a string, b string"
     )
-    with _p.raises(RuntimeError, match="remain after"):
-        maximal_matching(edges, rounds=0)
+    with pytest.raises(
+        RuntimeError, match=r"maximal_matching did not converge within 4 rounds"
+    ):
+        _retire(
+            edges, lambda live: (live.limit(0), lambda wins: live), "maximal_matching"
+        )
+
+
+def test_mis_is_independent_and_maximal(spark):
+    import random
+
+    rnd = random.Random(7)
+    edges = list({
+        tuple(sorted(rnd.sample(range(40), 2))) for _ in range(120)
+    })
+    df = spark.createDataFrame(
+        [(f"n{a}", f"n{b}") for a, b in edges], ["a", "b"]
+    )
+    from onionnet_spark.operators.analytics import maximal_independent_set
+
+    mis = {r["node"] for r in maximal_independent_set(df).collect()}
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(f"n{a}", set()).add(f"n{b}")
+        adj.setdefault(f"n{b}", set()).add(f"n{a}")
+    # independent: no two MIS members adjacent
+    for n in mis:
+        assert not (adj.get(n, set()) & mis), n
+    # maximal: every non-member has a member neighbor
+    for n in adj:
+        if n not in mis:
+            assert adj[n] & mis, n
+
+
+def test_coloring_is_proper_and_bounded(spark):
+    import random
+
+    rnd = random.Random(11)
+    edges = list({
+        tuple(sorted(rnd.sample(range(30), 2))) for _ in range(90)
+    })
+    df = spark.createDataFrame(
+        [(f"n{a}", f"n{b}") for a, b in edges], ["a", "b"]
+    )
+    from onionnet_spark.operators.analytics import greedy_coloring
+
+    colors = {
+        r["node"]: r["color"]
+        for r in greedy_coloring(df).collect()
+    }
+    deg = {}
+    for a, b in edges:
+        na, nb = f"n{a}", f"n{b}"
+        deg[na] = deg.get(na, 0) + 1
+        deg[nb] = deg.get(nb, 0) + 1
+        assert colors[na] != colors[nb]  # proper
+    for n, c in colors.items():
+        assert 0 <= c <= deg[n]  # greedy bound: mex <= degree
+
+
+def test_greedy_coloring_proper_and_converges_early(spark):
+    from onionnet_spark.operators.analytics import greedy_coloring
+
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
+        "a string, b string",
+    )
+    # the loop ends once no node is uncolored; the result must be
+    # proper, use <= max_deg + 1 colors and hold one row per node
+    rows = {r["node"]: r["color"] for r in greedy_coloring(e).collect()}
+    assert set(rows) == {"a", "b", "c", "d"}
+    for u, v in [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]:
+        assert rows[u] != rows[v]
+    assert max(rows.values()) <= 3
+
+
+def test_boruvka_matches_kruskal_bruteforce(spark):
+    import hashlib
+    import random
+
+    rnd = random.Random(5)
+    edges = {}
+    for _ in range(80):
+        u, v = sorted(rnd.sample(range(25), 2))
+        edges.setdefault((f"n{u:02d}", f"n{v:02d}"), rnd.randint(1, 40))
+    rows = [(a, b, w) for (a, b), w in edges.items()]
+    df = spark.createDataFrame(rows, ["a", "b", "w"])
+    from onionnet_spark.operators.analytics import boruvka_msf
+
+    got = {(r["a"], r["b"], r["w"]) for r in boruvka_msf(df).collect()}
+
+    # reference Kruskal under the SAME total order (w, md5 edge key)
+    def ekey(a, b):
+        return hashlib.md5(f"{a}|{b}".encode()).hexdigest()
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    want = set()
+    for (a, b), w in sorted(edges.items(), key=lambda kv: (kv[1], ekey(*kv[0]))):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+            want.add((a, b, w))
+    assert got == want
+    # forest invariant: |edges| = |nodes| - |components|
+    nodes = {x for e in edges for x in e}
+    n_comp = len({find(x) for x in nodes})
+    assert len(got) == len(nodes) - n_comp
+
+
+def test_boruvka_forest_duplicate_free(spark):
+    from onionnet_spark.operators.analytics import boruvka_msf
+
+    e = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 2.0), ("c", "d", 1.5),
+         ("a", "d", 4.0), ("a", "c", 3.0), ("x", "y", 0.5)],
+        "a string, b string, w double",
+    )
+    rows = [tuple(r) for r in boruvka_msf(e).collect()]
+    # the accumulated forest must stay a SET without the old global
+    # distinct: the unique MSF of the 4-clique component + the pair
+    assert sorted(rows) == [
+        ("a", "b", 1.0), ("b", "c", 2.0), ("c", "d", 1.5), ("x", "y", 0.5)
+    ]
+    assert len(rows) == len(set(rows))
+
 
 
 def test_reciprocity_partial(spark):
@@ -514,6 +646,41 @@ def test_peel_family_job_counts(spark):
     for name, (op, _) in ops.items():
         edges = spark.createDataFrame([(u, v) for u, v in pairs], "a string, b string")
         group = f"peel_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            op(edges).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {n: (got[n], budget) for n, (_, budget) in ops.items() if got[n] > budget}
+    assert not over, over
+
+
+def test_symmetry_breaking_job_counts(spark):
+    """Spark jobs per call (op + collect) of maximal_matching,
+    maximal_independent_set and greedy_coloring (built on
+    analytics._retire) and of boruvka_msf (which contracts through
+    components._star_fixpoint), on the 8-node toy graph of the peel
+    pin with weights. Each budget is the count of the same call
+    measured before the shared loops, with the old default round
+    options."""
+    from onionnet_spark.operators import analytics as A
+
+    pairs = ["ab", "ac", "ad", "bc", "bd", "cd", "de", "ef", "eg", "fg", "gh"]
+    ops = {
+        "maximal_matching": (A.maximal_matching, 39),
+        "maximal_independent_set": (A.maximal_independent_set, 22),
+        "greedy_coloring": (A.greedy_coloring, 77),
+        "boruvka_msf": (A.boruvka_msf, 96),
+    }
+    sc = spark.sparkContext
+    got = {}
+    for name, (op, _) in ops.items():
+        edges = spark.createDataFrame(
+            [(u, v, float(len(u + v) + ord(v) % 3 + ord(u) % 5)) for u, v in pairs],
+            "a string, b string, w double",
+        )
+        group = f"symmetry_jobs_{name}"
         sc.setJobGroup(group, name)
         try:
             op(edges).collect()

@@ -123,40 +123,6 @@ def test_lpa_isolated_node_and_tie_break(spark):
     assert out["a"] == "L:x" and out["b"] == "L:x"
 
 
-def test_greedy_coloring_proper_and_converges_early(spark):
-    from onionnet_spark.operators.analytics import greedy_coloring
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
-        "a string, b string",
-    )
-    # rounds far above need: the post-convergence tail is skipped but
-    # the result must match the fixed-schedule semantics (proper,
-    # <= max_deg + 1 colors, exactly one row per node)
-    rows = {r["node"]: r["color"] for r in greedy_coloring(e, rounds=10).collect()}
-    assert set(rows) == {"a", "b", "c", "d"}
-    for u, v in [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]:
-        assert rows[u] != rows[v]
-    assert max(rows.values()) <= 3
-
-
-def test_boruvka_forest_duplicate_free(spark):
-    from onionnet_spark.operators.analytics import boruvka_msf
-
-    e = spark.createDataFrame(
-        [("a", "b", 1.0), ("b", "c", 2.0), ("c", "d", 1.5),
-         ("a", "d", 4.0), ("a", "c", 3.0), ("x", "y", 0.5)],
-        "a string, b string, w double",
-    )
-    rows = [tuple(r) for r in boruvka_msf(e).collect()]
-    # the accumulated forest must stay a SET without the old global
-    # distinct: the unique MSF of the 4-clique component + the pair
-    assert sorted(rows) == [
-        ("a", "b", 1.0), ("b", "c", 2.0), ("c", "d", 1.5), ("x", "y", 0.5)
-    ]
-    assert len(rows) == len(set(rows))
-
-
 def test_growth_states_equal_per_radius_sketches(spark):
     from onionnet_spark.core import OnionGraph
     from onionnet_spark.operators.analytics import (
@@ -214,39 +180,6 @@ def test_bounded_levenshtein_verify_identical(spark):
         .collect()
     )
     assert got == want and len(got) > 0
-
-
-def test_scc_multi_cycle_with_trim_and_collect(spark):
-    from onionnet_spark.core import OnionGraph
-    from onionnet_spark.operators.components import (
-        strongly_connected_components,
-    )
-
-    # two cycles bridged by a DAG edge + a pendant tail: exercises the
-    # trim sweeps (tail), the coloring fixpoint (both cycles share a
-    # forward color until the pivot splits them) and a multi-round
-    # backward collect — the three loops whose barriers r10 cut
-    nodes = spark.createDataFrame(
-        [("L", x) for x in ["a", "b", "c", "d", "e", "f", "t"]],
-        "layer string, node_id string",
-    )
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"),          # cycle 1
-         ("c", "d"),                                   # bridge (DAG)
-         ("d", "e"), ("e", "f"), ("f", "d"),          # cycle 2
-         ("f", "t")],                                  # pendant tail
-        "s string, d string",
-    ).select(
-        F.lit("L").alias("src_layer"), F.col("s").alias("src_id"),
-        F.lit("L").alias("dst_layer"), F.col("d").alias("dst_id"),
-    )
-    comp = {
-        r["node_id"]: r["component"]
-        for r in strongly_connected_components(OnionGraph(nodes, edges)).collect()
-    }
-    assert comp["a"] == comp["b"] == comp["c"] == "L:a"
-    assert comp["d"] == comp["e"] == comp["f"] == "L:d"
-    assert comp["t"] == "L:t"
 
 
 def test_layout_keys_explicit_bounds_identical(spark):

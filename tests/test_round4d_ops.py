@@ -159,32 +159,6 @@ def test_bpe_encode_empty_and_oov_docs(spark):
     assert ids[: len(ids) // 2] == ids[len(ids) // 2 :]
 
 
-def test_mis_is_independent_and_maximal(spark):
-    import random
-
-    rnd = random.Random(7)
-    edges = list({
-        tuple(sorted(rnd.sample(range(40), 2))) for _ in range(120)
-    })
-    df = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in edges], ["a", "b"]
-    )
-    from onionnet_spark.operators.analytics import maximal_independent_set
-
-    mis = {r["node"] for r in maximal_independent_set(df, rounds=8).collect()}
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(f"n{a}", set()).add(f"n{b}")
-        adj.setdefault(f"n{b}", set()).add(f"n{a}")
-    # independent: no two MIS members adjacent
-    for n in mis:
-        assert not (adj.get(n, set()) & mis), n
-    # maximal: every non-member has a member neighbor
-    for n in adj:
-        if n not in mis:
-            assert adj[n] & mis, n
-
-
 def test_count_min_never_underestimates(spark):
     from onionnet_spark.functions.corpus import count_min_topk
 
@@ -257,32 +231,6 @@ def test_condensation_plan_broadcasts_sizes(scc_toy):
     assert "CartesianProduct" not in plan
 
 
-def test_coloring_is_proper_and_bounded(spark):
-    import random
-
-    rnd = random.Random(11)
-    edges = list({
-        tuple(sorted(rnd.sample(range(30), 2))) for _ in range(90)
-    })
-    df = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in edges], ["a", "b"]
-    )
-    from onionnet_spark.operators.analytics import greedy_coloring
-
-    colors = {
-        r["node"]: r["color"]
-        for r in greedy_coloring(df, rounds=12).collect()
-    }
-    deg = {}
-    for a, b in edges:
-        na, nb = f"n{a}", f"n{b}"
-        deg[na] = deg.get(na, 0) + 1
-        deg[nb] = deg.get(nb, 0) + 1
-        assert colors[na] != colors[nb]  # proper
-    for n, c in colors.items():
-        assert 0 <= c <= deg[n]  # greedy bound: mex <= degree
-
-
 def test_ppjoin_full_recall_vs_bruteforce(spark):
     from onionnet_spark.functions import dedup
 
@@ -316,47 +264,6 @@ def test_ppjoin_full_recall_vs_bruteforce(spark):
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9
-
-
-def test_boruvka_matches_kruskal_bruteforce(spark):
-    import hashlib
-    import random
-
-    rnd = random.Random(5)
-    edges = {}
-    for _ in range(80):
-        u, v = sorted(rnd.sample(range(25), 2))
-        edges.setdefault((f"n{u:02d}", f"n{v:02d}"), rnd.randint(1, 40))
-    rows = [(a, b, w) for (a, b), w in edges.items()]
-    df = spark.createDataFrame(rows, ["a", "b", "w"])
-    from onionnet_spark.operators.analytics import boruvka_msf
-
-    got = {(r["a"], r["b"], r["w"]) for r in boruvka_msf(df, rounds=8).collect()}
-
-    # reference Kruskal under the SAME total order (w, md5 edge key)
-    def ekey(a, b):
-        return hashlib.md5(f"{a}|{b}".encode()).hexdigest()
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    want = set()
-    for (a, b), w in sorted(edges.items(), key=lambda kv: (kv[1], ekey(*kv[0]))):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-            want.add((a, b, w))
-    assert got == want
-    # forest invariant: |edges| = |nodes| - |components|
-    nodes = {x for e in edges for x in e}
-    n_comp = len({find(x) for x in nodes})
-    assert len(got) == len(nodes) - n_comp
 
 
 def test_fd_profile_detects_held_and_violated(spark):
