@@ -11,11 +11,12 @@ Spark-first translation: all of that is column selection + distinct
 + dropna + a left-semi join against the node set for endpoint
 validation. No driver-side mapping dict exists (the key is the
 identity); Catalyst prunes/pushes everything. Endpoint validation is
-two semi-joins that AQE turns into broadcast joins whenever the node
-side is small; for a 100 TB edge list vs a large node set it is a
-shuffled semi-join on the node key — exactly the shuffle you'd pay
-once at build time, after which both sides can be written bucketed
-by the key for co-located downstream joins.
+two semi-joins (`filters.induced_edges`, the vertex filter's step)
+that AQE turns into broadcast joins whenever the node side is small;
+for a 100 TB edge list vs a large node set it is a shuffled
+semi-join on the node key — exactly the shuffle you'd pay once at
+build time, after which both sides can be written bucketed by the key
+for co-located downstream joins.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import EDGE_KEY, NODE_KEY, OnionGraph
+from onionnet_spark.operators.filters import induced_edges
 
 
 def grow_onion(
@@ -121,20 +123,7 @@ def grow_onion(
         edges = edges.dropDuplicates(EDGE_KEY)
 
     if validate_endpoints:
-        node_keys = nodes.select(*NODE_KEY)
-        edges = edges.join(
-            node_keys.withColumnRenamed("layer", "src_layer").withColumnRenamed(
-                "node_id", "src_id"
-            ),
-            on=["src_layer", "src_id"],
-            how="left_semi",
-        ).join(
-            node_keys.withColumnRenamed("layer", "dst_layer").withColumnRenamed(
-                "node_id", "dst_id"
-            ),
-            on=["dst_layer", "dst_id"],
-            how="left_semi",
-        )
+        edges = induced_edges(edges, nodes)
 
     return OnionGraph(nodes, edges, directed=directed)
 
@@ -165,15 +154,6 @@ def merge_onion(base: OnionGraph, delta: OnionGraph) -> OnionGraph:
         delta.edges.join(base.edges.select(*EDGE_KEY), on=EDGE_KEY, how="left_anti")
         .dropDuplicates(EDGE_KEY)
     )
-    node_keys = nodes.select(*NODE_KEY)
-    src_keys = node_keys.select(
-        F.col("layer").alias("src_layer"), F.col("node_id").alias("src_id")
-    )
-    dst_keys = node_keys.select(
-        F.col("layer").alias("dst_layer"), F.col("node_id").alias("dst_id")
-    )
-    new_edges = new_edges.join(
-        src_keys, on=["src_layer", "src_id"], how="left_semi"
-    ).join(dst_keys, on=["dst_layer", "dst_id"], how="left_semi")
+    new_edges = induced_edges(new_edges, nodes)
     edges = base.edges.unionByName(new_edges, allowMissingColumns=True)
     return OnionGraph(nodes, edges, directed=base.directed)

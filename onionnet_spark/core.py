@@ -358,6 +358,19 @@ class OnionGraph:
         )
         return e, nidx
 
+    def cached_weighted(self, weight_col: str) -> DataFrame:
+        """Edge endpoints with `weight_col` cast to double as column w,
+        persisted once per graph instance and weight column: weighted
+        SSSP (both arms of a weighted on-shortest-path, repeated calls)
+        and the weighted rank walk read one build, which `unpersist()`
+        releases."""
+        return self._views.get(
+            ("weighted", weight_col),
+            lambda: self.edges.select(
+                *EDGE_KEY, F.col(weight_col).cast("double").alias("w")
+            ).persist(),
+        )
+
     def canonical_edges(self) -> DataFrame:
         """Undirected canonical edge list (a, b): 'layer:node_id'
         string keys with a < b, self-loops dropped, one row per

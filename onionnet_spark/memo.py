@@ -4,7 +4,8 @@ A `Memo` maps a key to a value built at most once. There are two
 owners:
 
 - one `Memo` per `OnionGraph` instance holds its persisted views
-  (symmetrized, canonical, degree, int-keyed and oriented endpoints);
+  (symmetrized, canonical, degree, int-keyed, oriented and weighted
+  endpoints);
 - one `Memo` per live SparkContext (`session_memo`) holds the
   session-wide shared state: table readers, the persisted base and
   derived graphs, the co-supply pairs and trained codebooks.

@@ -17,7 +17,9 @@ one edge endpoint and aggregates at the other. Its users:
   - `_rank_walk`, the one rank walk behind `pagerank` and
     `personalized_pagerank` (they differ only in the teleport term);
   - `hits`, `eigenvector_centrality` and `katz_centrality`;
-  - `count_paths_to` and `neighbor_agg`.
+  - `count_paths_to` and `neighbor_agg`;
+  - `voterank`, whose rounds push the voting abilities to the
+    neighbours and find the winner's neighbours.
 The step cuts no lineage and picks no join strategy on its own: each
 caller keeps its cut and says when the state is broadcast (under
 core.BROADCAST_MAX, so the cached edge side is never exchanged).
@@ -37,6 +39,15 @@ fixpoint under a budget derived from the data:
     the support its previous k counted): `k_truss` is one k of it and
     `trussness` all of them.
 `k_core` keeps its own delta peel over the graph's cached views.
+
+The motif counts share one triangle listing, `_triangles`
+(node-iterator++: each pair oriented from its (degree, key)-smaller
+endpoint, wedges pivoted at the lower end and closed by one
+semi-join): `triangle_count` counts it, `local_clustering_coefficient`
+counts its corners and `clique4_count` extends its top vertex. The
+pair-list operators that need both directions of every pair
+(`maximal_independent_set`, `greedy_coloring`, `spectral_bisection`,
+`wl_refinement`, `simrank`) read them from one cut adjacency, `_sym`.
 
 The symmetry-breaking operators share one retire loop, `_retire`:
 each round a step elects winners by md5 priority among the live items
@@ -63,6 +74,7 @@ from onionnet_spark.core import (
     LocalGraph,
     OnionGraph,
     literal_frame,
+    row_count,
     split_node_key,
 )
 from onionnet_spark.operators.ckpt import IterCheckpointer
@@ -198,8 +210,9 @@ def _rank_walk(
 
     with teleport weight t = 1 and m = N (pagerank), or t = [v in S]
     and m = |S| for a seed set S (personalized). w = 1 and W(u) =
-    outdeg(u) unless `weight_col` names the edge weight, then W(u) is
-    its outgoing sum. Dangling mass is not redistributed. Returns
+    outdeg(u) unless `weight_col` names the edge weight (read from the
+    graph's `cached_weighted` view), then W(u) is its outgoing sum.
+    Dangling mass is not redistributed. Returns
     (layer, node_id, `name`) over the full node set.
 
     Edges are annotated once with W(u), and with the seed flag for a
@@ -229,7 +242,7 @@ def _rank_walk(
     if weight_col is None:
         e = graph.edge_endpoints().withColumn("w", F.lit(1.0))
     else:
-        e = graph.edges.select(*EDGE_KEY, F.col(weight_col).cast("double").alias("w"))
+        e = graph.cached_weighted(weight_col)
     out_deg = _push(e, None, "src", "src", F.sum("w").alias("out_degree"))
     e_deg = e.join(_keyed(out_deg, "src"), on=["src_layer", "src_id"])
     nodes = graph.nodes.select(*NODE_KEY)
@@ -661,62 +674,57 @@ def node_jaccard(
     )
 
 
-def _canonical_edges(graph: OnionGraph) -> DataFrame:
-    """Undirected canonical edge list: (a, b) with key(a) < key(b),
-    deduped, self-loops dropped. Delegates to the per-graph persisted
-    cache so the projection (and its dedup shuffle, when the builder
-    can't vouch for uniqueness) is paid once per graph instance, not
-    once per analytic."""
-    return graph.canonical_edges()
+def _triangles(canon: DataFrame, deg: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The one triangle listing (node-iterator++, Suri & Vassilvitskii
+    2011), behind `triangle_count`, `local_clustering_coefficient` and
+    `clique4_count`. `canon` holds canonical pairs (a, b) with a < b,
+    `deg` the degree d of each node key n.
 
-
-def triangle_count(graph: OnionGraph) -> DataFrame:
-    """Count undirected triangles. Returns a 1-row DataFrame(n_triangles).
-
-    Edges are canonicalized (key(a) < key(b), deduped, self-loops
-    dropped), then each triangle a<b<c is found exactly once via
-    e(a,b) ⋈ e(b,c) ⋈ e(a,c).
-    """
-    canon = _canonical_edges(graph)
-    # Degree ordering (node-iterator++): orient every undirected edge
-    # from the (degree, key)-SMALLER endpoint to the larger one and
-    # pivot wedges only at the smaller endpoint. Wedge count drops
-    # from sum(deg^2) to sum over edges of min-degree — the standard
-    # trick that makes distributed triangle counting survive
-    # power-law hubs (a celebrity node never becomes a pivot).
-    deg = graph.canonical_degrees().select(
-        F.col("n").alias("k"), "d"
-    )
-    with_deg = (
-        canon.join(deg.select(F.col("k").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("k").alias("b"), F.col("d").alias("db")), "b")
-    )
+    Every pair is oriented from its endpoint smaller by (degree, key)
+    to the larger one, and that orientation is cut: the wedge count
+    drops from sum(deg^2) to a sum of min-degrees, so a power-law hub
+    never pivots a wedge. Wedges x->y, x->z pivot at x, and one
+    semi-join on the orientation closes y->z, so each triangle is
+    listed once as (x, y, z). Returns (the cut orientation (src, dst,
+    dd: the degree of dst), the triangles)."""
+    with_deg = canon.join(
+        deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a"
+    ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = with_deg.select(
+    o = with_deg.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("da")).otherwise(F.col("db")).alias("sd"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dd"),
     ).localCheckpoint()
-    o1 = oriented.select(
+    wedges = o.select(
         F.col("src").alias("x"), F.col("dst").alias("y"), F.col("dd").alias("dy")
-    )
-    o2 = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("z"), F.col("dd").alias("dz")
-    )
-    wedges = o1.join(o2, on="x").filter(
+    ).join(
+        o.select(
+            F.col("src").alias("x"), F.col("dst").alias("z"), F.col("dd").alias("dz")
+        ),
+        on="x",
+    ).filter(
         (F.col("dy") < F.col("dz"))
         | ((F.col("dy") == F.col("dz")) & (F.col("y") < F.col("z")))
     )
     tri = wedges.join(
-        oriented.select(F.col("src").alias("y"), F.col("dst").alias("z")),
+        o.select(F.col("src").alias("y"), F.col("dst").alias("z")),
         on=["y", "z"],
         how="left_semi",
-    )
-    out = tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
-    return out
+    ).select("x", "y", "z")
+    return o, tri
+
+
+def triangle_count(graph: OnionGraph) -> DataFrame:
+    """Count undirected triangles over the graph's canonical edges
+    (key(a) < key(b), deduped, self-loops dropped): the size of the
+    degree-ordered listing `_triangles`, which finds each triangle
+    exactly once. Returns a 1-row DataFrame(n_triangles).
+    """
+    _, tri = _triangles(graph.canonical_edges(), graph.canonical_degrees())
+    return tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
 
 
 def local_clustering_coefficient(graph: OnionGraph) -> DataFrame:
@@ -725,72 +733,31 @@ def local_clustering_coefficient(graph: OnionGraph) -> DataFrame:
     deg(v) < 2 — the standard community-density signal next to the
     global triangle count.
 
-    Triangle corners come from the same degree-ordered orientation
-    as triangle_count (wedges pivot at the min-degree endpoint, so
-    hubs never fan out); each triangle contributes one count to each
-    of its three corners. Degrees are over the canonical undirected
+    Triangle corners come from the same listing as triangle_count
+    (`_triangles`: wedges pivot at the min-degree endpoint, so hubs
+    never fan out); each triangle contributes one count to each of
+    its three corners. Degrees are over the canonical undirected
     edge set. Returns (layer, node_id, degree, n_triangles,
     clustering_coeff) over all nodes, coefficient rounded to 6 dp.
     """
-    canon = _canonical_edges(graph)
-    deg = graph.canonical_degrees().select(
-        F.col("n").alias("k"), "d"
-    )
-    with_deg = (
-        canon.join(deg.select(F.col("k").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("k").alias("b"), F.col("d").alias("db")), "b")
-    )
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = with_deg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("da")).otherwise(F.col("db")).alias("sd"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dd"),
-    ).localCheckpoint()
-    o1 = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("y"), F.col("dd").alias("dy")
-    )
-    o2 = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("z"), F.col("dd").alias("dz")
-    )
-    wedges = o1.join(o2, on="x").filter(
-        (F.col("dy") < F.col("dz"))
-        | ((F.col("dy") == F.col("dz")) & (F.col("y") < F.col("z")))
-    )
-    tri = wedges.join(
-        oriented.select(F.col("src").alias("y"), F.col("dst").alias("z")),
-        on=["y", "z"],
-        how="left_semi",
-    ).select("x", "y", "z")
+    deg = graph.canonical_degrees()
+    _, tri = _triangles(graph.canonical_edges(), deg)
     corners = (
-        tri.select(F.col("x").alias("k"))
-        .unionByName(tri.select(F.col("y").alias("k")))
-        .unionByName(tri.select(F.col("z").alias("k")))
-        .groupBy("k")
+        reduce(DataFrame.unionByName, [tri.select(F.col(c).alias("n")) for c in "xyz"])
+        .groupBy("n")
         .agg(F.count("*").cast("bigint").alias("t"))
     )
-    nodes = graph.nodes.select(
-        "layer", "node_id", graph.node_key_col().alias("k")
-    )
+    d, t = F.coalesce("d", F.lit(0)), F.coalesce("t", F.lit(0))
     return (
-        nodes.join(deg, on="k", how="left")
-        .join(corners, on="k", how="left")
+        graph.nodes.select("layer", "node_id", graph.node_key_col().alias("n"))
+        .join(deg, on="n", how="left")
+        .join(corners, on="n", how="left")
         .select(
             "layer",
             "node_id",
-            F.coalesce("d", F.lit(0)).cast("bigint").alias("degree"),
-            F.coalesce("t", F.lit(0)).cast("bigint").alias("n_triangles"),
-            F.when(
-                F.coalesce("d", F.lit(0)) >= 2,
-                F.round(
-                    F.lit(2.0)
-                    * F.coalesce("t", F.lit(0))
-                    / (F.col("d") * (F.col("d") - 1)),
-                    6,
-                ),
-            )
+            d.cast("bigint").alias("degree"),
+            t.cast("bigint").alias("n_triangles"),
+            F.when(d >= 2, F.round(F.lit(2.0) * t / (F.col("d") * (F.col("d") - 1)), 6))
             .otherwise(F.lit(0.0))
             .alias("clustering_coeff"),
         )
@@ -1425,11 +1392,8 @@ def spectral_bisection(
     step: one neighbor-sum aggregation + three broadcast scalars.
     Returns (node, fiedler_q, side) with side in {-1, 0, 1}.
     """
-    e = _pairs(edges, a_col, b_col)
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
+    sym = _sym(edges, a_col, b_col)
+    deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("deg")
     ).localCheckpoint()
     consts = deg.agg(
@@ -1443,9 +1407,9 @@ def spectral_bisection(
 
     for _ in range(iterations):
         nbr = (
-            sym.join(v.select(F.col("node").alias("b"), "v"), on="b")
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.sum("v").cast("long").alias("nsum"))
+            sym.join(v.select(F.col("node").alias("v"), F.col("v").alias("vn")), on="v")
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.sum("vn").cast("long").alias("nsum"))
         )
         w = (
             v.join(deg, on="node")
@@ -2611,10 +2575,7 @@ def wl_refinement(
     Input: undirected edge list, canonicalized/deduped here.
     Returns (node_id, color) for every endpoint node.
     """
-    canon = _pairs(edges, a_col, b_col)
-    adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint()
+    adj = _sym(edges, a_col, b_col)
     colors = adj.groupBy("u").agg(
         F.md5(F.count("*").cast("string")).alias("c")
     )
@@ -2750,67 +2711,36 @@ def clique4_count(
     the next rung above triangle_count on the clique ladder (graph
     density / community-cohesion profiling).
 
-    Same hub-taming trick as the triangle path: orient every
-    undirected edge from the (degree, key)-smaller endpoint to the
-    larger, making a DAG in which each K4 appears exactly once as
-    its sorted 4-tuple. Triangles (x<y<z) come from the standard
-    wedge+closure joins; the 4th vertex extends the triangle's TOP
-    vertex z (z->w) and must close back to x and y — two semi-joins
-    on oriented edges. Every join is an equi-join on node keys; the
-    candidate volume is sum over triangles of outdeg(z), with
-    outdegree bounded by the orientation (a celebrity never fans
-    out). Returns one row (n_triangles, n_4cliques), BIGINT-exact.
+    Same hub-taming trick as the triangle path: the listing
+    `_triangles` orients every undirected edge from the (degree,
+    key)-smaller endpoint to the larger, a DAG in which each K4
+    appears exactly once as its sorted 4-tuple, and lists each
+    triangle x->y->z once (cut lazily and counted in one job). The
+    4th vertex extends the triangle's TOP vertex z (z->w) and must
+    close back to x and y — two semi-joins on the cut orientation.
+    Every join is an equi-join on node keys; the candidate volume is
+    sum over triangles of outdeg(z), with outdegree bounded by the
+    orientation (a celebrity never fans out). Returns one row
+    (n_triangles, n_4cliques), BIGINT-exact.
     """
     canon = _pairs(edges, a_col, b_col)
-    adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    deg = (
+        canon.select(F.col("a").alias("n"))
+        .unionByName(canon.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count("*").alias("d"))
     )
-    deg = adj.groupBy("u").agg(F.count("*").alias("d"))
-    with_deg = canon.join(
-        deg.select(F.col("u").alias("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("u").alias("b"), F.col("d").alias("db")), "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = with_deg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("da")).otherwise(F.col("db")).alias("sd"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dd"),
-    ).localCheckpoint()
-    o = oriented.select("src", "dst", "sd", "dd")
-    wedges = (
-        o.select(F.col("src").alias("x"), F.col("dst").alias("y"),
-                 F.col("dd").alias("dy"))
-        .join(
-            o.select(F.col("src").alias("x"), F.col("dst").alias("z"),
-                     F.col("dd").alias("dz")),
-            on="x",
-        )
-        .filter(
-            (F.col("dy") < F.col("dz"))
-            | ((F.col("dy") == F.col("dz")) & (F.col("y") < F.col("z")))
-        )
-    )
-    tri = wedges.join(
-        o.select(F.col("src").alias("y"), F.col("dst").alias("z")),
-        on=["y", "z"],
-        how="left_semi",
-    ).select("x", "y", "z").localCheckpoint()
-    n_tri = tri.count()
+    o, tri = _triangles(canon, deg)
+    tri, n_tri = IterCheckpointer().cut_count(tri)
+
+    def arcs(u: str, v: str) -> DataFrame:
+        return o.select(F.col("src").alias(u), F.col("dst").alias(v))
+
     # extend the triangle's TOP vertex: z->w, then close x->w and y->w
-    cand = tri.join(
-        o.select(F.col("src").alias("z"), F.col("dst").alias("w")), on="z"
-    )
-    closed_x = cand.join(
-        o.select(F.col("src").alias("x"), F.col("dst").alias("w")),
-        on=["x", "w"],
-        how="left_semi",
-    )
-    k4 = closed_x.join(
-        o.select(F.col("src").alias("y"), F.col("dst").alias("w")),
-        on=["y", "w"],
-        how="left_semi",
+    k4 = (
+        tri.join(arcs("z", "w"), on="z")
+        .join(arcs("x", "w"), on=["x", "w"], how="left_semi")
+        .join(arcs("y", "w"), on=["y", "w"], how="left_semi")
     )
     return k4.agg(
         F.lit(n_tri).cast("bigint").alias("n_triangles"),
@@ -2930,10 +2860,7 @@ def simrank(
     Returns (node_a, node_b, simrank_micro) for a < b with nonzero
     score (diagonal omitted: it is 1.0 by definition).
     """
-    canon = _pairs(edges, a_col, b_col)
-    adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint()
+    adj = _sym(edges, a_col, b_col)
     deg = adj.groupBy("u").agg(F.count("*").alias("d")).localCheckpoint()
     nodes = deg.select(F.col("u").alias("n"))
     # scores: SPARSE symmetric table incl. the diagonal (needed by
@@ -2995,9 +2922,10 @@ def voterank(graph: OnionGraph, k: int = 5) -> DataFrame:
     undirected degree sum), making delta = n exactly — va starts at
     2m, every suppression subtracts n (floored at 0), and scores are
     BIGINT sums, so election order is deterministic on both engines
-    (ties break on the node key). Each round is one neighbor-sum
-    aggregate over the shared symmetrized view, a global top-1
-    (TakeOrdered — never a full sort), and a broadcast winner
+    (ties break on the node key). Each round is one `_push` of the
+    abilities over the shared symmetrized view (the neighbor-vote
+    sums), a global top-1 (TakeOrdered — never a full sort), one
+    `_push` of the winner to its neighbors and a broadcast winner
     update; the ability table (n rows) is eagerly checkpointed per
     round to keep lineage flat. k is a constant, so the plan is k
     bounded rounds at any graph size.
@@ -3017,16 +2945,11 @@ def voterank(graph: OnionGraph, k: int = 5) -> DataFrame:
     surface; this extends SURVEY §2's centrality family with its
     seed-selection member.
     """
-    und = graph.cached_symmetrized().select(
-        F.col("src_layer").alias("ul"),
-        F.col("src_id").alias("ui"),
-        F.col("dst_layer").alias("vl"),
-        F.col("dst_id").alias("vi"),
-    )
+    und = graph.cached_symmetrized()
     # two scalars (exact BIGINTs) — the repo's accepted scalar-collect
     # pattern; everything else stays distributed
-    n_nodes = graph.nodes.count()
-    m2 = und.count()  # = 2m: symmetrized view holds both directions
+    n_nodes = graph.cached_n_nodes()
+    m2 = row_count(und)  # = 2m: symmetrized view holds both directions
     va = graph.nodes.select(
         "layer",
         "node_id",
@@ -3037,81 +2960,41 @@ def voterank(graph: OnionGraph, k: int = 5) -> DataFrame:
     # under the gate both n-row sides broadcast and the cached
     # symmetrized edge view is scanned, never exchanged or re-sorted,
     # in any of the k rounds; past the gate the joins shuffle as before.
-    small_state = graph.cached_n_nodes() <= BROADCAST_MAX
+    small_state = n_nodes <= BROADCAST_MAX
     winners = []
     for r in range(1, k + 1):
         # neighbor-vote sums first (aggregate before the node join —
         # guide's partial-aggregation shape), then attach to the
-        # non-elected nodes; voteless nodes coalesce to 0 exactly as
-        # the old left-join + null-skipping SUM did.
-        va_u = va.select(
-            F.col("layer").alias("ul2"),
-            F.col("node_id").alias("ui2"),
-            F.col("va").alias("uva"),
-        )
-        if small_state:
-            va_u = F.broadcast(va_u)
-        nbr = (
-            und.join(
-                va_u,
-                (F.col("ul") == F.col("ul2")) & (F.col("ui") == F.col("ui2")),
-            )
-            .groupBy(
-                F.col("vl").alias("layer"), F.col("vi").alias("node_id")
-            )
-            .agg(F.sum("uva").alias("nsum"))
-        )
+        # non-elected nodes; voteless nodes coalesce to 0.
+        nbr = _push(und, va, "src", "dst", F.sum("va").alias("nsum"), bcast=small_state)
         if small_state:
             nbr = F.broadcast(nbr)
-        score = (
-            va.filter(~F.col("el"))
-            .join(nbr, ["layer", "node_id"], "left")
-            .select(
-                "layer",
-                "node_id",
-                F.coalesce(F.col("nsum"), F.lit(0).cast("bigint")).alias(
-                    "score"
-                ),
-            )
+        score = va.filter(~F.col("el")).join(nbr, NODE_KEY, "left").select(
+            "layer",
+            "node_id",
+            F.coalesce(F.col("nsum"), F.lit(0).cast("bigint")).alias("score"),
         )
-        w = score.orderBy(
-            F.col("score").desc(),
-            F.concat_ws(":", "layer", "node_id"),
-        ).limit(1)
         winners.append(
-            w.select(
+            score.orderBy(F.col("score").desc(), F.concat_ws(":", "layer", "node_id"))
+            .limit(1)
+            .select(
                 F.lit(r).cast("int").alias("rank"),
                 "layer",
                 "node_id",
                 F.col("score").cast("bigint").alias("score_scaled"),
-            ).localCheckpoint()
-        )
-        wb = F.broadcast(
-            winners[-1].select(
-                F.col("layer").alias("wl"), F.col("node_id").alias("wi")
             )
+            .localCheckpoint()
         )
-        nb = (
-            und.join(
-                wb, (F.col("vl") == F.col("wl")) & (F.col("vi") == F.col("wi"))
-            )
-            .select(F.col("ul").alias("layer"), F.col("ui").alias("node_id"))
-            .distinct()
-            .withColumn("is_nb", F.lit(True))
-        )
+        won = winners[-1].select(*NODE_KEY)
+        nb = _push(und, won, "dst", "src", F.lit(True).alias("is_nb"), bcast=True)
         va = (
-            va.join(wb.withColumn("is_w", F.lit(True)),
-                    (F.col("layer") == F.col("wl"))
-                    & (F.col("node_id") == F.col("wi")), "left")
-            .join(F.broadcast(nb), ["layer", "node_id"], "left")
+            va.join(F.broadcast(won.withColumn("is_w", F.lit(True))), NODE_KEY, "left")
+            .join(F.broadcast(nb), NODE_KEY, "left")
             .select(
                 "layer",
                 "node_id",
                 F.when(F.col("is_w"), F.lit(0))
-                .when(
-                    F.col("is_nb"),
-                    F.greatest(F.col("va") - n_nodes, F.lit(0)),
-                )
+                .when(F.col("is_nb"), F.greatest(F.col("va") - n_nodes, F.lit(0)))
                 .otherwise(F.col("va"))
                 .cast("bigint")
                 .alias("va"),
@@ -3119,9 +3002,7 @@ def voterank(graph: OnionGraph, k: int = 5) -> DataFrame:
             )
             .localCheckpoint()
         )
-    out = winners[0]
-    for w in winners[1:]:
-        out = out.unionByName(w)
+    out = reduce(DataFrame.unionByName, winners)
     return out.select(
         "rank",
         "layer",

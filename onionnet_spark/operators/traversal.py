@@ -642,40 +642,38 @@ def weighted_sssp(
     shortest-path edge count + 1, NOT graph size; a budget of
     `max_iterations` rounds that runs out raises RuntimeError.
     Negative weights raise ValueError. Repeated sources count once.
+    The weighted edges are the graph's cached view
+    (`OnionGraph.cached_weighted`), built once per instance and weight
+    column.
 
     Returns DataFrame(layer, node_id, dist: double).
     """
     if direction not in ("downstream", "upstream"):
         raise ValueError("direction must be 'upstream' or 'downstream'")
-    edges = graph.edges.select(*EDGE_KEY, F.col(weight_col).alias("w")).persist()
-    try:
-        # the delta relaxation reaches true shortest distances only
-        # with non-negative weights: check up front (one cheap agg
-        # over the persisted edges)
-        min_w = edges.agg(F.min("w")).first()[0]
-        if min_w is not None and min_w < 0:
-            raise ValueError(
-                f"weighted_sssp requires non-negative edge weights; "
-                f"found min weight {min_w}"
-            )
-        uniq = _uniq(sources)
-        seed = literal_frame(
-            graph.nodes.sparkSession,
-            [(l, i, 0.0) for (l, i) in uniq],
-            "layer string, node_id string, dist double",
+    edges = graph.cached_weighted(weight_col)
+    # the delta relaxation reaches true shortest distances only with
+    # non-negative weights: check up front (one cheap agg over the
+    # graph's cached weighted edges)
+    min_w = edges.agg(F.min("w")).first()[0]
+    if min_w is not None and min_w < 0:
+        raise ValueError(
+            f"weighted_sssp requires non-negative edge weights; "
+            f"found min weight {min_w}"
         )
-        ends = (EDGE_KEY[:2], EDGE_KEY[2:])
-        src, dst = ends if direction == "downstream" else ends[::-1]
-        # the result reads only the seed and the cut deltas, so the
-        # edges can go once the loop returns
-        return _relax(
-            edges, seed, NODE_KEY, src, dst, "dist", F.col("dist") + F.col("w"),
-            "min", "weighted_sssp", max_iterations,
-            "a shortest path exceeds the round cap, raise max_iterations",
-            n_seed=len(uniq),
-        )
-    finally:
-        edges.unpersist()
+    uniq = _uniq(sources)
+    seed = literal_frame(
+        graph.nodes.sparkSession,
+        [(l, i, 0.0) for (l, i) in uniq],
+        "layer string, node_id string, dist double",
+    )
+    ends = (EDGE_KEY[:2], EDGE_KEY[2:])
+    src, dst = ends if direction == "downstream" else ends[::-1]
+    return _relax(
+        edges, seed, NODE_KEY, src, dst, "dist", F.col("dist") + F.col("w"),
+        "min", "weighted_sssp", max_iterations,
+        "a shortest path exceeds the round cap, raise max_iterations",
+        n_seed=len(uniq),
+    )
 
 
 def on_shortest_path(
@@ -731,9 +729,8 @@ def on_shortest_path_weighted(
     shortest_distance, which honors edge weights when given).
 
     Distances come from two Bellman-Ford fixpoints run one after the
-    other: both persist the same edge projection, and Spark caches one
-    entry per plan, so an arm that finished first would unpersist the
-    cache the other is still reading. Membership compares ROUNDED
+    other over the graph's one weighted edge view
+    (`OnionGraph.cached_weighted`). Membership compares ROUNDED
     (6 dp) sums so float associativity cannot flake the equality.
     Returns (layer, node_id, d_f, d_r).
     """

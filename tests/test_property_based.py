@@ -9,7 +9,7 @@ with max_examples tuned so the whole module stays under a minute.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 SET = settings(
@@ -264,6 +264,47 @@ def test_triangle_count_matches_naive(spark, edges):
 
     g, _ = _graph_of(spark, edges)
     assert triangle_count(g).collect()[0][0] == _naive_triangles(edges)
+
+
+# duplicate, reversed and self-loop edges, dense over 8 nodes, so that
+# triangles and 4-cliques are common
+multi_edge_lists = st.lists(st.tuples(dense_ids, dense_ids), min_size=0, max_size=40)
+
+
+@given(multi_edge_lists)
+@settings(SET, max_examples=4)
+def test_local_clustering_coefficient_matches_networkx(spark, edges):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import local_clustering_coefficient
+
+    g, nodes = _graph_of(spark, edges)
+    ref = nx.Graph([(str(u), str(v)) for u, v in edges if u != v])
+    ref.add_nodes_from(str(n) for n in nodes)
+    tri, cc = nx.triangles(ref), nx.clustering(ref)
+    got = {r["node_id"]: r for r in local_clustering_coefficient(g).collect()}
+    assert set(got) == set(ref)
+    for n, r in got.items():
+        assert r["degree"] == ref.degree(n)
+        assert r["n_triangles"] == tri[n]
+        assert abs(r["clustering_coeff"] - cc[n]) < 1e-6
+
+
+@given(multi_edge_lists)
+# the triangle 0-1-2's top corner 2 reaches 3, which is joined to 0 but
+# not to 1: a 4-clique candidate only the last closure rejects
+@example([(0, 1), (0, 2), (1, 2), (2, 3), (0, 3), (1, 4), (1, 5), (2, 4), (2, 5),
+          (3, 4), (3, 5), (3, 6), (3, 7), (1, 0), (2, 3), (5, 5)])
+@settings(SET, max_examples=4)
+def test_clique4_count_matches_networkx(spark, edges):
+    import networkx as nx
+
+    from onionnet_spark.operators.analytics import clique4_count
+
+    df, ref = _pair_frame_and_nx(spark, edges)
+    sizes = [len(c) for c in nx.enumerate_all_cliques(ref)]
+    row = clique4_count(df).collect()[0]
+    assert (row["n_triangles"], row["n_4cliques"]) == (sizes.count(3), sizes.count(4))
 
 
 def _naive_bfs(edges, seeds, direction, max_dist=None):

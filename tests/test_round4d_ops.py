@@ -342,27 +342,6 @@ def test_label_spread_majority_and_clamping(spark):
     assert out["s3"] == ("B", 0)
 
 
-def test_spectral_bisection_splits_barbell(spark):
-    from onionnet_spark.operators.analytics import spectral_bisection
-
-    # two K5 cliques joined by a single bridge: the Fiedler sign
-    # pattern must separate the cliques exactly
-    left = [f"l{i}" for i in range(5)]
-    right = [f"r{i}" for i in range(5)]
-    edges = (
-        [(a, b) for i, a in enumerate(left) for b in left[i + 1 :]]
-        + [(a, b) for i, a in enumerate(right) for b in right[i + 1 :]]
-        + [("l0", "r0")]
-    )
-    df = spark.createDataFrame(edges, ["a", "b"])
-    out = {r["node"]: r["side"] for r in spectral_bisection(df, iterations=10).collect()}
-    lsides = {out[n] for n in left}
-    rsides = {out[n] for n in right}
-    assert len(lsides) == 1 and len(rsides) == 1
-    assert lsides != rsides
-    assert 0 not in (lsides | rsides)
-
-
 def test_cdc_apply_last_wins_and_deletes(spark):
     from onionnet_spark.operators.timeseries import apply_cdc
 

@@ -1,7 +1,6 @@
 """Unit gates for the round-5 operators: exact toy answers and
-invariants the sf fixtures can't pin (span merging edge cases, WL
-distinguishing power, C4 closed forms, recall bounds, attribution
-windows, closed-form regression)."""
+invariants the sf fixtures can't pin (span merging edge cases, recall
+bounds, attribution windows, closed-form regression)."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from onionnet_spark.functions import dedup, similarity, text
-from onionnet_spark.operators.analytics import square_count, wl_refinement
 
 
 # ---------------------------------------------------------------- dup spans
@@ -56,64 +54,6 @@ def test_dup_span_null_and_short_text(spark):
     rows = dedup.dup_span_stats(docs, w=5).collect()
     assert len(rows) == 3  # every doc appears, zeros everywhere
     assert all(r["n_spans"] == 0 and r["dup_tokens"] == 0 for r in rows)
-
-
-# ---------------------------------------------------------------- WL / C4
-
-
-def test_wl_separates_path_endpoints_from_middle(spark):
-    # path a-b-c-d: degree alone separates {a,d} from {b,c}; one WL
-    # round must then separate b (neighbor degrees 1,2) from nothing
-    # new, but on the star+path union the refinement distinguishes
-    # roles degree can't. Here: colors of a and d match (symmetry),
-    # b and c match, and a != b.
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], ["a", "b"]
-    )
-    cols = {r["node_id"]: r["color"] for r in wl_refinement(edges, rounds=3).collect()}
-    assert cols["a"] == cols["d"] and cols["b"] == cols["c"]
-    assert cols["a"] != cols["b"]
-
-
-def test_wl_distinguishes_what_degree_cannot(spark):
-    # two 4-node graphs glued disjointly: a 4-cycle (all degree 2)
-    # and a path's middle... use C4 vs two disjoint edges + path:
-    # in C4 every node has degree 2 and stays one color; in P4 the
-    # middle nodes are degree 2 TOO but their neighborhoods differ
-    # after 2 rounds (neighbor of a degree-1 node).
-    edges = spark.createDataFrame(
-        [("c1", "c2"), ("c2", "c3"), ("c3", "c4"), ("c4", "c1"),
-         ("p1", "p2"), ("p2", "p3"), ("p3", "p4")],
-        ["a", "b"],
-    )
-    cols = {r["node_id"]: r["color"] for r in wl_refinement(edges, rounds=3).collect()}
-    # cycle nodes all share a color
-    assert len({cols[f"c{i}"] for i in range(1, 5)}) == 1
-    # path middles (degree 2) get a DIFFERENT color than cycle nodes
-    assert cols["p2"] != cols["c1"]
-
-
-def test_square_count_closed_forms(spark):
-    # C4 has exactly one 4-cycle; K4 has three
-    c4 = spark.createDataFrame(
-        [("1", "2"), ("2", "3"), ("3", "4"), ("4", "1")], ["a", "b"]
-    )
-    assert square_count(c4).collect()[0]["n_squares"] == 1
-    k4 = spark.createDataFrame(
-        [("1", "2"), ("1", "3"), ("1", "4"), ("2", "3"), ("2", "4"), ("3", "4")],
-        ["a", "b"],
-    )
-    row = square_count(k4).collect()[0]
-    assert row["n_squares"] == 3
-    # K4 wedges: 4 nodes * C(3,2) = 12
-    assert row["n_wedges"] == 12
-
-
-def test_triangle_has_no_squares(spark):
-    tri = spark.createDataFrame(
-        [("1", "2"), ("2", "3"), ("1", "3")], ["a", "b"]
-    )
-    assert square_count(tri).collect()[0]["n_squares"] == 0
 
 
 # ------------------------------------------------------------ ANN evals
@@ -343,36 +283,6 @@ def test_hyperanf_rejects_bad_args(spark):
         hyperanf(g, direction="sideways")
     with pytest.raises(ValueError):
         hyperanf(g, m=48)
-
-
-# ------------------------------------------------------------ 4-cliques
-
-
-def test_clique4_closed_forms(spark):
-    from onionnet_spark.operators.analytics import clique4_count
-
-    # K4: 4 triangles, 1 four-clique
-    k4 = spark.createDataFrame(
-        [("1", "2"), ("1", "3"), ("1", "4"), ("2", "3"), ("2", "4"), ("3", "4")],
-        ["a", "b"],
-    )
-    row = clique4_count(k4).collect()[0]
-    assert row["n_triangles"] == 4 and row["n_4cliques"] == 1
-    # K5: C(5,3)=10 triangles, C(5,4)=5 four-cliques
-    import itertools
-
-    k5 = spark.createDataFrame(
-        [(str(a), str(b)) for a, b in itertools.combinations(range(5), 2)],
-        ["a", "b"],
-    )
-    row = clique4_count(k5).collect()[0]
-    assert row["n_triangles"] == 10 and row["n_4cliques"] == 5
-    # C4 (square): no triangles, no 4-cliques
-    c4 = spark.createDataFrame(
-        [("1", "2"), ("2", "3"), ("3", "4"), ("4", "1")], ["a", "b"]
-    )
-    row = clique4_count(c4).collect()[0]
-    assert row["n_triangles"] == 0 and row["n_4cliques"] == 0
 
 
 # ------------------------------------------------ motion-compensated video
@@ -768,35 +678,6 @@ def test_tree_depth2_perfect_split_toy(spark):
     left = out["left"]
     assert left["feature"] == "fb"
     assert left["gap_score"] == 8 * 8  # |pos_L*n_R - pos_R*n_L| = 0*8 vs 8*8
-
-
-# ------------------------------------------------------------ SimRank
-
-
-def test_simrank_closed_form_path(spark):
-    from onionnet_spark.operators.analytics import simrank
-
-    # path a-c-b: a and b share the single neighbor c, so
-    # s(a,b) = C * s(c,c) / (1*1) = 0.8 from round 1 on; a-c stays 0
-    # (odd-parity paths never connect in vanilla SimRank)
-    edges = spark.createDataFrame([("a", "c"), ("c", "b")], ["a", "b"])
-    out = {(r["node_a"], r["node_b"]): r["simrank_micro"]
-           for r in simrank(edges, rounds=3).collect()}
-    assert out[("a", "b")] == 800_000
-    assert ("a", "c") not in out and ("b", "c") not in out
-
-
-def test_simrank_bounds_and_symmetry(spark):
-    from onionnet_spark.operators.analytics import simrank
-    from onionnet_spark.queries.graph_queries import _cosupply_top_pairs
-
-    out = simrank(
-        _cosupply_top_pairs(spark, "/root/testdata/sf0.001", 60), rounds=3
-    ).collect()
-    assert len(out) > 0
-    for r in out:
-        assert 0 < r["simrank_micro"] <= 1_000_000
-        assert r["node_a"] < r["node_b"]
 
 
 # ----------------------------------------------- stationary / Wilson CI

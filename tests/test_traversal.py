@@ -368,6 +368,12 @@ def test_repeated_seeds_return_the_rows_of_one_seed(spark):
     assert rows(on_shortest_path_weighted(g, a, [d, d])) == [
         ("L", "a", 0.0, 2.0), ("L", "c", 1.0, 1.0), ("L", "d", 2.0, 0.0)
     ]
+    # every call above read the graph's one weighted view, which the
+    # graph's unpersist releases
+    view = g.cached_weighted("weight")
+    assert view.is_cached
+    g.unpersist()
+    assert not view.is_cached
     t = datetime.datetime(2024, 1, 1)
     edges = spark.createDataFrame(
         [(u, v, t) for u, v in pairs], "src string, dst string, ts timestamp"

@@ -12,6 +12,10 @@ Usage:
   python tools/opt_probe.py [--reps 3] [--explain DIR] [--noop|--count]
                             [--threads] key...
 
+Each rep line (`# rep<i> <key>: <t>s`) goes to stderr, where the
+probe's session shows no console progress bar, so `2>&1 | grep
+'^# rep'` keeps every rep; the JSON summary goes to stdout.
+
 --explain DIR additionally writes DIR/<key>.txt with
 `.explain("formatted")` output (the plans/r10 evidence files).
 
@@ -106,6 +110,13 @@ def main() -> None:
         load1 = -1.0
     print(f"# load_1min_start={load1} sf_dir={SF_DIR}", file=sys.stderr)
 
+    # Spark's console progress bar redraws on stderr with carriage
+    # returns and no newline, so a rep line printed after it would not
+    # start a line: turn it off before the context starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.showConsoleProgress=false "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
     spark = get_spark("onionnet-opt-probe")
     qs = entrymod.queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
